@@ -83,6 +83,12 @@ def cents_sql(expr: str, n: int = 2) -> str:
     return f"CAST(FLOOR(({expr}) * {10**n} + 0.5) AS BIGINT)"
 
 
+# Oracle spellings of ``cents_col(F.col("value"))`` and of the event's
+# UTC day number, as the events-table oracles embed them verbatim.
+_CENTS_SQL = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
+_DAY_SQL = "CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)"
+
+
 def exact_sum_sql(int_expr: str, scale: int, nd: int = 2) -> str:
     """Oracle-side twin of exact_sum: DuckDB sums BIGINT in HUGEINT
     (exact); the ROUND is rewritten portable by portable_round_sql."""

@@ -1,21 +1,30 @@
-"""MinHash-LSH banding core — a LEAF module (registers nothing), so
-the word-token (engine.scale_ops) and char-shingle (engine.pipeline_ops)
-near-dup queries can share the candidate-generation machinery without
-dragging each other's query registrations forward (the driver's capped
-correctness sweep walks registration order; see engine/__init__).
+"""Banded-LSH core — a LEAF module (registers nothing) holding the one
+definition of each shared banded-candidate stage: the hot-bucket gate
+(:func:`hot_bucket_sides`), the bucket self-join with its
+first-collision-band guard (:func:`bucket_self_join`,
+:func:`first_collision_guard`) and the candidate-doc Jaccard verify
+(:func:`jaccard_verify`). The MinHash (word-token and char-shingle),
+SimHash, embedding and decontamination paths all call them. Being a
+leaf, it lets engine.scale_ops and engine.pipeline_ops share this code
+without dragging each other's query registrations forward (the
+capped correctness sweep walks registration order; see
+engine/__init__).
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from engine.det import pround
 from engine.llm_ops import (
     N_MINHASH,
     bitset_intersection,
+    mask_width,
     minhash_hashes,
     nondet_zero,
     packed_token_sets,
@@ -190,15 +199,204 @@ def lsh_oracle(tok_sql: str = _TOK_SQL, threshold: float = 0.8) -> str:
     """
 
 
-def lsh_neardup_pairs(
-    tok: DataFrame | None,
-    threshold: float,
-    materialize_tok: bool = False,
-    tok_arrays: DataFrame | None = None,
+def first_collision_guard(
+    band: Column,
+    hash_a: Callable[[int], Column],
+    hash_b: Callable[[int], Column],
+    n_bands: int,
+) -> Column:
+    """Join predicate that keeps a bucket-colliding pair only in its
+    LOWEST colliding band: true at band 0, and at band b only when the
+    two sides' hashes differ in every band below b. ``hash_a(i)`` /
+    ``hash_b(i)`` are each side's band-i hash expression.
+
+    A pair colliding in k bands is then emitted once instead of k times,
+    so no candidate-sized ``.distinct()`` shuffle is needed and the
+    candidate SET is unchanged. The CASE chain is unrolled statically
+    (n_bands is a constant): a zip_with/slice/exists spelling of the
+    same predicate measured slower than the distinct it replaces,
+    because its lambda allocations ran per raw bucket pair."""
+    guard = F.lit(True)
+    for eb in range(1, n_bands):
+        all_differ = reduce(
+            lambda acc, c: acc & c,
+            [hash_a(i) != hash_b(i) for i in range(eb)],
+        )
+        guard = F.when(band == eb, all_differ).otherwise(guard)
+    return guard
+
+
+def salted_sides(
+    flagged: DataFrame, id_col: str
+) -> tuple[DataFrame, DataFrame, Column]:
+    """2-D-salted self-join sides ``a`` / ``b`` of a band-row frame that
+    carries a per-row replication factor ``g``, plus the salt equality
+    to AND into the join condition.
+
+    Side a keys on (salt(id), r), side b on (r, salt(id)), r ∈ [0, g):
+    every in-bucket pair meets in EXACTLY one of the g² sub-buckets (at
+    salt_a × salt_b), so a bucket of bn rows splits into tasks of
+    ~(bn/g)² pairs while the candidate set stays identical."""
+    cols = [c for c in flagged.columns if c != "g"]
+    salt = F.pmod(F.hash(id_col), F.col("g"))
+    rep = F.explode(F.sequence(F.lit(0), F.col("g") - 1))
+    a = flagged.select(*cols, salt.alias("s1"), rep.alias("s2")).alias("a")
+    b = flagged.select(*cols, rep.alias("s1"), salt.alias("s2")).alias("b")
+    return a, b, (F.col("a.s1") == F.col("b.s1")) & (
+        F.col("a.s2") == F.col("b.s2")
+    )
+
+
+def hot_bucket_sides(
+    bands: DataFrame, id_col: str, keys: list[str]
+) -> tuple[DataFrame, DataFrame, Column]:
+    """Self-join sides of ``bands`` (bucketed by ``keys``) with the
+    hot-bucket gate applied: buckets above HOT_BUCKET_ROWS rows get
+    :func:`salted_sides` with g = ⌈bn / HOT_BUCKET_ROWS⌉, so one
+    pathological bucket (10⁶ byte-identical crawl pages) cannot become a
+    single quadratic task. Returns (a, b, salt condition).
+
+    The topology switch is a DRIVER-SIDE branch on a census (plan from
+    runtime statistics, as AQE does). A fully lazy formulation —
+    broadcast-joining the hot list onto every band row with an always-on
+    explode — measured +56% on the LSH family with ZERO hot buckets: the
+    two join sides stopped sharing one ReusedExchange and the generator
+    broke the probe side's codegen fusion. With no hot bucket (every
+    fixture) the sides are the plain unsalted aliases, so that plan is
+    unchanged and the census job is the only cost.
+
+    Driver transfer is bounded: the census is first reduced to two
+    scalars, and the per-bucket list (bucket ids, not data) is collected
+    only when it holds ≤ HOT_CENSUS_CAP rows. Above the cap every bucket
+    salts uniformly with the largest bucket's g, which needs no list and
+    partitions each bucket's pair space the same way."""
+    census = (
+        bands.groupBy(*keys)
+        .agg(F.count("*").alias("bn"))
+        .filter(F.col("bn") > HOT_BUCKET_ROWS)
+    )
+    stats = census.agg(
+        F.count("*").alias("n_hot"), F.max("bn").alias("max_bn")
+    ).first()
+    if stats["n_hot"] == 0:
+        return bands.alias("a"), bands.alias("b"), F.lit(True)
+    if stats["n_hot"] <= HOT_CENSUS_CAP:
+        hot = census.select(
+            *keys,
+            F.ceil(F.col("bn") / F.lit(HOT_BUCKET_ROWS)).cast("int").alias("g"),
+        )
+        hot = bands.sparkSession.createDataFrame(hot.collect(), hot.schema)
+        flagged = bands.join(F.broadcast(hot), keys, "left").withColumn(
+            "g", F.coalesce(F.col("g"), F.lit(1))
+        )
+    else:
+        g_uniform = -(-stats["max_bn"] // HOT_BUCKET_ROWS)
+        flagged = bands.withColumn("g", F.lit(g_uniform))
+    return salted_sides(flagged, id_col)
+
+
+def bucket_self_join(
+    sides: tuple[DataFrame, DataFrame, Column],
+    id_col: str,
+    keys: list[str],
+    n_bands: int,
 ) -> DataFrame:
-    """MinHash-LSH banded near-dup over any (doc_id, lang, token) set:
-    minhash (16 perms) → 4 bands × 4 rows → band-hash bucket join →
-    exact-Jaccard bitset verify of candidates only.
+    """Candidate pairs from the self-join ``sides`` (see
+    :func:`hot_bucket_sides`) of band rows carrying ``band`` and the
+    array ``abv`` of all their band hashes: same bucket, a.id < b.id,
+    emitted once in the lowest colliding band. Columns of both sides
+    stay addressable as ``a.*`` / ``b.*``."""
+    a, b, salt_cond = sides
+    same_bucket = reduce(
+        lambda acc, c: acc & c,
+        [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys],
+    )
+    return a.join(
+        b,
+        same_bucket
+        & salt_cond
+        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        & first_collision_guard(
+            F.col("a.band"),
+            lambda i: F.col("a.abv")[i],
+            lambda i: F.col("b.abv")[i],
+            n_bands,
+        ),
+    )
+
+
+def _jaccard() -> Column:
+    return F.col("n_common").cast("double") / (
+        F.col("na") + F.col("nb") - F.col("n_common")
+    )
+
+
+def jaccard_verify(
+    cand: DataFrame, arrs: DataFrame, a: str, b: str, threshold: float
+) -> DataFrame:
+    """Exact-Jaccard verify of the candidate pairs ``cand`` (doc-id
+    columns ``a``, ``b``) against per-doc distinct token arrays ``arrs``
+    (doc_id, lang, toks): the (a, b, na, nb, n_common) rows whose token
+    Jaccard is ≥ ``threshold``.
+
+    Only candidate docs are packed into bitsets
+    (engine.llm_ops.packed_token_sets), and the doc_id semi-join runs
+    BEFORE the token explode, so non-candidate docs never produce
+    occurrence rows; at 100 TB the candidate set is orders of magnitude
+    smaller than the corpus. The same plan serves an empty candidate set:
+    the mask width is then 1 and every join stays empty."""
+    cand = cand.localCheckpoint(eager=True)
+    cand_ids = (
+        cand.select(F.col(a).alias("doc_id"))
+        .unionByName(cand.select(F.col(b).alias("doc_id")))
+        .distinct()
+    )
+    packed = packed_token_sets(
+        arrs.join(cand_ids, "doc_id", "left_semi").select(
+            "doc_id", "lang", F.explode("toks").alias("token")
+        )
+    ).localCheckpoint(eager=True)
+    n_words = mask_width(packed)
+    pa = packed.select(
+        F.col("doc_id").alias(a),
+        F.col("mask").alias("ma"),
+        F.col("n_tok").alias("na"),
+    )
+    pb = packed.select(
+        F.col("doc_id").alias(b),
+        F.col("mask").alias("mb"),
+        F.col("n_tok").alias("nb"),
+    )
+    # Size-ratio prune before the O(mask width) popcount: J(A,B) ≤
+    # min(|A|,|B|)/max(|A|,|B|), so J ≥ t implies the sizes agree within
+    # factor t (the −1 slack covers double rounding at the na/nb = t
+    # boundary, see llm_ops.exact_jaccard_pairs). Exact, so no
+    # qualifying pair is pruned; it drops ~26% of the popcounts at sf0.1,
+    # where hot-bucket candidates are mostly size-mismatched.
+    return (
+        cand.join(F.broadcast(pa), a)
+        .join(F.broadcast(pb), b)
+        .filter(
+            (F.col("na") * threshold - 1 <= F.col("nb"))
+            & (F.col("nb") * threshold - 1 <= F.col("na"))
+        )
+        .select(
+            a,
+            b,
+            "na",
+            "nb",
+            (bitset_intersection("ma", "mb", n_words) + nondet_zero())
+            .alias("n_common"),
+        )
+        .filter(_jaccard() >= threshold)
+    )
+
+
+def lsh_neardup_pairs(tok_arrays: DataFrame, threshold: float) -> DataFrame:
+    """MinHash-LSH banded near-dup over per-doc distinct token arrays
+    ``tok_arrays`` (doc_id, lang, toks array<string>): minhash (16
+    perms) → 4 bands × 4 rows → band-hash bucket join → exact-Jaccard
+    bitset verify of candidates only → (doc_a, doc_b, jaccard).
 
     Candidate generation is O(Σ bucket²) instead of all-pairs; the
     banding S-curve gives catch probability 1-(1-J^4)^4 at Jaccard J
@@ -209,259 +407,29 @@ def lsh_neardup_pairs(
     Hot buckets (boilerplate: many byte-identical docs sharing one
     bucket) make the candidate set quadratic in the group size — for
     THIS pairs contract every such candidate is a true duplicate
-    (Jaccard 1.0), so candidates == output and the PAIR COUNT is
-    mandatory; what must not happen is all of them landing in ONE task.
-    The automatic hot-bucket gate below (HOT_BUCKET_ROWS) 2-D-salts any
-    bucket above the bound so per-task pair counts stay bounded while
-    the candidate set is bit-identical; tests/test_lsh_hotbucket.py
-    pins the clique case end-to-end and forces the gate. A production
-    run at 100 TB additionally collapses exact duplicates first (one
-    hash-groupBy, the llm_dedup_pipeline stage ordering) so boilerplate
-    enters banding as one representative, and the linear-output
-    artifact to ship is the clustering/survivor form, not all pairs.
+    (Jaccard 1.0), so the pair count is mandatory; what must not happen
+    is all of them landing in ONE task, which :func:`hot_bucket_sides`
+    prevents (tests/test_lsh_hotbucket.py forces the gate). A production
+    run at 100 TB additionally collapses exact duplicates first so
+    boilerplate enters banding as one representative.
 
-    The verify stage packs bitsets for *candidate docs only* (semi-join
-    before packed_token_sets): at 100 TB the candidate set is orders of
-    magnitude smaller than the corpus, so packing everything — as round 1
-    did — would dominate the whole pipeline. ``materialize_tok``
-    checkpoints the token rows first; the frame is consumed THREE times
-    (minhash vocabulary distinct, signature build, verify pack), so
-    every caller should pass True unless tok is already materialized —
-    measured ~40% off the word-token pipeline at sf0.1, more for the
-    char-shingle expansion (on a cluster: checkpoint dir instead of
-    localCheckpoint).
-
-    ``tok_arrays`` (r15, guide §2.3/§8 — materialize and move the
-    doc-grain proxy, not the expanded rows): a (doc_id, lang, toks
-    array<string>) frame of per-doc DISTINCT token arrays — the form
-    every registered caller already has pre-explode. When given, the
-    ARRAYS are checkpointed instead of the exploded occurrence rows
-    (identical string payload, ~occurrence-count fewer row headers and
-    per-row doc_id/lang copies in the materialization — measured at
-    sf0.1: 110.3 MB → 15.1 MB on the shingle path, 12.5 MB → 2.2 MB on
-    word tokens), each
-    consumer re-derives occurrence rows with a cheap in-plan explode of
-    the checkpointed arrays, and — the scale win — the verify stage's
-    candidate semi-join prunes at DOC grain BEFORE the explode, so
-    non-candidate docs' occurrence rows are never even GENERATED for
-    the pack (previously: the semi-join filtered an occurrence-sized
-    checkpoint). Explode commutes with the doc_id semi-join and the
-    exploded rows are exactly the ``tok`` the caller would have passed,
-    so the candidate set and output are bit-identical (differential +
-    forced-gate tests)."""
-    arrs = None
-    if tok_arrays is not None:
-        arrs = tok_arrays.localCheckpoint(eager=True)
-        tok = arrs.select(
-            "doc_id", "lang", F.explode("toks").alias("token")
-        )
-    elif materialize_tok:
-        tok = tok.localCheckpoint(eager=True)
-    # The signature table is doc-grain (16 longs + the band hashes) and
-    # is consumed three times below (both self-join sides + the
-    # hot-bucket census) — checkpoint it so the minhash aggregate runs
-    # once, which is also the production shape (persist the signature
-    # table, then band repeatedly). Lazy: the census action below is
-    # the first consumer and materializes it as part of its own job,
-    # saving a separate barrier job.
+    The arrays, not exploded occurrence rows, are checkpointed: the
+    same string payload with ~token-count fewer row headers (sf0.1:
+    110.3 → 15.1 MB for shingles, 12.5 → 2.2 MB for word tokens). Every
+    consumer re-derives occurrence rows with an in-plan explode."""
+    arrs = tok_arrays.localCheckpoint(eager=True)
+    tok = arrs.select("doc_id", "lang", F.explode("toks").alias("token"))
+    # The doc-grain signature table is read three times (both self-join
+    # sides and the hot-bucket census), so the minhash aggregate is
+    # checkpointed; lazily, so the census job materializes it.
     sig = _minhash_sig(tok).localCheckpoint(eager=False)
+    keys = ["band", "bv", "lang"]
     bands = band_rows(sig)
-    # HOT-BUCKET GATE (r14): per-bucket census → buckets above
-    # HOT_BUCKET_ROWS get their self-join 2-D-salted with replication
-    # g = ⌈bn / HOT_BUCKET_ROWS⌉: side a keys on (salt(doc), r), side b
-    # on (r, salt(doc)), r ∈ [0, g), so every in-bucket pair meets in
-    # EXACTLY one of the g² sub-buckets (at salt_a × salt_b) and each
-    # task handles ≤ ~(bn/g)² ≈ HOT_BUCKET_ROWS² pairs instead of bn².
-    # The candidate SET is identical — salting only partitions the pair
-    # space — so driver hashes are unchanged whether or not the gate
-    # trips (the fixture never trips it; tests/test_lsh_hotbucket.py
-    # forces it and pins output identity + the per-task bound).
-    #
-    # The topology switch is a DRIVER-SIDE branch on the census result
-    # (the AQE pattern: plan from runtime statistics). A first, fully
-    # lazy formulation — broadcast-joining the hot list onto every band
-    # row with a per-row explode(sequence(0, g-1)) — measured +56% on
-    # the whole LSH family even with ZERO hot buckets: the two join
-    # sides' subplans stopped being identical, which forfeited the
-    # ReusedExchange, and the always-on explode generator broke the
-    # codegen fusion of the probe side. Branching on the collected
-    # census keeps the not-tripped plan BYTE-IDENTICAL to the unsalted
-    # original (one census job over the checkpointed signature is the
-    # only added cost). The collected list is partition-pruning-style
-    # METADATA (≤ corpus/HOT_BUCKET_ROWS rows — bucket ids, not data).
-    census = (
-        bands.groupBy("band", "bv", "lang")
-        .agg(F.count("*").alias("bn"))
-        .filter(F.col("bn") > HOT_BUCKET_ROWS)
-    )
-    # BOUNDED driver transfer (r15, VERDICT r14 item 3): aggregate the
-    # census to TWO scalars first; the per-bucket list is collected only
-    # when its size is already proven ≤ HOT_CENSUS_CAP, and above the
-    # cap every bucket salts uniformly (no list at all) — so no corpus,
-    # however pathological, ships more than cap rows to the driver. The
-    # zero-hot common case stays one census job, exactly as before.
-    stats = census.agg(
-        F.count("*").alias("n_hot"), F.max("bn").alias("max_bn")
-    ).first()
-    n_hot = stats["n_hot"] or 0
-    flagged = None
-    if 0 < n_hot <= HOT_CENSUS_CAP:
-        hot_rows = census.select(
-            "band",
-            "bv",
-            "lang",
-            F.ceil(F.col("bn") / F.lit(HOT_BUCKET_ROWS))
-            .cast("int")
-            .alias("g"),
-        ).collect()
-        hot = tok.sparkSession.createDataFrame(
-            hot_rows, "band int, bv binary, lang string, g int"
-        )
-        flagged = (
-            bands.join(F.broadcast(hot), ["band", "bv", "lang"], "left")
-            .withColumn("g", F.coalesce(F.col("g"), F.lit(1)))
-            .withColumn("salt", F.pmod(F.hash("doc_id"), F.col("g")))
-        )
-    elif n_hot > HOT_CENSUS_CAP:
-        g_uniform = int(-(-stats["max_bn"] // HOT_BUCKET_ROWS))
-        flagged = bands.withColumn("g", F.lit(g_uniform)).withColumn(
-            "salt", F.pmod(F.hash("doc_id"), F.col("g"))
-        )
-    if flagged is not None:
-        rep = F.explode(F.sequence(F.lit(0), F.col("g") - 1))
-        a = flagged.select(
-            "doc_id",
-            "lang",
-            "band",
-            "bv",
-            "abv",
-            F.col("salt").alias("s1"),
-            rep.alias("s2"),
-        ).alias("a")
-        b_ = flagged.select(
-            "doc_id",
-            "lang",
-            "band",
-            "bv",
-            "abv",
-            rep.alias("s1"),
-            F.col("salt").alias("s2"),
-        ).alias("b")
-        salt_cond = (F.col("a.s1") == F.col("b.s1")) & (
-            F.col("a.s2") == F.col("b.s2")
-        )
-    else:
-        a, b_ = bands.alias("a"), bands.alias("b")
-        salt_cond = F.lit(True)
-    # FIRST-COLLISION-BAND dedup (r14): a pair colliding in k bands used
-    # to be emitted k times and collapsed by a `.distinct()` — at the
-    # fixture's near-dup density that distinct shuffled ~4× the final
-    # 1.6M-pair candidate set just to drop band-duplicates. Each side's
-    # rows carry ALL their band hashes (``abv``, see band_rows), so the
-    # join can keep a pair only in the FIRST band where it collides:
-    # any pair colliding in some band is emitted exactly once (in its
-    # lowest colliding band) and the distinct disappears — the standard
-    # LSH dedup-in-the-join trick. slice(abv, 1, band) is empty at
-    # band 0 (never the descending-sequence trap), so the guard is
-    # vacuously true there. Candidate SET is unchanged — only the
-    # number of times each member is produced.
-    # Statically unrolled guard (no per-row array allocation — a
-    # zip_with/slice/exists spelling of the same predicate measured
-    # SLOWER than the distinct it replaced, because the lambda allocs
-    # ran per raw bucket pair): band 0 has no earlier bands, band b
-    # requires abv[0..b-1] to all differ. N_BANDS is a module constant,
-    # so the CASE chain is a fixed, tiny scalar expression.
-    from functools import reduce as _py_reduce
-
-    no_earlier_collision = F.lit(True)
-    for eb in range(1, N_BANDS):
-        all_differ = _py_reduce(
-            lambda acc, c: acc & c,
-            [F.col("a.abv")[i] != F.col("b.abv")[i] for i in range(eb)],
-        )
-        no_earlier_collision = F.when(
-            F.col("a.band") == eb, all_differ
-        ).otherwise(no_earlier_collision)
-    cand = a.join(
-        b_,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bv") == F.col("b.bv"))
-        & (F.col("a.lang") == F.col("b.lang"))
-        & salt_cond
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
-        & no_earlier_collision,
+    cand = bucket_self_join(
+        hot_bucket_sides(bands, "doc_id", keys), "doc_id", keys, N_BANDS
     ).select(
         F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
     )
-    # Exact-Jaccard verify on candidates only, via the packed-bitset
-    # representation (engine.llm_ops.packed_token_sets) — two broadcast
-    # joins + integer popcounts, instead of re-exploding the token table
-    # three times (ta/tb/sizes) through shuffled joins. Only candidate
-    # docs are packed (left-semi prune of the token rows first).
-    cand = cand.localCheckpoint(eager=True)
-    if cand.isEmpty():
-        return tok.sparkSession.createDataFrame(
-            [], "doc_a long, doc_b long, jaccard double"
-        )
-    cand_ids = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
+    return jaccard_verify(cand, arrs, "doc_a", "doc_b", threshold).select(
+        "doc_a", "doc_b", pround(_jaccard(), 4).alias("jaccard")
     )
-    # With doc-grain arrays, prune to candidate docs BEFORE the explode
-    # (semi-join on doc_id commutes with it): non-candidate occurrence
-    # rows are never generated for the pack.
-    cand_tok = (
-        arrs.join(cand_ids, "doc_id", "left_semi").select(
-            "doc_id", "lang", F.explode("toks").alias("token")
-        )
-        if arrs is not None
-        else tok.join(cand_ids, "doc_id", "left_semi")
-    )
-    packed = packed_token_sets(cand_tok).localCheckpoint(eager=True)
-    n_words = len(packed.select("mask").first()[0])
-    pa = packed.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("mask").alias("ma"),
-        F.col("n_tok").alias("na"),
-    )
-    pb = packed.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("mask").alias("mb"),
-        F.col("n_tok").alias("nb"),
-    )
-    # SIZE-RATIO PRUNE before the popcount (r14): J(A,B) ≤ min(|A|,|B|) /
-    # max(|A|,|B|), so J ≥ t implies the set sizes agree within factor t —
-    # a two-integer-compare filter that runs BEFORE the O(mask_width)
-    # bitset intersection. The exact_jaccard_pairs witness has always
-    # carried this prune (inside its join condition); the banded path's
-    # hot-bucket candidates are mostly size-mismatched S-curve false
-    # positives, so the prune drops ~26% of the popcount work at sf0.1
-    # (measured) with zero output change — the implication is exact, no
-    # over-threshold pair can be size-pruned.
-    inter = (
-        cand.join(F.broadcast(pa), "doc_a")
-        .join(F.broadcast(pb), "doc_b")
-        .filter(
-            # −1 slack (r15): covers double rounding at the na/nb = t
-            # boundary — see llm_ops.exact_jaccard_pairs.
-            (F.col("na") * threshold - 1 <= F.col("nb"))
-            & (F.col("nb") * threshold - 1 <= F.col("na"))
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "na",
-            "nb",
-            (bitset_intersection("ma", "mb", n_words) + nondet_zero())
-            .alias("n_common"),
-        )
-    )
-    jac = F.col("n_common").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("n_common")
-    )
-    return inter.filter(jac >= threshold).select(
-        "doc_a", "doc_b", pround(jac, 4).alias("jaccard")
-    )
-
-

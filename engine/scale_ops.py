@@ -19,7 +19,6 @@ banding turns all-pairs O(n²) into O(Σ bucket²); no driver-side loops.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from functools import reduce as _py_reduce
 
 import numpy as np
 import pandas as pd
@@ -29,27 +28,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from engine.det import pround
-from engine.llm_ops import (
-    N_MINHASH,
-    _dot,
-    _sq_norm,
-    cosine,
-    bitset_intersection,
-    minhash_hashes,
-    nondet_zero,
-    packed_token_sets,
-    token_arrays,
-    tokens,
+from engine.llm_ops import cosine, nondet_zero, token_arrays, tokens
+from engine.lsh_core import (
+    bucket_self_join,
+    first_collision_guard,
+    hot_bucket_sides,
+    lsh_neardup_pairs,
+    lsh_oracle,
 )
 from engine.registry import query
-# LSH banding core lives in the leaf module engine.lsh_core so
-# engine.pipeline_ops can share it without dragging this module's
-# registrations forward; re-exported here for compatibility.
-from engine.lsh_core import (  # noqa: F401
-    N_BANDS as N_BANDS,
-    lsh_neardup_pairs as lsh_neardup_pairs,
-    lsh_oracle as lsh_oracle,
-)
 from engine.session import load
 
 SIMHASH_BITS = 32
@@ -62,7 +49,7 @@ def llm_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≥ 0.8 (SURVEY.md §7.4). See :func:`lsh_neardup_pairs` for the plan;
     same output contract as llm_jaccard_neardup."""
     d = load(spark, sf_dir, "documents")
-    return lsh_neardup_pairs(None, 0.8, tok_arrays=token_arrays(d))
+    return lsh_neardup_pairs(token_arrays(d), 0.8)
 
 
 # ---------------------------------------------------------------------------
@@ -222,33 +209,23 @@ def simhash_neardup_pairs(sig: DataFrame) -> DataFrame:
         F.explode(F.sequence(F.lit(0), F.lit(3))).alias("b"),
     ).withColumn("bv", F.expr("shiftright(simhash, b * 8) & 255"))
     a, b_ = bands.alias("a"), bands.alias("b")
-    # FIRST-COLLISION-BAND dedup (r14, the lsh_core trick): a pair
-    # within Hamming ≤ 3 collides in up to 4 bands and used to be
-    # emitted once per colliding band, collapsed by a `.distinct()`
-    # shuffle over the candidate set. Both signatures ride the band
-    # rows already, so "no earlier band collides" is pure bit
-    # arithmetic — keep the pair only in its LOWEST colliding band and
-    # the distinct disappears. Candidate SET unchanged (every colliding
-    # pair is still emitted exactly once).
 
-    def _band(side: str, i: int):
+    def _band(side: str, i: int) -> Column:
         return F.expr(f"shiftright({side}.simhash, {i * 8}) & 255")
 
-    no_earlier_collision = F.lit(True)
-    for eb in range(1, 4):
-        all_differ = _py_reduce(
-            lambda acc, c: acc & c,
-            [_band("a", i) != _band("b", i) for i in range(eb)],
-        )
-        no_earlier_collision = F.when(
-            F.col("a.b") == eb, all_differ
-        ).otherwise(no_earlier_collision)
+    # Both signatures ride the band rows, so the lowest-colliding-band
+    # guard is pure bit arithmetic on them.
     cand = a.join(
         b_,
         (F.col("a.b") == F.col("b.b"))
         & (F.col("a.bv") == F.col("b.bv"))
         & (F.col("a.doc_id") < F.col("b.doc_id"))
-        & no_earlier_collision,
+        & first_collision_guard(
+            F.col("a.b"),
+            lambda i: _band("a", i),
+            lambda i: _band("b", i),
+            4,
+        ),
     ).select(
         F.col("a.doc_id").alias("doc_a"),
         F.col("a.simhash").alias("sim_a"),
@@ -327,8 +304,8 @@ def _embedding_neardup_banded(
     self-join quadratic only *within* buckets whose expected occupancy
     is N/2^bits; buckets above the shared hot-bucket bound
     (engine.lsh_core.HOT_BUCKET_ROWS) are 2-D-salted AUTOMATICALLY
-    (r14, same driver-side census branch as the MinHash path — see
-    lsh_core.lsh_neardup_pairs). Approximate recall is the documented
+    (the gate shared with the MinHash path,
+    engine.lsh_core.hot_bucket_sides). Approximate recall is the documented
     contract of the scale path (as with llm_lsh_neardup), MEASURED by
     the oracled emb_banded_recall evaluator (engine/seeds28.py:
     recall ≈ 1 in the designed high-similarity regime, ≈ 0 on
@@ -399,105 +376,19 @@ def _embedding_neardup_banded(
     bands = sigs.select(
         "vec_id", "abv", F.posexplode("abv").alias("band", "bv")
     )
-    # HOT-BUCKET GATE (r14): the same driver-side census branch as
-    # lsh_core.lsh_neardup_pairs (see the design rationale there — the
-    # lazy always-salted formulation measured +56% with zero hot
-    # buckets). The bound is the SHARED module attribute
-    # lsh_core.HOT_BUCKET_ROWS (env SPARK_GRAFT_LSH_HOT_ROWS), resolved
-    # at call time so tests can monkeypatch it; the fixture's largest
-    # band bucket is the 250-twin planted clique of emb_banded_recall's
-    # eval corpus — far under the 4096 default, so the gate never trips
-    # locally and the not-tripped join plan is byte-identical to the
-    # unsalted form.
-    # ``hot_gate=False`` skips the census (and its one extra job —
-    # measured +0.43 s locally): the gate NEVER changes the candidate
-    # set (salting only partitions the pair space), so a caller whose
+    # ``hot_gate=False`` skips the hot-bucket census and its job
+    # (measured +0.43 s locally). The gate never changes the candidate
+    # set, only how its pair space is split into tasks, so a caller whose
     # input is provably below the bound — emb_banded_recall's
-    # witness-capped ≤ 2·EMB_EVAL_CAP = 500-row eval corpus — can skip
-    # it without any behavior change; the production >2M-vector caller
-    # keeps the default.
-    from engine import lsh_core as _lsh_core
-
-    hot_bound = _lsh_core.HOT_BUCKET_ROWS
-    flagged = None
-    if hot_gate:
-        census = (
-            bands.groupBy("band", "bv")
-            .agg(F.count("*").alias("bn"))
-            .filter(F.col("bn") > hot_bound)
-        )
-        # BOUNDED driver transfer (r15, VERDICT r14 item 3 — the same
-        # two-stage census as lsh_core.lsh_neardup_pairs): two scalars
-        # first, the per-bucket list only when provably ≤ the cap,
-        # uniform salting (list-free) above it.
-        stats = census.agg(
-            F.count("*").alias("n_hot"), F.max("bn").alias("max_bn")
-        ).first()
-        n_hot = stats["n_hot"] or 0
-        if 0 < n_hot <= _lsh_core.HOT_CENSUS_CAP:
-            hot_rows = census.select(
-                "band",
-                "bv",
-                F.ceil(F.col("bn") / F.lit(hot_bound))
-                .cast("int")
-                .alias("g"),
-            ).collect()
-            hot = emb.sparkSession.createDataFrame(
-                hot_rows, "band int, bv long, g int"
-            )
-            flagged = (
-                bands.join(F.broadcast(hot), ["band", "bv"], "left")
-                .withColumn("g", F.coalesce(F.col("g"), F.lit(1)))
-                .withColumn("salt", F.pmod(F.hash("vec_id"), F.col("g")))
-            )
-        elif n_hot > _lsh_core.HOT_CENSUS_CAP:
-            g_uniform = int(-(-stats["max_bn"] // hot_bound))
-            flagged = bands.withColumn(
-                "g", F.lit(g_uniform)
-            ).withColumn("salt", F.pmod(F.hash("vec_id"), F.col("g")))
-    if flagged is not None:
-        rep = F.explode(F.sequence(F.lit(0), F.col("g") - 1))
-        a = flagged.select(
-            "vec_id",
-            "band",
-            "bv",
-            "abv",
-            F.col("salt").alias("s1"),
-            rep.alias("s2"),
-        ).alias("a")
-        b_ = flagged.select(
-            "vec_id",
-            "band",
-            "bv",
-            "abv",
-            rep.alias("s1"),
-            F.col("salt").alias("s2"),
-        ).alias("b")
-        salt_cond = (F.col("a.s1") == F.col("b.s1")) & (
-            F.col("a.s2") == F.col("b.s2")
-        )
-    else:
-        a, b_ = bands.alias("a"), bands.alias("b")
-        salt_cond = F.lit(True)
-    # First-collision-band guard, statically unrolled (see lsh_core for
-    # why the zip_with/slice spelling lost to the CASE chain): band 0
-    # has no earlier bands; band b requires abv[0..b-1] to all differ.
-    no_earlier_collision = F.lit(True)
-    for eb in range(1, NEARDUP_BANDS):
-        all_differ = _py_reduce(
-            lambda acc, c: acc & c,
-            [F.col("a.abv")[i] != F.col("b.abv")[i] for i in range(eb)],
-        )
-        no_earlier_collision = F.when(
-            F.col("a.band") == eb, all_differ
-        ).otherwise(no_earlier_collision)
-    cand = a.join(
-        b_,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bv") == F.col("b.bv"))
-        & (F.col("a.vec_id") < F.col("b.vec_id"))
-        & salt_cond
-        & no_earlier_collision,
+    # ≤ 2·EMB_EVAL_CAP = 500-row eval corpus — skips it with no change in
+    # output; the production >2M-vector caller keeps the default.
+    sides = (
+        hot_bucket_sides(bands, "vec_id", ["band", "bv"])
+        if hot_gate
+        else (bands.alias("a"), bands.alias("b"), F.lit(True))
+    )
+    cand = bucket_self_join(
+        sides, "vec_id", ["band", "bv"], NEARDUP_BANDS
     ).select(
         F.col("a.vec_id").alias("vec_a"),
         F.col("b.vec_id").alias("vec_b"),

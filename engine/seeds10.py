@@ -23,16 +23,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from engine.det import pround
+from engine.det import _CENTS_SQL, cents_col, pround
 from engine.registry import query
 from engine.session import load
 
-
-def _cents(col: str = "value") -> F.Column:
-    return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("bigint")
-
-
-_CENTS_SQL = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
 
 EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 ATTR_WINDOW_S = 3600
@@ -276,7 +270,7 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             back.groupBy("event_type")
             .agg(
                 F.count("*").alias("n"),
-                F.sum(_cents()).alias("cents"),
+                F.sum(cents_col(F.col("value"))).alias("cents"),
             )
             .select(
                 "event_type",
@@ -321,7 +315,7 @@ def sink_codec_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load(spark, sf_dir, "events")
     base = e.agg(
-        F.count("*").alias("n"), F.sum(_cents()).alias("s")
+        F.count("*").alias("n"), F.sum(cents_col(F.col("value"))).alias("s")
     ).collect()[0]
     tmp = Path(tempfile.mkdtemp(prefix="codec_"))
     rows = []
@@ -333,7 +327,7 @@ def sink_codec_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             back = spark.read.parquet(str(path))
             chk = back.agg(
-                F.count("*").alias("n"), F.sum(_cents()).alias("s")
+                F.count("*").alias("n"), F.sum(cents_col(F.col("value"))).alias("s")
             ).collect()[0]
             ok = int(chk["n"] == base["n"] and chk["s"] == base["s"])
             rows.append((codec, chk["n"], ok))
@@ -393,7 +387,7 @@ def events_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").select(
         "user_id",
         "event_type",
-        _cents().alias("c"),
+        cents_col(F.col("value")).alias("c"),
         F.unix_timestamp("ts").cast("bigint").alias("sec"),
     )
     w = (
@@ -540,7 +534,7 @@ def win_nth_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select(
             "user_id",
             F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day"),
-            _cents().alias("c"),
+            cents_col(F.col("value")).alias("c"),
             "ts",
             "event_id",
         )

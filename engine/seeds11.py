@@ -16,16 +16,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.det import pround
+from engine.det import _CENTS_SQL, cents_col, pround
 from engine.registry import query
 from engine.session import load
 
-
-def _cents(col: str = "value") -> F.Column:
-    return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("bigint")
-
-
-_CENTS_SQL = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
 
 AES_KEY = "0123456789abcdef"  # fixture-grade static key: the op audits
 # the encrypt→decrypt ROUNDTRIP, not key management.
@@ -74,7 +68,7 @@ def agg_regr_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = e.select(
         "event_type",
         F.hour("ts").cast("double").alias("x"),
-        (_cents().cast("double") / 100).alias("y"),
+        (cents_col(F.col("value")).cast("double") / 100).alias("y"),
     )
     return c.groupBy("event_type").agg(
         F.regr_count("y", "x").cast("bigint").alias("n"),
@@ -124,7 +118,7 @@ def agg_median_mode_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     AND hashable.
     """
     e = load(spark, sf_dir, "events")
-    c = e.select("event_type", _cents().alias("c"))
+    c = e.select("event_type", cents_col(F.col("value")).alias("c"))
     med = c.groupBy("event_type").agg(
         pround(F.median("c"), 4).alias("median_c")
     )
@@ -263,9 +257,9 @@ def udf_arrow_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
         # contract the JVM expression it mirrors honors for free.
         return None if c is None else (c * 2 + 1) % 997
 
-    return e.select("event_type", arrow_chk(_cents()).alias("v")).groupBy(
-        "event_type"
-    ).agg(F.sum("v").cast("bigint").alias("chk"))
+    return e.select(
+        "event_type", arrow_chk(cents_col(F.col("value"))).alias("v")
+    ).groupBy("event_type").agg(F.sum("v").cast("bigint").alias("chk"))
 
 
 # ---------------------------------------------------------------------------
@@ -300,7 +294,7 @@ def agg_histogram_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select(
             (F.weekday("ts") + 1).cast("int").alias("dow"),
             F.hour("ts").cast("int").alias("hr"),
-            _cents().alias("c"),
+            cents_col(F.col("value")).alias("c"),
         )
         .groupBy("dow", "hr")
         .agg(

@@ -19,17 +19,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from engine.det import pround
+from engine.det import _CENTS_SQL, _DAY_SQL, cents_col, pround
 from engine.registry import query
 from engine.session import load
 
-
-def _cents(col: str = "value") -> F.Column:
-    return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("bigint")
-
-
-_CENTS_SQL = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
-_DAY_SQL = "CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)"
 
 AUTOCORR_LAGS = (1, 7)
 
@@ -94,7 +87,7 @@ def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     d = (
         e.select("event_type", F.floor(F.unix_timestamp("ts") / 86400)
-                 .cast("bigint").alias("day"), _cents().alias("c"))
+                 .cast("bigint").alias("day"), cents_col(F.col("value")).alias("c"))
         .groupBy("event_type", "day")
         .agg(F.sum("c").alias("v"))
     )
@@ -199,7 +192,7 @@ def ts_cusum_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     d = (
         e.select("event_type", F.floor(F.unix_timestamp("ts") / 86400)
-                 .cast("bigint").alias("day"), _cents().alias("c"))
+                 .cast("bigint").alias("day"), cents_col(F.col("value")).alias("c"))
         .groupBy("event_type", "day")
         .agg(F.sum("c").alias("v"))
     )

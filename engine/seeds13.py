@@ -16,13 +16,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from engine.det import pround
+from engine.det import _DAY_SQL, pround
 from engine.registry import query
 from engine.session import load
 
-
-_CENTS_SQL = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
-_DAY_SQL = "CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)"
 
 EQUIDEPTH_BUCKETS = 8
 EARTH_R_M = 6371000.0

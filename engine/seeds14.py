@@ -17,15 +17,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from engine.det import _CENTS_SQL, cents_col
 from engine.registry import query
 from engine.session import load
 
-
-def _cents(col: str = "value") -> F.Column:
-    return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("bigint")
-
-
-_CENTS_SQL = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
 
 PARAM_TYPE = "purchase"
 PARAM_MIN_VALUE = 50.0
@@ -155,7 +150,7 @@ def df_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     observed = e.observe(
         obs,
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(_cents()).alias("cents_total"),
+        F.sum(cents_col(F.col("value"))).alias("cents_total"),
         F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias(
             "n_purchases"
         ),
@@ -201,7 +196,9 @@ def maint_cache_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import uuid
 
-    e = load(spark, sf_dir, "events").select("event_type", _cents().alias("c"))
+    e = load(spark, sf_dir, "events").select(
+        "event_type", cents_col(F.col("value")).alias("c")
+    )
     name = f"cache_t_{uuid.uuid4().hex[:8]}"
     e.createOrReplaceTempView(name)
     try:

@@ -21,17 +21,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from engine.det import pround
+from engine.det import _CENTS_SQL, _DAY_SQL, cents_col, pround
 from engine.registry import query
 from engine.session import load
 
-
-def _cents(col: str = "value") -> F.Column:
-    return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("bigint")
-
-
-_CENTS_SQL = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
-_DAY_SQL = "CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)"
 
 PRUNE_YEAR = 1996
 
@@ -82,7 +75,7 @@ def ts_peak_days(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select(
             "event_type",
             F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day"),
-            _cents().alias("c"),
+            cents_col(F.col("value")).alias("c"),
         )
         .groupBy("event_type", "day")
         .agg(F.sum("c").alias("v"))
@@ -209,7 +202,7 @@ def agg_grouping_id_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     hr = F.hour("ts").cast("int")
     return (
-        e.select("event_type", hr.alias("hr"), _cents().alias("c"))
+        e.select("event_type", hr.alias("hr"), cents_col(F.col("value")).alias("c"))
         .rollup("event_type", "hr")
         .agg(
             F.grouping_id().cast("int").alias("gid"),
@@ -253,7 +246,7 @@ def fn_inline_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's formulation would triple).
     """
     e = load(spark, sf_dir, "events")
-    c = _cents()
+    c = cents_col(F.col("value"))
     stacked = F.expr(
         "stack(3, 'gross', c, 'net', c - c div 10, 'fee', c div 10) "
         "AS (measure, val)"

@@ -17,17 +17,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from engine.det import pround
+from engine.det import _CENTS_SQL, _DAY_SQL, cents_col, pround
 from engine.registry import query
 from engine.session import load
 
-
-def _cents(col: str = "value") -> F.Column:
-    return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("bigint")
-
-
-_CENTS_SQL = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
-_DAY_SQL = "CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)"
 
 WAU_DAYS = 7
 
@@ -286,7 +279,9 @@ def agg_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
     property in tests.
     """
     e = load(spark, sf_dir, "events")
-    c = e.filter(F.col("value") > 0).select("event_type", _cents().alias("c"))
+    c = e.filter(F.col("value") > 0).select(
+        "event_type", cents_col(F.col("value")).alias("c")
+    )
     return c.groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("n"),
         pround(F.exp(F.avg(F.log("c"))), 2).alias("geomean_cents"),

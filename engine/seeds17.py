@@ -18,17 +18,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from engine.det import pround
+from engine.det import _CENTS_SQL, _DAY_SQL, cents_col, pround
 from engine.registry import query
 from engine.session import load
 
-
-def _cents(col: str = "value") -> F.Column:
-    return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("bigint")
-
-
-_CENTS_SQL = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
-_DAY_SQL = "CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)"
 
 WILSON_Z = 1.96
 WILSON_THRESHOLD = 0.15
@@ -217,7 +210,7 @@ def win_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape; the 100 TB form samples the global reference distribution.
     """
     e = load(spark, sf_dir, "events")
-    c = e.select("event_id", "event_type", _cents().alias("cents"))
+    c = e.select("event_id", "event_type", cents_col(F.col("value")).alias("cents"))
     return quantile_normalize_core(c)
 
 

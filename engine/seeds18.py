@@ -16,15 +16,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from engine.det import _CENTS_SQL, cents_col
 from engine.registry import query
 from engine.session import load
-
-
-def _cents(col: str = "value") -> F.Column:
-    return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("bigint")
-
-
-_CENTS_SQL = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
 
 
 # ---------------------------------------------------------------------------
@@ -61,7 +55,7 @@ def udf_apply_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow.compute as pc
 
     e = load(spark, sf_dir, "events").select(
-        "user_id", _cents().alias("c")
+        "user_id", cents_col(F.col("value")).alias("c")
     )
 
     def stats(tbl: pa.Table) -> pa.Table:
@@ -125,7 +119,7 @@ def df_transpose_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     g = (
         e.groupBy("event_type")
-        .agg(F.sum(_cents()).cast("string").alias("cents"))
+        .agg(F.sum(cents_col(F.col("value"))).cast("string").alias("cents"))
         .orderBy("event_type")
     )
     t = g.transpose()

@@ -17,12 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from engine.det import cents_col
 from engine.registry import query
 from engine.session import load
-
-
-def _cents(col: str = "value") -> F.Column:
-    return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("bigint")
 
 
 PYDS_N = 10_000
@@ -168,7 +165,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.dataSource.register(TextSink)
     e = load(spark, sf_dir, "events").select(
-        "event_id", _cents().alias("c")
+        "event_id", cents_col(F.col("value")).alias("c")
     )
     base = e.agg(
         F.count("*").alias("n"), F.sum("c").alias("s")

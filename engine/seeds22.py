@@ -96,7 +96,7 @@ def llm_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     approx = (
-        lsh_neardup_pairs(None, 0.8, tok_arrays=token_arrays(witness))
+        lsh_neardup_pairs(token_arrays(witness), 0.8)
         .select("doc_a", "doc_b")
         .localCheckpoint(eager=True)
     )

@@ -20,14 +20,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from engine.det import pround
+from engine.det import _CENTS_SQL, _DAY_SQL, pround
 from engine.registry import ORACLES, query
 from engine.session import load
 
 SH_EVAL_CAP = 1000  # the exact-Jaccard witness population
-
-_CENTS_SQL = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
-_DAY_SQL = "CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)"
 
 
 # ---------------------------------------------------------------------------

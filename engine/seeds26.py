@@ -16,17 +16,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from engine.det import cents_col, cents_sql, exact_avg, exact_avg_sql, exact_sum, exact_sum_sql, pround
+from engine.det import _CENTS_SQL, _DAY_SQL, cents_col, cents_sql, exact_avg, exact_avg_sql, exact_sum, exact_sum_sql, pround
 from engine.registry import query
 from engine.session import load
 
-
-def _cents(col: str = "value") -> F.Column:
-    return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("bigint")
-
-
-_CENTS_SQL = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
-_DAY_SQL = "CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)"
 
 WINSOR_LO, WINSOR_HI = 0.01, 0.99
 
@@ -79,7 +72,7 @@ def llm_winsorize_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 100 TB swap is approx_percentile bounds (drift-audited).
     """
     e = load(spark, sf_dir, "events")
-    c = e.select("event_type", _cents().alias("c"))
+    c = e.select("event_type", cents_col(F.col("value")).alias("c"))
     b = c.groupBy("event_type").agg(
         F.percentile("c", F.lit(WINSOR_LO)).alias("lo"),
         F.percentile("c", F.lit(WINSOR_HI)).alias("hi"),

@@ -738,20 +738,19 @@ def llm_decontaminate_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the DuckDB oracle. Output is the per-language funnel a release
     pipeline records (kept/assayed/dropped).
     """
-    from engine.lsh_core import _minhash_sig, band_rows
-    from engine.llm_ops import (
-        bitset_intersection,
-        nondet_zero,
-        packed_token_sets,
-        token_arrays,
+    from engine.llm_ops import token_arrays
+    from engine.lsh_core import (
+        N_BANDS,
+        _minhash_sig,
+        band_rows,
+        first_collision_guard,
+        jaccard_verify,
     )
 
     d = load(spark, sf_dir, "documents")
-    # Doc-grain ARRAY checkpoint instead of exploded occurrence rows
-    # (r15, the lsh_core.lsh_neardup_pairs tok_arrays pattern — guide
-    # §2.3/§8): same string payload materialized with ~token-count
-    # fewer row headers, consumers re-explode in-plan, and the verify
-    # pack prunes to candidate docs BEFORE any explode below.
+    # Doc-grain ARRAY checkpoint (as in lsh_core.lsh_neardup_pairs):
+    # consumers re-explode in-plan, and the verify packs candidate docs
+    # only.
     arrs = token_arrays(d).localCheckpoint(eager=True)
     tok = arrs.select("doc_id", "lang", F.explode("toks").alias("token"))
     bands = band_rows(_minhash_sig(tok))
@@ -772,82 +771,24 @@ def llm_decontaminate_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bv",
         F.col("abv").alias("abv_e"),
     )
-    # FIRST-COLLISION-BAND dedup (r14, the lsh_core trick): a (train,
-    # eval) pair colliding in k bands was emitted k times and collapsed
-    # by a `.distinct()` over the candidate set; both sides carry all
-    # their band hashes (abv), so the join keeps a pair only in its
-    # LOWEST colliding band and the distinct disappears. Candidate SET
-    # unchanged.
-    from functools import reduce as _py_reduce
-
-    from engine.lsh_core import N_BANDS
-
-    no_earlier_collision = F.lit(True)
-    for eb in range(1, N_BANDS):
-        all_differ = _py_reduce(
-            lambda acc, c: acc & c,
-            [
-                F.col("abv_t")[i] != F.col("abv_e")[i]
-                for i in range(eb)
-            ],
-        )
-        no_earlier_collision = F.when(
-            F.col("band") == eb, all_differ
-        ).otherwise(no_earlier_collision)
     cand = (
         tr.join(F.broadcast(ev), ["band", "bv", "lang"])
-        .filter(no_earlier_collision)
+        .filter(
+            first_collision_guard(
+                F.col("band"),
+                lambda i: F.col("abv_t")[i],
+                lambda i: F.col("abv_e")[i],
+                N_BANDS,
+            )
+        )
         .select("doc_t", "doc_e")
-        .localCheckpoint(eager=True)
     )
     tr_docs = d.filter(split == "train")
-    if cand.isEmpty():
-        flagged = spark.createDataFrame([], "doc_t long")
-    else:
-        cand_ids = (
-            cand.select(F.col("doc_t").alias("doc_id"))
-            .unionByName(cand.select(F.col("doc_e").alias("doc_id")))
-            .distinct()
-        )
-        packed = packed_token_sets(
-            arrs.join(cand_ids, "doc_id", "left_semi").select(
-                "doc_id", "lang", F.explode("toks").alias("token")
-            )
-        ).localCheckpoint(eager=True)
-        n_words = len(packed.select("mask").first()[0])
-        pa = packed.select(
-            F.col("doc_id").alias("doc_t"),
-            F.col("mask").alias("ma"),
-            F.col("n_tok").alias("na"),
-        )
-        pb = packed.select(
-            F.col("doc_id").alias("doc_e"),
-            F.col("mask").alias("mb"),
-            F.col("n_tok").alias("nb"),
-        )
-        jac = F.col("n_common").cast("double") / (
-            F.col("na") + F.col("nb") - F.col("n_common")
-        )
-        # Size-ratio prune before the popcount (r14, same as the
-        # lsh_core verify): J ≥ t ⟹ the set sizes agree within factor
-        # t — exact implication, so no qualifying pair is pruned.
-        flagged = (
-            cand.join(F.broadcast(pa), "doc_t")
-            .join(F.broadcast(pb), "doc_e")
-            .filter(
-                # −1 slack (r15): covers double rounding at the
-                # na/nb = t boundary — see llm_ops.exact_jaccard_pairs.
-                (F.col("na") * DECON_THRESHOLD - 1 <= F.col("nb"))
-                & (F.col("nb") * DECON_THRESHOLD - 1 <= F.col("na"))
-            )
-            .withColumn(
-                "n_common",
-                bitset_intersection("ma", "mb", n_words) + nondet_zero(),
-            )
-            .filter(jac >= DECON_THRESHOLD)
-            .select("doc_t")
-            .distinct()
-        )
+    flagged = (
+        jaccard_verify(cand, arrs, "doc_t", "doc_e", DECON_THRESHOLD)
+        .select("doc_t")
+        .distinct()
+    )
     return (
         tr_docs.join(
             flagged, tr_docs["doc_id"] == flagged["doc_t"], "left"

@@ -34,17 +34,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from engine.det import pround
+from engine.det import _CENTS_SQL, cents_col, pround
 from engine.registry import query
 from engine.session import load
 
-# value is 2-dp by fixture construction: cents = floor(100·v + 0.5) are
-# exact longs (the win_pareto_days-proven derivation — engine/seeds7.py).
-def _cents(col: str = "value") -> F.Column:
-    return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("bigint")
-
-
-_CENTS_SQL = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
 
 AB_PAIR = ("click", "view")  # unused: all unordered pairs are emitted
 MAD_K = 4.4478  # 3 × 1.4826 (normal-consistency), one literal both engines
@@ -296,7 +289,7 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select(
             "user_id",
             F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day"),
-            _cents().alias("c"),
+            cents_col(F.col("value")).alias("c"),
             "ts",
             "event_id",
         )
@@ -402,7 +395,7 @@ def events_ab_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture SFs stay well inside bigint.
     """
     e = load(spark, sf_dir, "events")
-    c = _cents()
+    c = cents_col(F.col("value"))
     s = e.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.sum(c).alias("s1"),
@@ -498,7 +491,7 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     (agg_percentile_drift audits exactly that substitution).
     """
     e = load(spark, sf_dir, "events")
-    c = e.select("event_type", _cents().alias("c"))
+    c = e.select("event_type", cents_col(F.col("value")).alias("c"))
     med = c.groupBy("event_type").agg(
         F.percentile("c", F.lit(0.5)).alias("med_c")
     )
@@ -657,7 +650,7 @@ def ts_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select(
             "user_id",
             F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day"),
-            _cents().alias("c"),
+            cents_col(F.col("value")).alias("c"),
             "ts",
             "event_id",
         )
@@ -935,7 +928,7 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def checksum(df: DataFrame):
             r = df.agg(
-                F.count("*").alias("n"), F.sum(_cents()).alias("s")
+                F.count("*").alias("n"), F.sum(cents_col(F.col("value"))).alias("s")
             ).collect()[0]
             return r["n"], r["s"]
 
@@ -1144,7 +1137,7 @@ def stream_tws_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     return e.groupBy("user_id").agg(
         F.count("*").cast("bigint").alias("n_events"),
-        F.sum(_cents()).cast("bigint").alias("sum_cents"),
+        F.sum(cents_col(F.col("value"))).cast("bigint").alias("sum_cents"),
     )
 
 
@@ -1183,7 +1176,7 @@ def tws_counter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = events_stream(spark, sf_dir).select(
-        "user_id", _cents().alias("c")
+        "user_id", cents_col(F.col("value")).alias("c")
     )
 
     class Counter(StatefulProcessor):

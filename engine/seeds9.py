@@ -23,16 +23,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from engine.det import pround
+from engine.det import _CENTS_SQL, cents_col, pround
 from engine.registry import query
 from engine.session import load
 
-
-def _cents(col: str = "value") -> F.Column:
-    return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("bigint")
-
-
-_CENTS_SQL = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
 
 HIER_START_CAP = 200
 CMS_P = 2147483647  # 2^31 - 1 (Mersenne prime)
@@ -272,7 +266,7 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-aggregating the GRID, never a second fact scan.
     """
     e = load(spark, sf_dir, "events")
-    c = _cents()
+    c = cents_col(F.col("value"))
     cell = (
         e.select(
             "event_type", F.hour("ts").cast("int").alias("hr"), c.alias("c")
@@ -506,7 +500,7 @@ def fn_try_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-stage codegen, no shuffle.
     """
     e = load(spark, sf_dir, "events")
-    c = e.select("event_id", _cents().alias("c"))
+    c = e.select("event_id", cents_col(F.col("value")).alias("c"))
     junk = F.when(
         F.col("c") % 2 == 1, F.concat(F.col("c").cast("string"), F.lit("x"))
     ).otherwise(F.col("c").cast("string"))

@@ -5,8 +5,13 @@ Usage: python scripts/explain_queries.py <tag> <suffix> [qid ...]
 Writes plans/<tag>/<qid>_<suffix>.txt for each qid (default: the
 queries named on stdin, one per line, if no qids given).
 
-Plan capture only — no query executes (explain is planning-side), so
-this is safe to run alongside other work without contaminating timing.
+explain itself is planning-side and runs no job, but building a
+query's DataFrame can: the llm/emb/graph queries that checkpoint or
+collect intermediate results (21 of them in perfbench/probe.json, e.g.
+the LSH family's signature checkpoint, hot-bucket census and candidate
+checkpoint) run those Spark jobs here, and their captured plan shows
+only the fragment after the last checkpoint. Do not run this alongside
+timing work.
 """
 
 from __future__ import annotations

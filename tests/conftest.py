@@ -55,6 +55,12 @@ def pytest_collection_modifyitems(config, items):
     if drop and keep:
         config.hook.pytest_deselected(items=drop)
         items[:] = keep
+        reporter = config.pluginmanager.get_plugin("terminalreporter")
+        if reporter is not None:
+            reporter.write_line(
+                f"core tier: {len(drop)} tests outside the core files "
+                "deselected; set SPARK_GRAFT_FULL_TESTS=1 to run them"
+            )
 
 
 @pytest.fixture(scope="session")

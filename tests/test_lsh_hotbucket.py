@@ -90,7 +90,7 @@ def test_hot_bucket_gate_preserves_pairs_and_bounds_tasks(
     of the hot bucket is split across g² > 1 sub-buckets with a bounded
     per-sub-bucket share (no single task handles the whole clique)."""
     import engine.lsh_core as lc
-    from engine.llm_ops import tokens
+    from engine.llm_ops import token_arrays, tokens
     from engine.session import load
     from pyspark.sql import functions as F
 
@@ -99,17 +99,15 @@ def test_hot_bucket_gate_preserves_pairs_and_bounds_tasks(
     monkeypatch.setattr(lc, "HOT_BUCKET_ROWS", 8)
     gated = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in lc.lsh_neardup_pairs(
-            tokens(docs, distinct=True), 0.8, materialize_tok=True
-        ).collect()
+        for r in lc.lsh_neardup_pairs(token_arrays(docs), 0.8).collect()
     }
     want = {
         (a, b): 1.0 for a in range(N_DUP) for b in range(a + 1, N_DUP)
     }
     assert gated == want  # output identical with the gate TRIPPED
 
-    # The divert itself: rebuild the salted sides exactly as
-    # lsh_neardup_pairs does and check the per-sub-bucket pair counts.
+    # The divert itself: build the salted sides with the shared helper
+    # lsh_neardup_pairs uses and check the per-sub-bucket pair counts.
     sig = lc._minhash_sig(tokens(docs, distinct=True))
     bands = lc.band_rows(sig)
     cnt = bands.groupBy("band", "bv", "lang").agg(
@@ -124,28 +122,17 @@ def test_hot_bucket_gate_preserves_pairs_and_bounds_tasks(
         .alias("g"),
     )
     assert hot.count() > 0  # the clique bucket IS above the bound
-    flagged = (
-        bands.join(F.broadcast(hot), ["band", "bv", "lang"], "left")
-        .withColumn("g", F.coalesce(F.col("g"), F.lit(1)))
-        .withColumn("salt", F.pmod(F.hash("doc_id"), F.col("g")))
-    )
-    rep = F.explode(F.sequence(F.lit(0), F.col("g") - 1))
-    a = flagged.select(
-        "doc_id", "band", "bv", "lang",
-        F.col("salt").alias("s1"), rep.alias("s2"),
-    ).alias("a")
-    b = flagged.select(
-        "doc_id", "band", "bv", "lang",
-        rep.alias("s1"), F.col("salt").alias("s2"),
-    ).alias("b")
+    flagged = bands.join(
+        F.broadcast(hot), ["band", "bv", "lang"], "left"
+    ).withColumn("g", F.coalesce(F.col("g"), F.lit(1)))
+    a, b, salt_cond = lc.salted_sides(flagged, "doc_id")
     per_key = (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bv") == F.col("b.bv"))
             & (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.s1") == F.col("b.s1"))
-            & (F.col("a.s2") == F.col("b.s2"))
+            & salt_cond
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .groupBy("a.band", "a.bv", "a.lang", "a.s1", "a.s2")
@@ -224,9 +211,9 @@ def test_embedding_hot_bucket_gate_preserves_pairs_and_bounds_tasks(
     }
     assert gated == ungated  # bit-identical with the gate TRIPPED
 
-    # The divert itself: rebuild the salted sides exactly as the gated
-    # branch does and check per-sub-bucket pair counts over the hot
-    # (g > 1) buckets only.
+    # The divert itself: build the salted sides with the shared helper
+    # the gated branch uses and check per-sub-bucket pair counts over
+    # the hot (g > 1) buckets only.
     import numpy as np
     from engine.scale_ops import NEARDUP_BITS, _plane_weight
 
@@ -260,26 +247,14 @@ def test_embedding_hot_bucket_gate_preserves_pairs_and_bounds_tasks(
         )
     )
     assert hot.count() == NEARDUP_BANDS  # all 8 clique buckets are hot
-    flagged = (
-        bands.join(F.broadcast(hot), ["band", "bv"], "inner")
-        .withColumn("salt", F.pmod(F.hash("vec_id"), F.col("g")))
-    )
-    rep = F.explode(F.sequence(F.lit(0), F.col("g") - 1))
-    a = flagged.select(
-        "vec_id", "band", "bv",
-        F.col("salt").alias("s1"), rep.alias("s2"),
-    ).alias("a")
-    b = flagged.select(
-        "vec_id", "band", "bv",
-        rep.alias("s1"), F.col("salt").alias("s2"),
-    ).alias("b")
+    flagged = bands.join(F.broadcast(hot), ["band", "bv"], "inner")
+    a, b, salt_cond = lc.salted_sides(flagged, "vec_id")
     per_key = (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.s1") == F.col("b.s1"))
-            & (F.col("a.s2") == F.col("b.s2"))
+            & salt_cond
             & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
         .groupBy("a.band", "a.bv", "a.s1", "a.s2")
@@ -314,9 +289,7 @@ def test_census_cap_zero_uniform_salting_preserves_pairs(
     monkeypatch.setattr(lc, "HOT_CENSUS_CAP", 0)
     uniform = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in lc.lsh_neardup_pairs(
-            None, 0.8, tok_arrays=token_arrays(docs)
-        ).collect()
+        for r in lc.lsh_neardup_pairs(token_arrays(docs), 0.8).collect()
     }
     assert uniform == want, (
         "uniform-salting fallback (census over cap) changed the pairs"
@@ -343,3 +316,38 @@ def test_embedding_census_cap_zero_uniform_salting_preserves_pairs(
         for r in _embedding_neardup_banded(hot_emb, dim).collect()
     }
     assert uniform == want
+
+
+def test_first_collision_guard_keeps_each_pair_in_its_lowest_band(spark):
+    """The shared bucket self-join emits a pair once, in the lowest band
+    where its band hashes collide, and never emits a pair that collides
+    in no band. Hand-built band rows over 4 bands:
+    docs 1/2 collide in bands 1 and 3, docs 3/4 in band 0 only, and
+    docs 5/6 in none."""
+    import engine.lsh_core as lc
+    from pyspark.sql import functions as F
+
+    abv = {
+        1: [10, 11, 12, 13],
+        2: [20, 11, 22, 13],
+        3: [30, 31, 32, 33],
+        4: [30, 41, 42, 43],
+        5: [50, 51, 52, 53],
+        6: [60, 61, 62, 63],
+    }
+    bands = spark.createDataFrame(
+        [(d, b, h[b], h) for d, h in abv.items() for b in range(4)],
+        "doc_id long, band int, bv long, abv array<long>",
+    )
+    sides = (bands.alias("a"), bands.alias("b"), F.lit(True))
+    got = sorted(
+        (r.doc_a, r.doc_b, r.band)
+        for r in lc.bucket_self_join(sides, "doc_id", ["band", "bv"], 4)
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col("a.band").alias("band"),
+        )
+        .collect()
+    )
+    assert got == [(1, 2, 1), (3, 4, 0)]

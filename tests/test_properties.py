@@ -419,7 +419,7 @@ def test_lsh_pairs_commute_with_input_restriction(spark, docs, cap):
     corpora so a future lsh_core edit that introduces cross-document
     state (e.g. corpus-dependent banding) breaks loudly here, not as a
     silent driver hash-mismatch on the evaluator."""
-    from engine.llm_ops import tokens
+    from engine.llm_ops import token_arrays
     from engine.lsh_core import lsh_neardup_pairs
 
     rows = [(i, "xx", " ".join(doc)) for i, doc in enumerate(docs)]
@@ -428,9 +428,7 @@ def test_lsh_pairs_commute_with_input_restriction(spark, docs, cap):
     def pairs(frame):
         return {
             (r.doc_a, r.doc_b, r.jaccard)
-            for r in lsh_neardup_pairs(
-                tokens(frame, distinct=True), 0.5
-            ).collect()
+            for r in lsh_neardup_pairs(token_arrays(frame), 0.5).collect()
         }
 
     full_filtered = {
