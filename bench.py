@@ -418,14 +418,21 @@ def build_artifacts(
     summary = dict(common)
     summary["queries"] = {}
     summary["n_queries"] = len(timings)
+
+    def report(n: int) -> None:
+        summary["n_reported"] = summary["truncated_to_slowest"] = n
+
+    # Both trailer keys are set before each size check, so the 1300-byte
+    # bound covers the line exactly as printed.
+    report(0)
     slowest = sorted(timings.items(), key=lambda kv: (-kv[1], kv[0]))
     for qid, sec in slowest:
         summary["queries"][qid] = sec
+        report(len(summary["queries"]))
         if len(json.dumps(summary, separators=(",", ":"))) > 1300:
             del summary["queries"][qid]
+            report(len(summary["queries"]))
             break
-    summary["n_reported"] = len(summary["queries"])
-    summary["truncated_to_slowest"] = len(summary["queries"])
     return full, summary
 
 

@@ -15,6 +15,8 @@ readable ROUND().
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -23,6 +25,13 @@ def pround(col: Column, n: int = 2) -> Column:
     """Portable round-half-up to ``n`` decimals (double → double)."""
     scale = 10**n
     return F.floor(col * scale + F.lit(0.5)) / scale
+
+
+def ratio4(num: int, den: int) -> float | None:
+    """``num / den`` portable-rounded to 4 decimals in Python (the
+    driver-side twin of ``pround(…, 4)`` for scores built from collected
+    counts); None when ``den`` is 0, as the oracle's division gives NULL."""
+    return math.floor(num / den * 10**4 + 0.5) / 10**4 if den else None
 
 
 def cents_col(col: Column, n: int = 2) -> Column:

@@ -9,8 +9,9 @@ Tokenization everywhere is whitespace split (FIXTURES.md: tokens carry no
 punctuation, so both engines split identically).
 
 Scale story per operator is inline; the quadratic forms (jaccard, exact
-cosine) are the small-sf correctness witnesses — their scale paths
-(MinHash-LSH banding, LSH-bucketed ANN) are in engine.scale_ops.
+cosine) are the small-sf correctness witnesses — their banded scale
+paths (MinHash-LSH, SimHash, embedding LSH) are built on the
+candidate-join primitives in engine.lsh_core.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ from pyspark.sql.window import Window as W
 from engine.det import pround
 from engine.registry import query
 from engine.session import load
-from engine.vec import _dot, _sq_norm, cosine
+from engine.vec import _sq_norm, cosine
 
 N_MINHASH = 16
 _UNROLL_MAX_WORDS = 8  # see bitset_intersection: JIT bytecode-size cliff
@@ -124,9 +125,7 @@ def minhash_hashes(tok: DataFrame) -> DataFrame:
     )
 
 
-def packed_token_sets(
-    tok: DataFrame, materialize_input: bool = False
-) -> DataFrame:
+def packed_token_sets(tok: DataFrame) -> DataFrame:
     """(doc_id, lang, mask array<long>, n_tok) — each doc's distinct
     token set dictionary-encoded and packed into a fixed-width bitset.
 
@@ -150,14 +149,7 @@ def packed_token_sets(
     # row per distinct (lang, token)): it is read three times below
     # (width scalar, broadcast build, and implicitly by the planner),
     # and each un-checkpointed read would re-run the full million-row
-    # explode+distinct lineage. With materialize_input=True the exploded
-    # (doc_id, lang, token) rows themselves are checkpointed first —
-    # worth it when producing them is expensive (char-shingle expansion:
-    # ~200 array elements per doc), since they are scanned twice (vocab
-    # build + mask build); measured 9.8 s → ~6 s on the sf0.1 shingle
-    # pack.
-    if materialize_input:
-        tok = tok.localCheckpoint(eager=True)
+    # explode+distinct lineage.
     vocab = (
         tok.select("lang", "token")
         .distinct()
@@ -209,13 +201,15 @@ def mask_width(packed: DataFrame) -> int:
 
 
 def bitset_intersection(ma: str, mb: str, n_words: int | None = None) -> Column:
-    """|A ∩ B| of two packed bitsets: Σ bit_count(wordᵃ & wordᵇ).
+    """|A ∩ B| of two packed bitsets: Σ bit_count(wordᵃ & wordᵇ), plus
+    :func:`nondet_zero` so the popcount stays pinned to the projection
+    that computes it.
 
     With a small ``n_words`` (the fixed mask width, a driver scalar —
-    e.g. ``len(packed.select('mask').first()[0])`` on a checkpointed
-    packed set) the sum is emitted *unrolled* as ``bit_count(ma[0] &
-    mb[0]) + …`` — a flat codegen scalar expression, no lambda dispatch
-    and no intermediate array allocation per pair.
+    :func:`mask_width` of a checkpointed packed set) the sum is emitted
+    *unrolled* as ``bit_count(ma[0] & mb[0]) + …`` — a flat codegen
+    scalar expression, no lambda dispatch and no intermediate array
+    allocation per pair.
 
     The unroll is capped at {_UNROLL_MAX_WORDS} words: a single Add tree
     cannot be split by codegen's method splitter, so a wide unroll
@@ -226,15 +220,15 @@ def bitset_intersection(ma: str, mb: str, n_words: int | None = None) -> Column:
     loop, whose generated bytecode is compact and JIT-friendly.
     """
     if n_words is not None and n_words <= _UNROLL_MAX_WORDS:
-        return F.expr(
-            " + ".join(
-                f"bit_count({ma}[{i}] & {mb}[{i}])" for i in range(n_words)
-            )
+        popcount = " + ".join(
+            f"bit_count({ma}[{i}] & {mb}[{i}])" for i in range(n_words)
         )
-    return F.expr(
-        f"aggregate(zip_with({ma}, {mb}, (x, y) -> bit_count(x & y)),"
-        " 0L, (acc, x) -> acc + x)"
-    )
+    else:
+        popcount = (
+            f"aggregate(zip_with({ma}, {mb}, (x, y) -> bit_count(x & y)),"
+            " 0L, (acc, x) -> acc + x)"
+        )
+    return F.expr(popcount) + nondet_zero()
 
 
 def nondet_zero() -> Column:
@@ -258,9 +252,28 @@ def nondet_zero() -> Column:
     return F.shiftright(F.monotonically_increasing_id(), 63)
 
 
-# Shared vector expressions live in engine.vec (registration-free) so
-# seed modules can use them without pulling this module's registrations
-# ahead of theirs in the correctness window; re-exported for callers.
+def jaccard_ratio() -> Column:
+    """|A∩B| / |A∪B| of a verified pair row (n_common, na, nb): one
+    IEEE division of exact integers, bit-identical across engines, so a
+    threshold compare on it is deterministic."""
+    return F.col("n_common").cast("double") / (
+        F.col("na") + F.col("nb") - F.col("n_common")
+    )
+
+
+def size_prune(threshold: float) -> Column:
+    """Symmetric size-ratio prune of a pair row (na, nb) ahead of the
+    popcount: J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), so J ≥ t implies
+    t·|A| ≤ |B| and t·|B| ≤ |A|. Exact, so no qualifying pair is pruned.
+
+    −1 slack: the implication is exact in real arithmetic, but t·na in
+    doubles can round one ulp ABOVE the true product and prune a
+    boundary pair (na/nb exactly = t). The slack over-approximates any
+    rounding — a few extra pairs reach the exact popcount verify, output
+    unchanged (tests/test_properties.py boundary twin)."""
+    return (F.col("na") * threshold - 1 <= F.col("nb")) & (
+        F.col("nb") * threshold - 1 <= F.col("na")
+    )
 
 
 @query(
@@ -343,14 +356,15 @@ def llm_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").filter(
         F.col("doc_id") < JACCARD_WITNESS_MAX_ID
     )
-    return exact_jaccard_pairs(d)
+    return exact_jaccard_pairs(tokens(d, distinct=True))
 
 
-def exact_jaccard_pairs(d: DataFrame, threshold: float = 0.8) -> DataFrame:
-    """(doc_a, doc_b, jaccard) pairs with exact token-set Jaccard ≥
-    threshold within a language, over the given doc frame — the core
-    llm_jaccard_neardup wraps (callers MUST bound the input; the packed
-    frame is broadcast).
+def exact_jaccard_pairs(tok: DataFrame, threshold: float = 0.8) -> DataFrame:
+    """(doc_a, doc_b, jaccard) pairs with exact set Jaccard ≥ threshold
+    within a language, over the (doc_id, lang, token) set rows ``tok``
+    (word tokens or char shingles) — the all-pairs core of
+    llm_jaccard_neardup and llm_ngram_jaccard (callers MUST bound the
+    input; the packed frame is broadcast).
 
     Restriction commutes: a pair's jaccard is a function of the two
     documents' own token sets alone (the dictionary ids and bitset
@@ -359,10 +373,9 @@ def exact_jaccard_pairs(d: DataFrame, threshold: float = 0.8) -> DataFrame:
     prune and the threshold are per-pair — so
     pairs(docs restricted to P) ≡ pairs(full corpus) ∩ P² (property-
     pinned in tests/test_properties.py). The witness-restricted
-    evaluator (engine.seeds22) relies on this to run the exact side on
-    the witness population only.
+    evaluators (engine.seeds22, engine.seeds23) rely on this to run the
+    exact side on the witness population only.
     """
-    tok = tokens(d, distinct=True)
     # Physical plan: bitset-packed set-similarity join, not the naive
     # token×token self-join (which materializes Σ df² rows through a
     # shuffle — 115M at sf0.1, the fixture vocabulary being tiny and
@@ -372,8 +385,7 @@ def exact_jaccard_pairs(d: DataFrame, threshold: float = 0.8) -> DataFrame:
     #   2. pack each doc's token set into a fixed-width bitset
     #      (array<long>, ⌈V/64⌉ words) with a bit_or aggregate;
     #   3. pair docs within a language (packed side broadcast — |docs|
-    #      rows of a few longs) under the size-ratio prune
-    #      (J ≥ 0.8 ⟹ min|A|,|B| / max|A|,|B| ≥ 0.8);
+    #      rows of a few longs) under the size-ratio prune;
     #   4. verify with |∩| = Σ bit_count(wordᵃ & wordᵇ) — integer ops in
     #      one codegen stage, no pair aggregate, no quadratic shuffle.
     # Regime note: the bitset width scales with vocabulary (V/64 longs);
@@ -401,28 +413,16 @@ def exact_jaccard_pairs(d: DataFrame, threshold: float = 0.8) -> DataFrame:
         F.broadcast(b),
         (a["lang"] == b["lang"])
         & (F.col("doc_a") < F.col("doc_b"))
-        # −1 slack (r15, VERDICT r14 item 9): the implication J ≥ t ⟹
-        # t·|A| ≤ |B| is exact in real arithmetic, but t·na in doubles
-        # can round one ulp ABOVE the true product and prune a boundary
-        # pair (na/nb exactly = t). The slack over-approximates any
-        # rounding — a few extra pairs reach the exact popcount verify,
-        # output unchanged (tests/test_properties.py boundary twin).
-        & (F.col("na") * threshold - 1 <= F.col("nb"))
-        & (F.col("nb") * threshold - 1 <= F.col("na")),
+        & size_prune(threshold),
     ).select(
         "doc_a",
         "doc_b",
         "na",
         "nb",
-        (bitset_intersection("ma", "mb", n_words) + nondet_zero()).alias(
-            "n_common"
-        ),
+        bitset_intersection("ma", "mb", n_words).alias("n_common"),
     )
-    jac = F.col("n_common").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("n_common")
-    )
-    return pairs.filter(jac >= threshold).select(
-        "doc_a", "doc_b", pround(jac, 4).alias("jaccard")
+    return pairs.filter(jaccard_ratio() >= threshold).select(
+        "doc_a", "doc_b", pround(jaccard_ratio(), 4).alias("jaccard")
     )
 
 

@@ -24,10 +24,11 @@ from engine.det import pround
 from engine.llm_ops import (
     N_MINHASH,
     bitset_intersection,
+    jaccard_ratio,
     mask_width,
     minhash_hashes,
-    nondet_zero,
     packed_token_sets,
+    size_prune,
 )
 
 N_BANDS = 4  # MinHash-LSH: 4 bands × 4 rows over the 16-perm signature
@@ -325,12 +326,6 @@ def bucket_self_join(
     )
 
 
-def _jaccard() -> Column:
-    return F.col("n_common").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("n_common")
-    )
-
-
 def jaccard_verify(
     cand: DataFrame, arrs: DataFrame, a: str, b: str, threshold: float
 ) -> DataFrame:
@@ -367,28 +362,21 @@ def jaccard_verify(
         F.col("mask").alias("mb"),
         F.col("n_tok").alias("nb"),
     )
-    # Size-ratio prune before the O(mask width) popcount: J(A,B) ≤
-    # min(|A|,|B|)/max(|A|,|B|), so J ≥ t implies the sizes agree within
-    # factor t (the −1 slack covers double rounding at the na/nb = t
-    # boundary, see llm_ops.exact_jaccard_pairs). Exact, so no
-    # qualifying pair is pruned; it drops ~26% of the popcounts at sf0.1,
-    # where hot-bucket candidates are mostly size-mismatched.
+    # The size prune (llm_ops.size_prune) runs before the O(mask width)
+    # popcount; it drops ~26% of the popcounts at sf0.1, where
+    # hot-bucket candidates are mostly size-mismatched.
     return (
         cand.join(F.broadcast(pa), a)
         .join(F.broadcast(pb), b)
-        .filter(
-            (F.col("na") * threshold - 1 <= F.col("nb"))
-            & (F.col("nb") * threshold - 1 <= F.col("na"))
-        )
+        .filter(size_prune(threshold))
         .select(
             a,
             b,
             "na",
             "nb",
-            (bitset_intersection("ma", "mb", n_words) + nondet_zero())
-            .alias("n_common"),
+            bitset_intersection("ma", "mb", n_words).alias("n_common"),
         )
-        .filter(_jaccard() >= threshold)
+        .filter(jaccard_ratio() >= threshold)
     )
 
 
@@ -431,5 +419,5 @@ def lsh_neardup_pairs(tok_arrays: DataFrame, threshold: float) -> DataFrame:
         F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
     )
     return jaccard_verify(cand, arrs, "doc_a", "doc_b", threshold).select(
-        "doc_a", "doc_b", pround(_jaccard(), 4).alias("jaccard")
+        "doc_a", "doc_b", pround(jaccard_ratio(), 4).alias("jaccard")
     )

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from engine.det import pround
-from engine.llm_ops import cosine, nondet_zero, token_arrays, tokens
+from engine.llm_ops import nondet_zero, token_arrays, tokens
 from engine.lsh_core import (
     bucket_self_join,
     first_collision_guard,
@@ -38,6 +38,7 @@ from engine.lsh_core import (
 )
 from engine.registry import query
 from engine.session import load
+from engine.vec import cosine
 
 SIMHASH_BITS = 32
 ANN_PLANES = 8

@@ -7,8 +7,7 @@ window surface, and prefix-cluster dedup — 10 operators, all oracled.
 Reference parity note: /root/reference (alehakad/FootballDataEngeneering)
 contains no code (README.md:1-2 + LICENSE only — SURVEY.md §0), so these
 extend SURVEY.md §2's own declared inventory, continuing the r4→r9
-growth playbook. Registered PAST the round-5 correctness window; rotate
-FIRST next round together with seeds8/seeds9.
+growth playbook.
 
 Import discipline: leaf modules only at module scope — see seeds8.
 """

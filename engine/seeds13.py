@@ -4,8 +4,7 @@ haversine geo-distance surface — 4 operators, all oracled.
 
 Reference parity note: /root/reference (alehakad/FootballDataEngeneering)
 contains no code (README.md:1-2 + LICENSE only — SURVEY.md §0), so these
-extend SURVEY.md §2's own declared inventory. Registered PAST the
-round-5 correctness window; rotate FIRST next round with seeds8-12.
+extend SURVEY.md §2's own declared inventory.
 
 Import discipline: leaf modules only at module scope — see seeds8.
 """

@@ -6,8 +6,7 @@ operator, oracled.
 
 Reference parity note: /root/reference (alehakad/FootballDataEngeneering)
 contains no code (README.md:1-2 + LICENSE only — SURVEY.md §0), so this
-extends SURVEY.md §2's own declared inventory. Registered PAST the
-round-5 correctness window; rotate FIRST next round with seeds8-18.
+extends SURVEY.md §2's own declared inventory.
 
 Import discipline: leaf modules only at module scope — see seeds8.
 """

@@ -4,8 +4,7 @@ RAG chunks reconstructed back into their source documents byte-exactly
 
 Reference parity note: /root/reference (alehakad/FootballDataEngeneering)
 contains no code (README.md:1-2 + LICENSE only — SURVEY.md §0), so this
-extends SURVEY.md §2's own declared inventory. Registered PAST the
-round-5 correctness window; rotate FIRST next round with seeds8-19.
+extends SURVEY.md §2's own declared inventory.
 
 Import discipline: leaf modules only at module scope — see seeds8.
 """

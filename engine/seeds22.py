@@ -5,8 +5,7 @@ evaluation — 1 operator, oracled (composed oracle).
 
 Reference parity note: /root/reference (alehakad/FootballDataEngeneering)
 contains no code (README.md:1-2 + LICENSE only — SURVEY.md §0), so this
-extends SURVEY.md §2's own declared inventory. Registered PAST the
-round-5 correctness window; rotate FIRST next round with seeds8-21.
+extends SURVEY.md §2's own declared inventory.
 
 Import discipline: leaf modules only at module scope (registry) — the
 two evaluated queries are looked up through the REGISTRY at call time
@@ -20,17 +19,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.det import pround
+from engine.det import ratio4
 from engine.registry import ORACLES, query
 
 EVAL_CAP = 1000  # the llm_jaccard_neardup witness population
 
 
-def _dedup_recall_oracle() -> str:
-    """Composed at resolve time from the two underlying oracles (both
-    registered by then; SURVEY.md §7.5 composition rule)."""
+def recall_oracle(approx_qid: str, n_approx: str) -> str:
+    """DuckDB mirror of :func:`pair_recall` for an approximate near-dup
+    query scored against llm_jaccard_neardup, composed at resolve time
+    from the two registered oracles (SURVEY.md §7.5 composition rule):
+    each full CTE chain, THEN the witness cap."""
     exact = ORACLES["llm_jaccard_neardup"]
-    approx = ORACLES["llm_lsh_neardup"]
+    approx = ORACLES[approx_qid]
     return f"""
     WITH e AS (SELECT doc_a, doc_b FROM ({exact})
                WHERE doc_a < {EVAL_CAP} AND doc_b < {EVAL_CAP}),
@@ -39,7 +40,7 @@ def _dedup_recall_oracle() -> str:
     tp AS (SELECT CAST(COUNT(*) AS BIGINT) AS n
            FROM e JOIN a USING (doc_a, doc_b))
     SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM e) AS n_exact,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM a) AS n_lsh,
+           (SELECT CAST(COUNT(*) AS BIGINT) FROM a) AS {n_approx},
            tp.n AS n_true_pos,
            ROUND(CAST(tp.n AS DOUBLE)
                  / (SELECT COUNT(*) FROM a), 4) AS precision,
@@ -49,7 +50,33 @@ def _dedup_recall_oracle() -> str:
     """
 
 
-@query("llm_dedup_recall", oracle=_dedup_recall_oracle)
+def pair_recall(
+    exact: DataFrame, approx: DataFrame
+) -> tuple[int, int, int, float | None, float | None]:
+    """(n_exact, n_approx, n_true_pos, precision, recall) of the
+    approximate (doc_a, doc_b) pair set ``approx`` against the ground
+    truth ``exact``. All three counts come from ONE full-outer-join
+    aggregate — one action, and neither pair pipeline runs twice (the
+    emb_banded_recall pattern). A score with a zero denominator is None."""
+    j = exact.select("doc_a", "doc_b", F.lit(1).alias("in_e")).join(
+        approx.select("doc_a", "doc_b", F.lit(1).alias("in_a")),
+        ["doc_a", "doc_b"],
+        "full_outer",
+    )
+    in_e, in_a = F.col("in_e") == 1, F.col("in_a") == 1
+    s = j.agg(
+        F.count(F.when(in_e, 1)).alias("n_e"),
+        F.count(F.when(in_a, 1)).alias("n_a"),
+        F.count(F.when(in_e & in_a, 1)).alias("tp"),
+    ).collect()[0]
+    n_e, n_a, tp = int(s["n_e"]), int(s["n_a"]), int(s["tp"])
+    return n_e, n_a, tp, ratio4(tp, n_a), ratio4(tp, n_e)
+
+
+@query(
+    "llm_dedup_recall",
+    oracle=lambda: recall_oracle("llm_lsh_neardup", "n_lsh"),
+)
 def llm_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup-pipeline evaluation: precision/recall of the banded
     MinHash-LSH near-dup pairs (llm_lsh_neardup) against the
@@ -78,46 +105,21 @@ def llm_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (VERDICT r5 item 3's "Done" bar; the exact side alone is ~16×
     fewer candidate pairs at sf0.1 — 4000² → 1000²).
 
-    Each pair frame is localCheckpoint-ed (eager) BEFORE the three
-    actions below (join-count, count, count) — without it each
-    pipeline executes twice. The checkpointed frames are pair-set-sized
-    (≤ EVAL_CAP² candidates), never corpus-sized.
+    Both pair frames are scored by :func:`pair_recall` in one action.
     """
-    from engine.llm_ops import exact_jaccard_pairs, token_arrays
+    from engine.llm_ops import exact_jaccard_pairs, token_arrays, tokens
     from engine.lsh_core import lsh_neardup_pairs
     from engine.session import load
 
     witness = load(spark, sf_dir, "documents").filter(
         F.col("doc_id") < EVAL_CAP
     )
-    exact = (
-        exact_jaccard_pairs(witness)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
+    row = pair_recall(
+        exact_jaccard_pairs(tokens(witness, distinct=True)),
+        lsh_neardup_pairs(token_arrays(witness), 0.8),
     )
-    approx = (
-        lsh_neardup_pairs(token_arrays(witness), 0.8)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
-    tp = exact.join(approx, ["doc_a", "doc_b"]).count()
-    n_e = exact.count()
-    n_a = approx.count()
-    row = [
-        (
-            n_e,
-            n_a,
-            tp,
-            float(__import__("math").floor(tp / n_a * 10**4 + 0.5)) / 10**4
-            if n_a
-            else None,
-            float(__import__("math").floor(tp / n_e * 10**4 + 0.5)) / 10**4
-            if n_e
-            else None,
-        )
-    ]
     return spark.createDataFrame(
-        row,
+        [row],
         "n_exact bigint, n_lsh bigint, n_true_pos bigint, "
         "precision double, recall double",
     )

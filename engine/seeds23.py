@@ -6,8 +6,7 @@ oracled.
 
 Reference parity note: /root/reference (alehakad/FootballDataEngeneering)
 contains no code (README.md:1-2 + LICENSE only — SURVEY.md §0), so these
-extend SURVEY.md §2's own declared inventory. Registered PAST the
-round-5 correctness window; rotate FIRST next round with seeds8-22.
+extend SURVEY.md §2's own declared inventory.
 
 Import discipline: leaf modules only at module scope; evaluated
 queries/oracles are composed through the registry at call/resolve time
@@ -21,10 +20,8 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from engine.det import _CENTS_SQL, _DAY_SQL, pround
-from engine.registry import ORACLES, query
+from engine.registry import query
 from engine.session import load
-
-SH_EVAL_CAP = 1000  # the exact-Jaccard witness population
 
 
 # ---------------------------------------------------------------------------
@@ -33,24 +30,9 @@ SH_EVAL_CAP = 1000  # the exact-Jaccard witness population
 
 
 def _simhash_recall_oracle() -> str:
-    exact = ORACLES["llm_jaccard_neardup"]
-    sim = ORACLES["llm_simhash_neardup"]
-    return f"""
-    WITH e AS (SELECT doc_a, doc_b FROM ({exact})
-               WHERE doc_a < {SH_EVAL_CAP} AND doc_b < {SH_EVAL_CAP}),
-    s AS (SELECT doc_a, doc_b FROM ({sim})
-          WHERE doc_a < {SH_EVAL_CAP} AND doc_b < {SH_EVAL_CAP}),
-    tp AS (SELECT CAST(COUNT(*) AS BIGINT) AS n
-           FROM e JOIN s USING (doc_a, doc_b))
-    SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM e) AS n_exact,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM s) AS n_simhash,
-           tp.n AS n_true_pos,
-           ROUND(CAST(tp.n AS DOUBLE)
-                 / (SELECT COUNT(*) FROM s), 4) AS precision,
-           ROUND(CAST(tp.n AS DOUBLE)
-                 / (SELECT COUNT(*) FROM e), 4) AS recall
-    FROM tp
-    """
+    from engine.seeds22 import recall_oracle
+
+    return recall_oracle("llm_simhash_neardup", "n_simhash")
 
 
 @query("llm_simhash_recall", oracle=_simhash_recall_oracle)
@@ -72,9 +54,8 @@ def llm_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-corpus pairs ∩ witness² on each side (property-pinned in
     tests/test_properties.py), and the UNCHANGED composed oracle (each
     full registered CTE chain, THEN the cap filter) has the driver
-    re-verify both commutations every run. Both pair frames are
-    localCheckpoint-ed (eager) before the three actions so neither
-    pipeline runs twice (VERDICT r5 item 3).
+    re-verify both commutations every run. Both pair frames are scored
+    by engine.seeds22.pair_recall in one action.
     MEASURED VERDICT on the fixtures: precision ≈ 0.16,
     recall ≈ 0.02 — SimHash's random-hyperplane signature approximates
     COSINE over token frequencies, which on this corpus selects a
@@ -83,30 +64,19 @@ def llm_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     proxy, not a substitute, and THIS op is what makes that visible
     before a pipeline swaps one for the other.
     """
-    from engine.llm_ops import exact_jaccard_pairs
+    from engine.llm_ops import exact_jaccard_pairs, tokens
     from engine.scale_ops import _simhash_df, simhash_neardup_pairs
+    from engine.seeds22 import EVAL_CAP, pair_recall
 
     witness = load(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < SH_EVAL_CAP
+        F.col("doc_id") < EVAL_CAP
     )
-    exact = (
-        exact_jaccard_pairs(witness)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
+    row = pair_recall(
+        exact_jaccard_pairs(tokens(witness, distinct=True)),
+        simhash_neardup_pairs(_simhash_df(spark, sf_dir, docs=witness)),
     )
-    sim = (
-        simhash_neardup_pairs(_simhash_df(spark, sf_dir, docs=witness))
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
-    import math
-
-    tp = exact.join(sim, ["doc_a", "doc_b"]).count()
-    n_e, n_s = exact.count(), sim.count()
-    prec = math.floor(tp / n_s * 10**4 + 0.5) / 10**4 if n_s else None
-    rec = math.floor(tp / n_e * 10**4 + 0.5) / 10**4 if n_e else None
     return spark.createDataFrame(
-        [(n_e, n_s, tp, prec, rec)],
+        [row],
         "n_exact bigint, n_simhash bigint, n_true_pos bigint, "
         "precision double, recall double",
     )

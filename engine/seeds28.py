@@ -17,11 +17,10 @@ registrations forward (the seeds22/seeds23-proven pattern).
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from engine.det import ratio4
 from engine.registry import query
 
 # Witness population: an ABSOLUTE vec_id cap (constant evaluator work at
@@ -261,13 +260,11 @@ def emb_banded_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_e, n_b, tp = int(s["n_e"]), int(s["n_b"]), int(s["tp"])
     n_eh, n_th = int(s["n_eh"]), int(s["n_th"])
 
-    def r4(num: int, den: int) -> float | None:
-        return (
-            math.floor(num / den * 10**4 + 0.5) / 10**4 if den else None
-        )
-
     row = [
-        (n_e, n_b, tp, r4(tp, n_b), r4(tp, n_e), n_eh, n_th, r4(n_th, n_eh))
+        (
+            n_e, n_b, tp, ratio4(tp, n_b), ratio4(tp, n_e),
+            n_eh, n_th, ratio4(n_th, n_eh),
+        )
     ]
     return spark.createDataFrame(
         row,

@@ -11,11 +11,7 @@ oracled + 1 declared sketch audit.
 
 Reference parity note: /root/reference (alehakad/FootballDataEngeneering)
 contains no code (README.md:1-2 + LICENSE only — SURVEY.md §0), so these
-extend SURVEY.md §2's own declared inventory. Registered PAST the
-round-5 correctness window (the 50-row cap is spoken for by the seeds5
-rotation + round-4 drift re-checks; see engine/__init__), fully oracled
-(except the declared approx audit) and in the local differential suite
-immediately; rotate FIRST next round.
+extend SURVEY.md §2's own declared inventory.
 
 Import discipline: this module must stay import-light (engine.det /
 engine.registry / engine.session / engine.splits / engine.vec are leaf

@@ -13,11 +13,7 @@ operators, 14 oracled + 1 declared sketch audit.
 Reference parity note: /root/reference (alehakad/FootballDataEngeneering)
 contains no code (README.md:1-2 + LICENSE only — SURVEY.md §0), so these
 extend SURVEY.md §2's own declared inventory, continuing the r4→r6
-growth playbook. Registered PAST the round-5 correctness window (the
-50-row cap is spoken for by the seeds5 rotation + round-4 drift
-re-checks; see engine/__init__), fully oracled and in the local
-differential suite immediately; rotate FIRST in a later round together
-with seeds6.
+growth playbook.
 
 Import discipline: leaf modules only at module scope (det / registry /
 session) — NEXT rotation this module registers ahead of the proven
@@ -596,14 +592,14 @@ def llm_containment_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     The one-sided size prune keeps only nb ≥ t·na − 1 (containment
     needs n_common ≥ t·na and n_common ≤ nb; the −1 slack
     over-approximates any fp rounding, so no qualifying pair is ever
-    pruned). nondet_zero pins the popcount to its projection (see
-    engine.llm_ops.nondet_zero — without it the sum lands inside the
-    join condition, evaluated per raw same-lang pair before the prune).
+    pruned). bitset_intersection pins the popcount to its projection
+    (see engine.llm_ops.nondet_zero — without the pin the sum lands
+    inside the join condition, evaluated per raw same-lang pair before
+    the prune).
     """
     from engine.llm_ops import (
         bitset_intersection,
         mask_width,
-        nondet_zero,
         packed_token_sets,
         tokens,
     )
@@ -625,83 +621,55 @@ def llm_containment_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # intersections sum across langs. packed rows are per (doc, lang);
     # when every doc has exactly one packed row (the clean fixture and
     # any content-stable-id corpus) the per-row grain IS the doc grain
-    # and the direct pair join below is exact. Otherwise take the
-    # doc-grain path: same per-lang popcounts, then a (doc_a, doc_b)
-    # rollup before thresholding. Driver-side branch on a metadata
-    # probe of the checkpointed witness-sized frame (the hot-bucket
-    # gate pattern) — both branches compute the identical result the
-    # oracle computes, the fast one just skips a provably-no-op rollup
-    # (pinned by tests/test_duplicate_rows.py's EXACT tier).
+    # and the pair join's per-lang popcounts are exact. Otherwise each
+    # side carries its DOC-level size (the prune implication holds
+    # doc-level: n_common ≤ nb_doc) and the popcounts roll up to
+    # (doc_a, doc_b) before thresholding; zero-intersection lang rows
+    # drop first so the rollup shuffles only token-sharing pairs — the
+    # same pair set the oracle's inner token join produces. Driver-side
+    # branch on a metadata probe of the checkpointed witness-sized frame
+    # (the hot-bucket gate pattern) — both branches compute the
+    # identical result the oracle computes, the fast one just skips a
+    # provably-no-op rollup (pinned by tests/test_duplicate_rows.py's
+    # EXACT tier).
     multirow = not (
         packed.groupBy("doc_id")
         .agg(F.count("*").alias("n"))
         .filter(F.col("n") > 1)
         .isEmpty()
     )
-    if not multirow:
-        a = packed.select(
-            F.col("doc_id").alias("doc_a"),
-            "lang",
-            F.col("mask").alias("ma"),
-            F.col("n_tok").alias("na"),
-        )
-        b = packed.select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("lang").alias("lang_b"),
-            F.col("mask").alias("mb"),
-            F.col("n_tok").alias("nb"),
-        )
-        pairs = a.join(
-            F.broadcast(b),
-            (F.col("lang") == F.col("lang_b"))
-            & (F.col("doc_a") != F.col("doc_b"))
-            & (F.col("nb") >= F.col("na") * t - 1),
-        ).select(
-            "doc_a",
-            "doc_b",
-            "na",
-            (
-                bitset_intersection("ma", "mb", n_words) + nondet_zero()
-            ).alias("n_common"),
-        )
-    else:
+    sized, n_col = packed, "n_tok"
+    if multirow:
         sz = packed.groupBy("doc_id").agg(F.sum("n_tok").alias("nd"))
-        a = packed.join(F.broadcast(sz), "doc_id").select(
-            F.col("doc_id").alias("doc_a"),
-            "lang",
-            F.col("mask").alias("ma"),
-            F.col("nd").alias("na"),
-        )
-        b = packed.join(F.broadcast(sz), "doc_id").select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("lang").alias("lang_b"),
-            F.col("mask").alias("mb"),
-            F.col("nd").alias("nb"),
-        )
-        # Per-(lang) popcounts with DOC-level sizes on both sides (the
-        # prune implication holds doc-level: n_common ≤ nb_doc), then
-        # the doc-grain rollup. Zero-intersection lang rows drop first
-        # so the rollup shuffles only token-sharing pairs — the same
-        # pair set the oracle's inner token join produces.
+        sized, n_col = packed.join(F.broadcast(sz), "doc_id"), "nd"
+    a = sized.select(
+        F.col("doc_id").alias("doc_a"),
+        "lang",
+        F.col("mask").alias("ma"),
+        F.col(n_col).alias("na"),
+    )
+    b = sized.select(
+        F.col("doc_id").alias("doc_b"),
+        F.col("lang").alias("lang_b"),
+        F.col("mask").alias("mb"),
+        F.col(n_col).alias("nb"),
+    )
+    pairs = a.join(
+        F.broadcast(b),
+        (F.col("lang") == F.col("lang_b"))
+        & (F.col("doc_a") != F.col("doc_b"))
+        & (F.col("nb") >= F.col("na") * t - 1),
+    ).select(
+        "doc_a",
+        "doc_b",
+        "na",
+        bitset_intersection("ma", "mb", n_words).alias("n_common"),
+    )
+    if multirow:
         pairs = (
-            a.join(
-                F.broadcast(b),
-                (F.col("lang") == F.col("lang_b"))
-                & (F.col("doc_a") != F.col("doc_b"))
-                & (F.col("nb") >= F.col("na") * t - 1),
-            )
-            .select(
-                "doc_a",
-                "doc_b",
-                "na",
-                (
-                    bitset_intersection("ma", "mb", n_words)
-                    + nondet_zero()
-                ).alias("nc_l"),
-            )
-            .filter(F.col("nc_l") > 0)
+            pairs.filter(F.col("n_common") > 0)
             .groupBy("doc_a", "doc_b", "na")
-            .agg(F.sum("nc_l").alias("n_common"))
+            .agg(F.sum("n_common").alias("n_common"))
         )
     cont = pairs.select(
         "doc_a",

@@ -12,10 +12,7 @@ proven engine.streaming pattern).
 Reference parity note: /root/reference (alehakad/FootballDataEngeneering)
 contains no code (README.md:1-2 + LICENSE only — SURVEY.md §0), so these
 extend SURVEY.md §2's own declared inventory, continuing the r4→r7
-growth playbook. Registered PAST the round-5 correctness window (the
-50-row cap is spoken for by the seeds5+seeds6+seeds7 rotation; see
-engine/__init__), fully oracled and in the local differential suite
-immediately; rotate FIRST next round.
+growth playbook.
 
 Import discipline: leaf modules only at module scope (det / registry /
 session / stream_source) — NEXT rotation this module registers ahead of

@@ -9,9 +9,7 @@ metadata audit.
 Reference parity note: /root/reference (alehakad/FootballDataEngeneering)
 contains no code (README.md:1-2 + LICENSE only — SURVEY.md §0), so these
 extend SURVEY.md §2's own declared inventory, continuing the r4→r8
-growth playbook. Registered PAST the round-5 correctness window,
-fully oracled and in the local differential suite immediately; rotate
-FIRST next round together with seeds8.
+growth playbook.
 
 Import discipline: leaf modules only at module scope (det / registry /
 session) — see seeds8's note.

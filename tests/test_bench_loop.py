@@ -193,7 +193,7 @@ def test_summary_artifact_contract():
     )
     # The line survives the driver's tail capture with room to spare.
     line = json.dumps(summary, separators=(",", ":"))
-    assert len(line) <= 1400, f"summary line {len(line)}B > 1400B"
+    assert len(line) <= 1300, f"summary line {len(line)}B > 1300B"
     # Degenerate input: no queries -> no crash, null geomean.
     full0, summary0 = bench.build_artifacts(
         {}, sf=None, loadavg_start=None, loadavg_end=None,

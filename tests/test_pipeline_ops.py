@@ -199,3 +199,20 @@ def test_char_shingles_chunking_matches_python_sliding_window(spark):
         [(99, "en", "abcd")], "doc_id long, lang string, text string"
     )
     assert char_shingles(tiny).count() == 0
+
+
+def test_pair_recall_scores_hand_built_pair_sets(spark):
+    """The near-dup recall scorer (engine.seeds22.pair_recall) on
+    hand-built (doc_a, doc_b) pair frames: one shared pair out of two on
+    each side scores 0.5/0.5; an empty approximate side has no precision
+    and zero recall; two empty sides have neither score."""
+    from engine.seeds22 import pair_recall
+
+    schema = "doc_a long, doc_b long"
+    exact = spark.createDataFrame([(1, 2), (3, 4)], schema)
+    approx = spark.createDataFrame([(1, 2), (5, 6)], schema)
+    empty = spark.createDataFrame([], schema)
+
+    assert pair_recall(exact, approx) == (2, 2, 1, 0.5, 0.5)
+    assert pair_recall(exact, empty) == (2, 0, 0, None, 0.0)
+    assert pair_recall(empty, empty) == (0, 0, 0, None, None)

@@ -487,7 +487,7 @@ def test_exact_jaccard_pairs_commute_with_input_restriction(spark, docs, cap):
     size prune + threshold are per-pair. A future edit introducing
     corpus-dependent pair state breaks loudly here, not as a driver
     hash-mismatch on the evaluator."""
-    from engine.llm_ops import exact_jaccard_pairs
+    from engine.llm_ops import exact_jaccard_pairs, tokens
 
     rows = [(i, "xx", " ".join(doc)) for i, doc in enumerate(docs)]
     d = spark.createDataFrame(rows, "doc_id long, lang string, text string")
@@ -495,7 +495,9 @@ def test_exact_jaccard_pairs_commute_with_input_restriction(spark, docs, cap):
     def pairs(frame):
         return {
             (r.doc_a, r.doc_b, r.jaccard)
-            for r in exact_jaccard_pairs(frame, 0.5).collect()
+            for r in exact_jaccard_pairs(
+                tokens(frame, distinct=True), 0.5
+            ).collect()
         }
 
     full_filtered = {
@@ -570,7 +572,7 @@ def test_size_prune_keeps_exact_boundary_pair(spark):
     checked exhaustively — so this pins the generic helper at a
     threshold where the failure is real, as insurance for any future
     threshold.)"""
-    from engine.llm_ops import exact_jaccard_pairs
+    from engine.llm_ops import exact_jaccard_pairs, tokens
 
     t = 9 / 14
     assert 42 * t > 27, "test premise: the unslacked product rounds up"
@@ -585,7 +587,9 @@ def test_size_prune_keeps_exact_boundary_pair(spark):
     )
     got = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in exact_jaccard_pairs(docs, threshold=t).collect()
+        for r in exact_jaccard_pairs(
+            tokens(docs, distinct=True), threshold=t
+        ).collect()
     }
     # J(A,B) = 27/42 = 9/14 exactly = t: the pair must be in the
     # output (pround(·, 4) of 0.642857... = 0.6429).
