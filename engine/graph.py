@@ -1,33 +1,21 @@
-"""Round-21 seed operators — two scale-design flagships: INTEGER-exact
-PageRank over the derived part hierarchy (iterative distributed joins,
-chained-CTE oracle) and a Morton/Z-order multi-dimension layout audit
-(physical file cuts ≡ logical buckets over the interleaved key) — 2
-operators, both oracled.
-
-Reference parity note: /root/reference (alehakad/FootballDataEngeneering)
-contains no code (README.md:1-2 + LICENSE only — SURVEY.md §0), so these
-extend SURVEY.md §2's own declared inventory.
-
-Import discipline: leaf modules only at module scope — see seeds8.
+"""Graph analytics (``graph_`` queries): integer-mass PageRank over the
+part taxonomy derived from ``part`` (child ⌊k/7⌋ → parent), exact in
+bigint arithmetic so both engines agree bit for bit.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from engine.det import pround
 from engine.registry import query
 from engine.session import load
+
 
 PR_NODE_CAP = 200  # same derived-taxonomy population as sql_recursive_*
 PR_SCALE = 10**12  # total rank mass in integer micro-units
 PR_DAMP_NUM, PR_DAMP_DEN = 85, 100
 PR_ITERS = 5
-
-Z_BITS = 10  # Morton bits per dimension
-Z_FILE_ROWS = 1000  # records per physical file / logical bucket
 
 
 # ---------------------------------------------------------------------------
@@ -201,103 +189,4 @@ def graph_pagerank_integer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("r").desc(), "node")
         .limit(20)
         .select("node", F.col("r").alias("rank_units"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# sink_zorder_layout — Morton-interleaved multi-dimension clustering
-# ---------------------------------------------------------------------------
-
-
-def _morton_sql(u: str, d: str) -> str:
-    """DuckDB spelling: shift OPERATORS (no shiftright function)."""
-    return " + ".join(
-        f"(((({u} >> {k}) & 1) << {2 * k}) + ((({d} >> {k}) & 1) << {2 * k + 1}))"
-        for k in range(Z_BITS)
-    )
-
-
-def _morton_spark(u: str, d: str) -> str:
-    """Spark spelling: shiftleft/shiftright FUNCTIONS + & operator —
-    identical integer arithmetic, two dialects."""
-    return " + ".join(
-        f"(shiftleft(shiftright({u}, {k}) & 1, {2 * k})"
-        f" + shiftleft(shiftright({d}, {k}) & 1, {2 * k + 1}))"
-        for k in range(Z_BITS)
-    )
-
-
-@query(
-    "sink_zorder_layout",
-    oracle=f"""
-    WITH c AS (
-      SELECT user_id,
-             CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) % 1024 AS day_k,
-             user_id % 1024 AS user_k,
-             event_id
-      FROM events
-    ), m AS (
-      SELECT user_k, day_k,
-             {_morton_sql("user_k", "day_k")} AS morton,
-             event_id
-      FROM c
-    ), b AS (
-      SELECT user_k, day_k,
-             CAST((ROW_NUMBER() OVER (ORDER BY morton, event_id) - 1)
-                  // {Z_FILE_ROWS} AS BIGINT) AS bucket
-      FROM m
-    )
-    SELECT bucket,
-           CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(MAX(user_k) - MIN(user_k) AS BIGINT) AS user_span,
-           CAST(MAX(day_k) - MIN(day_k) AS BIGINT) AS day_span
-    FROM b GROUP BY 1
-    """,
-)
-def sink_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order (Morton) multi-dimensional clustering audit: events laid
-    out along the BIT-INTERLEAVED (user, day) key and cut into
-    fixed-size buckets — per bucket, the min/max SPAN of BOTH
-    dimensions, which is precisely what parquet zone-maps would skip
-    on. A linear (single-column) sort gives tight spans in one
-    dimension and full-range spans in the other; Morton order bounds
-    BOTH — the reason Delta/Iceberg OPTIMIZE ZORDER exists, built here
-    from plain bit arithmetic.
-
-    The interleave is a 10-bit-per-dimension unrolled shift/mask
-    expression — identical integer arithmetic on both engines — and
-    bucket cuts are row_number over the unique (morton, event_id)
-    order, so the audit is bit-stable. The physical-write twin
-    (sortWithinPartitions(morton) + maxRecordsPerFile) produces files
-    that ARE these buckets; the logical form keeps the audit
-    side-effect-free and oracle-checkable.
-    """
-    e = load(spark, sf_dir, "events")
-    c = e.select(
-        (F.col("user_id") % 1024).alias("user_k"),
-        (
-            F.floor(F.unix_timestamp("ts") / 86400).cast("bigint") % 1024
-        ).alias("day_k"),
-        "event_id",
-    )
-    m = c.select(
-        "user_k",
-        "day_k",
-        F.expr(_morton_spark("user_k", "day_k")).alias("morton"),
-        "event_id",
-    )
-    b = m.select(
-        "user_k",
-        "day_k",
-        F.floor(
-            (F.row_number().over(W.orderBy("morton", "event_id")) - 1)
-            / Z_FILE_ROWS
-        )
-        .cast("bigint")
-        .alias("bucket"),
-    )
-    return b.groupBy("bucket").agg(
-        F.count("*").cast("bigint").alias("n_rows"),
-        (F.max("user_k") - F.min("user_k")).cast("bigint").alias("user_span"),
-        (F.max("day_k") - F.min("day_k")).cast("bigint").alias("day_span"),
     )

@@ -373,7 +373,7 @@ def exact_jaccard_pairs(tok: DataFrame, threshold: float = 0.8) -> DataFrame:
     prune and the threshold are per-pair — so
     pairs(docs restricted to P) ≡ pairs(full corpus) ∩ P² (property-
     pinned in tests/test_properties.py). The witness-restricted
-    evaluators (engine.seeds22, engine.seeds23) rely on this to run the
+    evaluators (llm_dedup_recall, llm_simhash_recall) rely on this to run the
     exact side on the witness population only.
     """
     # Physical plan: bitset-packed set-similarity join, not the naive

@@ -86,7 +86,7 @@ def band_rows(sig: DataFrame) -> DataFrame:
     explode computes it once, and identical subplans on the two sides
     of a bucket self-join reuse one shuffle (ReusedExchange). Shared by
     :func:`lsh_neardup_pairs` and the cross-corpus decontamination
-    (engine.seeds6).
+    (llm_decontaminate_lsh).
 
     ``bv`` is the UNHEX'd md5 — 16 raw bytes instead of a 32-char hex
     string. unhex is a bijection on canonical md5 output, so binary
@@ -131,7 +131,7 @@ def lsh_sig_bands_ctes(tok_sql: str = _TOK_SQL) -> str:
     construction over any (doc_id, lang, token) CTE — ends with
     ``bands`` (doc_id, lang, band, bv). Consumers append their own
     candidate join: the self-join form (:func:`lsh_candidate_ctes`) or
-    the cross-corpus form (engine.seeds6's decontamination). The
+    the cross-corpus form (llm_decontaminate_lsh). The
     banding is deterministic (md5-derived minhash), so both engines
     agree on the exact candidate set — banding recall is part of the
     MIRRORED semantics, not a source of divergence."""
@@ -166,7 +166,7 @@ def lsh_candidate_ctes(tok_sql: str = _TOK_SQL) -> str:
     with ``sz`` (per-doc set sizes) and ``inter`` (per-candidate-pair
     intersection counts). Shared by the near-dup pair oracles
     (:func:`lsh_oracle`) and the dedup-clustering oracles
-    (engine.pipeline_ops / engine.seeds5), which append their own
+    (engine.pipeline_ops / llm_dedup_survivors), which append their own
     threshold filter + recursive closure."""
     return f"""{lsh_sig_bands_ctes(tok_sql)}, cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b

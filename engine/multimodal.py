@@ -24,7 +24,6 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -299,4 +298,133 @@ def mm_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, out_w int, out_h int,"
             " pixel_sum long, pixel_sq_sum long"
         ),
+    )
+
+
+EMB_QUANT = 10**6
+
+
+# ---------------------------------------------------------------------------
+# mm_embedding_centroids — per-label centroids over quantized embeddings
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "mm_embedding_centroids",
+    oracle=f"""
+    WITH q AS (
+      SELECT label,
+             UNNEST(generate_series(1, LEN(embedding))) - 1 AS dim,
+             TRY_CAST(FLOOR(CAST(UNNEST(embedding) AS DOUBLE)
+                            * {EMB_QUANT}) AS BIGINT) AS qx
+      FROM embeddings
+    )
+    SELECT label, dim,
+           CAST(COUNT(*) AS BIGINT) AS n_vecs,
+           ROUND(CAST(SUM(qx) AS DOUBLE) / COUNT(*) / {EMB_QUANT}, 6)
+             AS centroid_comp
+    FROM q GROUP BY 1, 2
+    """,
+)
+def mm_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-label embedding centroids — the class-prototype primitive
+    behind nearest-centroid classification, SemDeDup-style pruning, and
+    IVF coarse quantizers — computed on (label, dimension) grain via
+    posexplode.
+
+    Determinism by QUANTIZATION, not luck: float components are floored
+    to integer micro-units BEFORE summing, so the per-cell sums are
+    exact bigints (order-independent — float summation order across
+    partitions would otherwise make centroid components engine-varying
+    at the ulp level, the same trap the zscore ADVICE documented). The
+    dimension explode is a bounded ×64 fan-out feeding ONE map-combined
+    aggregation; at 100 TB this is the standard mapInPandas-free way to
+    mean-pool vectors (kmeans' iterative path shares the shape).
+    """
+    emb = load(spark, sf_dir, "embeddings")
+    q = emb.select(
+        "label",
+        F.posexplode("embedding").alias("dim", "x"),
+    ).select(
+        "label",
+        "dim",
+        # Range-guarded quantization: a nonfinite or int64-overflowing
+        # component (NaN/±Inf-poisoned batch, fp blowup upstream)
+        # quantizes to NULL and drops out of the exact integer sum on
+        # BOTH engines, instead of an ANSI overflow abort
+        # (non-finite-embeddings sweep). The guard must run BEFORE
+        # floor(): Spark's floor(double) returns BIGINT and silently
+        # CLAMPS ±Inf/out-of-range to Long.MaxValue — a try_cast around
+        # it never sees the overflow, Long.MaxValue enters the group
+        # sum, and the second poisoned row in a cell aborts the job
+        # with ARITHMETIC_OVERFLOW (caught by the nonfinite sweep, r8).
+        # DuckDB's FLOOR stays DOUBLE and TRY_CAST nulls anything
+        # outside int64, so the explicit [-2^63, 2^63) window below is
+        # the exact Spark equivalent (NaN fails the between, ±Inf fail
+        # the bounds, and every in-range double floors losslessly).
+        F.expr(
+            f"""case when cast(x as double) * {EMB_QUANT}
+                          >= -9.223372036854776e18
+                      and cast(x as double) * {EMB_QUANT}
+                          < 9.223372036854776e18
+                     then floor(cast(x as double) * {EMB_QUANT})
+                     else cast(null as bigint) end"""
+        ).alias("qx"),
+    )
+    return q.groupBy("label", "dim").agg(
+        F.count("*").cast("bigint").alias("n_vecs"),
+        pround(
+            F.sum("qx").cast("double") / F.count("*") / EMB_QUANT, 6
+        ).alias("centroid_comp"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# mm_label_balance_chi2 — dataset label-balance audit
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "mm_label_balance_chi2",
+    oracle="""
+    WITH g AS (
+      SELECT label, CAST(COUNT(*) AS BIGINT) AS n FROM embeddings GROUP BY 1
+    ), t AS (
+      SELECT CAST(SUM(n) AS BIGINT) AS tot, CAST(COUNT(*) AS BIGINT) AS k
+      FROM g
+    )
+    SELECT g.label, g.n,
+           ROUND(CAST(g.n AS DOUBLE) / t.tot, 6) AS share,
+           ROUND((g.n * t.k - t.tot) * (g.n * t.k - t.tot)
+                 / (CAST(t.k AS DOUBLE) * t.tot), 6) AS chi2_term
+    FROM g CROSS JOIN t
+    """,
+)
+def mm_label_balance_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Label-balance audit of the embedding corpus: per-class counts,
+    shares, and each class's chi-square term against the uniform
+    expectation — Σ terms is the χ² statistic a dataset card reports
+    before anyone trains a classifier on skewed labels.
+
+    The chi-square numerator is computed in the common-denominator
+    integer form (n·k − tot)² — exact bigint — with one final double
+    division per class (the ts_cusum_change scaling trick applied to
+    goodness-of-fit). One label aggregation, a 1-row totals broadcast,
+    alphabet-sized output.
+    """
+    emb = load(spark, sf_dir, "embeddings")
+    g = emb.groupBy("label").agg(F.count("*").cast("bigint").alias("n"))
+    t = g.agg(
+        F.sum("n").cast("bigint").alias("tot"),
+        F.count("*").cast("bigint").alias("k"),
+    )
+    j = g.crossJoin(F.broadcast(t))
+    dev = F.col("n") * F.col("k") - F.col("tot")
+    return j.select(
+        "label",
+        "n",
+        pround(F.col("n").cast("double") / F.col("tot"), 6).alias("share"),
+        pround(
+            dev * dev / (F.col("k").cast("double") * F.col("tot")), 6
+        ).alias("chi2_term"),
     )

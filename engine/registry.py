@@ -47,8 +47,7 @@ def query(
     for oracles COMPOSED from other registered oracles (e.g.
     llm_ann_recall) — callables are resolved by :func:`resolve_oracles`
     after every module has imported, so composition never constrains
-    module registration order (which the driver's capped correctness
-    sweep walks; see engine/__init__).
+    module import order.
 
     Queries without an oracle get the driver's weaker rows-only check
     (SURVEY.md §2 'no-oracle' rows).
@@ -83,21 +82,11 @@ def query(
 
 
 def promote(window_ids: list[str]) -> None:
-    """Pin the driver's correctness window: reorder ``QUERIES`` so
-    ``window_ids`` occupy the first positions, in the given order.
+    """Reorder ``QUERIES`` so ``window_ids`` come first, in the given
+    order: the driver checks queries in registration order and reports
+    the first 50, so the window does not depend on import order.
 
-    The driver checks queries in registration (dict) order and caps the
-    per-round report at 50 rows (CORRECTNESS_r01-r06 each hold exactly
-    50). Through round 6 the window was steered purely by module import
-    order in ``engine/__init__``, which works for whole-module rotations
-    but cannot place a single re-check query from a large, already-green
-    module (e.g. ``llm_lsh_neardup`` inside engine.scale_ops) into the
-    window without dragging its 14 siblings along. ``promote`` decouples
-    window membership from import order: ``engine/__init__`` names the
-    round's exact window after all modules have registered.
-
-    Raises on unknown or duplicate ids so a typo'd rotation fails at
-    import time (i.e. in every test run), not silently at driver time.
+    Raises on unknown or duplicate ids, so a bad window fails at import.
     """
     seen: set[str] = set()
     for qid in window_ids:

@@ -17,10 +17,12 @@ fact-fact joins shuffle on their keys with AQE skew handling.
 from __future__ import annotations
 
 import shutil
+import tempfile
 import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from engine.det import (
@@ -36,15 +38,14 @@ from engine.det import (
     revenue_e4_sql,
 )
 from engine.registry import query
+from engine.roundtrip import SCRATCH
+from engine.roundtrip import roundtrip_verified as _roundtrip_verified
 from engine.session import load
+
 
 # Shared constants (domains verified in FIXTURES.md).
 SHIP_CUTOFF = "2000-09-02"  # inside the 1995..2001 l_shipdate range
 HIGH_VALUE = 400_000.0  # o_totalprice threshold; ~20% of orders qualify
-
-# Scratch dir for side-effecting roundtrip queries (inside the repo —
-# nothing outside /root/repo is written).
-_SCRATCH = Path(__file__).resolve().parent.parent / ".scratch"
 
 
 def _revenue() -> F.Column:
@@ -98,12 +99,6 @@ def scan_filter_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared with engine.text_source (leaf module, registers nothing).
-from engine.roundtrip import (  # noqa: E402
-    roundtrip_verified as _roundtrip_verified,
-)
-
-
 @query(
     "source_csv_roundtrip",
     oracle=f"""
@@ -126,7 +121,7 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     2-dp portable-rounded doubles serialize as shortest-repr text and
     parse back bit-exactly.
     """
-    out = _SCRATCH / f"csv_{uuid.uuid4().hex}"
+    out = SCRATCH / f"csv_{uuid.uuid4().hex}"
     agg = (
         load(spark, sf_dir, "orders")
         .groupBy("o_orderpriority")
@@ -164,7 +159,7 @@ def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     content-asserted against the written rows, and (since r6) the
     read-back hash-verified against DuckDB's same aggregate on the
     source table — the write→parse chain under test end-to-end."""
-    out = _SCRATCH / f"json_{uuid.uuid4().hex}"
+    out = SCRATCH / f"json_{uuid.uuid4().hex}"
     agg = (
         load(spark, sf_dir, "customer")
         .groupBy("c_mktsegment")
@@ -209,7 +204,7 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     This layout is the 100 TB story: date-partitioned facts let every
     time-bounded query skip irrelevant partitions at planning time.
     """
-    out = _SCRATCH / f"part_{uuid.uuid4().hex}"
+    out = SCRATCH / f"part_{uuid.uuid4().hex}"
     orders = load(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate")
     )
@@ -578,8 +573,6 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Multiple tied clicks are harmless either way: only click_ts is
     emitted, and it equals the shared instant.)
     """
-    from pyspark.sql import Window as W
-
     ev = load(spark, sf_dir, "events").filter(
         F.col("event_type").isin("purchase", "click")
     )
@@ -1137,7 +1130,7 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the CSV/JSON roundtrips over the third columnar format Spark
     ships natively; oracled since r6 (ORC doubles are stored natively,
     so the read-back hash-matches DuckDB's aggregate bit-exactly)."""
-    out = _SCRATCH / f"orc_{uuid.uuid4().hex}"
+    out = SCRATCH / f"orc_{uuid.uuid4().hex}"
     agg = (
         load(spark, sf_dir, "supplier")
         .groupBy("s_nationkey")
@@ -1213,4 +1206,490 @@ def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact_sum(cents_col(F.col("o_totalprice"), 3), 1000).alias(
             "sum_price"
         ),
+    )
+
+
+OVERLAP_BIN_SECS = 6 * 3600
+
+
+# ---------------------------------------------------------------------------
+# join_calendar_dim — sequence-generated date dimension joined as a dim
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "join_calendar_dim",
+    oracle="""
+    WITH span AS (
+      SELECT MIN(CAST(o_orderdate AS DATE)) AS mn,
+             MAX(CAST(o_orderdate AS DATE)) AS mx
+      FROM orders
+    ), cal AS (
+      SELECT CAST(UNNEST(GENERATE_SERIES(mn, mx, INTERVAL 1 DAY)) AS DATE)
+               AS d
+      FROM span
+    ), day_agg AS (
+      SELECT CAST(o_orderdate AS DATE) AS od,
+             COUNT(*) AS n_orders,
+             SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
+               AS day_price_c
+      FROM orders GROUP BY 1
+    )
+    SELECT YEAR(d) AS cal_year,
+           QUARTER(d) AS cal_quarter,
+           COUNT(DISTINCT d) AS n_days,
+           CAST(COALESCE(SUM(n_orders), 0) AS BIGINT) AS n_orders,
+           ROUND(CAST(COALESCE(SUM(day_price_c), 0) AS DOUBLE) / 100, 2)
+             AS sum_price
+    FROM cal LEFT JOIN day_agg ON od = d
+    GROUP BY 1, 2
+    """,
+)
+def join_calendar_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A real calendar dimension generated IN-PLAN with ``sequence``
+    (no driver loop, no static file): one scalar aggregate finds the
+    orders date span, ``explode(sequence(mn, mx, 1 day))`` emits every
+    calendar day, and the dim LEFT-joins the fact so quarters keep
+    their full day count even where no orders exist — the property a
+    calendar dim exists for and a bare GROUP BY o_orderdate cannot give.
+
+    Scale: the fact is pre-aggregated to day grain first (ONE shuffle
+    of orders, ~2k distinct days per 5-year span no matter the corpus
+    size), so the calendar join is dimension×dimension — broadcast,
+    never a fact-sized shuffle; the left-outer build side is the day
+    aggregate (BroadcastHashJoin LeftOuter BuildRight). 100 TB of
+    orders changes only the pre-aggregation, not the join.
+    """
+    o = load(spark, sf_dir, "orders").withColumn(
+        "od", F.to_date("o_orderdate")
+    )
+    span = o.agg(F.min("od").alias("mn"), F.max("od").alias("mx"))
+    cal = span.select(
+        F.explode(F.expr("sequence(mn, mx, interval 1 day)")).alias("d")
+    )
+    day_agg = o.groupBy("od").agg(
+        F.count("*").alias("n_orders"),
+        # exact cents at both aggregation levels (r10 quantization
+        # audit): the day rollup sums BIGINT cents, the quarter rollup
+        # re-sums those exact integers.
+        F.sum(cents_col(F.col("o_totalprice"))).alias("day_price_c"),
+    )
+    return (
+        cal.join(F.broadcast(day_agg), cal["d"] == day_agg["od"], "left")
+        .groupBy(
+            F.year("d").alias("cal_year"),
+            F.quarter("d").alias("cal_quarter"),
+        )
+        .agg(
+            F.countDistinct("d").alias("n_days"),
+            F.coalesce(F.sum("n_orders"), F.lit(0))
+            .cast("long")
+            .alias("n_orders"),
+            pround(
+                F.coalesce(
+                    F.sum(F.col("day_price_c").cast("decimal(38,0)")),
+                    F.lit(0),
+                ).cast("double")
+                / 100,
+                2,
+            ).alias("sum_price"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# join_interval_overlap — binned interval-overlap join
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "join_interval_overlap",
+    oracle=f"""
+    WITH iv AS (
+      SELECT user_id, DATE_TRUNC('day', ts) AS day,
+             MIN(ts) AS s, MAX(ts) AS e
+      FROM events GROUP BY 1, 2
+    ), b AS (
+      SELECT user_id,
+             UNNEST(GENERATE_SERIES(
+               CAST(FLOOR(EPOCH(s) / {OVERLAP_BIN_SECS}) AS BIGINT),
+               CAST(FLOOR(EPOCH(e) / {OVERLAP_BIN_SECS}) AS BIGINT)))
+               AS bin
+      FROM iv
+    )
+    SELECT CAST(TO_TIMESTAMP(bin * {OVERLAP_BIN_SECS}) AS TIMESTAMP)
+             AS window_start,
+           COUNT(*) AS n_intervals,
+           COUNT(DISTINCT user_id) AS n_users
+    FROM b GROUP BY 1
+    """,
+)
+def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Interval-overlap join by BIN DECOMPOSITION: per-user-day activity
+    intervals [first event, last event] are matched to the fixed 6-hour
+    window grid they overlap, producing per-window presence counts
+    (how many user-days, how many distinct users were active).
+
+    The scale point is HOW the overlap is computed: not a theta-join
+    (`a.s < w.end AND w.start < a.e` degenerates to a nested-loop that
+    compares every interval to every window), but each interval
+    exploding to exactly the bins it covers — `sequence(floor(s/6h),
+    floor(e/6h))` — then a hash aggregate on the bin key. Explode
+    fan-out is bounded (≤ 5 bins for an intra-day interval), the join
+    disappears into a groupBy, and the plan is shuffle-minimal at any
+    corpus size. This is the standard binning rewrite for
+    interval/range joins (same family as join_range_theta's banded
+    form and win_range_interval).
+    """
+    e = load(spark, sf_dir, "events")
+    iv = e.groupBy(
+        "user_id", F.date_trunc("day", "ts").alias("day")
+    ).agg(F.min("ts").alias("s"), F.max("ts").alias("e"))
+    b = iv.select(
+        "user_id",
+        F.explode(
+            F.sequence(
+                F.floor(F.unix_timestamp("s") / OVERLAP_BIN_SECS),
+                F.floor(F.unix_timestamp("e") / OVERLAP_BIN_SECS),
+            )
+        ).alias("bin"),
+    )
+    return b.groupBy("bin").agg(
+        F.count("*").alias("n_intervals"),
+        F.countDistinct("user_id").alias("n_users"),
+    ).select(
+        F.timestamp_seconds(F.col("bin") * OVERLAP_BIN_SECS).alias(
+            "window_start"
+        ),
+        "n_intervals",
+        "n_users",
+    )
+
+
+# ---------------------------------------------------------------------------
+# set_except_all — bag-semantics EXCEPT ALL (multiplicity arithmetic)
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "set_except_all",
+    oracle="""
+    WITH d AS (
+      SELECT l_partkey FROM lineitem WHERE l_quantity > 10
+      EXCEPT ALL
+      SELECT l_partkey FROM lineitem WHERE l_returnflag = 'A'
+    )
+    SELECT l_partkey, COUNT(*) AS n_remaining FROM d GROUP BY 1
+    """,
+)
+def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bag-semantics set difference via ``DataFrame.exceptAll`` —
+    multiplicities subtract (a key appearing 5× in the left and 2× in
+    the right survives 3×), which DISTINCT-based ``EXCEPT``
+    (set_except, engine/relational.py) cannot express; the remaining
+    multiplicities are aggregated for a stable hash.
+
+    Spark plans exceptAll as a ±1 counter aggregate + replication
+    (generate), not a join — one shuffle on the key, the same shape a
+    hand-written count-and-subtract would give, and the idiom a
+    retraction/compaction pipeline uses at scale.
+    """
+    li = load(spark, sf_dir, "lineitem")
+    a = li.filter(F.col("l_quantity") > 10).select("l_partkey")
+    b = li.filter(F.col("l_returnflag") == "A").select("l_partkey")
+    return (
+        a.exceptAll(b)
+        .groupBy("l_partkey")
+        .agg(F.count("*").alias("n_remaining"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# merge_scd2_versions — slowly-changing-dimension type-2 build
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "merge_scd2_versions",
+    oracle="""
+    WITH d AS (
+      SELECT user_id, DATE_TRUNC('day', ts) AS day,
+             ARG_MAX(value, event_id) AS closing_value,
+             COUNT(*) AS n_events
+      FROM events GROUP BY 1, 2
+    )
+    SELECT user_id,
+           day AS valid_from,
+           LEAD(day) OVER w AS valid_to,
+           ROW_NUMBER() OVER w AS version_no,
+           CAST(CASE WHEN LEAD(day) OVER w IS NULL THEN 1 ELSE 0 END
+                AS INT) AS is_current,
+           n_events,
+           ROUND(closing_value, 2) AS closing_value
+    FROM d
+    WINDOW w AS (PARTITION BY user_id ORDER BY day)
+    """,
+)
+def merge_scd2_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Slowly-changing-dimension type-2 history build: each user-day
+    becomes a version row with [valid_from, valid_to) validity derived
+    from the NEXT version's start (open-ended + is_current flag on the
+    latest) and the day's closing attribute value — the standard
+    warehouse pattern for turning an event stream into an as-of-joinable
+    dimension history (join_asof consumes exactly this shape).
+
+    ``max_by(value, event_id)`` picks the day's closing value by the
+    unique event_id order (ts increases with event_id — FIXTURES.md
+    invariant 4), deterministic on both engines (DuckDB ``arg_max``).
+    Scale: one fact shuffle to (user, day) grain, then lead/row_number
+    over each user's day spine — per-user state is days, not events.
+    """
+    e = load(spark, sf_dir, "events")
+    d = e.groupBy(
+        "user_id", F.date_trunc("day", "ts").alias("day")
+    ).agg(
+        F.expr("max_by(value, event_id)").alias("closing_value"),
+        F.count("*").alias("n_events"),
+    )
+    w = W.partitionBy("user_id").orderBy("day")
+    nxt = F.lead("day").over(w)
+    return d.select(
+        "user_id",
+        F.col("day").alias("valid_from"),
+        nxt.alias("valid_to"),
+        F.row_number().over(w).alias("version_no"),
+        F.when(nxt.isNull(), 1).otherwise(0).cast("int").alias("is_current"),
+        "n_events",
+        pround(F.col("closing_value"), 2).alias("closing_value"),
+    )
+
+
+N_BUCKETS = 8
+DPP_YEARS = (1996, 1997)
+
+
+# ---------------------------------------------------------------------------
+# join_bucketed_colocated — shuffle-free sort-merge join via bucketing
+# ---------------------------------------------------------------------------
+
+
+def build_bucketed_join(
+    spark: SparkSession, sf_dir: str, db: str
+) -> DataFrame:
+    """Write orders + lineitem bucketed by the join key into ``db`` and
+    return the co-located join aggregate (no cleanup — caller owns the
+    database). Shared with tests/test_plans.py, which pins the plan:
+    the SMJ reads both bucketed scans with NO Exchange on the join key
+    (``SelectedBucketsCount`` in both scans, no
+    ``Exchange hashpartitioning(l_orderkey/o_orderkey``).
+    """
+    # Repartition by the bucket key before the write: bucketed writes
+    # emit (tasks × buckets) files otherwise — pre-clustering gives one
+    # well-sized file per bucket (same write-amplification guard as
+    # sink_partitioned_parquet) and measured ~2× on both the write and
+    # the downstream bucket-local join.
+    o = (
+        load(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_orderpriority")
+        .repartition(N_BUCKETS, "o_orderkey")
+    )
+    li = (
+        load(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_extendedprice", "l_discount")
+        .repartition(N_BUCKETS, "l_orderkey")
+    )
+    (
+        o.write.bucketBy(N_BUCKETS, "o_orderkey")
+        .sortBy("o_orderkey")
+        .mode("overwrite")
+        .format("parquet")
+        .saveAsTable(f"{db}.orders_b")
+    )
+    (
+        li.write.bucketBy(N_BUCKETS, "l_orderkey")
+        .sortBy("l_orderkey")
+        .mode("overwrite")
+        .format("parquet")
+        .saveAsTable(f"{db}.lineitem_b")
+    )
+    ob = spark.table(f"{db}.orders_b")
+    lb = spark.table(f"{db}.lineitem_b")
+    # MERGE hint: at fixture scale the planner would broadcast the small
+    # side, hiding exactly the exchange-free bucket-local merge this
+    # operator exists to demonstrate; at 100 TB neither side broadcasts
+    # and SMJ is what the planner picks unhinted.
+    return (
+        lb.join(ob.hint("merge"), lb.l_orderkey == ob.o_orderkey)
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count("*").alias("n_items"),
+            # exact 1e-4-unit revenue sum (r10 quantization audit)
+            exact_sum(
+                cents_col(F.col("l_extendedprice"))
+                * (100 - cents_col(F.col("l_discount"))),
+                10000,
+            ).alias("revenue"),
+        )
+    )
+
+
+@query(
+    "join_bucketed_colocated",
+    oracle="""
+    SELECT o_orderpriority,
+           COUNT(*) AS n_items,
+           ROUND(CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)
+                          * (100 - CAST(FLOOR(l_discount * 100 + 0.5)
+                                        AS BIGINT))) AS DOUBLE)
+                 / 10000, 2) AS revenue
+    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+    GROUP BY o_orderpriority
+    """,
+)
+def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fact⋈fact join with BOTH sides pre-bucketed on the join key —
+    the physical layout that makes a 100 TB fact-to-fact join cheap:
+    each of the N_BUCKETS buckets pairs 1:1 across tables, so the
+    sort-merge join runs with no Exchange at all (bucket-local merge;
+    plan pinned in tests/test_plans.py via build_bucketed_join).
+
+    At 100 TB this is THE strategy for a recurring big⋈big join:
+    pay the layout shuffle once at ingest (bucketBy + sortBy), then
+    every subsequent join/agg on the key is exchange-free. The scratch
+    database here stands in for the warehouse; the returned frame is
+    re-localized before the scratch is dropped (same lifecycle as
+    sink_partitioned_parquet, engine/relational.py:146).
+    """
+    scratch = Path(tempfile.mkdtemp(prefix="engine_bkt_"))
+    db = f"bktdb_{uuid.uuid4().hex[:8]}"
+    spark.sql(f"CREATE DATABASE {db} LOCATION '{scratch}'")
+    try:
+        res = build_bucketed_join(spark, sf_dir, db)
+        return spark.createDataFrame(res.collect(), schema=res.schema)
+    finally:
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+# ---------------------------------------------------------------------------
+# join_dpp_prune — dynamic partition pruning over a partitioned fact
+# ---------------------------------------------------------------------------
+
+
+def build_dpp_join(spark: SparkSession, sf_dir: str, out: Path) -> DataFrame:
+    """Write orders as a year-partitioned fact under ``out`` and return
+    the dim-filtered join aggregate (no cleanup — caller owns the dir).
+    Shared with tests/test_plans.py, which pins ``dynamicpruning`` in
+    the fact scan's PartitionFilters.
+    """
+    # Project to the 2 consumed columns before the write: the scratch
+    # fact is a join/agg feeder, and writing the full order row would
+    # triple the layout bytes for nothing.
+    orders = load(spark, sf_dir, "orders").select(
+        "o_totalprice", F.year("o_orderdate").alias("o_year")
+    )
+    (
+        orders.repartition("o_year")
+        .write.mode("overwrite")
+        .partitionBy("o_year")
+        .parquet(str(out))
+    )
+    # Explicit schema: an empty source writes no partition dirs, and
+    # schema inference would fail where an empty-but-typed frame is
+    # the right answer.
+    fact = spark.read.schema(orders.schema).parquet(str(out))
+    # Dim with a selective filter: DPP plants the dim's build-side keys
+    # as a runtime PartitionFilter on the fact scan, so only the
+    # matching year directories are read at all.
+    dim = (
+        spark.range(1990, 2010)
+        .select(F.col("id").cast("int").alias("yr"))
+        .filter(F.col("yr").isin(*DPP_YEARS))
+    )
+    return (
+        fact.join(dim, fact.o_year == dim.yr)
+        .groupBy("o_year")
+        .agg(
+            F.count("*").alias("n_orders"),
+            # exact cents sum (r10 quantization audit)
+            exact_sum(cents_col(F.col("o_totalprice")), 100).alias(
+                "sum_price"
+            ),
+        )
+    )
+
+
+@query(
+    "join_dpp_prune",
+    oracle=f"""
+    SELECT CAST(EXTRACT(YEAR FROM o_orderdate) AS INTEGER) AS o_year,
+           COUNT(*) AS n_orders,
+           ROUND(CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
+                      AS DOUBLE) / 100, 2) AS sum_price
+    FROM orders
+    WHERE EXTRACT(YEAR FROM o_orderdate) IN {DPP_YEARS}
+    GROUP BY 1
+    """,
+)
+def join_dpp_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dynamic partition pruning: a date-partitioned fact joined to a
+    filtered dimension reads ONLY the partition directories the dim
+    selects — the pruning predicate is injected at runtime from the
+    dim's broadcast build side (``dynamicpruningexpression`` in the
+    fact scan; pinned in tests/test_plans.py via build_dpp_join).
+
+    At 100 TB this is the difference between scanning 7 years of fact
+    and scanning 2: static pruning can't see through a join, DPP can.
+    The fact write repartitions by the partition column first (one
+    file per year dir — the same write-amplification guard as
+    sink_partitioned_parquet). Result is re-localized before the
+    scratch dir is deleted.
+    """
+    out = Path(tempfile.mkdtemp(prefix="engine_dpp_"))
+    try:
+        res = build_dpp_join(spark, sf_dir, out)
+        return spark.createDataFrame(res.collect(), schema=res.schema)
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+# ---------------------------------------------------------------------------
+# set_intersect_all — bag-semantics INTERSECT ALL
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "set_intersect_all",
+    oracle="""
+    WITH i AS (
+      SELECT user_id, CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day
+      FROM events WHERE event_type = 'click'
+      INTERSECT ALL
+      SELECT user_id, CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)
+      FROM events WHERE event_type = 'view'
+    )
+    SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_common
+    FROM i GROUP BY 1
+    """,
+)
+def set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bag-semantics INTERSECT ALL via ``DataFrame.intersectAll``: the
+    (user, day) multiset of click events ∩ the view multiset — each
+    common pair survives min(click-multiplicity, view-multiplicity)
+    times — then aggregated per user. Completes the §2.G bag set-op
+    surface next to ``set_except_all``.
+
+    Catalyst plans intersectAll as a counted aggregate on the grouping
+    key (min of the two per-side counts, replicated) — one shuffle on
+    (user_id, day), never a join explosion on duplicate keys. The
+    follow-up per-user rollup is a second, strictly smaller shuffle.
+    """
+    e = load(spark, sf_dir, "events")
+    day = F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day")
+    clicks = e.filter(F.col("event_type") == "click").select("user_id", day)
+    views = e.filter(F.col("event_type") == "view").select("user_id", day)
+    return (
+        clicks.intersectAll(views)
+        .groupBy("user_id")
+        .agg(F.count("*").cast("bigint").alias("n_common"))
     )

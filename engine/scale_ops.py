@@ -116,7 +116,7 @@ def _simhash_df(
     table). A document's signature depends only on its own token
     frequencies, so signatures over a restricted frame equal the
     full-corpus signatures of those documents — the commutation the
-    witness-restricted evaluator (engine.seeds23) relies on.
+    witness-restricted evaluator (llm_simhash_recall) relies on.
 
     Input is spread (engine.llm_ops.spread_docs) so the token explode
     parallelizes regardless of the scan's split count."""
@@ -201,7 +201,7 @@ def llm_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def simhash_neardup_pairs(sig: DataFrame) -> DataFrame:
     """Banded Hamming-≤3 pairs over a (doc_id, simhash) frame — the
     llm_simhash_neardup core, shared with the witness-restricted
-    evaluator (engine.seeds23). Banding and verify are per-doc /
+    evaluator (llm_simhash_recall). Banding and verify are per-doc /
     pairwise, so pairs over a restricted signature frame equal the
     full-corpus pairs among those docs."""
     bands = sig.select(
@@ -308,7 +308,7 @@ def _embedding_neardup_banded(
     (the gate shared with the MinHash path,
     engine.lsh_core.hot_bucket_sides). Approximate recall is the documented
     contract of the scale path (as with llm_lsh_neardup), MEASURED by
-    the oracled emb_banded_recall evaluator (engine/seeds28.py:
+    the oracled emb_banded_recall evaluator (engine/curation.py:
     recall ≈ 1 in the designed high-similarity regime, ≈ 0 on
     near-threshold organic pairs); the broadcast path below remains the
     exact witness at fixture scale.

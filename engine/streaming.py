@@ -18,19 +18,15 @@ import uuid
 
 import numpy as np
 import pandas as pd
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from engine.det import cents_col, cents_sql, exact_avg, exact_avg_sql, exact_sum, exact_sum_sql, pround
-from engine.registry import query
-from engine.session import load
-# Re-exported for compatibility: the stream source lives in the leaf
-# module engine.stream_source so engine.streaming_ext can use it
-# without dragging this module's registrations forward.
-from engine.stream_source import events_stream as events_stream
 
-_SCRATCH = Path(__file__).resolve().parent.parent / ".scratch"
+from engine.det import _CENTS_SQL, cents_col, exact_sum
+from engine.registry import query
+from engine.roundtrip import SCRATCH
+from engine.session import load
+from engine.stream_source import events_stream
+
 
 def tumbling_agg(ev: DataFrame) -> DataFrame:
     """1 h tumbling window × event_type — shared by batch and streaming."""
@@ -191,7 +187,7 @@ def stream_watermark_design(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sink_name = f"wm_{uuid.uuid4().hex[:8]}"
-    ckpt = _SCRATCH / f"ckpt_{sink_name}"
+    ckpt = SCRATCH / f"ckpt_{sink_name}"
     q = (
         agg.writeStream.format("memory")
         .queryName(sink_name)
@@ -440,3 +436,103 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``time_bucket`` — window starts agree exactly.
     """
     return tumbling_agg(load(spark, sf_dir, "events"))
+
+
+# ---------------------------------------------------------------------------
+# stream_tws_counter — Spark 4 transformWithStateInPandas surface
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "stream_tws_counter",
+    oracle=f"""
+    SELECT user_id,
+           CAST(COUNT(*) AS BIGINT) AS n_events,
+           CAST(SUM({_CENTS_SQL}) AS BIGINT) AS sum_cents
+    FROM events GROUP BY 1
+    """,
+)
+def stream_tws_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user lifetime (count, cent-sum) state — batch-checked form of
+    the ``transformWithStateInPandas`` stateful streaming operator
+    (tws_counter_stream below), the engine.streaming pattern: the
+    registered query IS the semantic contract, the streaming run is
+    asserted equal in tests/test_seeds8_properties.py.
+
+    transformWithState is Spark 4's arbitrary-state API (typed state
+    variables, timers, TTL — the applyInPandasWithState successor); the
+    cent-sums keep state integer so stream and batch agree exactly.
+    """
+    e = load(spark, sf_dir, "events")
+    return e.groupBy("user_id").agg(
+        F.count("*").cast("bigint").alias("n_events"),
+        F.sum(cents_col(F.col("value"))).cast("bigint").alias("sum_cents"),
+    )
+
+
+def tws_counter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The streaming side: per-user running (n_events, sum_cents) via a
+    ``StatefulProcessor`` with a typed ValueState, replayed from the
+    events parquet through the shared file-stream source.
+
+    State is O(active users) in the executor state store (RocksDB
+    provider — required by transformWithState); each micro-batch folds
+    its Arrow batches into the tuple state and emits the updated rows
+    (update mode). At 100 TB a production processor adds state TTL; the
+    fixture replay keeps every key live.
+
+    Returns the streaming DataFrame; the test attaches a memory sink
+    with availableNow and checks the final per-key rows equal the
+    batch-checked :func:`stream_tws_counter`.
+
+    CONTAINER CAVEAT (same honesty rule as surface4's avro probe): the
+    transformWithState Python runner imports google.protobuf, which
+    this container lacks (and installs are off-limits), so the
+    streaming execution path is an UNTESTED surface here — the test
+    probes for protobuf and skips with that exact reason. The
+    batch-checked semantic contract above stays oracle-verified either
+    way.
+    """
+    import pandas as pd
+    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
+
+
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+    )
+
+    ev = events_stream(spark, sf_dir).select(
+        "user_id", cents_col(F.col("value")).alias("c")
+    )
+
+    class Counter(StatefulProcessor):
+        def init(self, handle: StatefulProcessorHandle) -> None:
+            self.state = handle.getValueState("agg", "n BIGINT, s BIGINT")
+
+        def handleInputRows(self, key, rows, timerValues):
+            n, s = (
+                self.state.get() if self.state.exists() else (0, 0)
+            )
+            for pdf in rows:
+                n += len(pdf)
+                s += int(pdf["c"].sum())
+            self.state.update((n, s))
+            yield pd.DataFrame(
+                {
+                    "user_id": pd.Series([key[0]], dtype="int64"),
+                    "n_events": pd.Series([n], dtype="int64"),
+                    "sum_cents": pd.Series([s], dtype="int64"),
+                }
+            )
+
+        def close(self) -> None:
+            pass
+
+    return ev.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=Counter(),
+        outputStructType="user_id long, n_events long, sum_cents long",
+        outputMode="Update",
+        timeMode="None",
+    )

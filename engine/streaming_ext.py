@@ -15,10 +15,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.det import cents_col, cents_sql, exact_avg, exact_avg_sql, exact_sum, exact_sum_sql, pround
+from engine.det import cents_col, cents_sql, exact_sum, exact_sum_sql, pround
 from engine.registry import query
 from engine.roundtrip import SCRATCH
-from engine.session import load
 from engine.stream_source import events_stream
 
 FB_WINDOW_SECS = 6 * 3600

@@ -12,7 +12,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.det import cents_col, cents_sql, exact_avg, exact_avg_sql, exact_sum, exact_sum_sql, pround
+from engine.det import cents_col, cents_sql, exact_sum, exact_sum_sql, pround
 from engine.registry import query
 from engine.roundtrip import SCRATCH, roundtrip_verified
 from engine.session import load

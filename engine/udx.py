@@ -17,12 +17,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udf, udtf
 
-from engine.det import cents_col, cents_sql, exact_avg, exact_avg_sql, exact_sum, exact_sum_sql, pround
+from engine.det import _CENTS_SQL, cents_col, pround
 from engine.registry import query
 from engine.session import load
 
@@ -254,4 +253,106 @@ def udtf_python(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT d.doc_id, s.token, s.pos
         FROM udtf_docs d, LATERAL split_tokens(d.text) s
         """
+    )
+
+
+# ---------------------------------------------------------------------------
+# udf_arrow_scalar — Spark 4 Arrow-optimized Python UDF eval path
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "udf_arrow_scalar",
+    oracle=f"""
+    SELECT event_type,
+           CAST(SUM(({_CENTS_SQL} * 2 + 1) % 997) AS BIGINT) AS chk
+    FROM events GROUP BY 1
+    """,
+)
+def udf_arrow_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Arrow-optimized Python UDF (`udf(..., useArrow=True)` — Spark
+    4's third Python eval path next to pickled row-at-a-time UDFs and
+    pandas UDFs): a scalar integer transform pushed through Arrow
+    batches, aggregated to a per-type checksum the oracle recomputes in
+    SQL.
+
+    Same declared-slow-path rules as engine/udx.py: this op EXISTS to
+    pin the eval surface (ArrowEvalPython in the plan), not to
+    advocate Python for arithmetic — the oracle demonstrates the
+    JVM-side equivalent. Arrow batching amortizes serialization ~10×
+    vs the pickled path for this shape; integer math keeps the
+    checksum exact.
+    """
+    e = load(spark, sf_dir, "events")
+
+    @F.udf("long", useArrow=True)
+    def arrow_chk(c):
+        # NULL-safe: value can be NULL upstream (nulls-twin sweep) —
+        # a Python UDF receives None and must hand NULL back, the same
+        # contract the JVM expression it mirrors honors for free.
+        return None if c is None else (c * 2 + 1) % 997
+
+    return e.select(
+        "event_type", arrow_chk(cents_col(F.col("value"))).alias("v")
+    ).groupBy("event_type").agg(F.sum("v").cast("bigint").alias("chk"))
+
+
+# ---------------------------------------------------------------------------
+# udf_apply_in_arrow — Arrow-native grouped-map UDx
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "udf_apply_in_arrow",
+    oracle=f"""
+    SELECT user_id,
+           CAST(COUNT(*) AS BIGINT) AS n,
+           CAST(SUM({_CENTS_SQL}) AS BIGINT) AS cents,
+           CAST(MAX({_CENTS_SQL}) - MIN({_CENTS_SQL}) AS BIGINT)
+             AS cents_range
+    FROM events GROUP BY 1
+    """,
+)
+def udf_apply_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Arrow-NATIVE grouped map (`groupBy().applyInArrow` — Spark 4):
+    each user's partition arrives as a ``pyarrow.Table`` and the count/
+    sum/range stats are computed with pyarrow.compute kernels — no
+    pandas materialization at all, completing the declared Python eval
+    matrix (pickled UDF → pandas UDF → Arrow UDF → applyInPandas →
+    mapInArrow → applyInArrow).
+
+    For columnar-kernel workloads this skips applyInPandas' Arrow→
+    pandas conversion entirely (zero-copy into pc.sum/pc.min_max).
+    Integer-cent arithmetic keeps the oracle comparison exact; same
+    declared-slow-path rules as the rest of engine/udx.py — the oracle
+    shows the JVM-side equivalent.
+    """
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    e = load(spark, sf_dir, "events").select(
+        "user_id", cents_col(F.col("value")).alias("c")
+    )
+
+    def stats(tbl: pa.Table) -> pa.Table:
+        c = tbl.column("c")
+        mm = pc.min_max(c).as_py()
+        # all-NULL group: min_max/sum are None — emit NULL stats like
+        # SQL's MAX-MIN/SUM would, not a worker TypeError (null-twin
+        # sweep); arrays explicitly int64 so the NULL row keeps the
+        # declared schema.
+        rng = None if mm["min"] is None else mm["max"] - mm["min"]
+        return pa.table(
+            {
+                "user_id": pa.array(
+                    [tbl.column("user_id")[0].as_py()], pa.int64()
+                ),
+                "n": pa.array([tbl.num_rows], pa.int64()),
+                "cents": pa.array([pc.sum(c).as_py()], pa.int64()),
+                "cents_range": pa.array([rng], pa.int64()),
+            }
+        )
+
+    return e.groupBy("user_id").applyInArrow(
+        stats, schema="user_id long, n long, cents long, cents_range long"
     )

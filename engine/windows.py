@@ -10,10 +10,10 @@ budget, which holds for per-customer / per-user partitions.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
 
-from engine.det import cents_col, cents_sql, exact_avg, exact_avg_sql, exact_sum, exact_sum_sql, pround
+from engine.det import _CENTS_SQL, cents_col, cents_sql, exact_sum, pround
 from engine.registry import query
 from engine.session import load
 
@@ -206,4 +206,573 @@ def win_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         F.first("o_orderdate").over(w).alias("first_date"),
         F.last("o_orderdate").over(w).alias("last_date"),
+    )
+
+
+NTILE_BUCKETS = 4
+
+
+@query(
+    "win_ntile_cume",
+    oracle=f"""
+    SELECT event_id, event_type,
+           ROUND(value, 2) AS value,
+           CAST(NTILE({NTILE_BUCKETS}) OVER w AS INT) AS quartile,
+           ROUND(PERCENT_RANK() OVER w, 6) AS pct_rank,
+           ROUND(CUME_DIST() OVER w, 6) AS cume_dist
+    FROM events
+    WHERE event_type IN ('purchase', 'refund')
+    WINDOW w AS (PARTITION BY event_type ORDER BY value, event_id)
+    """,
+)
+def win_ntile_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distribution window functions — ntile/percent_rank/cume_dist per
+    event_type over value (SURVEY.md §2.D family; the rank/lag/frame
+    forms are covered, this adds the relative-position trio used for
+    quantile bucketing without a sketch).
+
+    One hash shuffle on the partition key; the (value, event_id)
+    compound order is UNIQUE, so every relative-position value is a
+    ratio of exact integers — deterministic across engines (§7.5: ties
+    under a non-unique order would make ntile boundaries an engine
+    choice).
+    """
+    e = load(spark, sf_dir, "events").filter(
+        F.col("event_type").isin("purchase", "refund")
+    )
+    w = W.partitionBy("event_type").orderBy("value", "event_id")
+    return e.select(
+        "event_id",
+        "event_type",
+        pround(F.col("value"), 2).alias("value"),
+        F.ntile(NTILE_BUCKETS).over(w).cast("int").alias("quartile"),
+        pround(F.percent_rank().over(w), 6).alias("pct_rank"),
+        pround(F.cume_dist().over(w), 6).alias("cume_dist"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# win_pct_change — day-over-day percent change per event type
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "win_pct_change",
+    oracle="""
+    WITH d AS (
+      SELECT event_type, DATE_TRUNC('day', ts) AS day,
+             COUNT(*) AS n_events, SUM(value) AS sv
+      FROM events GROUP BY 1, 2
+    )
+    SELECT event_type, day, n_events,
+           ROUND(sv, 2) AS sum_value,
+           ROUND((sv - LAG(sv) OVER w) / NULLIF(LAG(sv) OVER w, 0), 4)
+             AS pct_change
+    FROM d
+    WINDOW w AS (PARTITION BY event_type ORDER BY day)
+    """,
+)
+def win_pct_change(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Day-over-day percent change of per-type daily value volume — the
+    time-series derivative surface (lag + ratio) over a calendar-day
+    rollup; the first day of each series is NULL by construction
+    (nothing to change from), exercising null-propagating arithmetic in
+    the window frame.
+
+    Scale: fact → (type × day) rollup first (one shuffle, grid-sized
+    result), THEN the lag window over the rollup — windowing the raw
+    fact would sort 100 TB; windowing the rollup sorts ~thousands of
+    rows per type. (event_type, day) is a unique total order (§7.5.4).
+    """
+    e = load(spark, sf_dir, "events")
+    d = e.groupBy(
+        "event_type", F.date_trunc("day", "ts").alias("day")
+    ).agg(F.count("*").alias("n_events"), F.sum("value").alias("sv"))
+    w = W.partitionBy("event_type").orderBy("day")
+    prev = F.lag("sv").over(w)
+    return d.select(
+        "event_type",
+        "day",
+        "n_events",
+        pround(F.col("sv"), 2).alias("sum_value"),
+        # try_divide: a zero-volume previous day is an undefined pct
+        # change (NULL), not an ANSI job abort — zero-values exact
+        # sweep; oracle NULLIF mirrors it version-proof.
+        pround(F.try_divide(F.col("sv") - prev, prev), 4).alias("pct_change"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# win_weighted_ma — linearly-weighted trailing moving average
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "win_weighted_ma",
+    oracle="""
+    WITH d AS (
+      SELECT event_type, DATE_TRUNC('day', ts) AS day, SUM(value) AS sv
+      FROM events GROUP BY 1, 2
+    )
+    SELECT event_type, day, ROUND(sv, 2) AS sum_value,
+           ROUND((3 * sv
+                  + COALESCE(2 * LAG(sv, 1) OVER w, 0)
+                  + COALESCE(LAG(sv, 2) OVER w, 0))
+                 / (3 + CASE WHEN LAG(sv, 1) OVER w IS NULL THEN 0
+                             ELSE 2 END
+                      + CASE WHEN LAG(sv, 2) OVER w IS NULL THEN 0
+                             ELSE 1 END), 4) AS wma3
+    FROM d
+    WINDOW w AS (PARTITION BY event_type ORDER BY day)
+    """,
+)
+def win_weighted_ma(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Linearly-weighted trailing 3-day moving average (weights 3/2/1,
+    most-recent-heaviest) of per-type daily volume — the recency-biased
+    smoother between the flat frame average (win_moving_avg) and a true
+    EWMA (whose infinite recursion no window frame expresses); series
+    edges renormalize over the weights actually present instead of
+    zero-padding the missing days.
+
+    Scale: same day-grain-rollup-first discipline as win_pct_change —
+    the lag window runs over the (type × day) grid, never the raw
+    fact; explicit LAG columns (not a weighted frame aggregate, which
+    Spark lacks) keep it one Window node, one sort of the grid.
+    """
+    e = load(spark, sf_dir, "events")
+    d = e.groupBy(
+        "event_type", F.date_trunc("day", "ts").alias("day")
+    ).agg(F.sum("value").alias("sv"))
+    w = W.partitionBy("event_type").orderBy("day")
+    l1, l2 = F.lag("sv", 1).over(w), F.lag("sv", 2).over(w)
+    num = (
+        3 * F.col("sv")
+        + F.coalesce(2 * l1, F.lit(0.0))
+        + F.coalesce(l2, F.lit(0.0))
+    )
+    den = (
+        F.lit(3)
+        + F.when(l1.isNull(), 0).otherwise(2)
+        + F.when(l2.isNull(), 0).otherwise(1)
+    )
+    return d.select(
+        "event_type",
+        "day",
+        pround(F.col("sv"), 2).alias("sum_value"),
+        pround(num / den, 4).alias("wma3"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# win_ratio_to_report — share-of-parent via windowed totals
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "win_ratio_to_report",
+    oracle="""
+    WITH rev AS (
+      SELECT r_name, n_name,
+             ROUND(CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)
+                            * (100 - CAST(FLOOR(l_discount * 100 + 0.5)
+                                          AS BIGINT))) AS DOUBLE)
+                   / 10000, 2) AS revenue
+      FROM lineitem
+      JOIN supplier ON l_suppkey = s_suppkey
+      JOIN nation ON s_nationkey = n_nationkey
+      JOIN region ON n_regionkey = r_regionkey
+      GROUP BY r_name, n_name
+    ), revc AS (
+      SELECT r_name, n_name, revenue,
+             CAST(FLOOR(revenue * 100 + 0.5) AS BIGINT) AS revenue_c
+      FROM rev
+    )
+    SELECT r_name, n_name, revenue,
+           ROUND(CAST(revenue_c AS DOUBLE)
+                 / NULLIF(CAST(SUM(revenue_c) OVER (PARTITION BY r_name)
+                               AS DOUBLE), 0), 6) AS region_share,
+           CAST(RANK() OVER (PARTITION BY r_name
+                             ORDER BY revenue DESC, n_name) AS INTEGER)
+             AS region_rank
+    FROM revc
+    """,
+)
+def win_ratio_to_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ratio-to-report: each nation's share of its region's supplier
+    revenue plus its rank within the region — the classic OLAP
+    share-of-parent idiom, done with ONE window partitioning instead
+    of a join back to a totals aggregate (compare
+    llm_temperature_mixture's broadcast-totals shape: windows win when
+    the parent grain is a real grouping of the child grain).
+
+    Dims broadcast into the fact scan; the window partitions on
+    r_name over a nations-sized frame (25 rows — metadata-bounded,
+    never data-sized). Revenue is rounded BEFORE the share so both
+    engines divide identical doubles; rank orders by (revenue desc,
+    n_name) — unique, so ranking is deterministic (§7.5.7).
+    """
+    li = load(spark, sf_dir, "lineitem")
+    s = load(spark, sf_dir, "supplier")
+    n = load(spark, sf_dir, "nation")
+    r = load(spark, sf_dir, "region")
+    rev = (
+        li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
+        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .groupBy("r_name", "n_name")
+        # exact 1e-4-unit revenue sum (r10 quantization audit)
+        .agg(
+            exact_sum(
+                cents_col(F.col("l_extendedprice"))
+                * (100 - cents_col(F.col("l_discount"))),
+                10000,
+            ).alias("revenue")
+        )
+        # integer-cents twin of the rounded revenue: the window total
+        # and the share divide exact integers, so the 1e-6-grain share
+        # cannot ride on a 25-addend double fold.
+        .withColumn("revenue_c", cents_col(F.col("revenue")))
+    )
+    w = W.partitionBy("r_name")
+    wr = W.partitionBy("r_name").orderBy(
+        F.col("revenue").desc(), "n_name"
+    )
+    return rev.select(
+        "r_name",
+        "n_name",
+        "revenue",
+        # try_divide: a zero-revenue region is an undefined share, not
+        # an ANSI abort (zero-values exact sweep).
+        pround(
+            F.try_divide(
+                F.col("revenue_c").cast("double"),
+                F.sum("revenue_c").over(w).cast("double"),
+            ),
+            6,
+        ).alias("region_share"),
+        F.rank().over(wr).cast("int").alias("region_rank"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# win_pareto_days — concentration curve over daily volume
+# ---------------------------------------------------------------------------
+
+PARETO_NUM, PARETO_DEN = 4, 5  # threshold = 4/5 = 80 %
+
+
+@query(
+    "win_pareto_days",
+    oracle=f"""
+    WITH d AS (
+      SELECT event_type, DATE_TRUNC('day', ts) AS day,
+             CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+               AS vol_cents
+      FROM events GROUP BY 1, 2
+    ), r AS (
+      SELECT event_type, day, vol_cents,
+             CAST(ROW_NUMBER() OVER w AS BIGINT) AS rn,
+             CAST(SUM(vol_cents) OVER (PARTITION BY event_type
+                                       ORDER BY vol_cents DESC, day
+                                       ROWS BETWEEN UNBOUNDED PRECEDING
+                                       AND CURRENT ROW) AS BIGINT) AS cum,
+             CAST(SUM(vol_cents) OVER (PARTITION BY event_type) AS BIGINT)
+               AS total
+      FROM d
+      WINDOW w AS (PARTITION BY event_type ORDER BY vol_cents DESC, day)
+    )
+    SELECT event_type,
+           CAST(COUNT(*) AS BIGINT) AS n_days,
+           CAST(MIN(CASE WHEN cum * {PARETO_DEN} >= total * {PARETO_NUM}
+                         THEN rn END) AS BIGINT) AS days_to_80pct,
+           ROUND(MAX(CASE WHEN rn = 1 THEN vol_cents END)
+                 * 1.0 / NULLIF(MAX(total), 0), 6) AS top_day_share
+    FROM r GROUP BY event_type
+    """,
+)
+def win_pareto_days(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Volume-concentration (Pareto) curve: per event type, how many of
+    the heaviest days carry 80 % of total value — the "how skewed is
+    the traffic" number behind capacity planning and sampling quotas.
+
+    All arithmetic until the final share is INTEGER (value is 2-dp by
+    fixture construction, so cents = floor(100·v + 0.5) are exact
+    longs; the 80 % crossing test is cum·5 ≥ total·4 — no float
+    boundary can flip a rank across engines, the same integer-surrogate
+    trick as llm_temperature_mixture's boosts). Both windows and the
+    final aggregate share one event_type partitioning over day-grain
+    rows (≤ days per type — metadata-bounded at any corpus size).
+    """
+    e = load(spark, sf_dir, "events")
+    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
+    d = (
+        e.select("event_type", F.date_trunc("day", "ts").alias("day"), cents.alias("c"))
+        .groupBy("event_type", "day")
+        .agg(F.sum("c").alias("vol_cents"))
+    )
+    w_ord = W.partitionBy("event_type").orderBy(
+        F.col("vol_cents").desc(), "day"
+    )
+    r = d.select(
+        "event_type",
+        "vol_cents",
+        F.row_number().over(w_ord).cast("bigint").alias("rn"),
+        F.sum("vol_cents")
+        .over(w_ord.rowsBetween(W.unboundedPreceding, W.currentRow))
+        .alias("cum"),
+        F.sum("vol_cents").over(W.partitionBy("event_type")).alias("total"),
+    )
+    return r.groupBy("event_type").agg(
+        F.count("*").alias("n_days"),
+        F.min(
+            F.when(
+                F.col("cum") * PARETO_DEN >= F.col("total") * PARETO_NUM,
+                F.col("rn"),
+            )
+        ).alias("days_to_80pct"),
+        pround(
+            # try_divide: an all-zero-volume type has total = 0 — NULL
+            # share, not an ANSI abort (zero-values exact sweep).
+            F.try_divide(
+                F.max(F.when(F.col("rn") == 1, F.col("vol_cents"))) * 1.0,
+                F.max("total"),
+            ),
+            6,
+        ).alias("top_day_share"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# win_running_distinct — running distinct-count, the scalable rewrite
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "win_running_distinct",
+    oracle="""
+    WITH m AS (
+      SELECT event_id, user_id, ts,
+             CASE WHEN ROW_NUMBER() OVER (
+               PARTITION BY user_id, event_type
+               ORDER BY ts, event_id) = 1 THEN 1 ELSE 0 END AS is_first
+      FROM events
+    )
+    SELECT event_id, user_id,
+           CAST(SUM(is_first) OVER (
+             PARTITION BY user_id ORDER BY ts, event_id
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+             AS n_types_seen
+    FROM m
+    """,
+)
+def win_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Running COUNT(DISTINCT event_type) per user over event time —
+    expressed as first-occurrence markers + a running sum, NOT a
+    ``collect_set`` window.
+
+    The rewrite IS the operator: a distinct-accumulating window carries
+    O(alphabet) state per row and collapses to a single partition's
+    memory at scale, while ``row_number()=1`` markers + a running sum
+    are plain streaming window aggregates with O(1) per-row state —
+    the shape that survives 100 TB. The explicit user_id repartition
+    makes BOTH windows run off ONE exchange: hashpartitioning(user_id)
+    satisfies the marker window's (user_id, event_type) clustering AND
+    the running sum's user_id clustering, so the plan is
+    exchange → sort → window → sort → window (pinned in
+    tests/test_seeds8_properties.py — the funnel-proven shared-shuffle
+    pattern). Ties broken by the unique (ts, event_id) order on both
+    engines.
+    """
+    return running_distinct_core(
+        load(spark, sf_dir, "events").repartition("user_id")
+    )
+
+
+def running_distinct_core(e: DataFrame) -> DataFrame:
+    """The marker+running-sum rewrite over any events-shaped frame
+    (event_id, user_id, ts, event_type) — factored for the hypothesis
+    reference check (tests/test_seeds89_refchecks.py)."""
+    w_first = W.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
+    w_run = (
+        W.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    m = e.select(
+        "event_id",
+        "user_id",
+        "ts",
+        F.when(F.row_number().over(w_first) == 1, 1).otherwise(0).alias(
+            "is_first"
+        ),
+    )
+    return m.select(
+        "event_id",
+        "user_id",
+        F.sum("is_first").over(w_run).cast("bigint").alias("n_types_seen"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# win_nth_value — nth_value window surface
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "win_nth_value",
+    oracle=f"""
+    WITH d AS (
+      SELECT user_id,
+             CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day,
+             (MAX({{'ts': ts, 'id': event_id, 'c': {_CENTS_SQL}}})).c
+               AS close_c
+      FROM events GROUP BY 1, 2
+    )
+    SELECT user_id, day, close_c,
+           NTH_VALUE(close_c, 2) OVER w AS second_close,
+           NTH_VALUE(close_c, 3) OVER w AS third_close
+    FROM d
+    WINDOW w AS (PARTITION BY user_id ORDER BY day
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+    """,
+)
+def win_nth_value(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``nth_value`` window surface: each user's 2nd and 3rd daily close
+    visible from every row's cumulative frame (NULL until the frame has
+    grown past n) — the frame-sensitive ordinal accessor that completes
+    the first/last/lag/lead family.
+
+    Frame semantics are the test: nth_value reads the FRAME, not the
+    partition, so early rows must be NULL on both engines. One user_id
+    exchange shared with the day-grain rollup, single window pass for
+    both ordinals.
+    """
+    e = load(spark, sf_dir, "events").repartition("user_id")
+    d = (
+        e.select(
+            "user_id",
+            F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day"),
+            cents_col(F.col("value")).alias("c"),
+            "ts",
+            "event_id",
+        )
+        .groupBy("user_id", "day")
+        # Deterministic daily close: lexicographic struct max over the
+        # UNIQUE (ts, event_id) prefix — max_by(c, ts) alone is
+        # arbitrary among tied timestamps and engine-divergent (caught
+        # by the tied-timestamps exact sweep, tests/test_tied_timestamps.py).
+        .agg(
+            F.max(F.struct("ts", "event_id", "c"))
+            .getField("c")
+            .alias("close_c")
+        )
+    )
+    w = (
+        W.partitionBy("user_id")
+        .orderBy("day")
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    return d.select(
+        "user_id",
+        "day",
+        "close_c",
+        F.nth_value("close_c", 2).over(w).alias("second_close"),
+        F.nth_value("close_c", 3).over(w).alias("third_close"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# win_quantile_normalize — integer-exact cross-type quantile mapping
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "win_quantile_normalize",
+    oracle=f"""
+    WITH c AS (
+      SELECT event_id, event_type, {_CENTS_SQL} AS cents FROM events
+    ), r AS (
+      SELECT event_id, event_type, cents,
+             CAST(ROW_NUMBER() OVER (PARTITION BY event_type
+                                     ORDER BY cents, event_id) AS BIGINT)
+               AS rk,
+             CAST(COUNT(*) OVER (PARTITION BY event_type) AS BIGINT) AS nt
+      FROM c
+    ), g AS (
+      SELECT cents AS gcents,
+             CAST(ROW_NUMBER() OVER (ORDER BY cents, event_id) AS BIGINT)
+               AS grk,
+             CAST(COUNT(*) OVER () AS BIGINT) AS ng
+      FROM c
+    )
+    SELECT r.event_id, r.event_type, r.cents,
+           g.gcents AS normalized_cents
+    FROM r JOIN g
+      ON g.grk = CASE WHEN r.nt = 1 THEN 1
+                 ELSE ((r.rk - 1) * (g.ng - 1) * 2 + (r.nt - 1))
+                      // (2 * (r.nt - 1)) + 1 END
+    """,
+)
+def win_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quantile normalization: every event's value remapped onto the
+    GLOBAL value distribution at its within-type rank — the
+    feature-engineering transform that makes heavy-tailed per-segment
+    scores comparable (microarray normalization, LTR feature prep).
+
+    ENTIRELY integer: within-type rank rk of nt maps to global position
+    round((rk−1)·(ng−1)/(nt−1))+1 computed as
+    ((rk−1)(ng−1)·2 + (nt−1)) div (2(nt−1)) — exact bigint
+    round-half-up, no float quantile anywhere, so the mapping is
+    bit-identical across engines (singleton types pin to position 1).
+    Two rank windows (one per-type, one global) + one equi-join on the
+    computed position. The global rank window is the stats-sample
+    shape; the 100 TB form samples the global reference distribution.
+    """
+    e = load(spark, sf_dir, "events")
+    c = e.select("event_id", "event_type", cents_col(F.col("value")).alias("cents"))
+    return quantile_normalize_core(c)
+
+
+def quantile_normalize_core(c: DataFrame) -> DataFrame:
+    """The integer rank remap over any (event_id, event_type, cents)
+    frame — factored for the hypothesis reference check
+    (tests/test_seeds1720_refchecks.py)."""
+    r = c.select(
+        "event_id",
+        "event_type",
+        "cents",
+        F.row_number()
+        .over(W.partitionBy("event_type").orderBy("cents", "event_id"))
+        .cast("bigint")
+        .alias("rk"),
+        F.count("*")
+        .over(W.partitionBy("event_type"))
+        .cast("bigint")
+        .alias("nt"),
+    )
+    g = c.select(
+        F.col("cents").alias("gcents"),
+        F.row_number()
+        .over(W.orderBy("cents", "event_id"))
+        .cast("bigint")
+        .alias("grk"),
+    )
+    # ng arrives on the RANK side via a 1-row broadcast so the join key
+    # g.grk = pos(r-side columns only) stays a plain EQUI join — with ng
+    # read off g the condition references both sides and Catalyst can
+    # only nested-loop it.
+    ng1 = c.agg(F.count("*").cast("bigint").alias("ng"))
+    r = r.crossJoin(F.broadcast(ng1))
+    pos = F.when(F.col("nt") == 1, F.lit(1).cast("bigint")).otherwise(
+        F.floor(
+            ((F.col("rk") - 1) * (F.col("ng") - 1) * 2 + (F.col("nt") - 1))
+            / (2 * (F.col("nt") - 1))
+        ).cast("bigint")
+        + 1
+    )
+    return r.join(g, g["grk"] == pos).select(
+        "event_id",
+        "event_type",
+        "cents",
+        F.col("gcents").alias("normalized_cents"),
     )

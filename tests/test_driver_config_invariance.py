@@ -1,6 +1,6 @@
 """Driver-session-config invariance for the current correctness window
-(the first 50 registered queries — round-7: the seeds14-27 backlog +
-the 9 re-check slots, pinned by registry.promote in engine/__init__).
+(the first 50 registered queries, pinned by the window literal that
+engine/__init__ passes to registry.promote).
 
 The driver runs ``queries()`` under ITS OWN SparkSession, not
 ``engine.session.get_spark`` — so nothing in a query result may depend

@@ -77,7 +77,7 @@ def test_query_survives_giant_doc(spark, giant_doc_sf_dir, qid):
 
 
 # The events.props JSON consumers (functions.fn_json parses '$.k' with
-# get_json_object; seeds14.fn_variant_surface ingests props as VARIANT).
+# get_json_object; functions.fn_variant_surface ingests props as VARIANT).
 _PROPS_QIDS = ["fn_json", "fn_variant_surface"]
 
 

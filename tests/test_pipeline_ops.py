@@ -202,11 +202,11 @@ def test_char_shingles_chunking_matches_python_sliding_window(spark):
 
 
 def test_pair_recall_scores_hand_built_pair_sets(spark):
-    """The near-dup recall scorer (engine.seeds22.pair_recall) on
+    """The near-dup recall scorer (engine.curation.pair_recall) on
     hand-built (doc_a, doc_b) pair frames: one shared pair out of two on
     each side scores 0.5/0.5; an empty approximate side has no precision
     and zero recall; two empty sides have neither score."""
-    from engine.seeds22 import pair_recall
+    from engine.curation import pair_recall
 
     schema = "doc_a long, doc_b long"
     exact = spark.createDataFrame([(1, 2), (3, 4)], schema)

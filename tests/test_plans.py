@@ -310,22 +310,22 @@ def test_no_scale_red_flags_any_query(spark):
         # checksums) before returning its 1-row report
         "sink_compaction",
         # XML write→read roundtrip materialized before the scratch dir
-        # is removed (engine/seeds10.py)
+        # is removed (engine/sql_surface.py)
         "source_xml_roundtrip",
-        # two codec writes + checksum collects (engine/seeds10.py)
+        # two codec writes + checksum collects (engine/sql_surface.py)
         "sink_codec_audit",
         # scratch saveAsTable + ANALYZE + catalog read-back
-        # (engine/seeds13.py)
+        # (engine/sql_surface.py)
         "maint_analyze_stats",
         # noop-sink write to materialize the observed metrics
-        # (engine/seeds14.py)
+        # (engine/sql_surface.py)
         "df_observe_metrics",
-        # CACHE TABLE ... UNCACHE lifecycle + collect (engine/seeds14.py)
+        # CACHE TABLE ... UNCACHE lifecycle + collect (engine/sql_surface.py)
         "maint_cache_table",
         # scratch year-partitioned write before the pruned read
-        # (engine/seeds15.py)
+        # (engine/sql_surface.py)
         "source_partitioned_read_prune",
-        # custom Python-sink write + read-back audit (engine/seeds19.py)
+        # custom Python-sink write + read-back audit (engine/sql_surface.py)
         "sink_python_datasource",
     }
     # BroadcastNestedLoopJoin is correct when the broadcast side is
@@ -360,52 +360,52 @@ def test_no_scale_red_flags_any_query(spark):
                # per-token scoring projection
                "llm_unigram_surprisal",
                # 1-row user-day-total aggregate broadcast into the
-               # pair-lift projection (engine/seeds6.py
+               # pair-lift projection (engine/timeseries.py
                # events_cooccurrence: n_ud denominator)
                "events_cooccurrence",
                # alphabet-bounded (5-row) per-type moments table
                # broadcast into its own triangular pair join
-               # (engine/seeds8.py events_ab_welch)
+               # (engine/timeseries.py events_ab_welch)
                "events_ab_welch",
                # 1-row (total, k) global-token aggregate broadcast
-               # into the per-source epoch planner (engine/seeds8.py
+               # into the per-source epoch planner (engine/curation.py
                # llm_mixture_epochs)
                "llm_mixture_epochs",
                # constant-bounded sketch plumbing: 4-row hash grid ×
                # fact (equi-agg), then 5-probe × 4-row × 256-cell
-               # lookups (engine/seeds9.py agg_countmin_sketch)
+               # lookups (engine/aggregates.py agg_countmin_sketch)
                "agg_countmin_sketch",
                # 10-pair literal grid × ≤2⁵-row mask histogram
-               # (engine/seeds9.py events_user_overlap_jaccard)
+               # (engine/timeseries.py events_user_overlap_jaccard)
                "events_user_overlap_jaccard",
                # absolutely-capped (doc_id<100) witness pair join —
-               # the VERDICT-r3 witness rule (engine/seeds9.py
+               # the VERDICT-r3 witness rule (engine/curation.py
                # llm_edit_distance_dedup)
                "llm_edit_distance_dedup",
                # 2-row lag-constant grid broadcast into the day-grain
-               # rollup (engine/seeds12.py ts_autocorr)
+               # rollup (engine/timeseries.py ts_autocorr)
                "ts_autocorr",
                # 1-row digit-total aggregate broadcast into the 9-row
-               # histogram (engine/seeds12.py agg_benford_audit)
+               # histogram (engine/aggregates.py agg_benford_audit)
                "agg_benford_audit",
                # k-grid × active-days-histogram tail-sum product, both
-               # sides metadata-sized (engine/seeds13.py
+               # sides metadata-sized (engine/timeseries.py
                # events_survival_curve)
                "events_survival_curve",
                # 1-row (dmin, dmax) span broadcast clipping the ×7
-               # contribution fan-out (engine/seeds16.py events_dau_wau)
+               # contribution fan-out (engine/timeseries.py events_dau_wau)
                "events_dau_wau",
                # 1-row (na, nb) sample-size broadcast into the merged-
-               # support gap scan (engine/seeds17.py llm_length_ks_audit)
+               # support gap scan (engine/curation.py llm_length_ks_audit)
                "llm_length_ks_audit",
                # 1-row overflow-probe aggregate crossed with the 1-row
-               # main aggregate (engine/seeds25.py agg_try_aggregates)
+               # main aggregate (engine/aggregates.py agg_try_aggregates)
                "agg_try_aggregates",
                # 1-row (tot, k) totals broadcast into the alphabet-sized
-               # label grid (engine/seeds26.py mm_label_balance_chi2)
+               # label grid (engine/multimodal.py mm_label_balance_chi2)
                "mm_label_balance_chi2",
                # 1-row global-count broadcast feeding the integer rank
-               # remap; the remap join itself is EQUI (engine/seeds17.py
+               # remap; the remap join itself is EQUI (engine/windows.py
                # win_quantile_normalize)
                "win_quantile_normalize"}
     # An unpartitioned window is acceptable only over metadata-bounded
@@ -464,80 +464,46 @@ def test_exact_witness_absolute_caps_pushed(spark):
     assert "JACCARD_WITNESS_MAX_ID" in body
 
 
-# The fill literal for the round-15 pin: _R15_CHANGED is the 12-query
-# changed-code list of the r15 optimization round (the doc-grain array
-# checkpoint through the LSH family, the delta-frontier CC rounds, the
-# bounded two-stage hot-bucket census, the −1-slack size prunes, and
-# the novelty rewrite) — results identical by construction, but the
-# policy pins ANY implementation change to a fresh driver row — so
-# they take slots 0-11 and the other 38 slots recycle the stalest
-# oracled rows under the r1-r14 history: the 11 r8-evidence rows not
-# already in the changed list, then the 27 oldest r9 rows, in
-# (latest-round, registration-order) order. Pinned literally so a
-# damaged/lost correctness file or a registration reorder CHANGES the
-# computed fill and fails against this list, instead of the test
-# silently agreeing with whatever the import computed (ADVICE r8
-# item 5). Post-r15 oracled staleness floor = r9.
-_R15_FILL = [
-    "filter_compound", "join_left_outer", "join_full_outer",
-    "join_semi", "join_anti", "join_cross", "join_range_theta",
-    "join_asof", "agg_cube", "agg_stats", "fn_math", "llm_chunk_split",
-    "llm_seq_packing", "sql_scalar_subquery", "win_sessionize",
-    "agg_percentile", "q18_large_volume", "llm_token_regex",
-    "llm_simhash", "llm_ann_lsh", "llm_lang_id", "llm_token_count",
-    "llm_quality_score", "llm_kmeans", "mm_frame_sample",
-    "mm_payload_dedup", "agg_count_distinct", "agg_distinct_rows",
-    "agg_collect_sorted", "sort_limit_topk", "set_union_all",
-    "set_union_distinct", "set_intersect", "set_except", "fn_string",
-    "fn_datetime", "fn_array", "fn_array_doc_stats",
+# The driver's correctness window, copied here so an edit to the
+# literal in engine/__init__ (or a registry reorder) must be made twice.
+_WINDOW = [
+    "llm_ngram_novelty", "llm_ngram_lsh", "llm_lsh_neardup",
+    "llm_dedup_clusters", "llm_dedup_survivors", "llm_dedup_recall",
+    "llm_decontaminate_lsh", "llm_jaccard_neardup", "llm_ngram_jaccard",
+    "llm_simhash_recall", "llm_embedding_neardup", "emb_banded_recall",
+    "fn_hash", "win_ranking", "win_lag_lead", "win_topk_per_group",
+    "win_first_last", "llm_winsorize_clip", "events_rfm", "agg_melt_nulls",
+    "join_calendar_dim", "join_bucketed_colocated", "join_dpp_prune",
+    "events_window_funnel", "ts_asof_nearest", "win_ratio_to_report",
+    "stream_foreach_batch_merge", "agg_grouping_sets_df", "q8_market_share",
+    "q6_forecast_revenue", "q15_top_supplier", "q17_small_quantity",
+    "win_range_interval", "sql_exists_subquery", "agg_histogram",
+    "join_bloom_prefilter", "win_gap_islands", "q10_returned_items",
+    "stream_sliding", "stream_session", "stream_watermark_design",
+    "stream_user_state", "stream_tumbling", "udf_pandas_grouped_agg",
+    "q3_shipping_priority", "q5_local_supplier_volume", "q7_nation_volume",
+    "q14_promo_revenue", "q19_disjunctive_pred", "q22_dormant_customers",
 ]
 
 
 def test_round15_correctness_window():
-    """Round-15 window pin (steady-state policy, engine/__init__):
-    _R15_CHANGED is exactly the 12 queries whose implementation changed
-    in the r15 optimization round (slots 0-11), so the remaining 38
-    slots MUST be the stalest oracled rows by (latest
-    CORRECTNESS_r*.json round, registration order) — pinned against the
-    LITERAL above, not against a re-run of the same function that
-    computed it. Also asserts the history files themselves are
-    structurally sound (exactly 50 known qids each), so a corrupted or
-    truncated report is caught here rather than silently reshaping the
-    window (ADVICE r8 items 4-5)."""
+    """The first 50 registered queries are exactly the window literal,
+    in order; the driver's reports are sound 50-row dicts of registered
+    ids; and no rows-only query holds a window slot past the 12
+    changed-code ones (a re-check cannot lift it past the rows-only
+    tier)."""
     import glob
     import json
     import os
     import re
 
     ids = list(engine.QUERIES)
-    assert engine._R15_CHANGED == [
-        "llm_ngram_novelty",
-        "llm_ngram_lsh",
-        "llm_lsh_neardup",
-        "llm_dedup_clusters",
-        "llm_dedup_survivors",
-        "llm_dedup_recall",
-        "llm_decontaminate_lsh",
-        "llm_jaccard_neardup",
-        "llm_ngram_jaccard",
-        "llm_simhash_recall",
-        "llm_embedding_neardup",
-        "emb_banded_recall",
-    ], (
-        "the r15 changed-code list is exactly the queries the r15 "
-        "optimization round touched; any other change must be declared "
-        "here explicitly, not slip in silently"
-    )
-    assert ids[: len(engine._R15_CHANGED)] == engine._R15_CHANGED, (
-        "changed-code ops must hold the first window slots"
-    )
-    fill = ids[len(engine._R15_CHANGED):50]
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    assert ids[:50] == _WINDOW == engine._WINDOW
+    assert len(set(ids[:50])) == 50
+    for qid in ids[12:50]:
+        assert qid in engine.ORACLES, f"{qid}: rows-only op in fill slot"
 
-    # Structural soundness of the history the recycler read: every
-    # report file (matched by the same strict regex the engine uses —
-    # stray .bak/rerun files are ignored, ADVICE r8 item 4) must be a
-    # dict of exactly 50 registered qids.
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     rounds_seen = []
     for p in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", p)
@@ -552,36 +518,30 @@ def test_round15_correctness_window():
         unknown = [q for q in rows if q not in engine.QUERIES]
         assert not unknown, f"{p}: unregistered qids {unknown}"
     assert rounds_seen[:14] == list(range(1, 15)), (
-        "a pre-r15 driver report went missing — the recycler window "
-        "would silently reshape"
+        "a pre-r15 driver report went missing"
     )
 
-    if max(rounds_seen) == 14:
-        # This round's exact snapshot (history = r1-r14): the fill must
-        # be the literal stale-tail drain above.
-        assert fill == _R15_FILL, (
-            "oldest-row recycling fill drifted from the pinned r15 fill"
-        )
-    # Policy invariants hold in every round (once CORRECTNESS_r15+
-    # lands, the fill legitimately rotates to the next-oldest tail):
-    assert len(ids[:50]) == 50 and len(set(ids[:50])) == 50
-    for qid in fill:
-        # no rows-only op wastes a fill slot (a re-check cannot upgrade
-        # it past the driver's weaker rows-only tier)
-        assert qid in engine.ORACLES, f"{qid}: rows-only op in fill slot"
-    assert fill == engine._stale_fill(
-        engine._R15_CHANGED, 50 - len(engine._R15_CHANGED)
-    ), "window fill does not match the declared stale-fill policy"
+
+def test_no_query_lives_in_a_round_named_module():
+    """Queries live in domain modules: none registers from an
+    ``engine.seeds*`` module, and no ``engine/seeds*.py`` file exists."""
+    import glob
+    import os
+
+    assert not [
+        qid
+        for qid, fn in engine.QUERIES.items()
+        if fn.__module__.startswith("engine.seeds")
+    ]
+    pkg = os.path.dirname(engine.__file__)
+    assert not glob.glob(os.path.join(pkg, "seeds*.py"))
 
 def test_no_untested_op_registers_past_window():
     """Window-budget assertion (VERDICT r4 item 6): a refactor must never
     silently push a never-driver-checked operator past the driver's
-    50-row correctness cap. Every registered qid must either (a) already
-    have a driver row in some CORRECTNESS_r*.json, (b) sit inside this
-    round's first-50 window, or (c) be a DECLARED next-round seed
-    (modules engine.seeds8/seeds9 — registered past the window on
-    purpose, with local differential coverage standing in until
-    rotation)."""
+    50-row correctness cap. Every registered qid must either already
+    have a driver row in some CORRECTNESS_r*.json or sit inside the
+    first-50 window."""
     import glob
     import json
     import os
@@ -597,10 +557,6 @@ def test_no_untested_op_registers_past_window():
         if i < 50 or qid in driver_checked:
             continue
         mod = engine.QUERIES[qid].__module__
-        # Round 7 rotated the FULL remaining backlog (seeds14-27) into
-        # the window, so there is no declared next-round-seed escape
-        # hatch any more: every qid past position 50 must already hold
-        # a driver row from some prior round.
         raise AssertionError(
             f"{qid} ({mod}) at position {i + 1} has no driver row and "
             "is past the 50-row window — it would be silently untested"
@@ -666,7 +622,7 @@ def test_bucketed_join_is_exchange_free(spark):
     import uuid
     from pathlib import Path
 
-    from engine.seeds7 import build_bucketed_join
+    from engine.relational import build_bucketed_join
 
     db = f"bktdb_{uuid.uuid4().hex[:8]}"
     scratch = Path(tempfile.mkdtemp(prefix="engine_bkt_test_"))
@@ -696,7 +652,7 @@ def test_dpp_prunes_fact_partitions(spark):
     import tempfile
     from pathlib import Path
 
-    from engine.seeds7 import build_dpp_join
+    from engine.relational import build_dpp_join
 
     out = Path(tempfile.mkdtemp(prefix="engine_dpp_test_"))
     try:

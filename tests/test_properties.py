@@ -411,7 +411,7 @@ def test_connected_components_matches_union_find(spark, edge_list, n_nodes):
 )
 @SETTINGS
 def test_lsh_pairs_commute_with_input_restriction(spark, docs, cap):
-    """The witness-restricted evaluators (engine.seeds22/seeds23) rely
+    """The witness-restricted evaluators (llm_dedup_recall, llm_simhash_recall) rely
     on: lsh_neardup_pairs(restricted corpus) == lsh_neardup_pairs(full
     corpus) filtered to pairs inside the restriction. True because
     minhash signatures/band hashes are per-document and candidacy +
@@ -444,7 +444,7 @@ def test_lsh_pairs_commute_with_input_restriction(spark, docs, cap):
 )
 @SETTINGS
 def test_simhash_pairs_commute_with_input_restriction(spark, docs, cap):
-    """Same commutation pin for the SimHash side (engine.seeds23):
+    """Same commutation pin for the SimHash side (llm_simhash_recall):
     simhash_neardup_pairs over a restricted signature frame == the
     full-corpus pairs among the restricted docs."""
     import tempfile
@@ -479,7 +479,7 @@ def test_simhash_pairs_commute_with_input_restriction(spark, docs, cap):
 )
 @SETTINGS
 def test_exact_jaccard_pairs_commute_with_input_restriction(spark, docs, cap):
-    """Same commutation pin for the exact side (engine.seeds22):
+    """Same commutation pin for the exact side (llm_dedup_recall):
     exact_jaccard_pairs over a restricted doc frame == the full-corpus
     pairs among the restricted docs. True even though the dictionary
     ids and bitset width picked by packed_token_sets vary with the

@@ -12,7 +12,8 @@ import numpy as np
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from engine.seeds12 import autocorr_core, cusum_core, gini_core
+from engine.aggregates import gini_core
+from engine.timeseries import autocorr_core, cusum_core
 
 SETTINGS = settings(
     max_examples=10,
@@ -89,7 +90,7 @@ def test_gini_core_matches_reference(spark, xs):
 def test_survival_curve_matches_direct_count(spark, days):
     """survival_core input is (user_id, active_days); S(k)·n_users must
     equal the direct >=k count for every k up to the max."""
-    from engine.seeds13 import events_survival_curve  # noqa: F401 (op import)
+    from engine.timeseries import events_survival_curve  # noqa: F401 (op import)
     import engine
 
     # drive through the histogram-rewrite path with a synthetic frame:

@@ -23,8 +23,8 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from engine.seeds15 import llm_survivor_policy_longest
-from engine.seeds17 import WILSON_THRESHOLD, WILSON_Z, events_wilson_alert
+from engine.curation import llm_survivor_policy_longest
+from engine.timeseries import WILSON_THRESHOLD, WILSON_Z, events_wilson_alert
 
 SETTINGS = settings(
     max_examples=8,

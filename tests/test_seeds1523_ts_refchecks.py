@@ -24,8 +24,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from engine.seeds15 import ts_peak_days
-from engine.seeds23 import ts_naive_forecast_eval
+from engine.timeseries import ts_naive_forecast_eval, ts_peak_days
 
 SETTINGS = settings(
     max_examples=8,

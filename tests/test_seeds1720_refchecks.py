@@ -10,8 +10,9 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from engine.seeds16 import WAU_DAYS, dau_wau_core
-from engine.seeds17 import ks_core, quantile_normalize_core
+from engine.curation import ks_core
+from engine.timeseries import WAU_DAYS, dau_wau_core
+from engine.windows import quantile_normalize_core
 
 SETTINGS = settings(
     max_examples=10,

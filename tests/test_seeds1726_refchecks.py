@@ -22,8 +22,13 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from engine.seeds17 import CURRICULUM_STAGES, llm_curriculum_stages
-from engine.seeds26 import WINSOR_HI, WINSOR_LO, llm_winsorize_clip
+from engine.curation import (
+    CURRICULUM_STAGES,
+    WINSOR_HI,
+    WINSOR_LO,
+    llm_curriculum_stages,
+    llm_winsorize_clip,
+)
 
 SETTINGS = settings(
     max_examples=8,

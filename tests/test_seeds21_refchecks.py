@@ -14,12 +14,7 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from engine.seeds21 import (
-    PR_DAMP_DEN,
-    PR_DAMP_NUM,
-    PR_SCALE,
-    integer_pagerank,
-)
+from engine.graph import PR_DAMP_DEN, PR_DAMP_NUM, PR_SCALE, integer_pagerank
 
 SETTINGS = settings(
     max_examples=10,

@@ -15,7 +15,7 @@ import tempfile
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from engine.seeds21 import Z_BITS, Z_FILE_ROWS, _morton_spark, sink_zorder_layout
+from engine.sql_surface import Z_BITS, Z_FILE_ROWS, _morton_spark, sink_zorder_layout
 
 SETTINGS = settings(
     max_examples=8,

@@ -16,8 +16,7 @@ import math
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from engine.seeds26 import max_streak_core
-from engine.seeds27 import RZ_THRESHOLD, RZ_WINDOW, rolling_z_core
+from engine.timeseries import RZ_THRESHOLD, RZ_WINDOW, max_streak_core, rolling_z_core
 
 SETTINGS = settings(
     max_examples=10,

@@ -12,7 +12,8 @@ import bisect
 from pyspark.sql import functions as F
 
 import engine
-from engine.seeds6 import K_FOLDS, PCTL_PROBES
+from engine.aggregates import PCTL_PROBES
+from engine.curation import K_FOLDS
 from tests.conftest import SF_DIR
 
 SF_SMALL = "/root/testdata/sf0.001"

@@ -9,11 +9,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 import engine
-from engine.seeds7 import (
-    CONTAIN_THRESHOLD,
-    CONTAIN_WITNESS_MAX_ID,
-    FUNNEL_STEPS,
-)
+from engine.curation import CONTAIN_THRESHOLD, CONTAIN_WITNESS_MAX_ID
+from engine.timeseries import FUNNEL_STEPS
 from tests.conftest import SF_DIR
 
 
@@ -94,7 +91,7 @@ def test_hll_drift_within_published_bound(spark):
     contract that makes the sketch a legitimate 100 TB replacement for
     exact distinct (agg_hll_drift is declared no-oracle, so this IS
     its correctness check)."""
-    from engine.seeds7 import HLL_RSD
+    from engine.aggregates import HLL_RSD
 
     for sf in ("/root/testdata/sf0.001", SF_DIR):
         for r in engine.QUERIES["agg_hll_drift"](spark, sf).collect():
@@ -120,7 +117,7 @@ def test_schema_evolution_null_fill(spark):
     """The mergeSchema read keeps v1 rows (null n_chars) and v2 rows
     (populated) — totals must reconcile with the raw documents table."""
     rows = engine.QUERIES["source_schema_evolution"](spark, SF_DIR).collect()
-    from engine.seeds7 import SCHEMA_V1_MAX_ID
+    from engine.sql_surface import SCHEMA_V1_MAX_ID
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     n_docs = docs.count()
@@ -139,7 +136,7 @@ import datetime as _dt
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from engine.seeds7 import funnel_staged, nearest_gaps
+from engine.timeseries import funnel_staged, nearest_gaps
 
 H_SETTINGS = settings(
     max_examples=12,

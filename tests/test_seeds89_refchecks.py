@@ -9,13 +9,9 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from engine.seeds8 import (
-    EWMA_LAGS,
-    ewma_core,
-    interpolate_core,
-    running_distinct_core,
-)
-from engine.seeds9 import weighted_median_core
+from engine.aggregates import weighted_median_core
+from engine.timeseries import EWMA_LAGS, ewma_core, interpolate_core
+from engine.windows import running_distinct_core
 
 SETTINGS = settings(
     max_examples=12,

@@ -14,7 +14,7 @@ from pathlib import Path
 import pytest
 
 import engine
-from engine.seeds8 import tws_counter_stream
+from engine.streaming import tws_counter_stream
 from tests.conftest import SF_DIR, normalize
 
 _SCRATCH = Path(__file__).resolve().parent.parent / ".scratch"
@@ -147,7 +147,7 @@ def test_compaction_reduces_files_preserving_rows(spark):
 def test_mixture_epochs_caps_hold(spark):
     """repeat_factor ∈ (0, MAX_EPOCHS]; sampled ≤ 4·tokens and ≤
     uniform target."""
-    from engine.seeds8 import MIXTURE_MAX_EPOCHS
+    from engine.curation import MIXTURE_MAX_EPOCHS
 
     pdf = engine.QUERIES["llm_mixture_epochs"](spark, SF_DIR).toPandas()
     assert (pdf["repeat_factor"] > 0).all()

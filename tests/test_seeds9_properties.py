@@ -189,7 +189,7 @@ def test_partitioned_read_prunes_to_one_partition(spark):
     from pathlib import Path
 
     import pyspark.sql.functions as F
-    from engine.seeds15 import PRUNE_YEAR
+    from engine.sql_surface import PRUNE_YEAR
     from engine.session import load
 
     o = load(spark, SF_DIR, "orders")

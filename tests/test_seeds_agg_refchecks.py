@@ -19,9 +19,9 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from engine.seeds12 import agg_benford_audit
-from engine.seeds26 import mm_label_balance_chi2
-from engine.seeds27 import llm_code_fraction
+from engine.aggregates import agg_benford_audit
+from engine.curation import llm_code_fraction
+from engine.multimodal import mm_label_balance_chi2
 
 SETTINGS = settings(
     max_examples=8,
@@ -196,7 +196,7 @@ EVENTS = st.lists(
 @given(rows=EVENTS)
 @SETTINGS
 def test_seasonal_decompose_matches_python(spark, rows):
-    from engine.seeds9 import ts_seasonal_decompose
+    from engine.timeseries import ts_seasonal_decompose
 
     tmp = tempfile.mkdtemp(prefix="seasonal_refcheck_")
     try:

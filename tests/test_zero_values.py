@@ -11,7 +11,7 @@ are routine — a crawl shard of boilerplate-stripped empty docs, a
 refunded-to-zero order day, a null-imputed embedding batch — and one
 unguarded division takes down the whole job under Spark 4's default
 ANSI mode. Found llm_code_fraction's Σn_chars=0 abort on landing
-(engine/seeds27.py, fixed with try_divide; DuckDB's divide-by-zero is
+(engine/curation.py, fixed with try_divide; DuckDB's divide-by-zero is
 NULL, so oracles already agree with the try_* semantics).
 """
 
