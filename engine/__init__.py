@@ -26,10 +26,7 @@ from engine import registry as registry  # noqa: F401,E402
 
 # Importing the operator modules registers their queries/oracles.
 from engine import aggregates as aggregates  # noqa: F401,E402
-from engine import analytics_ops as analytics_ops  # noqa: F401,E402
-from engine import composite as composite  # noqa: F401,E402
 from engine import curation as curation  # noqa: F401,E402
-from engine import ext_ops as ext_ops  # noqa: F401,E402
 from engine import functions as functions  # noqa: F401,E402
 from engine import graph as graph  # noqa: F401,E402
 from engine import llm_ops as llm_ops  # noqa: F401,E402
@@ -39,20 +36,10 @@ from engine import relational as relational  # noqa: F401,E402
 from engine import scale_ops as scale_ops  # noqa: F401,E402
 from engine import sql_surface as sql_surface  # noqa: F401,E402
 from engine import streaming as streaming  # noqa: F401,E402
-from engine import streaming_ext as streaming_ext  # noqa: F401,E402
-from engine import surface4 as surface4  # noqa: F401,E402
-from engine import text_source as text_source  # noqa: F401,E402
 from engine import timeseries as timeseries  # noqa: F401,E402
-from engine import tpch4 as tpch4  # noqa: F401,E402
-from engine import tpch_ext as tpch_ext  # noqa: F401,E402
-from engine import training_ops as training_ops  # noqa: F401,E402
+from engine import tpch as tpch  # noqa: F401,E402
 from engine import udx as udx  # noqa: F401,E402
 from engine import windows as windows  # noqa: F401,E402
-from engine import windows_ext as windows_ext  # noqa: F401,E402
-
-# Deferred (callable) oracles compose other registered oracles; resolve
-# them now that every module has imported.
-registry.resolve_oracles()
 
 # The driver checks queries in registration order and reports the first
 # 50: this literal is that window, in order. Rotating it is an edit here.

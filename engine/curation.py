@@ -1,9 +1,13 @@
 """LLM training-data curation (``llm_`` and ``emb_`` queries): text
-quality and filtering signals, mixtures and curricula, near-duplicate
-evaluation, embedding search and clustering.
+quality and filtering signals (repetition, Gopher-style gates, unigram
+surprisal), mixtures, curricula and shard manifests, lexical retrieval,
+decontamination, near-duplicate and ANN evaluation, embedding search
+and clustering.
 
 The shared near-dup primitives live in engine.llm_ops, engine.lsh_core,
 engine.pipeline_ops and engine.scale_ops; this module composes them.
+It imports llm_ops and scale_ops at module level, so every oracle the
+evaluation queries compose from is registered before they are built.
 """
 
 from __future__ import annotations
@@ -100,7 +104,7 @@ def llm_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Corpus bigram counts and left-context counts are both derived from
     ONE exploded bigram pass (guarded to docs with ≥ 2 tokens — the
-    sequence(0,-1) reversal rule, engine/training_ops) and broadcast
+    sequence(0,-1) reversal rule of llm_repetition_filter) and broadcast
     back; the per-doc score is then one doc_id shuffle. At 100 TB the
     bigram table can exceed broadcast budget — the plan degrades to a
     sort-merge join on (w1, w2) with no logic change.
@@ -582,7 +586,7 @@ def llm_decontaminate_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-corpus decontamination at scale: flag TRAIN documents
     near-duplicate (token Jaccard ≥ {DECON_THRESHOLD}) to ANY EVAL
     document in one MinHash-LSH pass — the banded generalization of
-    llm_decontaminate (engine/ext_ops.py, exact 8-gram overlap): band
+    llm_decontaminate (exact 8-gram overlap): band
     hashes are computed ONCE over the union corpus, candidates come
     from a train-bands × eval-bands bucket join (never train × eval
     all-pairs), and only candidate docs get exact bitset verification.
@@ -1521,9 +1525,9 @@ EVAL_CAP = 1000  # the llm_jaccard_neardup witness population
 
 def recall_oracle(approx_qid: str, n_approx: str) -> str:
     """DuckDB mirror of :func:`pair_recall` for an approximate near-dup
-    query scored against llm_jaccard_neardup, composed at resolve time
-    from the two registered oracles (SURVEY.md §7.5 composition rule):
-    each full CTE chain, THEN the witness cap."""
+    query scored against llm_jaccard_neardup, composed from the two
+    registered oracles (SURVEY.md §7.5 composition rule): each full CTE
+    chain, THEN the witness cap."""
     exact = ORACLES["llm_jaccard_neardup"]
     approx = ORACLES[approx_qid]
     return f"""
@@ -1569,7 +1573,7 @@ def pair_recall(
 
 @query(
     "llm_dedup_recall",
-    oracle=lambda: recall_oracle("llm_lsh_neardup", "n_lsh"),
+    oracle=recall_oracle("llm_lsh_neardup", "n_lsh"),
 )
 def llm_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup-pipeline evaluation: precision/recall of the banded
@@ -1623,7 +1627,7 @@ def llm_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "llm_simhash_recall",
-    oracle=lambda: recall_oracle("llm_simhash_neardup", "n_simhash"),
+    oracle=recall_oracle("llm_simhash_neardup", "n_simhash"),
 )
 def llm_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash proxy-quality evaluation: the Hamming-banded SimHash
@@ -1685,7 +1689,7 @@ def _confusion_oracle() -> str:
     """
 
 
-@query("llm_langid_confusion", oracle=_confusion_oracle)
+@query("llm_langid_confusion", oracle=_confusion_oracle())
 def llm_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion matrix of the n-gram language-ID classifier
     (llm_lang_id) against the fixture's ground-truth lang column —
@@ -1910,8 +1914,8 @@ def _plant_mult(d: int) -> float:
 
 
 def _banded_recall_oracle() -> str:
-    """Composed at resolve time so the banding constants come from the
-    single source of truth in engine.scale_ops. The SQL mirrors, term for term: the witness cap,
+    """The banding constants come from engine.scale_ops, their one
+    definition. The SQL mirrors, term for term: the witness cap,
     the planted-twin multipliers, the NEARDUP_BANDS×NEARDUP_BITS
     hyperplane sign bits and per-band bucket packing, the candidate
     self-join, and the exact-cosine verify."""
@@ -2306,4 +2310,1027 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return members.groupBy("cid").applyInPandas(
         cluster_dups, schema="vec_id long, cluster int, is_kept int"
+    )
+
+
+@query(
+    "llm_pii_mask",
+    oracle="""
+    SELECT c_custkey,
+           REGEXP_REPLACE(c_name, '[0-9]+', '<ID>', 'g') AS masked_name,
+           CAST(REGEXP_EXTRACT(c_name, '([0-9]+)', 1) AS BIGINT)
+             AS extracted_id,
+           CAST(LENGTH(c_name) - LENGTH(
+             REGEXP_REPLACE(c_name, '[0-9]', '', 'g')) AS INT)
+             AS n_digit_chars
+    FROM customer
+    """,
+)
+def llm_pii_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Identifier scrubbing, the PII-redaction shape of a training-data
+    pipeline: digit runs replaced with a placeholder token, the raw
+    identifier extracted to a side column, and a digit-count audit.
+
+    Pure regexp projection — embarrassingly parallel, no shuffle, stays
+    in whole-stage codegen. On a real corpus the same shape handles
+    emails/phones/SSNs with a pattern list; the fixtures carry digits
+    only in entity names, which is what gets scrubbed here.
+    """
+    c = load(spark, sf_dir, "customer")
+    return c.select(
+        "c_custkey",
+        F.regexp_replace("c_name", "[0-9]+", "<ID>").alias("masked_name"),
+        F.regexp_extract("c_name", "([0-9]+)", 1)
+        .cast("bigint")
+        .alias("extracted_id"),
+        (
+            F.length("c_name")
+            - F.length(F.regexp_replace("c_name", "[0-9]", ""))
+        )
+        .cast("int")
+        .alias("n_digit_chars"),
+    )
+
+
+def _ann_recall_oracle() -> str:
+    # Composes the two registered oracles; DuckDB allows CTE bodies to
+    # be subqueries that themselves open WITH clauses.
+    exact_sql = ORACLES["llm_cosine_topk"]
+    approx_sql = ORACLES["llm_ann_lsh"]
+    return f"""
+    WITH exact AS (SELECT * FROM ({exact_sql}) x),
+    approx AS (SELECT * FROM ({approx_sql}) a)
+    SELECT e.probe_id,
+           CAST(COUNT(a.vec_id) AS INT) AS n_hit,
+           ROUND(CAST(COUNT(a.vec_id) AS DOUBLE) / 3, 4) AS recall_at_3
+    FROM exact e
+    LEFT JOIN approx a
+      ON a.probe_id = e.probe_id AND a.vec_id = e.vec_id
+    WHERE e.rn <= 3
+    GROUP BY e.probe_id
+    """
+
+
+@query("llm_ann_recall", oracle=_ann_recall_oracle())
+def llm_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ANN index quality evaluation: recall@3 of the LSH-bucketed
+    neighbors (llm_ann_lsh) against the exact brute-force top-k
+    (llm_cosine_topk), per probe.
+
+    Composes the two registered queries as DataFrames — the evaluation
+    loop a production pipeline runs before trusting an index. Both
+    inputs are probe-bounded (tiny), so the comparison join broadcasts;
+    the expensive parts are the underlying searches themselves.
+    """
+    exact = QUERIES["llm_cosine_topk"](spark, sf_dir).filter(
+        F.col("rn") <= 3
+    )
+    approx = QUERIES["llm_ann_lsh"](spark, sf_dir)
+    hits = exact.alias("e").join(
+        approx.alias("a"),
+        (F.col("a.probe_id") == F.col("e.probe_id"))
+        & (F.col("a.vec_id") == F.col("e.vec_id")),
+        "left",
+    )
+    return (
+        hits.groupBy(F.col("e.probe_id").alias("probe_id"))
+        .agg(F.count(F.col("a.vec_id")).alias("n_hit_l"))
+        .select(
+            "probe_id",
+            F.col("n_hit_l").cast("int").alias("n_hit"),
+            pround(F.col("n_hit_l") / F.lit(3.0), 4).alias("recall_at_3"),
+        )
+    )
+
+
+@query(
+    "llm_token_regex",
+    oracle="""
+    WITH pre AS (
+      SELECT doc_id,
+             UNNEST(regexp_extract_all(text, '[a-z0-9]+|[^a-z0-9 ]'))
+               AS tok
+      FROM documents
+    ), sub AS (
+      SELECT doc_id, UNNEST(regexp_extract_all(tok, '.{1,4}')) AS piece
+      FROM pre
+    ), p AS (
+      SELECT doc_id, COUNT(*) AS n_pretok FROM pre GROUP BY doc_id
+    ), s AS (
+      SELECT doc_id, COUNT(*) AS n_subword,
+             COUNT(DISTINCT piece) AS n_piece_vocab
+      FROM sub GROUP BY doc_id
+    )
+    SELECT p.doc_id, p.n_pretok, s.n_subword, s.n_piece_vocab
+    FROM p JOIN s ON p.doc_id = s.doc_id
+    """,
+)
+def llm_token_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Regex-based tokenization: GPT-style pretokenizer (runs of
+    alphanumerics, or single punctuation) then fixed-width subword
+    chunking (≤4 chars — the BPE-piece-count proxy), with the
+    per-document piece vocabulary size.
+
+    Complements llm_token_count's whitespace+⌈len/4⌉ heuristic with
+    the regex path the tokenizer-parity audits actually run. Both
+    stages are JVM-side ``regexp_extract_all`` + explode (no Python);
+    the two aggregates share the doc_id key, so the join after them is
+    co-partitioned and shuffle-free under AQE. The pattern is engine-
+    portable (character classes only — no \\w/\\b unicode semantics to
+    disagree on).
+    """
+    d = load(spark, sf_dir, "documents")
+    pre = d.select(
+        "doc_id",
+        F.explode(
+            F.expr("regexp_extract_all(text, '[a-z0-9]+|[^a-z0-9 ]', 0)")
+        ).alias("tok"),
+    )
+    sub = pre.select(
+        "doc_id",
+        F.explode(F.expr("regexp_extract_all(tok, '.{1,4}', 0)")).alias(
+            "piece"
+        ),
+    )
+    p = pre.groupBy("doc_id").agg(F.count("*").alias("n_pretok"))
+    s = sub.groupBy("doc_id").agg(
+        F.count("*").alias("n_subword"),
+        F.countDistinct("piece").alias("n_piece_vocab"),
+    )
+    return p.join(s, "doc_id")
+
+
+# ---------------------------------------------------------------------------
+# Text analysis: token-distribution entropy.
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "llm_doc_entropy",
+    oracle="""
+    WITH tok AS (
+      SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS token FROM documents
+    ), tf AS (
+      SELECT doc_id, token, COUNT(*) AS c FROM tok GROUP BY 1, 2
+    )
+    SELECT doc_id,
+           CAST(SUM(c) AS BIGINT) AS n_tok,
+           COUNT(*) AS n_distinct,
+           ROUND(LN(CAST(SUM(c) AS DOUBLE))
+                 - SUM(CAST(c AS DOUBLE) * LN(CAST(c AS DOUBLE)))
+                   / SUM(c), 4) AS entropy
+    FROM tf GROUP BY doc_id
+    """,
+)
+def llm_doc_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token-distribution Shannon entropy per document — the
+    repetitiveness signal (low entropy = boilerplate/spam) used
+    alongside lexical diversity in corpus quality filtering.
+
+    Uses the single-aggregate identity H = ln(N) − (Σ c·ln c)/N over
+    per-(doc, token) counts, so the whole operator is two grouped
+    aggregates on the same doc_id-prefixed keys (partial aggregation
+    map-side; no window, no join, no second pass over text). Natural
+    log on identical doubles is bit-stable across both engines (same
+    pattern llm_lang_id relies on), and the result is rounded
+    in-query.
+    """
+    d = load(spark, sf_dir, "documents")
+    tf = (
+        d.select(
+            "doc_id", F.explode(F.split("text", " ")).alias("token")
+        )
+        .groupBy("doc_id", "token")
+        .agg(F.count("*").alias("c"))
+    )
+    c = F.col("c").cast("double")
+    return tf.groupBy("doc_id").agg(
+        F.sum("c").alias("n_tok"),
+        F.count("*").alias("n_distinct"),
+        pround(
+            F.log(F.sum("c").cast("double"))
+            - F.sum(c * F.log(c)) / F.sum("c"),
+            4,
+        ).alias("entropy"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Lexical retrieval: inverted index + BM25 — the text-side counterpart
+# of the embedding ANN family (llm_ann_lsh / llm_ann_ivf).
+# ---------------------------------------------------------------------------
+
+POSTINGS_CAP = 20
+
+
+@query(
+    "llm_inverted_index",
+    oracle=f"""
+    WITH tok AS (
+      SELECT DISTINCT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS token
+      FROM documents
+    )
+    SELECT token,
+           COUNT(*) AS df,
+           ARRAY_TO_STRING(
+             LIST_SLICE(LIST(doc_id ORDER BY doc_id), 1, {POSTINGS_CAP}),
+             ',') AS postings_head
+    FROM tok GROUP BY token
+    """,
+)
+def llm_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Inverted index build: token → document frequency + sorted
+    posting list (head capped at POSTINGS_CAP=20 for the audit row —
+    the full list is the same aggregate without the slice).
+
+    The retrieval-side structure every lexical search over a corpus
+    needs: one explode + distinct + one grouped aggregate, all keyed on
+    token, so the index build is a single shuffle and each posting
+    list lands in one task — at 100 TB you'd additionally bucket the
+    output by token so query-time lookups prune to one bucket.
+    Postings are sort_array'd in-aggregate, making the array value
+    deterministic under any partitioning.
+    """
+    d = load(spark, sf_dir, "documents")
+    tok = d.select(
+        "doc_id", F.explode(F.split("text", " ")).alias("token")
+    ).distinct()
+    return tok.groupBy("token").agg(
+        F.count("*").alias("df"),
+        # Joined to a string: the postings are the ONLY complex-typed
+        # output column in the registry, and the driver's value-hash
+        # canonicalization is outside our control — a flat string
+        # carries identical information with zero hasher risk.
+        F.array_join(
+            F.slice(
+                F.sort_array(F.collect_list("doc_id")), 1, POSTINGS_CAP
+            ),
+            ",",
+        ).alias("postings_head"),
+    )
+
+
+BM25_QUERY = ("scan", "hash", "merge")
+BM25_K1 = 1.2
+BM25_B = 0.75
+BM25_TOPK = 10
+
+
+@query(
+    "llm_bm25_topk",
+    oracle=f"""
+    WITH tok AS (
+      SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS token
+      FROM documents
+    ), dl AS (
+      SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id
+    ), stats AS (
+      SELECT COUNT(*) AS n_docs, AVG(CAST(dl AS DOUBLE)) AS avgdl FROM dl
+    ), tf AS (
+      SELECT doc_id, token, COUNT(*) AS tf
+      FROM tok WHERE token IN {BM25_QUERY!r}
+      GROUP BY 1, 2
+    ), df AS (
+      SELECT token, COUNT(*) AS df FROM tf GROUP BY token
+    ), scored AS (
+      SELECT tf.doc_id,
+             SUM(
+               LN(1.0 + (stats.n_docs - df.df + 0.5) / (df.df + 0.5))
+               * tf.tf * (CAST({BM25_K1} AS DOUBLE) + 1.0)
+               / (tf.tf + CAST({BM25_K1} AS DOUBLE)
+                  * (1.0 - CAST({BM25_B} AS DOUBLE)
+                     + CAST({BM25_B} AS DOUBLE) * dl.dl / stats.avgdl))
+             ) AS score
+      FROM tf
+      JOIN df ON tf.token = df.token
+      JOIN dl ON tf.doc_id = dl.doc_id
+      CROSS JOIN stats
+      GROUP BY tf.doc_id
+    )
+    SELECT doc_id, ROUND(score, 4) AS score
+    FROM scored
+    ORDER BY score DESC, doc_id
+    LIMIT {BM25_TOPK}
+    """,
+)
+def llm_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BM25 lexical retrieval: top-10 documents for a fixed probe
+    query, Okapi scoring (idf · saturated tf · length normalization,
+    k1=1.2, b=0.75).
+
+    The query-token filter lands BEFORE any aggregation (only rows for
+    the ~|query| tokens survive the explode), df and the corpus stats
+    are tiny aggregates broadcast back, and the per-doc score is one
+    grouped SUM — so the retrieval plan is: filtered explode, two
+    1-to-few broadcasts, one shuffle on doc_id, TakeOrderedAndProject
+    for the top-k. The idf is the BM25+ ln(1 + (N−df+0.5)/(df+0.5))
+    form, strictly positive so common terms can't flip signs. Natural
+    log on identical doubles is engine-stable (llm_doc_entropy
+    pattern).
+    """
+    d = load(spark, sf_dir, "documents")
+    tok = d.select(
+        "doc_id", F.explode(F.split("text", " ")).alias("token")
+    )
+    dl = tok.groupBy("doc_id").agg(F.count("*").alias("dl"))
+    stats = dl.agg(
+        F.count("*").alias("n_docs"),
+        F.avg(F.col("dl").cast("double")).alias("avgdl"),
+    )
+    tf = (
+        tok.filter(F.col("token").isin(*BM25_QUERY))
+        .groupBy("doc_id", "token")
+        .agg(F.count("*").alias("tf"))
+    )
+    df = tf.groupBy("token").agg(F.count("*").alias("df"))
+    idf = F.log(
+        1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
+    )
+    norm = F.col("tf") * (BM25_K1 + 1.0) / (
+        F.col("tf")
+        + BM25_K1
+        * (1.0 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
+    )
+    return (
+        tf.join(F.broadcast(df), "token")
+        .join(dl, "doc_id")
+        .crossJoin(F.broadcast(stats))
+        .groupBy("doc_id")
+        .agg(F.sum(idf * norm).alias("raw"))
+        .select("doc_id", pround(F.col("raw"), 4).alias("score"))
+        .orderBy(F.col("score").desc(), "doc_id")
+        .limit(BM25_TOPK)
+    )
+
+
+# ---------------------------------------------------------------------------
+# LLM-pipeline compositions. The train/eval split is engine.splits', the
+# one llm_train_test_split uses, so the ratio cannot drift between them.
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "llm_decontaminate",
+    oracle=f"""
+    WITH b AS (
+      SELECT doc_id, lang, text, {SPLIT_CASE_SQL} AS split FROM documents
+    ), sh AS (
+      SELECT doc_id, split,
+             MD5(ARRAY_TO_STRING(
+               LIST_SLICE(STRING_SPLIT(text, ' '), i, i + 2), ' ')) AS h
+      FROM (
+        SELECT doc_id, split, text,
+               UNNEST(GENERATE_SERIES(1, LEN(STRING_SPLIT(text, ' ')) - 2))
+                 AS i
+        FROM b WHERE LEN(STRING_SPLIT(text, ' ')) >= 3)
+    ), ev AS (
+      SELECT DISTINCT h FROM sh WHERE split = 'eval'
+    ), cont AS (
+      SELECT DISTINCT s.doc_id FROM sh s JOIN ev ON s.h = ev.h
+      WHERE s.split = 'train'
+    )
+    SELECT b.lang,
+           COUNT(*) AS n_train,
+           CAST(SUM(CASE WHEN c.doc_id IS NOT NULL THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_contaminated,
+           CAST(SUM(CASE WHEN c.doc_id IS NULL THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_clean
+    FROM b LEFT JOIN cont c ON b.doc_id = c.doc_id
+    WHERE b.split = 'train'
+    GROUP BY b.lang
+    """,
+)
+def llm_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Train/eval decontamination audit: flag train documents sharing
+    any 3-token shingle with the eval split (benchmark-leakage check).
+
+    The shingling is llm_fingerprint's rolling-window transform
+    (JVM-side slice/array_join — no Python); shingles are md5-hashed so
+    the join key is a fixed-width string, not raw text. The eval
+    shingle set is a fixed ~19% hash fraction of the corpus, distinct'd
+    — the small side by construction — and broadcasts into the train
+    shingle stream; contaminated doc_ids are distinct'd and left-joined
+    back for the per-language audit. At 100 TB: one explode + one
+    broadcast semi-join + two small aggregates; the eval set for a real
+    benchmark suite is tiny, making the broadcast even cheaper than
+    here.
+    """
+    d = load(spark, sf_dir, "documents").select(
+        "doc_id", "lang", "text", split_col().alias("split")
+    )
+    # Token array bound as a column, not split inside the lambda:
+    # Catalyst does not hoist loop-invariant subexpressions out of
+    # higher-order-function lambdas, so an in-lambda split re-tokenizes
+    # the full text once per word — O(words · len) per doc, ~190 s for
+    # one 366k-char doc (giant-doc sweep) vs ~1 s bound.
+    shingles = F.expr(
+        "transform(sequence(1, size(toks) - 2),"
+        " i -> md5(array_join(slice(toks, i, 3), ' ')))"
+    )
+    # Scanned twice (eval side + train side): checkpoint so the
+    # shingling explode doesn't re-execute through lineage — measured
+    # ~2× at sf0.1 (same pattern as scale_ops' packed/vocab frames).
+    sh = (
+        d.withColumn("toks", F.split("text", " "))
+        .filter(F.size("toks") >= 3)
+        .select("doc_id", "split", F.explode(shingles).alias("h"))
+        .localCheckpoint(eager=True)
+    )
+    ev = sh.filter(F.col("split") == "eval").select("h").distinct()
+    cont = (
+        sh.filter(F.col("split") == "train")
+        .join(F.broadcast(ev), "h")
+        .select("doc_id")
+        .distinct()
+        .withColumn("is_cont", F.lit(1))
+    )
+    return (
+        d.filter(F.col("split") == "train")
+        .join(cont, "doc_id", "left")
+        .groupBy("lang")
+        .agg(
+            F.count("*").alias("n_train"),
+            F.sum(F.coalesce(F.col("is_cont"), F.lit(0)))
+            .cast("long")
+            .alias("n_contaminated"),
+            F.sum(F.when(F.col("is_cont").isNull(), 1).otherwise(0))
+            .cast("long")
+            .alias("n_clean"),
+        )
+    )
+
+
+QUALITY_MIN_CHARS = 100
+QUALITY_MIN_TOKENS = 20
+
+
+@query(
+    "llm_dedup_pipeline",
+    oracle=f"""
+    WITH surv AS (
+      SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY MD5(text)
+    ), dd AS (
+      SELECT d.* FROM documents d JOIN surv s ON d.doc_id = s.doc_id
+    ), q AS (
+      SELECT lang, {SPLIT_CASE_SQL} AS split
+      FROM dd
+      WHERE n_chars >= {QUALITY_MIN_CHARS}
+        AND LEN(STRING_SPLIT(text, ' ')) >= {QUALITY_MIN_TOKENS}
+    ), raw_c AS (
+      SELECT lang, COUNT(*) AS n_raw FROM documents GROUP BY lang
+    ), dd_c AS (
+      SELECT lang, COUNT(*) AS n_dedup FROM dd GROUP BY lang
+    ), q_c AS (
+      SELECT lang, COUNT(*) AS n_quality,
+             CAST(SUM(CASE WHEN split = 'train' THEN 1 ELSE 0 END)
+                  AS BIGINT) AS n_train,
+             CAST(SUM(CASE WHEN split = 'eval' THEN 1 ELSE 0 END)
+                  AS BIGINT) AS n_eval
+      FROM q GROUP BY lang
+    )
+    SELECT raw_c.lang, raw_c.n_raw, dd_c.n_dedup,
+           q_c.n_quality, q_c.n_train, q_c.n_eval
+    FROM raw_c JOIN dd_c ON raw_c.lang = dd_c.lang
+    JOIN q_c ON raw_c.lang = q_c.lang
+    """,
+)
+def llm_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """End-to-end corpus-preparation funnel in one plan: exact dedup
+    (min-doc_id survivor per text hash) → quality gate (≥100 chars and
+    ≥20 whitespace tokens) → stable train/eval split, audited per
+    language at every stage.
+
+    This is the composition the single-purpose operators
+    (llm_exact_dedup, llm_quality_filter, llm_train_test_split) exist
+    for, expressed as ONE DataFrame so Catalyst sees the whole funnel:
+    the survivor join is a self-semi-join on the text hash, the quality
+    gate is a pushdown-able filter on the survivor side, and all three
+    audit aggregates group on the low-cardinality lang key. At 100 TB
+    the funnel runs as two fact shuffles (hash-group, survivor join) +
+    three cheap rollups — no stage materializes between steps.
+    """
+    d = load(spark, sf_dir, "documents")
+    surv = d.groupBy(F.md5("text").alias("h")).agg(
+        F.min("doc_id").alias("doc_id")
+    )
+    dd = d.join(surv.select("doc_id"), "doc_id")
+    q = dd.filter(
+        (F.col("n_chars") >= QUALITY_MIN_CHARS)
+        & (F.size(F.split("text", " ")) >= QUALITY_MIN_TOKENS)
+    ).select("lang", split_col().alias("split"))
+    raw_c = d.groupBy("lang").agg(F.count("*").alias("n_raw"))
+    dd_c = dd.groupBy("lang").agg(F.count("*").alias("n_dedup"))
+    q_c = q.groupBy("lang").agg(
+        F.count("*").alias("n_quality"),
+        F.sum((F.col("split") == "train").cast("int"))
+        .cast("long")
+        .alias("n_train"),
+        F.sum((F.col("split") == "eval").cast("int"))
+        .cast("long")
+        .alias("n_eval"),
+    )
+    return raw_c.join(dd_c, "lang").join(q_c, "lang")
+
+
+# C4/Gopher-style gate thresholds, calibrated to the fixture corpus
+# (10-99 tokens/doc, analytics vocabulary; FIXTURES.md 'documents').
+REP_DUP_FRAC = 0.5  # > half the tokens are repeats → repetitive
+REP_TOP_BIGRAM_FRAC = 0.2  # one bigram > 20% of all bigrams → template
+
+
+@query(
+    "llm_repetition_filter",
+    oracle=f"""
+    WITH t AS (
+      SELECT doc_id, lang, STRING_SPLIT(text, ' ') AS toks FROM documents
+    ), base AS (
+      SELECT doc_id, lang,
+             CAST(LEN(toks) AS INT) AS n_tokens,
+             CAST(LEN(LIST_DISTINCT(toks)) AS INT) AS n_distinct
+      FROM t
+    ), bg AS (
+      SELECT doc_id,
+             ARRAY_TO_STRING(
+               LIST_SLICE(STRING_SPLIT(text, ' '), i, i + 1), ' ') AS b
+      FROM (
+        SELECT doc_id, text,
+               UNNEST(GENERATE_SERIES(1, LEN(STRING_SPLIT(text, ' ')) - 1))
+                 AS i
+        FROM documents)
+    ), bgc AS (
+      SELECT doc_id, MAX(c) AS top_bigram
+      FROM (SELECT doc_id, b, COUNT(*) AS c FROM bg GROUP BY 1, 2)
+      GROUP BY doc_id
+    )
+    SELECT base.doc_id, base.lang, base.n_tokens, base.n_distinct,
+           ROUND(1.0 - CAST(base.n_distinct AS DOUBLE) / base.n_tokens, 4)
+             AS dup_frac,
+           ROUND(CAST(bgc.top_bigram AS DOUBLE) / (base.n_tokens - 1), 4)
+             AS top_bigram_frac,
+           CAST(CASE WHEN 1.0 - CAST(base.n_distinct AS DOUBLE)
+                            / base.n_tokens > {REP_DUP_FRAC}
+                       OR CAST(bgc.top_bigram AS DOUBLE)
+                            / (base.n_tokens - 1) > {REP_TOP_BIGRAM_FRAC}
+                     THEN 1 ELSE 0 END AS INT) AS flag_repetitive
+    FROM base JOIN bgc ON base.doc_id = bgc.doc_id
+    """,
+)
+def llm_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Repetition filter (C4/Gopher rule family): per document, the
+    duplicate-token fraction and the most-frequent-bigram share, plus a
+    combined repetitive flag.
+
+    Token/distinct counts stay JVM-side with zero shuffle
+    (``size``/``array_distinct`` on the split array inside whole-stage
+    codegen). The bigram mode needs a real distributed count: explode to
+    (doc_id, bigram), two-level groupBy — both shuffles hash on doc_id
+    first, so at 100 TB this is one repartition of the corpus plus a
+    doc-local reduce; no global state.
+    """
+    d = load(spark, sf_dir, "documents")
+    base = d.withColumn("toks", F.split("text", " ")).select(
+        "doc_id",
+        "lang",
+        "toks",
+        F.size("toks").alias("n_tokens"),
+        F.size(F.array_distinct("toks")).alias("n_distinct"),
+    )
+    # sequence(0, -1) reverses (step defaults to -1 when start > stop),
+    # so a 1-token doc would index toks[-1] and crash under ANSI; the
+    # size guard drops it BEFORE the transform evaluates, matching the
+    # oracle (DuckDB GENERATE_SERIES(0, -1) is empty -> doc drops at the
+    # inner join) and keeping the n_tokens - 1 divisor >= 1.
+    bigrams = base.filter(F.size("toks") >= 2).select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                "transform(sequence(0, size(toks) - 2),"
+                " i -> concat(toks[i], ' ', toks[i + 1]))"
+            )
+        ).alias("b"),
+    )
+    top = (
+        bigrams.groupBy("doc_id", "b")
+        .count()
+        .groupBy("doc_id")
+        .agg(F.max("count").alias("top_bigram"))
+    )
+    dup_frac = 1.0 - F.col("n_distinct").cast("double") / F.col("n_tokens")
+    top_frac = F.col("top_bigram").cast("double") / (F.col("n_tokens") - 1)
+    return (
+        base.join(top, "doc_id")
+        .select(
+            "doc_id",
+            "lang",
+            "n_tokens",
+            "n_distinct",
+            pround(dup_frac, 4).alias("dup_frac"),
+            pround(top_frac, 4).alias("top_bigram_frac"),
+            (
+                (dup_frac > REP_DUP_FRAC)
+                | (top_frac > REP_TOP_BIGRAM_FRAC)
+            )
+            .cast("int")
+            .alias("flag_repetitive"),
+        )
+    )
+
+
+GOPHER_MIN_TOKENS = 20
+GOPHER_MAX_TOKENS = 90
+GOPHER_MIN_WORD_LEN = 3.0
+GOPHER_MAX_WORD_LEN = 8.0
+GOPHER_MIN_COMMON_FRAC = 0.05  # stopword-coverage analog
+
+# The 'stopword' list of the fixture vocabulary: its most frequent
+# tokens (profiled at sf0.01), playing the role of Gopher's required
+# English stopwords. Frozen so Spark and oracle agree byte-for-byte.
+COMMON_TOKENS = ("join", "hash", "row", "batch", "scan", "filter")
+_COMMON_SQL = "[" + ", ".join(f"'{t}'" for t in COMMON_TOKENS) + "]"
+
+
+@query(
+    "llm_gopher_quality",
+    oracle=f"""
+    WITH t AS (
+      SELECT doc_id, lang,
+             CAST(LEN(STRING_SPLIT(text, ' ')) AS INT) AS n_tokens,
+             CAST(LENGTH(text) AS BIGINT) AS n_chars_m,
+             CAST(LEN(LIST_FILTER(STRING_SPLIT(text, ' '),
+                                  x -> LIST_CONTAINS({_COMMON_SQL}, x)))
+                  AS INT) AS n_common
+      FROM documents
+    ), m AS (
+      SELECT doc_id, lang, n_tokens, n_common,
+             CAST(n_chars_m - (n_tokens - 1) AS DOUBLE) / n_tokens
+               AS mean_word_len,
+             CAST(n_common AS DOUBLE) / n_tokens AS common_frac
+      FROM t
+    )
+    SELECT doc_id, lang, n_tokens,
+           ROUND(mean_word_len, 4) AS mean_word_len,
+           ROUND(common_frac, 4) AS common_frac,
+           CAST(n_tokens BETWEEN {GOPHER_MIN_TOKENS} AND {GOPHER_MAX_TOKENS}
+                AS INT) AS ok_len,
+           CAST(mean_word_len BETWEEN {GOPHER_MIN_WORD_LEN}
+                                  AND {GOPHER_MAX_WORD_LEN}
+                AS INT) AS ok_word_len,
+           CAST(common_frac >= {GOPHER_MIN_COMMON_FRAC} AS INT) AS ok_common,
+           CAST(n_tokens BETWEEN {GOPHER_MIN_TOKENS} AND {GOPHER_MAX_TOKENS}
+                AND mean_word_len BETWEEN {GOPHER_MIN_WORD_LEN}
+                                      AND {GOPHER_MAX_WORD_LEN}
+                AND common_frac >= {GOPHER_MIN_COMMON_FRAC}
+                AS INT) AS pass_gopher
+    FROM m
+    """,
+)
+def llm_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gopher-style rule-based quality gate: token-count bounds, mean
+    word length bounds, and common-token ('stopword') coverage, with
+    per-rule flags and the conjunction.
+
+    Map-only — every metric derives from the split array via JVM
+    higher-order functions (``size``, ``filter``); mean word length
+    uses chars = len(text) - (n_tokens - 1) (single-space tokenization,
+    FIXTURES.md). No shuffle, embarrassingly parallel at any scale.
+    """
+    d = load(spark, sf_dir, "documents").withColumn(
+        "toks", F.split("text", " ")
+    )
+    common_arr = F.array(*[F.lit(t) for t in COMMON_TOKENS])
+    n_tokens = F.size("toks")
+    n_common = F.size(
+        F.filter("toks", lambda x: F.array_contains(common_arr, x))
+    )
+    mean_word_len = (
+        F.length("text") - (n_tokens - 1)
+    ).cast("double") / n_tokens
+    common_frac = n_common.cast("double") / n_tokens
+    ok_len = n_tokens.between(GOPHER_MIN_TOKENS, GOPHER_MAX_TOKENS)
+    ok_wl = mean_word_len.between(GOPHER_MIN_WORD_LEN, GOPHER_MAX_WORD_LEN)
+    ok_common = common_frac >= GOPHER_MIN_COMMON_FRAC
+    return d.select(
+        "doc_id",
+        "lang",
+        n_tokens.alias("n_tokens"),
+        pround(mean_word_len, 4).alias("mean_word_len"),
+        pround(common_frac, 4).alias("common_frac"),
+        ok_len.cast("int").alias("ok_len"),
+        ok_wl.cast("int").alias("ok_word_len"),
+        ok_common.cast("int").alias("ok_common"),
+        (ok_len & ok_wl & ok_common).cast("int").alias("pass_gopher"),
+    )
+
+
+@query(
+    "llm_unigram_surprisal",
+    oracle="""
+    WITH tok AS (
+      SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS token
+      FROM documents
+    ), vocab AS (
+      SELECT token, COUNT(*) AS c FROM tok GROUP BY token
+    ), tot AS (
+      SELECT SUM(c) AS n FROM vocab
+    ), scored AS (
+      SELECT t.doc_id, -LN(CAST(v.c AS DOUBLE) / tot.n) AS s
+      FROM tok t JOIN vocab v ON t.token = v.token CROSS JOIN tot
+    )
+    SELECT doc_id,
+           CAST(COUNT(*) AS INT) AS n_tokens,
+           ROUND(AVG(s), 4) AS avg_surprisal,
+           ROUND(MAX(s), 4) AS max_surprisal
+    FROM scored GROUP BY doc_id
+    """,
+)
+def llm_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unigram-LM surprisal per document — the CCNet-style
+    perplexity-proxy quality signal: fit a corpus unigram model, score
+    each document by mean / max token surprisal (-ln p).
+
+    Two passes over the exploded tokens: (1) vocab counts — one shuffle
+    on token, output is vocabulary-sized, broadcast back; (2) per-doc
+    aggregate — one shuffle on doc_id. The corpus total is a 1-row
+    cross join. At 100 TB the vocab side stays broadcastable for any
+    real tokenizer vocabulary (≤ a few M rows); if it were not, the
+    same plan degrades gracefully to a sort-merge join on token.
+    """
+    d = load(spark, sf_dir, "documents")
+    tok = d.select(
+        "doc_id", F.explode(F.split("text", " ")).alias("token")
+    )
+    vocab = tok.groupBy("token").agg(F.count("*").alias("c"))
+    tot = vocab.agg(F.sum("c").alias("n"))
+    s = -F.log(F.col("c").cast("double") / F.col("n"))
+    scored = (
+        tok.join(F.broadcast(vocab), "token")
+        .crossJoin(F.broadcast(tot))
+        .select("doc_id", s.alias("s"))
+    )
+    return scored.groupBy("doc_id").agg(
+        F.count("*").cast("int").alias("n_tokens"),
+        pround(F.avg("s"), 4).alias("avg_surprisal"),
+        pround(F.max("s"), 4).alias("max_surprisal"),
+    )
+
+
+@query(
+    "llm_quality_buckets",
+    oracle="""
+    WITH hist AS (
+      SELECT n_chars, COUNT(*) AS c FROM documents GROUP BY n_chars
+    ), cdf AS (
+      SELECT n_chars,
+             SUM(c) OVER (ORDER BY n_chars) AS cum,
+             SUM(c) OVER () AS n
+      FROM hist
+    ), b AS (
+      SELECT MIN(CASE WHEN cum * 3 >= n THEN n_chars END) AS b1,
+             MIN(CASE WHEN cum * 3 >= 2 * n THEN n_chars END) AS b2
+      FROM cdf
+    )
+    SELECT d.lang,
+           CASE WHEN d.n_chars <= b.b1 THEN 'tail'
+                WHEN d.n_chars <= b.b2 THEN 'middle'
+                ELSE 'head' END AS bucket,
+           COUNT(*) AS n_docs,
+           ROUND(AVG(CAST(d.n_chars AS DOUBLE)), 2) AS avg_chars
+    FROM documents d CROSS JOIN b
+    GROUP BY 1, 2
+    """,
+)
+def llm_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CCNet-style head/middle/tail bucketing by corpus terciles of a
+    quality proxy (n_chars), reported per language.
+
+    The tercile boundaries come from an exact value-histogram CDF —
+    groupBy(n_chars) then a running sum over the *aggregated histogram*
+    (bounded by |distinct n_chars| ≈ hundreds, NOT corpus size, so the
+    unpartitioned window is safe at any scale) — the engine-agnostic
+    'smallest v with cum ≥ ⌈qN⌉' definition, immune to cross-engine
+    percentile-interpolation drift. Boundaries broadcast back as a
+    1-row cross join; bucketing is then map-side.
+    """
+    d = load(spark, sf_dir, "documents")
+    hist = d.groupBy("n_chars").agg(F.count("*").alias("c"))
+    cdf = hist.select(
+        "n_chars",
+        F.sum("c").over(W.orderBy("n_chars")).alias("cum"),
+        F.sum("c").over(W.partitionBy()).alias("n"),
+    )
+    b = cdf.agg(
+        F.min(
+            F.when(F.col("cum") * 3 >= F.col("n"), F.col("n_chars"))
+        ).alias("b1"),
+        F.min(
+            F.when(F.col("cum") * 3 >= 2 * F.col("n"), F.col("n_chars"))
+        ).alias("b2"),
+    )
+    bucket = (
+        F.when(F.col("n_chars") <= F.col("b1"), F.lit("tail"))
+        .when(F.col("n_chars") <= F.col("b2"), F.lit("middle"))
+        .otherwise(F.lit("head"))
+    )
+    return (
+        d.crossJoin(F.broadcast(b))
+        .groupBy("lang", bucket.alias("bucket"))
+        .agg(
+            F.count("*").alias("n_docs"),
+            pround(F.avg(F.col("n_chars").cast("double")), 2).alias(
+                "avg_chars"
+            ),
+        )
+    )
+
+
+MIX_TARGET_SHARE = 0.2  # uniform target over the 5 fixture langs
+
+
+@query(
+    "llm_domain_mixture",
+    oracle=f"""
+    WITH per AS (
+      SELECT lang,
+             COUNT(*) AS n_docs,
+             CAST(SUM(LEN(STRING_SPLIT(text, ' '))) AS BIGINT) AS n_tokens
+      FROM documents GROUP BY lang
+    )
+    SELECT lang, n_docs, n_tokens,
+           ROUND(CAST(n_tokens AS DOUBLE) / SUM(n_tokens) OVER (), 4)
+             AS token_share,
+           ROUND({MIX_TARGET_SHARE}
+                 / (CAST(n_tokens AS DOUBLE) / SUM(n_tokens) OVER ()), 4)
+             AS sample_weight
+    FROM per
+    """,
+)
+def llm_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Domain-mixture reweighting: per language, the realized token
+    share and the sampling weight that would hit a uniform target
+    mixture (weight = target / actual) — the knob a pre-training
+    pipeline turns to rebalance sources.
+
+    One shuffle (groupBy lang, map-side-combined token sums via
+    JVM-side ``size(split(...))``); the share window runs over the
+    aggregated |lang| = 5 rows, bounded at any corpus size.
+    """
+    d = load(spark, sf_dir, "documents")
+    per = d.groupBy("lang").agg(
+        F.count("*").alias("n_docs"),
+        F.sum(F.size(F.split("text", " "))).alias("n_tokens"),
+    )
+    share = F.col("n_tokens").cast("double") / F.sum("n_tokens").over(
+        W.partitionBy()
+    )
+    return per.select(
+        "lang",
+        "n_docs",
+        "n_tokens",
+        pround(share, 4).alias("token_share"),
+        pround(F.lit(MIX_TARGET_SHARE) / share, 4).alias("sample_weight"),
+    )
+
+
+N_SHARDS = 8
+
+
+@query(
+    "llm_shard_manifest",
+    oracle=f"""
+    SELECT ('0x' || SUBSTRING(MD5(CAST(doc_id AS VARCHAR)), 1, 2))::BIGINT
+             % {N_SHARDS} AS shard,
+           COUNT(*) AS n_docs,
+           CAST(SUM(LEN(STRING_SPLIT(text, ' '))) AS BIGINT) AS n_tokens,
+           MIN(doc_id) AS min_doc_id,
+           MAX(doc_id) AS max_doc_id,
+           CAST(SUM(('0x' || SUBSTRING(MD5(text), 1, 12))::BIGINT)
+                AS BIGINT) AS content_checksum
+    FROM documents
+    GROUP BY 1
+    """,
+)
+def llm_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic shard manifest — the dataset-publishing step: docs
+    are hash-assigned to {N_SHARDS} shards (first md5 byte of doc_id,
+    content-stable like the train/eval split), and each shard reports
+    row count, token count, key range, and an order-insensitive content
+    checksum (sum of 48-bit md5 prefixes; 48 bits keeps ~2^20 docs/shard
+    clear of BIGINT overflow, and a writer at 100 TB would fold per-file
+    partial sums the same way).
+
+    One shuffle on the shard key — exactly the repartition a real shard
+    writer performs before ``write.partitionBy``.
+    """
+    d = load(spark, sf_dir, "documents")
+    shard = (
+        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2), 16, 10)
+        .cast("bigint")
+        % N_SHARDS
+    )
+    checksum = F.conv(F.substring(F.md5("text"), 1, 12), 16, 10).cast(
+        "bigint"
+    )
+    return (
+        d.groupBy(shard.alias("shard"))
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum(F.size(F.split("text", " "))).alias("n_tokens"),
+            F.min("doc_id").alias("min_doc_id"),
+            F.max("doc_id").alias("max_doc_id"),
+            F.sum(checksum).alias("content_checksum"),
+        )
+    )
+
+
+BLOCK_TOKENS = 8  # sub-document dedup granularity (C4's 3-sentence span)
+
+
+@query(
+    "llm_block_dedup",
+    oracle=f"""
+    WITH blk AS (
+      SELECT doc_id,
+             ARRAY_TO_STRING(
+               LIST_SLICE(STRING_SPLIT(text, ' '),
+                          (i - 1) * {BLOCK_TOKENS} + 1,
+                          i * {BLOCK_TOKENS}), ' ') AS block
+      FROM (
+        SELECT doc_id, text,
+               UNNEST(GENERATE_SERIES(
+                 1, LEN(STRING_SPLIT(text, ' ')) // {BLOCK_TOKENS})) AS i
+        FROM documents)
+    ), shared AS (
+      SELECT block FROM blk GROUP BY block
+      HAVING COUNT(DISTINCT doc_id) > 1
+    ), audit AS (
+      SELECT b.doc_id,
+             COUNT(*) AS n_blocks,
+             CAST(SUM(CASE WHEN s.block IS NOT NULL THEN 1 ELSE 0 END)
+                  AS BIGINT) AS n_dup_blocks
+      FROM blk b LEFT JOIN shared s ON b.block = s.block
+      GROUP BY b.doc_id
+    )
+    SELECT doc_id, n_blocks, n_dup_blocks,
+           ROUND(1.0 - CAST(n_dup_blocks AS DOUBLE) / n_blocks, 4)
+             AS retained_frac
+    FROM audit
+    """,
+)
+def llm_block_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sub-document (block-level) exact dedup audit — the C4 rule family
+    ('remove any three-sentence span occurring more than once') at
+    {BLOCK_TOKENS}-token-block granularity: per document, how many of
+    its non-overlapping token blocks also appear in ANOTHER document,
+    and the fraction that would survive block-level dedup.
+
+    Blocks derive JVM-side (transform over sequence, zero Python); the
+    shared-block set is one distinct-doc-count shuffle on the block
+    hash, then a left join back — at 100 TB the join key is the block
+    string (hashable to 16 bytes with identical semantics), and both
+    shuffles are map-side-combinable. Documents shorter than one block
+    are filtered out before the block transform (see inline note), so
+    they contribute zero blocks and drop from the audit, matching the
+    oracle's GENERATE_SERIES emptiness.
+    """
+    d = load(spark, sf_dir, "documents").withColumn(
+        "toks", F.split("text", " ")
+    )
+    # sequence(1, 0) reverses under Spark's default negative step, so a
+    # doc shorter than one block would hit slice() with a reversed index
+    # and crash under ANSI; filtering size >= BLOCK_TOKENS first drops
+    # such docs before the transform evaluates — the same emptiness the
+    # oracle's GENERATE_SERIES(1, 0) produces in DuckDB.
+    blk = d.filter(F.size("toks") >= BLOCK_TOKENS).select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                f"transform(sequence(1, size(toks) div {BLOCK_TOKENS}),"
+                f" i -> array_join(slice(toks, (i - 1) * {BLOCK_TOKENS} + 1,"
+                f" {BLOCK_TOKENS}), ' '))"
+            )
+        ).alias("block"),
+    )
+    shared = (
+        blk.groupBy("block")
+        .agg(F.count_distinct("doc_id").alias("nd"))
+        .filter(F.col("nd") > 1)
+        .select("block")
+    )
+    audit = (
+        blk.join(shared.withColumn("is_dup", F.lit(1)), "block", "left")
+        .groupBy("doc_id")
+        .agg(
+            F.count("*").alias("n_blocks"),
+            F.sum(F.coalesce(F.col("is_dup"), F.lit(0)))
+            .cast("bigint")
+            .alias("n_dup_blocks"),
+        )
+    )
+    return audit.select(
+        "doc_id",
+        "n_blocks",
+        "n_dup_blocks",
+        pround(
+            1.0 - F.col("n_dup_blocks").cast("double") / F.col("n_blocks"), 4
+        ).alias("retained_frac"),
     )

@@ -59,8 +59,8 @@ def exact_sum(int_col: Column, scale: int, nd: int = 2) -> Column:
 def exact_avg(int_col: Column, scale: int, nd: int = 2) -> Column:
     """Order-independent mean of a quantized integer column:
     SUM(DECIMAL)/COUNT — NOT AVG(), whose double sum buffer goes
-    order-dependent past 2^53 accumulated units (ADVICE r8 /
-    engine/ext_ops.py sql_scalar_subquery)."""
+    order-dependent past 2^53 accumulated units (ADVICE r8;
+    sql_scalar_subquery)."""
     return pround(
         F.sum(int_col.cast("decimal(38,0)")).cast("double")
         / F.count(int_col) / scale,
@@ -96,6 +96,11 @@ def cents_sql(expr: str, n: int = 2) -> str:
 # UTC day number, as the events-table oracles embed them verbatim.
 _CENTS_SQL = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
 _DAY_SQL = "CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)"
+
+
+def day_col() -> Column:
+    """Spark form of ``_DAY_SQL``: the event's UTC day number."""
+    return F.floor(F.unix_timestamp("ts") / 86400).cast("bigint")
 
 
 def exact_sum_sql(int_expr: str, scale: int, nd: int = 2) -> str:

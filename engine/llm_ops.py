@@ -23,6 +23,7 @@ from pyspark.sql.window import Window as W
 from engine.det import pround
 from engine.registry import query
 from engine.session import load
+from engine.splits import SPLIT_CASE_SQL, split_col
 from engine.vec import _sq_norm, cosine
 
 N_MINHASH = 16
@@ -664,16 +665,6 @@ def llm_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(passes, 1)).alias("n_pass"),
         F.count(F.when(~passes, 1)).alias("n_fail"),
     )
-
-
-# The content-stable train/eval split lives in the leaf module
-# engine.splits (shared with ext_ops without cross-registering modules);
-# re-exported here for the existing import sites.
-from engine.splits import (  # noqa: E402
-    SPLIT_CASE_SQL as SPLIT_CASE_SQL,
-    SPLIT_TRAIN_BUCKETS as SPLIT_TRAIN_BUCKETS,
-    split_col as split_col,
-)
 
 
 @query(

@@ -4,16 +4,11 @@ definition of each shared banded-candidate stage: the hot-bucket gate
 first-collision-band guard (:func:`bucket_self_join`,
 :func:`first_collision_guard`) and the candidate-doc Jaccard verify
 (:func:`jaccard_verify`). The MinHash (word-token and char-shingle),
-SimHash, embedding and decontamination paths all call them. Being a
-leaf, it lets engine.scale_ops and engine.pipeline_ops share this code
-without dragging each other's query registrations forward (the
-capped correctness sweep walks registration order; see
-engine/__init__).
+SimHash, embedding and decontamination paths all call them.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 from functools import reduce
 
@@ -39,9 +34,9 @@ N_BANDS = 4  # MinHash-LSH: 4 bands × 4 rows over the 16-perm signature
 # byte-identical docs) cannot produce a single quadratic task. The
 # fixture's largest bucket is ~1.1k rows (measured sf0.1), so the
 # default never trips locally and the candidate join degenerates to the
-# unsalted shape (g = 1 everywhere). Env-overridable for production
-# tuning; tests monkeypatch the module attribute to force the gate.
-HOT_BUCKET_ROWS = int(os.environ.get("SPARK_GRAFT_LSH_HOT_ROWS", "4096"))
+# unsalted shape (g = 1 everywhere). Tests monkeypatch the module
+# attribute to force the gate.
+HOT_BUCKET_ROWS = 4096
 
 # Census transfer bound (r15, VERDICT r14 item 3): the per-bucket hot
 # list shipped to the driver is ≤ corpus/HOT_BUCKET_ROWS entries — fine
@@ -54,7 +49,7 @@ HOT_BUCKET_ROWS = int(os.environ.get("SPARK_GRAFT_LSH_HOT_ROWS", "4096"))
 # uniform fallback keeps the same pair-space partition argument (every
 # in-bucket pair meets in exactly one sub-bucket), so the candidate set
 # is bit-identical in all three branches.
-HOT_CENSUS_CAP = int(os.environ.get("SPARK_GRAFT_LSH_CENSUS_CAP", "100000"))
+HOT_CENSUS_CAP = 100_000
 
 _TOK_SQL = """
       SELECT DISTINCT doc_id, lang, token FROM (

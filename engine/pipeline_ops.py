@@ -1,15 +1,14 @@
 """Training-data pipeline operators beyond SURVEY.md §2.A–K: character
 n-gram near-dup, dedup clustering (connected components), deterministic
-stratified sampling, chunking, sequence packing, and audio-shaped
-multimodal features.
+stratified sampling, chunking and sequence packing.
 
 These close the remaining items of the LLM-pipeline mandate
 (BASELINE.json:6): "n-gram Jaccard" dedup literally over character
 shingles (the token-set form lives in engine.llm_ops), near-dup *pairs*
 promoted to dedup *clusters* via distributed connected components (the
 step an actual corpus dedup needs before dropping rows), hash-stable
-stratified downsampling, RAG-style chunk splitting, GPT-style sequence
-packing, and framed audio energy extraction over opaque binary payloads.
+stratified downsampling, RAG-style chunk splitting and GPT-style
+sequence packing.
 
 The reference repo (alehakad/FootballDataEngeneering @ 2025-03-28)
 contains no code (SURVEY.md §0: README.md:1-2 + LICENSE only), so there
@@ -18,16 +17,10 @@ is nothing to cite for parity; these derive from the driver mandate.
 All operators are declarative DataFrame plans except the connected-
 components driver loop (bounded label-propagation rounds, each round a
 distributed join — the standard Spark pattern for iterative graph
-algorithms) and the audio feature extractor (Arrow-batched mapInPandas,
-numpy inside, per the multimodal design in engine.multimodal).
+algorithms).
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -58,7 +51,6 @@ SHINGLE_CHUNK = 2048  # char-shingle chunk stride (see char_shingles)
 CHUNK_SIZE = 32  # tokens per chunk
 CHUNK_STRIDE = 24  # tokens between chunk starts (8-token overlap)
 PACK_WINDOW = 512  # context-window length for sequence packing
-AUDIO_FRAME = 32  # bytes per audio frame
 
 
 def _shingle_array() -> Column:
@@ -624,95 +616,4 @@ def llm_seq_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_tok").alias("n_tokens"),
             pround(F.sum("n_tok") / F.lit(PACK_WINDOW), 4).alias("fill"),
         )
-    )
-
-
-@query(
-    "mm_audio_features",
-    oracle=f"""
-    WITH d2 AS (
-      SELECT ROW_NUMBER() OVER () AS rid, doc_id, text FROM documents
-    ), ch AS (
-      SELECT rid, CAST((i - 1) // {AUDIO_FRAME} AS INT) AS frame,
-             ORD(SUBSTRING(text, i, 1)) AS v
-      FROM (SELECT rid, text, UNNEST(GENERATE_SERIES(1, LENGTH(text))) AS i
-            FROM d2)
-    ), fr AS (
-      SELECT rid, frame, SUM(v * v) AS e FROM ch GROUP BY 1, 2
-    )
-    SELECT d.doc_id,
-           CAST(COUNT(*) AS INT) AS n_frames,
-           CAST(MAX(f.e) AS BIGINT) AS peak_energy,
-           CAST(SUM(f.e) AS BIGINT) AS total_energy,
-           ROUND(SQRT(CAST(SUM(f.e) AS DOUBLE) / LENGTH(d.text)), 4) AS rms
-    FROM fr f JOIN d2 d USING (rid)
-    GROUP BY f.rid, d.doc_id, LENGTH(d.text)
-    """,
-)
-def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio-shaped payload features: treat the binary payload as a PCM
-    sample stream, frame it at {AUDIO_FRAME} bytes, and emit per-doc
-    frame count, peak/total frame energy, and RMS amplitude.
-
-    The *decode* step (real codecs: wav/mp3/flac) is stubbed exactly
-    like image decode (engine.multimodal.decode_image — no codec libs in
-    this container); payloads are synthesized utf-8 bytes, so the framed
-    energy math is oracle-checkable in SQL. The Spark-side plumbing is
-    the real thing: Arrow-batched mapInPandas, numpy `reduceat` for the
-    per-frame aggregation (vectorized over the whole batch), typed flat
-    output schema. Partial trailing frames count, matching the oracle's
-    integer frame grouping.
-    """
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": pdf["doc_id"],
-                "n_frames": [],
-                "peak_energy": [],
-                "total_energy": [],
-                "rms": [],
-            }
-            for b in pdf["payload"]:
-                a = np.frombuffer(b, dtype=np.uint8).astype(np.int64)
-                sq = a * a
-                idx = np.arange(0, a.size, AUDIO_FRAME)
-                frames = np.add.reduceat(sq, idx)
-                total = int(sq.sum())
-                rms = np.floor(
-                    np.sqrt(total / a.size) * 10_000 + 0.5
-                ) / 10_000
-                out["n_frames"].append(len(frames))
-                out["peak_energy"].append(int(frames.max()))
-                out["total_energy"].append(total)
-                out["rms"].append(rms)
-            yield pd.DataFrame(
-                {
-                    "doc_id": out["doc_id"],
-                    "n_frames": pd.Series(out["n_frames"], dtype="int32"),
-                    "peak_energy": pd.Series(
-                        out["peak_energy"], dtype="int64"
-                    ),
-                    "total_energy": pd.Series(
-                        out["total_energy"], dtype="int64"
-                    ),
-                    "rms": pd.Series(out["rms"], dtype="float64"),
-                }
-            )
-
-    d = load(spark, sf_dir, "documents")
-    # NULL payloads dropped at ingest — the engine.multimodal
-    # convention (a missing blob is a fetch failure); nulls-twin sweep.
-    # Zero-byte payloads dropped too: no samples → no frames, matching
-    # the oracle's inner join over per-char rows (an empty doc produces
-    # none), and keeping the RMS divide off n=0 (zero-values sweep).
-    mm = d.filter(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-    ).select("doc_id", F.col("text").cast("binary").alias("payload"))
-    return mm.mapInPandas(
-        feats,
-        schema=(
-            "doc_id long, n_frames int, peak_energy long,"
-            " total_energy long, rms double"
-        ),
     )

@@ -1,7 +1,7 @@
 """Query/oracle registry.
 
 Every operator from SURVEY.md §2 registers here as a ``(spark, sf_dir) ->
-DataFrame`` callable plus (when SQL-expressible) a DuckDB oracle SQL string
+DataFrame`` function plus (when SQL-expressible) a DuckDB oracle SQL string
 over the same parquet tables. The driver hash-compares the two at sf=0.01
 (row count + schema + order-insensitive value hash), so SURVEY.md §7.5's
 determinism rules (UTC, in-query rounding, identical aliases, unique sort
@@ -38,16 +38,9 @@ def _pin_confs(spark: SparkSession) -> None:
             spark.conf.set(k, v)
 
 
-def query(
-    qid: str, oracle: str | Callable[[], str] | None = None
-) -> Callable[[QueryFn], QueryFn]:
-    """Register ``fn`` under ``qid``; optionally with a DuckDB oracle.
-
-    ``oracle`` may be a SQL string, or a zero-arg callable returning one
-    for oracles COMPOSED from other registered oracles (e.g.
-    llm_ann_recall) — callables are resolved by :func:`resolve_oracles`
-    after every module has imported, so composition never constrains
-    module import order.
+def query(qid: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
+    """Register ``fn`` under ``qid``; optionally with a DuckDB oracle
+    SQL string.
 
     Queries without an oracle get the driver's weaker rows-only check
     (SURVEY.md §2 'no-oracle' rows).
@@ -72,10 +65,8 @@ def query(
         if oracle is not None:
             # ROUND() in oracle strings is rewritten to the portable
             # floor-based form so both engines round identically
-            # (engine.det); callables are rewritten when resolved.
-            ORACLES[qid] = (
-                oracle if callable(oracle) else portable_round_sql(oracle)
-            )
+            # (engine.det).
+            ORACLES[qid] = portable_round_sql(oracle)
         return wrapped
 
     return deco
@@ -99,17 +90,3 @@ def promote(window_ids: list[str]) -> None:
     reordered = {q: QUERIES[q] for q in list(window_ids) + rest}
     QUERIES.clear()
     QUERIES.update(reordered)
-
-
-def resolve_oracles() -> None:
-    """Resolve deferred (callable) oracles in place.
-
-    Called once at the end of ``engine/__init__`` — by then every
-    composed-from oracle is a registered string (already
-    portable-rounded at its own registration; re-rewriting is a no-op
-    on rewritten text, so only the composing SQL's own ROUND() calls
-    change here).
-    """
-    for qid, o in list(ORACLES.items()):
-        if callable(o):
-            ORACLES[qid] = portable_round_sql(o())

@@ -19,6 +19,7 @@ from __future__ import annotations
 import shutil
 import tempfile
 import uuid
+from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,8 +27,10 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from engine.det import (
+    _DAY_SQL,
     cents_col,
     cents_sql,
+    day_col,
     exact_avg,
     exact_avg_sql,
     exact_sum,
@@ -1148,10 +1151,6 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(out, ignore_errors=True)
 
 
-# source_text_roundtrip moved to engine.text_source (registered inside
-# the round-3 correctness window; see that module's docstring).
-
-
 @query(
     "merge_upsert",
     oracle=f"""
@@ -1660,12 +1659,12 @@ def join_dpp_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "set_intersect_all",
-    oracle="""
+    oracle=f"""
     WITH i AS (
-      SELECT user_id, CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day
+      SELECT user_id, {_DAY_SQL} AS day
       FROM events WHERE event_type = 'click'
       INTERSECT ALL
-      SELECT user_id, CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)
+      SELECT user_id, {_DAY_SQL}
       FROM events WHERE event_type = 'view'
     )
     SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_common
@@ -1685,11 +1684,150 @@ def set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     follow-up per-user rollup is a second, strictly smaller shuffle.
     """
     e = load(spark, sf_dir, "events")
-    day = F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day")
+    day = day_col().alias("day")
     clicks = e.filter(F.col("event_type") == "click").select("user_id", day)
     views = e.filter(F.col("event_type") == "view").select("user_id", day)
     return (
         clicks.intersectAll(views)
         .groupBy("user_id")
         .agg(F.count("*").cast("bigint").alias("n_common"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# Runtime-filter join: semi-join reduction via Spark's injected bloom
+# filter.
+# ---------------------------------------------------------------------------
+
+_BLOOM_CONFS = {
+    # The injection heuristics compare CREATION side size (must be under
+    # the threshold — the bloom is built from it) and APPLICATION side
+    # scan size (must be over its threshold — pruning must be worth it).
+    # The fixture tables are far below the production default of 10 GB
+    # application-side, so the thresholds are forced for the witness;
+    # at real scale the defaults fire on exactly this plan shape.
+    "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "1GB",
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+    # Large-large regime: broadcast off so the join is the sort-merge
+    # a 100 TB fact-fact join would be.
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+}
+
+
+@contextmanager
+def bloom_confs(spark: SparkSession):
+    """Set the bloom-injection thresholds for the duration of a plan's
+    resolution AND execution (plans resolve at action time, so the
+    restore must not run before the collect). Shared by the registered
+    query and the plan test."""
+    old = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
+    try:
+        for k, v in _BLOOM_CONFS.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def bloom_prefilter_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The lazy plan for join_bloom_prefilter — factored so the plan
+    test can explain it (asserting ``might_contain`` on the fact scan)
+    without executing."""
+    o = load(spark, sf_dir, "orders").filter(
+        F.col("o_orderpriority") == "1-URGENT"
+    )
+    li = load(spark, sf_dir, "lineitem")
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count("*").alias("n_items"),
+            # exact cents sum (r10 quantization audit)
+            exact_sum(cents_col(F.col("l_extendedprice")), 100).alias(
+                "revenue"
+            ),
+        )
+    )
+
+
+@query(
+    "join_bloom_prefilter",
+    oracle=f"""
+    SELECT o.o_orderpriority,
+           COUNT(*) AS n_items,
+           {exact_sum_sql(cents_sql("l.l_extendedprice"), 100)} AS revenue
+    FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+    WHERE o.o_orderpriority = '1-URGENT'
+    GROUP BY o.o_orderpriority
+    """,
+)
+def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Selective fact-fact join accelerated by a runtime bloom filter:
+    Catalyst builds a bloom over the filtered orders keys and injects
+    ``might_contain`` into the lineitem scan, pruning ~80% of the fact
+    rows BEFORE the join shuffle (semi-join reduction).
+
+    This is the scale mechanism for joins where the selective side is
+    too big to broadcast but still selective: the only extra cost is a
+    ~1 MB bloom aggregate, and the shuffle shrinks by the filter's
+    selectivity. Result values are identical to the plain join (the
+    bloom only discards rows the join would drop) — the oracle IS the
+    plain join. Spark resolves the physical plan at action time, so the
+    thresholds stay set while the result materializes and are restored
+    after; the returned frame is the collected result re-localized
+    (rows: one per priority group).
+    """
+    with bloom_confs(spark):
+        res = bloom_prefilter_frame(spark, sf_dir)
+        return spark.createDataFrame(res.collect(), schema=res.schema)
+
+
+@query(
+    "join_null_safe",
+    oracle="""
+    WITH l AS (
+      SELECT o_orderkey, NULLIF(o_orderstatus, 'P') AS status
+      FROM orders
+    ), r AS (
+      SELECT DISTINCT NULLIF(o_orderstatus, 'P') AS status FROM orders
+    )
+    SELECT COALESCE(l.status, '<null>') AS status_key,
+           COUNT(*) AS n_orders,
+           CAST(COUNT(r.status) AS BIGINT) AS n_plain_matched
+    FROM l JOIN r ON l.status IS NOT DISTINCT FROM r.status
+    GROUP BY 1
+    """,
+)
+def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Null-safe equality join (`<=>` / IS NOT DISTINCT FROM): NULL
+    keys MATCH each other, unlike plain `=` which drops them — the
+    semantics gap that silently loses rows when join keys are nullable.
+    Fixtures carry no NULLs (FIXTURES.md invariant 3), so the nullable
+    key is manufactured with NULLIF; the n_plain_matched column counts
+    what a plain join would have kept, making the dropped-rows delta
+    visible in the result itself.
+
+    Catalyst hashes `<=>` like any equi-key (null-safe comparisons are
+    valid hash keys), so this stays a hash join — no nested-loop
+    fallback at scale.
+    """
+    o = load(spark, sf_dir, "orders")
+    left = o.select(
+        "o_orderkey", F.nullif("o_orderstatus", F.lit("P")).alias("status")
+    )
+    right = (
+        o.select(F.nullif("o_orderstatus", F.lit("P")).alias("r_status"))
+        .distinct()
+    )
+    return (
+        left.join(right, left["status"].eqNullSafe(right["r_status"]))
+        .groupBy(F.coalesce("status", F.lit("<null>")).alias("status_key"))
+        .agg(
+            F.count("*").alias("n_orders"),
+            F.count("r_status").cast("bigint").alias("n_plain_matched"),
+        )
     )

@@ -1,7 +1,5 @@
-"""Roundtrip-verification helpers — a leaf module (registers nothing),
-so source modules in different registration slots can share it without
-dragging each other's query registrations forward (the driver's capped
-correctness sweep walks registration order; see engine/__init__).
+"""Roundtrip-verification helpers for the write→read source and sink
+queries, and the scratch directory they write to. Registers no query.
 """
 
 from __future__ import annotations

@@ -1,12 +1,7 @@
-"""Content-stable train/eval split — the ONE definition, in a leaf module.
+"""Content-stable train/eval split — the ONE definition.
 
 Shared by ``llm_train_test_split`` (engine.llm_ops), ``llm_decontaminate``
-and ``llm_dedup_pipeline`` (engine.ext_ops). Lives here, below every
-operator module, so ext_ops can use it WITHOUT importing llm_ops at module
-scope — importing an operator module registers its queries, and the
-driver's capped correctness sweep walks registration order, so module
-imports must not drag sibling registrations ahead of their place in
-``engine/__init__``.
+and ``llm_dedup_pipeline`` (engine.curation). Registers no query.
 
 Rule: first md5 hex digit of doc_id < SPLIT_TRAIN_BUCKETS (of 16) → train
 (~81/19). The SQL (DuckDB oracle) and Column (Spark) forms must change

@@ -2,6 +2,10 @@
 ``sink_`` and ``maint_`` queries): SQL syntax forms, DataFrame API
 methods, data sources and sinks, and table maintenance.
 
+SQL-surface queries run the same SQL text on both engines (``spark.sql``
+over temp views, DuckDB in the oracle), with only the portable-round
+rewrite applied to each side.
+
 Writes go to per-call temporary directories or uuid-named scratch
 tables, and are read back and verified inside the query.
 """
@@ -17,8 +21,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from engine.det import _CENTS_SQL, _DAY_SQL, cents_col
+from engine.det import (
+    _CENTS_SQL,
+    _DAY_SQL,
+    cents_col,
+    day_col,
+    portable_round_sql,
+    pround,
+)
 from engine.registry import query
+from engine.roundtrip import SCRATCH, roundtrip_verified, roundtrip_verified_big
 from engine.session import load
 
 
@@ -705,10 +717,10 @@ def sql_named_parameters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     load(spark, sf_dir, "events").createOrReplaceTempView("np_events")
     return spark.sql(
-        """
+        f"""
         SELECT event_type,
                CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+               CAST(SUM({_CENTS_SQL}) AS BIGINT)
                  AS cents
         FROM np_events
         WHERE event_type = :event_type AND value >= :min_value
@@ -850,10 +862,10 @@ def sql_distribute_sort_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     load(spark, sf_dir, "events").createOrReplaceTempView("ds_events")
     return spark.sql(
-        """
+        f"""
         SELECT user_id,
                CAST(FLOOR(unix_timestamp(ts) / 86400) AS BIGINT) AS day,
-               CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+               CAST(SUM({_CENTS_SQL}) AS BIGINT)
                  AS cents
         FROM ds_events
         GROUP BY 1, 2
@@ -1270,7 +1282,7 @@ def _morton_spark(u: str, d: str) -> str:
     oracle=f"""
     WITH c AS (
       SELECT user_id,
-             CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) % 1024 AS day_k,
+             {_DAY_SQL} % 1024 AS day_k,
              user_id % 1024 AS user_k,
              event_id
       FROM events
@@ -1314,7 +1326,7 @@ def sink_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = e.select(
         (F.col("user_id") % 1024).alias("user_k"),
         (
-            F.floor(F.unix_timestamp("ts") / 86400).cast("bigint") % 1024
+            day_col() % 1024
         ).alias("day_k"),
         "event_id",
     )
@@ -1404,3 +1416,221 @@ def sql_null_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM r WHERE rk_nl <= 20 OR rk_nf <= 20
         """
     )
+
+
+# ---------------------------------------------------------------------------
+# sql_exists_subquery / sql_scalar_subquery — correlated subqueries
+# ---------------------------------------------------------------------------
+
+# The mean folds exact integer cents (r10 quantization audit):
+# SUM(BIGINT)/COUNT, not AVG — same rationale as _SCALAR_SQL below.
+# BIGINT headroom: ≤1e6 cents × ~1.5e9 customers ≈ 1.5e15 « 2^63.
+_EXISTS_SQL = """
+    SELECT c.c_mktsegment,
+           COUNT(*) AS n_customers,
+           ROUND(SUM(CAST(FLOOR(c.c_acctbal * 100 + 0.5) AS BIGINT))
+                 / COUNT(c.c_acctbal) / 100.0, 2) AS avg_acctbal
+    FROM customer c
+    WHERE EXISTS (SELECT 1 FROM orders o
+                  WHERE o.o_custkey = c.c_custkey
+                    AND o.o_orderpriority = '1-URGENT')
+      AND NOT EXISTS (SELECT 1 FROM orders o2
+                      WHERE o2.o_custkey = c.c_custkey
+                        AND o2.o_orderstatus = 'F')
+    GROUP BY c.c_mktsegment
+"""
+
+
+@query("sql_exists_subquery", oracle=_EXISTS_SQL)
+def sql_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Correlated EXISTS / NOT EXISTS via the SQL entry point: segments
+    of customers with ≥1 urgent order and no completed ('F') order.
+
+    The same SQL string runs on both engines. Catalyst decorrelates the
+    two subqueries into a left-semi and a left-anti join on c_custkey —
+    no per-row re-execution — so at scale this is two hash joins against
+    a pre-filtered orders projection, each pushdown-pruned to the two
+    columns the subquery touches.
+    """
+    for t in ("customer", "orders"):
+        load(spark, sf_dir, t).createOrReplaceTempView(t)
+    return spark.sql(portable_round_sql(_EXISTS_SQL))
+
+
+# The correlated aggregate averages EXACT INTEGER CENTS, not doubles:
+# AVG(double) folds the group in arbitrary order and the accumulated
+# half-ulp drift flips the 2-decimal rounding with input row order
+# (caught by tests/test_row_order.py at sf0.01 — cust_avg flapped
+# 148099.75↔.76 between shuffled and canonical fixtures). The mean is
+# therefore SUM(BIGINT cents) / COUNT — the sum is exact on both
+# engines (Spark LONG, DuckDB HUGEINT) at ANY accumulation order, with
+# the IEEE divisions deferred to the very end. NOT AVG(BIGINT): Spark's
+# Average keeps a DOUBLE sum buffer for non-decimal inputs, so past
+# 2^53 accumulated cents (~1.8e8 orders on one hot customer at 100 TB
+# skew) the quantized AVG would go order-dependent again (ADVICE r8).
+# COUNT(o2.o_totalprice) matches AVG's NULL-skipping and is >= 1 for
+# every surviving outer row (the outer order itself is in the group).
+_SCALAR_SQL = """
+    SELECT o.o_orderkey, o.o_custkey,
+           ROUND(o.o_totalprice, 2) AS o_totalprice,
+           ROUND((SELECT SUM(CAST(FLOOR(o2.o_totalprice * 100 + 0.5)
+                                  AS BIGINT))
+                         / COUNT(o2.o_totalprice) / 100.0 FROM orders o2
+                  WHERE o2.o_custkey = o.o_custkey), 2) AS cust_avg
+    FROM orders o
+    WHERE o.o_totalprice >
+          1.5 * (SELECT SUM(CAST(FLOOR(o2.o_totalprice * 100 + 0.5)
+                                 AS BIGINT))
+                        / COUNT(o2.o_totalprice) / 100.0 FROM orders o2
+                 WHERE o2.o_custkey = o.o_custkey)
+"""
+
+
+@query("sql_scalar_subquery", oracle=_SCALAR_SQL)
+def sql_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Correlated scalar subquery via the SQL entry point: orders priced
+    >1.5× their customer's average order value.
+
+    Catalyst rewrites the correlated aggregate into one per-customer
+    aggregation joined back to orders (the subquery body is evaluated
+    once, not per outer row), so the plan is aggregate + self-join on
+    o_custkey — a single reusable shuffle partitioning at scale.
+    """
+    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    return spark.sql(portable_round_sql(_SCALAR_SQL))
+
+
+def _avro_datasource_available(spark: SparkSession) -> bool:
+    """Explicit probe for the avro DataSource registration.
+
+    spark-avro has been an EXTERNAL module since Spark 2.4 — clusters
+    add it via ``--packages org.apache.spark:spark-avro``. The probe
+    asks Spark's own provider lookup (the exact resolution ``.format(
+    "avro")`` uses, ServiceLoader + short-name mapping) whether "avro"
+    resolves, so it cannot drift from what a write would do, and it
+    never depends on an error-message substring (ADVICE r4: message
+    text is brittle across Spark versions).
+    """
+    try:
+        jvm = spark._jvm
+        jspark = spark._jsparkSession
+        jvm.org.apache.spark.sql.execution.datasources.DataSource.lookupDataSource(
+            "avro", jspark.sessionState().conf()
+        )
+        return True
+    except Exception:
+        return False
+
+
+def _write_roundtrip_format(df: DataFrame, out: str) -> str:
+    """Write ``df`` as Avro, falling back to ORC when the datasource is
+    absent; returns the format actually used.
+
+    When the probe reports avro missing (this container: no external
+    spark-avro module), the SAME writer contract runs against ORC and
+    the substitution is flagged loudly in the returned ``format``
+    column — i.e. in that environment the avro datasource path itself
+    is an UNTESTED surface (documented in SURVEY §2.L), not a silently
+    claimed completion; on any cluster with spark-avro on the classpath
+    this exercises real avro I/O with no code change.
+    """
+    fmt = "avro" if _avro_datasource_available(df.sparkSession) else "orc"
+    df.write.mode("overwrite").format(fmt).save(out)
+    return fmt
+
+
+@query("source_avro_roundtrip")
+def source_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Avro source/sink roundtrip, completing the I/O surface next to
+    CSV/JSON/ORC/text: write a per-nation aggregate, read it back, and
+    return the verified read-back (rows-only driver check, like the
+    other roundtrips — the format under test is not SQL-expressible to
+    DuckDB).
+
+    Avro maps timestamps to long micros and doubles/strings natively,
+    so the aggregate covers those types. Where the external spark-avro
+    module is absent (this container), the SAME writer contract runs
+    against ORC and the gate is documented loudly in the returned
+    ``format`` column — the query never silently skips verification.
+    """
+    agg = (
+        load(spark, sf_dir, "customer")
+        .groupBy("c_nationkey")
+        .agg(
+            F.count("*").alias("n_customers"),
+            pround(F.sum("c_acctbal"), 2).alias("sum_acctbal"),
+        )
+    )
+    out = SCRATCH / f"avro_{uuid.uuid4().hex}"
+    fmt = _write_roundtrip_format(agg, str(out))
+    back = spark.read.format(fmt).load(str(out)).select(
+        "c_nationkey", "n_customers", "sum_acctbal"
+    )
+    return roundtrip_verified(agg, back).withColumn("format", F.lit(fmt))
+
+
+@query(
+    "source_text_roundtrip",
+    oracle="""
+    SELECT SUBSTRING(text, 1, 1) AS first_char,
+           CAST(COUNT(*) AS BIGINT) AS n_lines,
+           CAST(SUM(LENGTH(text)) AS BIGINT) AS n_chars
+    FROM documents
+    WHERE text IS NOT NULL
+      AND STRPOS(text, CHR(10)) = 0
+      AND STRPOS(text, CHR(13)) = 0
+    GROUP BY 1
+    """,
+)
+def source_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Line-oriented text write→read roundtrip (SURVEY.md §2.A family).
+
+    Oracled since r6 (was rows-only): the per-first-char audit of the
+    read-back lines must hash-match DuckDB's same aggregate on the
+    source rows under the identical representability filter — both
+    engines count Unicode code points (Spark ``length`` ≡ DuckDB
+    ``LENGTH``), so the compare verifies the UTF-8 write→read chain.
+
+    ``spark.read.text`` is the raw-corpus ingestion path an LLM pipeline
+    starts from (one line = one record, schema = a single ``value``
+    string). Documents' text is single-line in the fixtures, so the
+    write→read is lossless; the content assertion compares the full
+    line multisets, and the returned audit aggregate (per-first-char
+    line counts + total chars) keeps the driver-side result small and
+    stable.
+    """
+    out = SCRATCH / f"text_{uuid.uuid4().hex}"
+    # The line-oriented text format CANNOT represent NULL (serializes
+    # as an empty line, reads back as "") or EMBEDDED NEWLINES (one
+    # line = one record by definition: a 2-line text reads back as two
+    # rows) — filter both before the write, the contract every text
+    # exporter enforces; the roundtrip assert then guards exactly the
+    # representable rows. Both cases found by the nulls/adversarial
+    # twin sweeps, where the assert correctly reported lost rows.
+    lines = (
+        load(spark, sf_dir, "documents")
+        .filter(
+            F.col("text").isNotNull()
+            & ~F.col("text").contains("\n")
+            & ~F.col("text").contains("\r")
+        )
+        .select(F.col("text").alias("value"))
+    )
+    try:
+        lines.write.mode("overwrite").text(str(out))
+        back = spark.read.text(str(out))
+        audit = (
+            roundtrip_verified_big(lines, back)
+            .groupBy(F.substring("value", 1, 1).alias("first_char"))
+            .agg(
+                F.count("*").alias("n_lines"),
+                F.sum(F.length("value")).alias("n_chars"),
+            )
+            .orderBy("first_char")
+        )
+        # Force before the scratch dir is removed: the plan reads `out`.
+        return audit.sparkSession.createDataFrame(
+            audit.collect(), schema=audit.schema
+        )
+    finally:
+        shutil.rmtree(out, ignore_errors=True)

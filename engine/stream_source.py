@@ -1,8 +1,5 @@
-"""The events table as a Structured Streaming source — a LEAF module
-(registers nothing), so modules in different registration slots
-(engine.streaming, engine.streaming_ext) can share the stream source
-without dragging each other's query registrations forward (the driver's
-capped correctness sweep walks registration order; see engine/__init__).
+"""The events table as a Structured Streaming source (file replay),
+with the batch table's column surface. Registers no query.
 """
 
 from __future__ import annotations

@@ -19,6 +19,7 @@ from engine.det import (
     _DAY_SQL,
     cents_col,
     cents_sql,
+    day_col,
     exact_sum,
     exact_sum_sql,
     pround,
@@ -127,10 +128,10 @@ def events_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_ohlc_bars",
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT user_id,
-             CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day,
+             {_DAY_SQL} AS day,
              ts, event_id, value
       FROM events WHERE event_type = 'purchase'
     ), w AS (
@@ -167,7 +168,7 @@ def ts_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type") == "purchase"
     ).select(
         "user_id",
-        F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day"),
+        day_col().alias("day"),
         "ts",
         "event_id",
         "value",
@@ -692,7 +693,7 @@ EWMA_LAGS = 8  # trailing window; α = 1/2 ⇒ weights 2^-k are EXACT doubles
     oracle=f"""
     WITH d AS (
       SELECT user_id,
-             CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day,
+             {_DAY_SQL} AS day,
              (MAX({{'ts': ts, 'id': event_id, 'c': {_CENTS_SQL}}})).c
                AS close_c
       FROM events
@@ -736,7 +737,7 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily spine between first and last active day, with missing days
     filled by the straight line between the surrounding observed daily
     closes — the regression-grade companion of ``ts_gap_fill``'s
-    forward-fill (engine/training_ops.py).
+    forward-fill.
 
     Determinism: closes are exact integer cents; the interpolation
     ``pv + (nv-pv)·(day-pd)/(nd-pd)`` is the same literal IEEE
@@ -770,7 +771,7 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         e.select(
             "user_id",
-            F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day"),
+            day_col().alias("day"),
             cents_col(F.col("value")).alias("c"),
             "ts",
             "event_id",
@@ -1028,7 +1029,7 @@ _EWMA_NUM, _EWMA_DEN = _ewma_terms_sql()
     oracle=f"""
     WITH d AS (
       SELECT user_id,
-             CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day,
+             {_DAY_SQL} AS day,
              (MAX({{'ts': ts, 'id': event_id, 'c': {_CENTS_SQL}}})).c
                AS close_c
       FROM events GROUP BY 1, 2
@@ -1060,7 +1061,7 @@ def ts_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         e.select(
             "user_id",
-            F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day"),
+            day_col().alias("day"),
             cents_col(F.col("value")).alias("c"),
             "ts",
             "event_id",
@@ -1439,8 +1440,8 @@ def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load(spark, sf_dir, "events")
     d = (
-        e.select("event_type", F.floor(F.unix_timestamp("ts") / 86400)
-                 .cast("bigint").alias("day"), cents_col(F.col("value")).alias("c"))
+        e.select("event_type", day_col().alias("day"),
+                 cents_col(F.col("value")).alias("c"))
         .groupBy("event_type", "day")
         .agg(F.sum("c").alias("v"))
     )
@@ -1544,8 +1545,8 @@ def ts_cusum_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load(spark, sf_dir, "events")
     d = (
-        e.select("event_type", F.floor(F.unix_timestamp("ts") / 86400)
-                 .cast("bigint").alias("day"), cents_col(F.col("value")).alias("c"))
+        e.select("event_type", day_col().alias("day"),
+                 cents_col(F.col("value")).alias("c"))
         .groupBy("event_type", "day")
         .agg(F.sum("c").alias("v"))
     )
@@ -1628,7 +1629,7 @@ def events_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     u = e.select(
         "user_id",
-        F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day"),
+        day_col().alias("day"),
     ).groupBy("user_id").agg(
         F.count_distinct("day").cast("bigint").alias("active_days")
     )
@@ -1699,7 +1700,7 @@ def ts_peak_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         e.select(
             "event_type",
-            F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day"),
+            day_col().alias("day"),
             cents_col(F.col("value")).alias("c"),
         )
         .groupBy("event_type", "day")
@@ -1771,7 +1772,7 @@ def events_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     ud = (
         e.select(
             "user_id",
-            F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day"),
+            day_col().alias("day"),
         )
         .distinct()
     )
@@ -1840,7 +1841,7 @@ def events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     ud = (
         e.select(
             "user_id",
-            F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day"),
+            day_col().alias("day"),
         )
         .distinct()
     )
@@ -1935,7 +1936,7 @@ def events_wilson_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     d = (
         e.select(
-            F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day"),
+            day_col().alias("day"),
             (F.col("event_type") == "error").cast("int").alias("is_err"),
         )
         .groupBy("day")
@@ -2004,11 +2005,11 @@ def ts_naive_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_type partitioning.
     """
     e = load(spark, sf_dir, "events")
-    c = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
+    c = cents_col(F.col("value"))
     d = (
         e.select(
             "event_type",
-            F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day"),
+            day_col().alias("day"),
             c.alias("c"),
         )
         .groupBy("event_type", "day")
@@ -2085,7 +2086,7 @@ def events_active_streak_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     ud = (
         e.select(
             "user_id",
-            F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day"),
+            day_col().alias("day"),
         )
         .distinct()
         .repartition("user_id")
@@ -2182,11 +2183,11 @@ def ts_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup, one window pass per type.
     """
     e = load(spark, sf_dir, "events")
-    c = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
+    c = cents_col(F.col("value"))
     d = (
         e.select(
             "event_type",
-            F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day"),
+            day_col().alias("day"),
             c.alias("c"),
         )
         .groupBy("event_type", "day")
@@ -2294,4 +2295,267 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
             pround(F.col("value"), 4).alias("value"),
             pround(z, 4).alias("zscore"),
         )
+    )
+
+
+@query(
+    "events_funnel",
+    oracle="""
+    WITH c AS (
+      SELECT user_id, MIN(ts) AS first_click
+      FROM events WHERE event_type = 'click' GROUP BY user_id
+    ), p AS (
+      SELECT c.user_id, MIN(e.ts) AS first_purchase
+      FROM c JOIN events e
+        ON e.user_id = c.user_id AND e.event_type = 'purchase'
+       AND e.ts >= c.first_click
+      GROUP BY c.user_id
+    )
+    SELECT c.user_id, c.first_click, p.first_purchase,
+           CAST(CASE WHEN p.first_purchase IS NULL THEN 0 ELSE 1 END AS INT)
+             AS converted,
+           CAST(CASE WHEN p.first_purchase IS NULL THEN NULL
+                     ELSE FLOOR(epoch(p.first_purchase)
+                                - epoch(c.first_click))
+                END AS BIGINT) AS conv_secs
+    FROM c LEFT JOIN p ON c.user_id = p.user_id
+    """,
+)
+def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Conversion funnel: per user, first click → first purchase at or
+    after it, with conversion flag and seconds-to-convert.
+
+    Two aggregates + a left join — the canonical event-funnel shape. The
+    purchase side is *pre-filtered by event type before the join* so the
+    join input is a fraction of the event stream; both aggregates
+    shuffle on user_id, so AQE plans the second join shuffle-free when
+    partitioning is reusable. Seconds are integral (event timestamps are
+    second-granularity), so the epoch difference hashes exactly.
+    """
+    e = load(spark, sf_dir, "events")
+    clicks = (
+        e.filter(F.col("event_type") == "click")
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("first_click"))
+    )
+    purchases = (
+        e.filter(F.col("event_type") == "purchase")
+        .join(clicks, "user_id")
+        .filter(F.col("ts") >= F.col("first_click"))
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("first_purchase"))
+    )
+    return (
+        clicks.join(purchases, "user_id", "left")
+        .select(
+            "user_id",
+            "first_click",
+            "first_purchase",
+            F.when(F.col("first_purchase").isNull(), 0)
+            .otherwise(1)
+            .cast("int")
+            .alias("converted"),
+            # fractional-epoch difference (µs-precision timestamps) then
+            # floor — unix_timestamp truncates each side *before* the
+            # subtraction and disagrees with the oracle by ±1 s
+            F.floor(
+                F.col("first_purchase").cast("double")
+                - F.col("first_click").cast("double")
+            )
+            .cast("bigint")
+            .alias("conv_secs"),
+        )
+    )
+
+
+@query(
+    "events_retention",
+    oracle="""
+    WITH w AS (
+      SELECT user_id,
+             CAST(FLOOR(FLOOR(epoch(ts) / 86400) / 7) AS BIGINT) AS week
+      FROM events
+    ), cohort AS (
+      SELECT user_id, MIN(week) AS cohort_week FROM w GROUP BY user_id
+    )
+    SELECT c.cohort_week,
+           CAST(w.week - c.cohort_week AS BIGINT) AS week_offset,
+           CAST(COUNT(DISTINCT w.user_id) AS BIGINT) AS n_users
+    FROM w JOIN cohort c ON w.user_id = c.user_id
+    GROUP BY 1, 2
+    """,
+)
+def events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Weekly cohort retention: users bucketed by first-activity week,
+    counted in each subsequent week they return — the cohort matrix
+    behind every retention curve.
+
+    Week ids are pure integer epoch arithmetic (floor(epoch/86400/7)),
+    identical on both engines — no date_trunc semantics to disagree on.
+    Both aggregates and the join hash on user_id, so the whole query
+    reuses ONE partitioning; the final distinct-count shuffles on the
+    (small) cohort × offset grid.
+    """
+    e = load(spark, sf_dir, "events")
+    w = e.select(
+        "user_id",
+        F.floor(F.floor(F.col("ts").cast("double") / 86400) / 7)
+        .cast("bigint")
+        .alias("week"),
+    )
+    cohort = w.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
+    return (
+        w.join(cohort, "user_id")
+        .groupBy(
+            "cohort_week",
+            (F.col("week") - F.col("cohort_week"))
+            .cast("bigint")
+            .alias("week_offset"),
+        )
+        .agg(F.count_distinct("user_id").alias("n_users"))
+    )
+
+
+@query(
+    "ts_gap_fill",
+    oracle=f"""
+    WITH d AS (
+      SELECT user_id,
+             {_DAY_SQL} AS day,
+             (MAX({{'ts': ts, 'id': event_id, 'v': value}})).v
+               AS close_value,
+             COUNT(*) AS n_events
+      FROM events
+      WHERE ts >= TIMESTAMP '1990-01-01 00:00:00'
+        AND ts <  TIMESTAMP '2100-01-01 00:00:00'
+      GROUP BY 1, 2
+    ), span AS (
+      SELECT user_id, MIN(day) AS d0, MAX(day) AS d1 FROM d GROUP BY user_id
+    ), spine AS (
+      SELECT s.user_id, UNNEST(GENERATE_SERIES(s.d0, s.d1)) AS day
+      FROM span s
+    )
+    SELECT sp.user_id, sp.day,
+           CAST(CASE WHEN d.user_id IS NULL THEN 0 ELSE 1 END AS INT)
+             AS is_observed,
+           CAST(COALESCE(d.n_events, 0) AS BIGINT) AS n_events,
+           ROUND(LAST_VALUE(d.close_value IGNORE NULLS) OVER (
+             PARTITION BY sp.user_id ORDER BY sp.day
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4)
+             AS filled_value
+    FROM spine sp LEFT JOIN d
+      ON sp.user_id = d.user_id AND sp.day = d.day
+    """,
+)
+def ts_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Time-series regularization: per user, a dense daily spine between
+    first and last activity, left-joined to the observed per-day close
+    value (max_by ts) and forward-filled through the gaps — the
+    resample + LOCF shape every feature pipeline needs before training
+    on event streams.
+
+    The spine derives from a per-user min/max aggregate and
+    ``sequence()`` explode — spine size is span-bounded, never a
+    cartesian with a global calendar. All three steps (day aggregate,
+    spine join, fill window) hash/partition on user_id, so one shuffle
+    partitioning serves the whole plan; the fill is
+    ``last(ignorenulls)`` over a user-partitioned window.
+    """
+    # Epoch-domain guard: the spine spans [min(day), max(day)] per
+    # user, so ONE poisoned sentinel timestamp (epoch 0, year 9999)
+    # inflates it to ~3M days/user — a fan-out bomb at any scale. The
+    # 1990..2100 ingest window bounds the spine under arbitrary input
+    # (sentinel-timestamps exact sweep); rows outside it are clock
+    # garbage by definition, quarantined on both engines.
+    e = load(spark, sf_dir, "events").filter(
+        (F.col("ts") >= F.lit("1990-01-01 00:00:00").cast("timestamp"))
+        & (F.col("ts") < F.lit("2100-01-01 00:00:00").cast("timestamp"))
+    )
+    d = (
+        e.groupBy(
+            "user_id",
+            F.floor(F.col("ts").cast("double") / 86400)
+            .cast("bigint")
+            .alias("day"),
+        )
+        # Deterministic close under tied timestamps: struct max over
+        # the unique (ts, event_id) prefix (see ts_ewma_smooth).
+        .agg(
+            F.max(F.struct("ts", "event_id", "value"))
+            .getField("value")
+            .alias("close_value"),
+            F.count("*").alias("n_events"),
+        )
+    )
+    spine = (
+        d.groupBy("user_id")
+        .agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
+        .select(
+            "user_id",
+            F.explode(F.sequence("d0", "d1")).alias("day"),
+        )
+    )
+    joined = spine.join(d, ["user_id", "day"], "left")
+    w = (
+        W.partitionBy("user_id")
+        .orderBy("day")
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    return joined.select(
+        "user_id",
+        "day",
+        F.col("close_value").isNotNull().cast("int").alias("is_observed"),
+        F.coalesce("n_events", F.lit(0)).cast("bigint").alias("n_events"),
+        pround(F.last("close_value", ignorenulls=True).over(w), 4).alias(
+            "filled_value"
+        ),
+    )
+
+
+@query(
+    "events_markov_transitions",
+    oracle="""
+    WITH seq AS (
+      SELECT user_id, event_type AS from_type,
+             LEAD(event_type) OVER (PARTITION BY user_id
+                                    ORDER BY ts, event_id) AS to_type
+      FROM events
+    )
+    SELECT from_type, to_type,
+           COUNT(*) AS n_transitions,
+           ROUND(CAST(COUNT(*) AS DOUBLE)
+                 / SUM(COUNT(*)) OVER (PARTITION BY from_type), 4)
+             AS p_transition
+    FROM seq WHERE to_type IS NOT NULL
+    GROUP BY 1, 2
+    """,
+)
+def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """First-order Markov transition matrix over the event stream: for
+    each (from → to) event-type pair, the transition count and the
+    row-normalized probability — the session-flow model behind "what do
+    users do after X" product questions.
+
+    One lead() window per user (unique (ts, event_id) order), then a
+    grouped count; the row normalization is a window over the
+    aggregated 5×5 transition grid, bounded at any scale. The stream
+    shuffles once on user_id; the grid aggregate is map-side combined.
+    """
+    e = load(spark, sf_dir, "events")
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = e.select(
+        F.col("event_type").alias("from_type"),
+        F.lead("event_type").over(w).alias("to_type"),
+    ).filter(F.col("to_type").isNotNull())
+    counts = seq.groupBy("from_type", "to_type").agg(
+        F.count("*").alias("n_transitions")
+    )
+    total = F.sum("n_transitions").over(W.partitionBy("from_type"))
+    return counts.select(
+        "from_type",
+        "to_type",
+        "n_transitions",
+        pround(F.col("n_transitions").cast("double") / total, 4).alias(
+            "p_transition"
+        ),
     )

@@ -356,3 +356,150 @@ def udf_apply_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.groupBy("user_id").applyInArrow(
         stats, schema="user_id long, n long, cents long, cents_range long"
     )
+
+
+@query(
+    "udf_map_in_arrow",
+    oracle="""
+    WITH e AS (
+      SELECT vec_id, UNNEST(embedding) AS x FROM embeddings
+    )
+    SELECT vec_id,
+           CAST(COUNT(*) AS INT) AS dim,
+           ROUND(SQRT(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), 4)
+             AS l2_norm,
+           ROUND(MAX(ABS(CAST(x AS DOUBLE))), 4) AS max_abs
+    FROM e GROUP BY vec_id
+    """,
+)
+def udf_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``mapInArrow`` API surface (SURVEY.md §2.K family): per-batch
+    zero-copy Arrow RecordBatch processing — one step lower-level than
+    the pandas UDFs, no pandas conversion cost, the right entry point
+    for Arrow-native libraries (polars, vector codecs, tokenizers).
+
+    Computes per-embedding dim / L2 norm / max-|x| in numpy f64 from
+    the Arrow FixedSizeList buffer. Map-only (no shuffle); batch size
+    is governed by spark.sql.execution.arrow.maxRecordsPerBatch, so
+    executor memory stays bounded at any corpus size.
+    """
+    import numpy as np
+    import pyarrow as pa
+
+    def batch_norms(it):
+        for rb in it:
+            tbl = pa.table(rb)
+            ids = tbl.column("vec_id").to_numpy(zero_copy_only=False)
+            flat = np.stack(tbl.column("embedding").to_pylist()).astype(
+                np.float64
+            )
+            l2 = np.sqrt((flat * flat).sum(axis=1))
+            mx = np.abs(flat).max(axis=1)
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "vec_id": pa.array(ids, type=pa.int64()),
+                    "dim": pa.array(
+                        np.full(len(ids), flat.shape[1], dtype=np.int32)
+                    ),
+                    "l2_norm": pa.array(
+                        np.floor(l2 * 10_000 + 0.5) / 10_000
+                    ),
+                    "max_abs": pa.array(
+                        np.floor(mx * 10_000 + 0.5) / 10_000
+                    ),
+                }
+            )
+
+    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return emb.mapInArrow(
+        batch_norms, schema="vec_id long, dim int, l2_norm double, max_abs double"
+    )
+
+
+@query(
+    "udf_cogroup_pandas",
+    oracle="""
+    WITH d AS (
+      SELECT doc_id, lang,
+             CAST(LEN(STRING_SPLIT(text, ' ')) AS INT) AS n_tokens
+      FROM documents
+    ), e AS (
+      SELECT vec_id,
+             LIST_SUM(LIST_TRANSFORM(embedding,
+                                     x -> CAST(x AS DOUBLE)
+                                          * CAST(x AS DOUBLE))) AS sq
+      FROM embeddings
+    )
+    SELECT d.lang,
+           CAST(COUNT(*) AS BIGINT) AS n_pairs,
+           CAST(SUM(d.n_tokens) AS BIGINT) AS total_tokens,
+           ROUND(AVG(SQRT(e.sq)), 4) AS avg_l2_norm
+    FROM d JOIN e ON d.doc_id = e.vec_id
+    GROUP BY d.lang
+    """,
+)
+def udf_cogroup_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The cogrouped-map API surface (SURVEY.md §2.K family):
+    ``groupBy().cogroup().applyInPandas`` aligns two tables' groups —
+    here documents and their embeddings bucketed by a shard of the join
+    key — and hands each aligned pair of pandas frames to one Python
+    function, which joins them in-memory and emits per-language stats.
+
+    This is the API for custom two-sided group logic that a SQL join
+    can't express (asymmetric resampling, per-group model scoring);
+    the function body here is a plain merge + aggregate precisely so a
+    SQL oracle can verify the plumbing end-to-end. Both sides shuffle
+    once on the same shard key — co-partitioned, no broadcast.
+    """
+    import numpy as np
+    import pandas as pd
+
+    d = (
+        load(spark, sf_dir, "documents")
+        .withColumn("shard", (F.col("doc_id") % 16).cast("int"))
+        .select(
+            "shard",
+            "doc_id",
+            "lang",
+            F.size(F.split("text", " ")).alias("n_tokens"),
+        )
+    )
+    e = (
+        load(spark, sf_dir, "embeddings")
+        .withColumn("shard", (F.col("vec_id") % 16).cast("int"))
+        .select("shard", "vec_id", "embedding")
+    )
+
+    def join_stats(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        if left.empty or right.empty:
+            return pd.DataFrame(
+                columns=["lang", "n_pairs", "total_tokens", "sum_norm"]
+            )
+        mat = np.stack(right["embedding"].to_numpy()).astype(np.float64)
+        right = right.assign(l2=np.sqrt((mat * mat).sum(axis=1)))
+        m = left.merge(
+            right[["vec_id", "l2"]], left_on="doc_id", right_on="vec_id"
+        )
+        g = m.groupby("lang", as_index=False).agg(
+            n_pairs=("doc_id", "size"),
+            total_tokens=("n_tokens", "sum"),
+            sum_norm=("l2", "sum"),
+        )
+        return g[["lang", "n_pairs", "total_tokens", "sum_norm"]]
+
+    per_shard = (
+        d.groupBy("shard")
+        .cogroup(e.groupBy("shard"))
+        .applyInPandas(
+            join_stats,
+            schema="lang string, n_pairs long,"
+            " total_tokens long, sum_norm double",
+        )
+    )
+    # Shard-partial stats → final per-language aggregate (map-side
+    # partials, exactly like any two-phase agg).
+    return per_shard.groupBy("lang").agg(
+        F.sum("n_pairs").cast("bigint").alias("n_pairs"),
+        F.sum("total_tokens").cast("bigint").alias("total_tokens"),
+        pround(F.sum("sum_norm") / F.sum("n_pairs"), 4).alias("avg_l2_norm"),
+    )

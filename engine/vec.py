@@ -1,10 +1,6 @@
-"""Shared JVM-side vector expressions over array<float> columns.
-
-Registration-free helper module: engine/__init__'s import order controls
-which queries land in the driver's 50-row correctness window, so modules
-that register early (e.g. the current round's seeds) must not transitively
-import a registering module just for these expressions. Both
-engine.llm_ops and engine.scale_ops re-export them for compatibility.
+"""Shared JVM-side vector expressions over array<float> columns, used
+by engine.llm_ops, engine.scale_ops and engine.curation. Registers no
+query.
 """
 
 from __future__ import annotations

@@ -13,7 +13,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from engine.det import _CENTS_SQL, cents_col, cents_sql, exact_sum, pround
+from engine.det import (
+    _CENTS_SQL,
+    _DAY_SQL,
+    cents_col,
+    cents_sql,
+    day_col,
+    exact_sum,
+    pround,
+)
 from engine.registry import query
 from engine.session import load
 
@@ -466,7 +474,7 @@ PARETO_NUM, PARETO_DEN = 4, 5  # threshold = 4/5 = 80 %
     oracle=f"""
     WITH d AS (
       SELECT event_type, DATE_TRUNC('day', ts) AS day,
-             CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+             CAST(SUM({_CENTS_SQL}) AS BIGINT)
                AS vol_cents
       FROM events GROUP BY 1, 2
     ), r AS (
@@ -504,7 +512,7 @@ def win_pareto_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows (≤ days per type — metadata-bounded at any corpus size).
     """
     e = load(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
+    cents = cents_col(F.col("value"))
     d = (
         e.select("event_type", F.date_trunc("day", "ts").alias("day"), cents.alias("c"))
         .groupBy("event_type", "day")
@@ -623,7 +631,7 @@ def running_distinct_core(e: DataFrame) -> DataFrame:
     oracle=f"""
     WITH d AS (
       SELECT user_id,
-             CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day,
+             {_DAY_SQL} AS day,
              (MAX({{'ts': ts, 'id': event_id, 'c': {_CENTS_SQL}}})).c
                AS close_c
       FROM events GROUP BY 1, 2
@@ -651,7 +659,7 @@ def win_nth_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         e.select(
             "user_id",
-            F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day"),
+            day_col().alias("day"),
             cents_col(F.col("value")).alias("c"),
             "ts",
             "event_id",
@@ -775,4 +783,305 @@ def quantile_normalize_core(c: DataFrame) -> DataFrame:
         "event_type",
         "cents",
         F.col("gcents").alias("normalized_cents"),
+    )
+
+
+@query(
+    "win_percentiles",
+    oracle="""
+    SELECT c_custkey,
+           c_mktsegment,
+           ROUND(PERCENT_RANK() OVER w, 4) AS pct_rank,
+           ROUND(CUME_DIST() OVER w, 4) AS cume,
+           NTILE(10) OVER w AS decile
+    FROM customer
+    WINDOW w AS (PARTITION BY c_mktsegment
+                 ORDER BY c_acctbal DESC, c_custkey)
+    """,
+)
+def win_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distribution-position windows: percent_rank, cume_dist, decile
+    per market segment over account balance (unique total order via the
+    c_custkey tiebreak, SURVEY.md §7.5.4).
+    """
+    c = load(spark, sf_dir, "customer")
+    w = W.partitionBy("c_mktsegment").orderBy(
+        F.desc("c_acctbal"), "c_custkey"
+    )
+    return c.select(
+        "c_custkey",
+        "c_mktsegment",
+        pround(F.percent_rank().over(w), 4).alias("pct_rank"),
+        pround(F.cume_dist().over(w), 4).alias("cume"),
+        F.ntile(10).over(w).alias("decile"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Sessionization (batch gap-based; the streaming session window is
+# stream_session in engine.streaming).
+# ---------------------------------------------------------------------------
+
+SESSION_GAP_SECS = 28_800  # 8 h: ~half the fixture inter-event gaps
+
+
+@query(
+    "win_sessionize",
+    oracle=f"""
+    WITH g AS (
+      SELECT user_id, event_id, ts, event_type,
+             CASE WHEN LAG(ts) OVER w IS NULL
+                    OR epoch(ts) - LAG(epoch(ts)) OVER w > {SESSION_GAP_SECS}
+                  THEN 1 ELSE 0 END AS is_new
+      FROM events
+      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+    ), s AS (
+      SELECT user_id, event_type, ts,
+             CAST(SUM(is_new) OVER (PARTITION BY user_id
+                                    ORDER BY ts, event_id) AS BIGINT)
+               AS session_idx
+      FROM g
+    )
+    SELECT user_id, session_idx,
+           COUNT(*) AS n_events,
+           CAST(FLOOR(epoch(MAX(ts)) - epoch(MIN(ts))) AS BIGINT)
+             AS session_secs,
+           CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_purchases
+    FROM s GROUP BY 1, 2
+    """,
+)
+def win_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gap-based sessionization: a new session starts when a user is
+    idle > SESSION_GAP_SECS (8 h); per-session event count, duration,
+    purchases.
+
+    The lag/is-new/running-sum idiom — the canonical batch sessionizer.
+    One shuffle on user_id serves both window passes AND the final
+    grouped aggregate (all three are user_id-partitioned, so Catalyst
+    plans a single Exchange). Ordering ties are impossible: event_id is
+    unique within a user. At 100 TB this is the shape you want —
+    per-user state never materializes outside its partition.
+    """
+    return sessionize(load(spark, sf_dir, "events"), SESSION_GAP_SECS)
+
+
+def sessionize(e: DataFrame, gap_secs: float) -> DataFrame:
+    """Sessionize any (user_id, event_id, ts, event_type) DataFrame —
+    the win_sessionize logic, factored for property tests over
+    hypothesis-generated event streams."""
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    # Fractional epoch seconds (µs-precision timestamps): unix_timestamp
+    # truncates each side before subtracting and disagrees with the
+    # oracle's epoch() by ±1 s — same pitfall as events_funnel.
+    secs = F.col("ts").cast("double")
+    is_new = (
+        F.when(
+            F.lag("ts").over(w).isNull()
+            | ((secs - F.lag(secs).over(w)) > gap_secs),
+            1,
+        )
+        .otherwise(0)
+        .alias("is_new")
+    )
+    return (
+        e.select("user_id", "event_id", "ts", "event_type", is_new)
+        .withColumn("session_idx", F.sum("is_new").over(w))
+        .groupBy("user_id", "session_idx")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.floor(F.max(secs) - F.min(secs)).cast("bigint").alias("session_secs"),
+            F.sum((F.col("event_type") == "purchase").cast("int"))
+            .cast("long")
+            .alias("n_purchases"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Gaps-and-islands: runs of consecutive active days.
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "win_gap_islands",
+    oracle="""
+    WITH dd AS (
+      SELECT DISTINCT user_id, DATE_TRUNC('day', ts) AS day FROM events
+    ), g AS (
+      SELECT user_id, day,
+             CASE WHEN LAG(day) OVER w IS NULL
+                    OR DATE_DIFF('day', LAG(day) OVER w, day) > 1
+                  THEN 1 ELSE 0 END AS is_new
+      FROM dd
+      WINDOW w AS (PARTITION BY user_id ORDER BY day)
+    ), isl AS (
+      SELECT user_id, day,
+             CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY day)
+                  AS BIGINT) AS island_idx
+      FROM g
+    )
+    SELECT user_id, island_idx,
+           MIN(day) AS start_day, MAX(day) AS end_day,
+           COUNT(*) AS n_days
+    FROM isl GROUP BY 1, 2
+    """,
+)
+def win_gap_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gaps-and-islands over per-user active days: maximal runs of
+    consecutive calendar days with ≥1 event, with run bounds and
+    length.
+
+    The dual of sessionization on a discrete axis: distinct
+    (user, day) first (collapsing the fact table to at most
+    users×days rows), then the same lag → is-new → running-sum idiom.
+    The distinct, both windows, and the island aggregate all partition
+    on user_id, so the whole operator is one exchange after the
+    per-day collapse. Days are midnight-truncated timestamps (not
+    DATE) so both engines hash the same logical type.
+    """
+    e = load(spark, sf_dir, "events")
+    dd = e.select(
+        "user_id", F.date_trunc("day", "ts").alias("day")
+    ).distinct()
+    w = W.partitionBy("user_id").orderBy("day")
+    is_new = (
+        F.when(
+            F.lag("day").over(w).isNull()
+            | (F.datediff(F.col("day"), F.lag("day").over(w)) > 1),
+            1,
+        )
+        .otherwise(0)
+        .alias("is_new")
+    )
+    return (
+        dd.select("user_id", "day", is_new)
+        .withColumn("island_idx", F.sum("is_new").over(w))
+        .groupBy("user_id", "island_idx")
+        .agg(
+            F.min("day").alias("start_day"),
+            F.max("day").alias("end_day"),
+            F.count("*").alias("n_days"),
+        )
+    )
+
+
+ROLL_MEDIAN_FRAME = 5  # rolling-median window: current + 4 preceding
+
+
+@query(
+    "win_rolling_median",
+    oracle=f"""
+    WITH w AS (
+      SELECT user_id, event_id, ts, value,
+             LIST_SORT(LIST(value) OVER (
+               PARTITION BY user_id ORDER BY ts, event_id
+               ROWS BETWEEN {ROLL_MEDIAN_FRAME - 1} PRECEDING
+                        AND CURRENT ROW)) AS vs
+      FROM events WHERE event_type = 'purchase'
+    )
+    SELECT user_id, event_id, ts,
+           CAST(LEN(vs) AS INT) AS n_in_frame,
+           ROUND((vs[(LEN(vs) + 1) // 2]
+                  + vs[LEN(vs) // 2 + 1]) / 2.0, 4) AS rolling_median
+    FROM w
+    """,
+)
+def win_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact rolling median of purchase value per user over the last
+    {ROLL_MEDIAN_FRAME} events — the robust-statistics window Spark has
+    no native aggregate for.
+
+    Portable construction (identical on both engines, so the hash is
+    exact even for even-sized frames): collect the frame into an array,
+    sort it, average the two middle elements. The frame is
+    constant-bounded ({ROLL_MEDIAN_FRAME} rows), so the per-row state
+    is O(1) and the window partitions by user_id — no global sort, one
+    hash shuffle at any scale. For data-sized frames the scale answer
+    is `agg_approx_quantile`'s sketch, already registered.
+    """
+    e = load(spark, sf_dir, "events").filter(
+        F.col("event_type") == "purchase"
+    )
+    w = (
+        W.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(-(ROLL_MEDIAN_FRAME - 1), W.currentRow)
+    )
+    vs = F.sort_array(F.collect_list("value").over(w))
+    n = F.size(vs)
+    # n > 0 guard: collect_list DROPS NULLs, so a frame whose every
+    # value is NULL (all-null-payload twin) is EMPTY and the middle
+    # index degenerates to element_at(vs, 0) — an INVALID_INDEX_OF_ZERO
+    # job abort on one poisoned user. CASE branches evaluate lazily, so
+    # the empty frame yields a NULL median instead (DuckDB's
+    # out-of-range list index is NULL already, so the engines agree).
+    med = F.when(
+        n > 0,
+        (
+            F.element_at(vs, ((n + 1) / 2).cast("int"))
+            + F.element_at(vs, (n / 2).cast("int") + 1)
+        )
+        / 2.0,
+    )
+    return e.select(
+        "user_id",
+        "event_id",
+        "ts",
+        n.alias("n_in_frame"),
+        pround(med, 4).alias("rolling_median"),
+    )
+
+
+RANGE_SECS = 3600  # trailing 1-hour value window
+
+
+@query(
+    "win_range_interval",
+    oracle=f"""
+    SELECT user_id, event_id,
+           CAST(FLOOR(epoch(ts)) AS BIGINT) AS ts_sec,
+           CAST(COUNT(*) OVER w AS BIGINT) AS n_trailing_hour,
+           ROUND(CAST(SUM({cents_sql("value")}) OVER w AS DOUBLE) / 100, 2)
+             AS sum_trailing_hour
+    FROM events
+    WINDOW w AS (PARTITION BY user_id ORDER BY CAST(FLOOR(epoch(ts)) AS BIGINT)
+                 RANGE BETWEEN {RANGE_SECS} PRECEDING AND CURRENT ROW)
+    """,
+)
+def win_range_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Trailing-hour RANGE frame per user: how many events (and how much
+    value) landed within the last {RANGE_SECS} seconds of *event time* —
+    a value-based frame, not a row-count frame, so sparse and dense
+    activity windows are treated alike (the sliding-window metric shape;
+    the streaming twin is stream_sliding).
+
+    The order key is integer epoch seconds on both engines (event
+    timestamps are second-granularity, FIXTURES.md), so the RANGE
+    boundary arithmetic is exact integer comparison — no interval-type
+    semantics to disagree on. Partitioned by user_id: bounded per-key
+    state, one hash shuffle at any scale.
+    """
+    e = load(spark, sf_dir, "events")
+    ts_sec = F.floor(F.col("ts").cast("double")).cast("bigint")
+    w = (
+        W.partitionBy("user_id")
+        .orderBy(F.col("ts_sec"))
+        .rangeBetween(-RANGE_SECS, W.currentRow)
+    )
+    return e.withColumn("ts_sec", ts_sec).select(
+        "user_id",
+        "event_id",
+        "ts_sec",
+        F.count("*").over(w).cast("bigint").alias("n_trailing_hour"),
+        # exact cents sum (r10 quantization audit): a RANGE frame's row
+        # count is data-dependent (a hot timestamp span at 100 TB is an
+        # unbounded fold), so the frame sums exact integers.
+        pround(
+            F.sum(cents_col(F.col("value")).cast("decimal(38,0)"))
+            .over(w)
+            .cast("double")
+            / 100,
+            2,
+        ).alias("sum_trailing_hour"),
     )

@@ -1,9 +1,9 @@
-"""Round-2 operator tests beyond the differential sweep: a hypothesis
-property for the sessionizer (vs a pure-Python reference) and structural
+"""Operator tests beyond the differential sweep: a hypothesis property
+for the sessionizer (vs a pure-Python reference) and structural
 invariants of the pipeline-composition queries on the small fixture.
 
-The differential suite already hash-compares every ext_ops query to its
-DuckDB oracle; these target the logic on adversarial inputs (ties, gap
+The differential suite already hash-compares each of these queries to
+its DuckDB oracle; these target the logic on adversarial inputs (ties, gap
 boundaries, single-event users) and the cross-query consistency the
 oracles can't see (funnel monotonicity, split-count agreement).
 """
@@ -16,7 +16,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 import engine
-from engine.ext_ops import sessionize
+from engine.windows import sessionize
 
 from tests.conftest import SF_DIR
 
@@ -148,7 +148,7 @@ def test_approx_quantile_tracks_exact(spark):
 def test_q18_bounded_and_ordered(spark):
     """Top-100 contract: ≤100 rows, descending price with orderkey
     tiebreak, every total above the threshold."""
-    from engine.ext_ops import Q18_QTY_THRESHOLD
+    from engine.tpch import Q18_QTY_THRESHOLD
 
     rows = engine.QUERIES["q18_large_volume"](spark, SF_DIR).collect()
     assert len(rows) <= 100

@@ -13,8 +13,8 @@ import math
 import pandas as pd
 
 import engine  # noqa: F401  (registers queries)
+from engine.multimodal import AUDIO_FRAME
 from engine.pipeline_ops import (
-    AUDIO_FRAME,
     CHUNK_SIZE,
     CHUNK_STRIDE,
     PACK_WINDOW,

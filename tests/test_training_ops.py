@@ -1,4 +1,4 @@
-"""Invariant tests for the round-3 curation operators (beyond the
+"""Invariant tests for the curation and time-series operators (beyond the
 differential suite): internal-consistency properties that must hold on
 ANY corpus, checked on the sf0.001 fixtures — the places a fixture-pass
 could hide a logic bug (conservation totals, bucket boundary membership,
@@ -13,11 +13,8 @@ from pyspark.sql.window import Window as W
 
 import engine
 from engine.session import load
-from engine.training_ops import (
-    BLOCK_TOKENS,
-    N_SHARDS,
-    ROLL_MEDIAN_FRAME,
-)
+from engine.curation import BLOCK_TOKENS, N_SHARDS
+from engine.windows import ROLL_MEDIAN_FRAME
 
 SF_DIR = "/root/testdata/sf0.001"
 
