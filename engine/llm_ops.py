@@ -16,7 +16,7 @@ candidate-join primitives in engine.lsh_core.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -126,18 +126,21 @@ def minhash_hashes(tok: DataFrame) -> DataFrame:
     )
 
 
-def packed_token_sets(tok: DataFrame) -> DataFrame:
-    """(doc_id, lang, mask array<long>, n_tok) — each doc's distinct
-    token set dictionary-encoded and packed into a fixed-width bitset.
+def packed_token_sets(tok: DataFrame) -> tuple[DataFrame, int]:
+    """``(packed, n_words)``: each doc's distinct token set
+    dictionary-encoded and packed into a fixed-width bitset, as
+    checkpointed (doc_id, lang, mask array<long>, n_tok) rows, and the
+    mask width in longs (a driver scalar; 1 on an empty input, so
+    popcount unrolls stay well-formed while every join stays empty).
 
     Set intersections then cost Σ bit_count(wordᵃ & wordᵇ) — integer ops
     in one codegen stage instead of per-pair string-set hashing. Ids are
     dense *per language*, so masks are only comparable between docs of
     the same lang — which is all any consumer does. The bitset width is
-    ⌈max_lang_vocab/64⌉ longs (a driver scalar); the regime where the
-    vocabulary is too large for dense bitsets is the regime where exact
-    all-pairs similarity is infeasible anyway (use the LSH candidate
-    generators, which only need the verify on sparse pairs).
+    ⌈max_lang_vocab/64⌉ longs; the regime where the vocabulary is too
+    large for dense bitsets is the regime where exact all-pairs
+    similarity is infeasible anyway (use the LSH candidate generators,
+    which only need the verify on sparse pairs).
     """
     # Dense ids 0..V_lang-1 *per language*: every consumer pairs docs
     # within one language only (jaccard/ngram joins and LSH band buckets
@@ -147,10 +150,11 @@ def packed_token_sets(tok: DataFrame) -> DataFrame:
     # intersection ops on a 5-language corpus — and needs no global
     # window at all (the numbering window is partitioned by lang).
     # The vocabulary is materialized once (localCheckpoint; tiny — one
-    # row per distinct (lang, token)): it is read three times below
-    # (width scalar, broadcast build, and implicitly by the planner),
-    # and each un-checkpointed read would re-run the full million-row
-    # explode+distinct lineage.
+    # row per distinct (lang, token)), and its max tokid rides that
+    # same job as an observe() metric, so the width costs no action of
+    # its own; an un-checkpointed vocabulary would re-run the full
+    # million-row explode+distinct lineage at the broadcast build.
+    obs = Observation()
     vocab = (
         tok.select("lang", "token")
         .distinct()
@@ -159,13 +163,11 @@ def packed_token_sets(tok: DataFrame) -> DataFrame:
             F.row_number().over(W.partitionBy("lang").orderBy("token"))
             - F.lit(1),
         )
+        .observe(obs, F.max("tokid").alias("max_tokid"))
         .localCheckpoint(eager=True)
     )
-    # tiny driver scalar (max per-language vocabulary) sizes the bitset;
-    # empty corpus → width-1 masks (nothing to pack, joins stay empty)
-    max_tokid = vocab.agg(F.max("tokid")).first()[0]
-    max_vocab = (max_tokid if max_tokid is not None else 0) + 1
-    n_words = (max_vocab + 63) // 64
+    max_tokid = obs.get["max_tokid"]  # None on an empty input
+    n_words = ((max_tokid if max_tokid is not None else 0) + 64) // 64
     word_masks = (
         tok.join(F.broadcast(vocab), ["lang", "token"])
         .withColumn("w", (F.col("tokid") / 64).cast("int"))
@@ -176,7 +178,9 @@ def packed_token_sets(tok: DataFrame) -> DataFrame:
             ).alias("m")
         )
     )
-    return (
+    # Checkpointed so both pair-join sides and the broadcast read one
+    # materialization instead of each re-running the explode+pack.
+    packed = (
         word_masks.groupBy("doc_id", "lang")
         .agg(
             F.map_from_entries(F.collect_list(F.struct("w", "m"))).alias("wm"),
@@ -190,15 +194,41 @@ def packed_token_sets(tok: DataFrame) -> DataFrame:
             ),
         )
         .drop("wm")
+        .localCheckpoint(eager=True)
     )
+    return packed, n_words
 
 
-def mask_width(packed: DataFrame) -> int:
-    """Fixed bitset width (a driver scalar) of a packed_token_sets
-    frame; 1 on an empty corpus so downstream popcount unrolls stay
-    well-formed while every join remains empty."""
-    row = packed.select("mask").first()
-    return len(row[0]) if row is not None else 1
+def packed_pair_join(
+    packed: DataFrame, n_words: int, cond: Column
+) -> DataFrame:
+    """(doc_a, doc_b, na, nb, n_common) rows of the same-language pairs
+    of a :func:`packed_token_sets` frame that satisfy the pair predicate
+    ``cond`` (over doc_a, doc_b, na, nb), with n_common = |A ∩ B|.
+
+    The b side is broadcast (|docs| rows of a few longs; callers MUST
+    bound the input), and ``cond`` — the cheap id and size prunes — runs
+    in the join, before the popcount, which bitset_intersection pins to
+    the projection after it."""
+    a = packed.select(
+        F.col("doc_id").alias("doc_a"),
+        "lang",
+        F.col("mask").alias("ma"),
+        F.col("n_tok").alias("na"),
+    )
+    b = packed.select(
+        F.col("doc_id").alias("doc_b"),
+        "lang",
+        F.col("mask").alias("mb"),
+        F.col("n_tok").alias("nb"),
+    )
+    return a.join(F.broadcast(b), (a["lang"] == b["lang"]) & cond).select(
+        "doc_a",
+        "doc_b",
+        "na",
+        "nb",
+        bitset_intersection("ma", "mb", n_words).alias("n_common"),
+    )
 
 
 def bitset_intersection(ma: str, mb: str, n_words: int | None = None) -> Column:
@@ -206,8 +236,8 @@ def bitset_intersection(ma: str, mb: str, n_words: int | None = None) -> Column:
     :func:`nondet_zero` so the popcount stays pinned to the projection
     that computes it.
 
-    With a small ``n_words`` (the fixed mask width, a driver scalar —
-    :func:`mask_width` of a checkpointed packed set) the sum is emitted
+    With a small ``n_words`` (the fixed mask width, the driver scalar
+    :func:`packed_token_sets` returns) the sum is emitted
     *unrolled* as ``bit_count(ma[0] & mb[0]) + …`` — a flat codegen
     scalar expression, no lambda dispatch and no intermediate array
     allocation per pair.
@@ -385,42 +415,18 @@ def exact_jaccard_pairs(tok: DataFrame, threshold: float = 0.8) -> DataFrame:
     #      small side → broadcast);
     #   2. pack each doc's token set into a fixed-width bitset
     #      (array<long>, ⌈V/64⌉ words) with a bit_or aggregate;
-    #   3. pair docs within a language (packed side broadcast — |docs|
-    #      rows of a few longs) under the size-ratio prune;
+    #   3. pair docs within a language (packed_pair_join: packed side
+    #      broadcast — |docs| rows of a few longs) under the size-ratio
+    #      prune;
     #   4. verify with |∩| = Σ bit_count(wordᵃ & wordᵇ) — integer ops in
     #      one codegen stage, no pair aggregate, no quadratic shuffle.
     # Regime note: the bitset width scales with vocabulary (V/64 longs);
     # for web-scale vocabularies the exact-quadratic form is infeasible
     # regardless — that regime is llm_lsh_neardup's (sparse LSH candidate
     # generation, then this same verify on candidates only).
-    # Materialize the packed sets once (localCheckpoint; on a cluster:
-    # cache/checkpoint) — both join sides and the broadcast would
-    # otherwise each recompute the explode+pack lineage.
-    packed = packed_token_sets(tok).localCheckpoint(eager=True)
-    n_words = mask_width(packed)
-    a = packed.select(
-        F.col("doc_id").alias("doc_a"),
-        "lang",
-        F.col("mask").alias("ma"),
-        F.col("n_tok").alias("na"),
-    )
-    b = packed.select(
-        F.col("doc_id").alias("doc_b"),
-        "lang",
-        F.col("mask").alias("mb"),
-        F.col("n_tok").alias("nb"),
-    )
-    pairs = a.join(
-        F.broadcast(b),
-        (a["lang"] == b["lang"])
-        & (F.col("doc_a") < F.col("doc_b"))
-        & size_prune(threshold),
-    ).select(
-        "doc_a",
-        "doc_b",
-        "na",
-        "nb",
-        bitset_intersection("ma", "mb", n_words).alias("n_common"),
+    pairs = packed_pair_join(
+        *packed_token_sets(tok),
+        (F.col("doc_a") < F.col("doc_b")) & size_prune(threshold),
     )
     return pairs.filter(jaccard_ratio() >= threshold).select(
         "doc_a", "doc_b", pround(jaccard_ratio(), 4).alias("jaccard")

@@ -20,7 +20,6 @@ from engine.llm_ops import (
     N_MINHASH,
     bitset_intersection,
     jaccard_ratio,
-    mask_width,
     minhash_hashes,
     packed_token_sets,
     size_prune,
@@ -37,19 +36,6 @@ N_BANDS = 4  # MinHash-LSH: 4 bands × 4 rows over the 16-perm signature
 # unsalted shape (g = 1 everywhere). Tests monkeypatch the module
 # attribute to force the gate.
 HOT_BUCKET_ROWS = 4096
-
-# Census transfer bound (r15, VERDICT r14 item 3): the per-bucket hot
-# list shipped to the driver is ≤ corpus/HOT_BUCKET_ROWS entries — fine
-# for real corpora, but a pathological corpus where EVERYTHING is hot
-# would collect ~N/HOT_BUCKET_ROWS rows. The census therefore first
-# aggregates (n_hot, max_bn) — one row — and only collects the
-# per-bucket list when n_hot ≤ this cap; above it, every bucket is
-# salted uniformly with g = ⌈max_bn/HOT_BUCKET_ROWS⌉ (no list needed at
-# all), so driver transfer is provably O(cap) by construction. The
-# uniform fallback keeps the same pair-space partition argument (every
-# in-bucket pair meets in exactly one sub-bucket), so the candidate set
-# is bit-identical in all three branches.
-HOT_CENSUS_CAP = 100_000
 
 _TOK_SQL = """
       SELECT DISTINCT doc_id, lang, token FROM (
@@ -252,42 +238,35 @@ def hot_bucket_sides(
     pathological bucket (10⁶ byte-identical crawl pages) cannot become a
     single quadratic task. Returns (a, b, salt condition).
 
-    The topology switch is a DRIVER-SIDE branch on a census (plan from
-    runtime statistics, as AQE does). A fully lazy formulation —
-    broadcast-joining the hot list onto every band row with an always-on
-    explode — measured +56% on the LSH family with ZERO hot buckets: the
-    two join sides stopped sharing one ReusedExchange and the generator
-    broke the probe side's codegen fusion. With no hot bucket (every
-    fixture) the sides are the plain unsalted aliases, so that plan is
-    unchanged and the census job is the only cost.
+    The topology switch is a DRIVER-SIDE branch on one action, whether
+    any bucket is hot (plan from runtime statistics, as AQE does). A
+    fully lazy formulation — broadcast-joining the hot list onto every
+    band row with an always-on explode — measured +56% on the LSH family
+    with ZERO hot buckets: the two join sides stopped sharing one
+    ReusedExchange and the generator broke the probe side's codegen
+    fusion. With no hot bucket (every fixture) the sides are the plain
+    unsalted aliases, so that plan is unchanged and the census job is
+    the only cost.
 
-    Driver transfer is bounded: the census is first reduced to two
-    scalars, and the per-bucket list (bucket ids, not data) is collected
-    only when it holds ≤ HOT_CENSUS_CAP rows. Above the cap every bucket
-    salts uniformly with the largest bucket's g, which needs no list and
-    partitions each bucket's pair space the same way."""
+    With hot buckets, each bucket's g is derived distributively: the
+    census joins back onto the band rows in the plan, nothing is
+    collected to the driver, and the join carries no broadcast hint, so
+    AQE sizes it (the hot list is ≤ rows/HOT_BUCKET_ROWS entries, but
+    not bounded by a constant)."""
     census = (
         bands.groupBy(*keys)
         .agg(F.count("*").alias("bn"))
         .filter(F.col("bn") > HOT_BUCKET_ROWS)
     )
-    stats = census.agg(
-        F.count("*").alias("n_hot"), F.max("bn").alias("max_bn")
-    ).first()
-    if stats["n_hot"] == 0:
+    if census.isEmpty():
         return bands.alias("a"), bands.alias("b"), F.lit(True)
-    if stats["n_hot"] <= HOT_CENSUS_CAP:
-        hot = census.select(
-            *keys,
-            F.ceil(F.col("bn") / F.lit(HOT_BUCKET_ROWS)).cast("int").alias("g"),
-        )
-        hot = bands.sparkSession.createDataFrame(hot.collect(), hot.schema)
-        flagged = bands.join(F.broadcast(hot), keys, "left").withColumn(
-            "g", F.coalesce(F.col("g"), F.lit(1))
-        )
-    else:
-        g_uniform = -(-stats["max_bn"] // HOT_BUCKET_ROWS)
-        flagged = bands.withColumn("g", F.lit(g_uniform))
+    hot = census.select(
+        *keys,
+        F.ceil(F.col("bn") / F.lit(HOT_BUCKET_ROWS)).cast("int").alias("g"),
+    )
+    flagged = bands.join(hot, keys, "left").withColumn(
+        "g", F.coalesce(F.col("g"), F.lit(1))
+    )
     return salted_sides(flagged, id_col)
 
 
@@ -334,19 +313,19 @@ def jaccard_verify(
     BEFORE the token explode, so non-candidate docs never produce
     occurrence rows; at 100 TB the candidate set is orders of magnitude
     smaller than the corpus. The same plan serves an empty candidate set:
-    the mask width is then 1 and every join stays empty."""
+    packed_token_sets then gives width-1 masks and every join stays
+    empty."""
     cand = cand.localCheckpoint(eager=True)
     cand_ids = (
         cand.select(F.col(a).alias("doc_id"))
         .unionByName(cand.select(F.col(b).alias("doc_id")))
         .distinct()
     )
-    packed = packed_token_sets(
+    packed, n_words = packed_token_sets(
         arrs.join(cand_ids, "doc_id", "left_semi").select(
             "doc_id", "lang", F.explode("toks").alias("token")
         )
-    ).localCheckpoint(eager=True)
-    n_words = mask_width(packed)
+    )
     pa = packed.select(
         F.col("doc_id").alias(a),
         F.col("mask").alias("ma"),

@@ -251,11 +251,10 @@ BROADCAST_MAX_VECS = 2_000_000
 
 
 def _emb_dim(emb: DataFrame) -> int:
-    """Embedding dimensionality read from the data (one-row driver
-    scalar, same pattern as packed_token_sets' mask width) — never a
-    hardcoded constant: ``zip_with`` null-pads on length mismatch, so a
-    fixture dim change would silently zero the hyperplane dots instead
-    of failing loudly (ADVICE r1)."""
+    """Embedding dimensionality read from the data (a one-row driver
+    scalar) — never a hardcoded constant: ``zip_with`` null-pads on
+    length mismatch, so a fixture dim change would silently zero the
+    hyperplane dots instead of failing loudly (ADVICE r1)."""
     row = emb.select("embedding").first()
     # Empty corpus: any positive width works — every consumer's joins
     # and blocks stay empty; 1 keeps plane/centroid expressions tiny.

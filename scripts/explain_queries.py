@@ -17,9 +17,10 @@ timing work.
 --eager also records, in build order, the formatted plan of every
 ``localCheckpoint(eager=True)``, ``collect``, ``count``, ``first`` and
 ``isEmpty`` the build runs, and masks the per-session numbers
-(expression ``#id``, ``plan_id``, RDD ids, ``observe()`` UUIDs) and
-per-call scratch names (temp dirs, uuid-suffixed tables), so two
-captures of the same code compare with one ``diff -r``.
+(expression ``#id``, ``plan_id``, RDD ids, ``observe()`` UUIDs), the
+checkout root (``ROOT``) and per-call scratch names (temp dirs,
+uuid-suffixed tables), so two captures of the same code, also from two
+checkouts, compare with one ``diff -r``.
 """
 
 from __future__ import annotations
@@ -34,7 +35,8 @@ import tempfile
 
 from pyspark.sql import DataFrame
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 import engine  # noqa: E402
 from engine.session import get_spark  # noqa: E402
@@ -42,6 +44,7 @@ from engine.session import get_spark  # noqa: E402
 _EAGER_ACTIONS = ("localCheckpoint", "collect", "count", "first", "isEmpty")
 
 _MASKS = (
+    (re.compile(re.escape(_ROOT) + r"(?![\w.-])"), "ROOT"),
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
@@ -115,11 +118,7 @@ def main() -> None:
     if not qids:
         qids = [ln.strip() for ln in sys.stdin if ln.strip()]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        tag,
-    )
+    out_dir = os.path.join(_ROOT, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="explain-capture")
     # The concrete class (classic or Connect), not the pyspark.sql.DataFrame

@@ -106,26 +106,13 @@ def test_hot_bucket_gate_preserves_pairs_and_bounds_tasks(
     }
     assert gated == want  # output identical with the gate TRIPPED
 
-    # The divert itself: build the salted sides with the shared helper
-    # lsh_neardup_pairs uses and check the per-sub-bucket pair counts.
-    sig = lc._minhash_sig(tokens(docs, distinct=True))
-    bands = lc.band_rows(sig)
-    cnt = bands.groupBy("band", "bv", "lang").agg(
-        F.count("*").alias("bn")
+    # The divert itself: the sides lsh_neardup_pairs joins, from the
+    # engine's own gate, and the per-sub-bucket pair counts.
+    bands = lc.band_rows(lc._minhash_sig(tokens(docs, distinct=True)))
+    a, b, salt_cond = lc.hot_bucket_sides(
+        bands, "doc_id", ["band", "bv", "lang"]
     )
-    hot = cnt.filter(F.col("bn") > lc.HOT_BUCKET_ROWS).select(
-        "band",
-        "bv",
-        "lang",
-        F.ceil(F.col("bn") / F.lit(lc.HOT_BUCKET_ROWS))
-        .cast("int")
-        .alias("g"),
-    )
-    assert hot.count() > 0  # the clique bucket IS above the bound
-    flagged = bands.join(
-        F.broadcast(hot), ["band", "bv", "lang"], "left"
-    ).withColumn("g", F.coalesce(F.col("g"), F.lit(1)))
-    a, b, salt_cond = lc.salted_sides(flagged, "doc_id")
+    assert {"s1", "s2"} <= set(a.columns)  # the clique bucket IS salted
     per_key = (
         a.join(
             b,
@@ -211,9 +198,8 @@ def test_embedding_hot_bucket_gate_preserves_pairs_and_bounds_tasks(
     }
     assert gated == ungated  # bit-identical with the gate TRIPPED
 
-    # The divert itself: build the salted sides with the shared helper
-    # the gated branch uses and check per-sub-bucket pair counts over
-    # the hot (g > 1) buckets only.
+    # The divert itself: the sides the gated branch joins, from the
+    # engine's own gate, and the per-sub-bucket pair counts.
     import numpy as np
     from engine.scale_ops import NEARDUP_BITS, _plane_weight
 
@@ -234,21 +220,14 @@ def test_embedding_hot_bucket_gate_preserves_pairs_and_bounds_tasks(
     bands = spark.createDataFrame(
         band_rows, "vec_id long, band int, bv long"
     )
-    hot = (
+    n_hot = (
         bands.groupBy("band", "bv")
-        .agg(F.count("*").alias("bn"))
-        .filter(F.col("bn") > lc.HOT_BUCKET_ROWS)
-        .select(
-            "band",
-            "bv",
-            F.ceil(F.col("bn") / F.lit(lc.HOT_BUCKET_ROWS))
-            .cast("int")
-            .alias("g"),
-        )
+        .count()
+        .filter(F.col("count") > lc.HOT_BUCKET_ROWS)
+        .count()
     )
-    assert hot.count() == NEARDUP_BANDS  # all 8 clique buckets are hot
-    flagged = bands.join(F.broadcast(hot), ["band", "bv"], "inner")
-    a, b, salt_cond = lc.salted_sides(flagged, "vec_id")
+    assert n_hot == NEARDUP_BANDS  # all 8 clique buckets are hot
+    a, b, salt_cond = lc.hot_bucket_sides(bands, "vec_id", ["band", "bv"])
     per_key = (
         a.join(
             b,
@@ -267,15 +246,13 @@ def test_embedding_hot_bucket_gate_preserves_pairs_and_bounds_tasks(
     assert per_key["mx"] < clique / 4  # no task holds the whole clique
 
 
-def test_census_cap_zero_uniform_salting_preserves_pairs(
+def test_all_hot_salting_preserves_pairs(
     spark, hotbucket_sf_dir, monkeypatch
 ):
-    """r15 (VERDICT r14 item 3): force the census OVER its transfer cap
-    (HOT_CENSUS_CAP = 0 with a tripped bound) so the uniform-salting
-    fallback runs — no per-bucket list is collected at all — and pin
-    that the pair output is bit-identical to the ungated run. Uses the
-    production tok_arrays path, so this also exercises the r15
-    doc-grain array checkpoint end-to-end under the gate."""
+    """Every multi-row bucket hot (HOT_BUCKET_ROWS = 1, so each bucket
+    of bn > 1 rows is salted with g = bn) and the pair output is still
+    exactly the clique. Uses the production tok_arrays path, so this also
+    exercises the doc-grain array checkpoint end-to-end under the gate."""
     import engine.lsh_core as lc
     from engine.llm_ops import token_arrays
     from engine.session import load
@@ -285,21 +262,19 @@ def test_census_cap_zero_uniform_salting_preserves_pairs(
         (a, b): 1.0 for a in range(N_DUP) for b in range(a + 1, N_DUP)
     }
 
-    monkeypatch.setattr(lc, "HOT_BUCKET_ROWS", 8)
-    monkeypatch.setattr(lc, "HOT_CENSUS_CAP", 0)
-    uniform = {
+    monkeypatch.setattr(lc, "HOT_BUCKET_ROWS", 1)
+    salted = {
         (r.doc_a, r.doc_b): r.jaccard
         for r in lc.lsh_neardup_pairs(token_arrays(docs), 0.8).collect()
     }
-    assert uniform == want, (
-        "uniform-salting fallback (census over cap) changed the pairs"
-    )
+    assert salted == want, "salting every multi-row bucket changed the pairs"
 
 
-def test_embedding_census_cap_zero_uniform_salting_preserves_pairs(
+def test_embedding_all_hot_salting_preserves_pairs(
     spark, hot_emb, monkeypatch
 ):
-    """Same cap=0 uniform-salting pin for the embedding banded path."""
+    """Same all-hot pin (HOT_BUCKET_ROWS = 1) for the embedding banded
+    path."""
     import engine.lsh_core as lc
     from engine.scale_ops import _emb_dim, _embedding_neardup_banded
 
@@ -309,13 +284,12 @@ def test_embedding_census_cap_zero_uniform_salting_preserves_pairs(
         for a in range(N_VEC_DUP)
         for b in range(a + 1, N_VEC_DUP)
     }
-    monkeypatch.setattr(lc, "HOT_BUCKET_ROWS", 8)
-    monkeypatch.setattr(lc, "HOT_CENSUS_CAP", 0)
-    uniform = {
+    monkeypatch.setattr(lc, "HOT_BUCKET_ROWS", 1)
+    salted = {
         (r.vec_a, r.vec_b): r.cosine
         for r in _embedding_neardup_banded(hot_emb, dim).collect()
     }
-    assert uniform == want
+    assert salted == want
 
 
 def test_first_collision_guard_keeps_each_pair_in_its_lowest_band(spark):

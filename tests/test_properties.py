@@ -42,7 +42,8 @@ def test_bitset_intersection_matches_python_sets(spark, docs):
     tok = d.select(
         "doc_id", "lang", F.explode(F.split("text", " ")).alias("token")
     ).distinct()
-    packed = packed_token_sets(tok)
+    packed, n_words = packed_token_sets(tok)
+    assert {len(r.mask) for r in packed.collect()} == {n_words}
     a = packed.select(
         F.col("doc_id").alias("da"),
         F.col("mask").alias("ma"),
@@ -68,6 +69,14 @@ def test_bitset_intersection_matches_python_sets(spark, docs):
             inter, na, nb = got[(i, j)]
             assert inter == len(sets[i] & sets[j]), (i, j, docs)
             assert na == len(sets[i]) and nb == len(sets[j])
+
+
+def test_packed_token_sets_of_empty_input_is_width_one(spark):
+    """An empty token frame packs to no rows and a 1-word mask width, so
+    popcount unrolls stay well-formed while every pair join is empty."""
+    tok = spark.createDataFrame([], "doc_id long, lang string, token string")
+    packed, n_words = packed_token_sets(tok)
+    assert (packed.count(), n_words) == (0, 1)
 
 
 @given(
