@@ -14,12 +14,10 @@ Importing this package populates the query/oracle registry (see
 import os as _os
 
 # Disable numpy's MADV_HUGEPAGE BEFORE any operator module imports numpy
-# (numpy reads this env var once, at import). engine/session.py sets the
-# same default inside get_spark() — early enough for every forked Python
-# worker, but by then the DRIVER's numpy is already imported via these
-# module imports, so driver-side numpy blocks kept MADV_HUGEPAGE and
-# stayed exposed to the THP direct-compaction stalls the flag exists to
-# prevent (ADVICE r12; full forensics in engine/session.py).
+# (numpy reads this env var once, at import). Importing any engine module,
+# engine.session included, runs this file first, so the driver's numpy
+# and every Python worker forked from the JVM that get_spark() launches
+# see it (full forensics in engine/session.py).
 _os.environ.setdefault("NUMPY_MADVISE_HUGEPAGE", "0")
 
 from engine import registry as registry  # noqa: F401,E402

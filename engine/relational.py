@@ -16,9 +16,6 @@ fact-fact joins shuffle on their keys with AQE skew handling.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-import uuid
 from contextlib import contextmanager
 from pathlib import Path
 
@@ -41,8 +38,12 @@ from engine.det import (
     revenue_e4_sql,
 )
 from engine.registry import query
-from engine.roundtrip import SCRATCH
-from engine.roundtrip import roundtrip_verified as _roundtrip_verified
+from engine.roundtrip import (
+    localize,
+    roundtrip_verified,
+    scratch_database,
+    scratch_dir,
+)
 from engine.session import load
 
 
@@ -118,13 +119,11 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit schema (never inference in production paths), asserts the
     read-back equals the written rows, and returns the read-back.
 
-    Oracled since r6 (was rows-only): the returned read-back is the
-    same aggregate DuckDB computes on the source table, so the hash
-    compare verifies the whole write→parse chain is lossless — the
-    2-dp portable-rounded doubles serialize as shortest-repr text and
-    parse back bit-exactly.
+    The returned read-back is the same aggregate DuckDB computes on the
+    source table, so the oracle compare verifies the whole write→parse
+    chain is lossless — the 2-dp portable-rounded doubles serialize as
+    shortest-repr text and parse back bit-exactly.
     """
-    out = SCRATCH / f"csv_{uuid.uuid4().hex}"
     agg = (
         load(spark, sf_dir, "orders")
         .groupBy("o_orderpriority")
@@ -138,14 +137,12 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    try:
+    with scratch_dir("csv_") as out:
         agg.write.mode("overwrite").option("header", True).csv(str(out))
         back = spark.read.option("header", True).csv(
             str(out), schema="o_orderpriority string, n_orders bigint, sum_price double"
         )
-        return _roundtrip_verified(agg, back).orderBy("o_orderpriority")
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+        return roundtrip_verified(agg, back).orderBy("o_orderpriority")
 
 
 @query(
@@ -159,10 +156,9 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines write→read roundtrip (SURVEY.md §2.A); read-back
-    content-asserted against the written rows, and (since r6) the
-    read-back hash-verified against DuckDB's same aggregate on the
-    source table — the write→parse chain under test end-to-end."""
-    out = SCRATCH / f"json_{uuid.uuid4().hex}"
+    content-asserted against the written rows, and hash-verified
+    against DuckDB's same aggregate on the source table — the
+    write→parse chain under test end-to-end."""
     agg = (
         load(spark, sf_dir, "customer")
         .groupBy("c_mktsegment")
@@ -173,14 +169,12 @@ def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             exact_avg(cents_col(F.col("c_acctbal")), 100).alias("avg_bal"),
         )
     )
-    try:
+    with scratch_dir("json_") as out:
         agg.write.mode("overwrite").json(str(out))
         back = spark.read.json(
             str(out), schema="c_mktsegment string, n_customers bigint, avg_bal double"
         )
-        return _roundtrip_verified(agg, back).orderBy("c_mktsegment")
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+        return roundtrip_verified(agg, back).orderBy("c_mktsegment")
 
 
 @query(
@@ -197,21 +191,20 @@ def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partitioned parquet sink + partition-pruned read (SURVEY.md §2.A).
 
-    Oracled since r6 (was rows-only): the pruned-partition aggregate
-    must equal DuckDB's same aggregate over the source with the year
-    predicate — so the hash compare verifies the partitioned write,
-    the directory-derived partition values, AND the pruned read
-    end-to-end. Writes orders partitioned by order year,
+    The pruned-partition aggregate must equal DuckDB's same aggregate
+    over the source with the year predicate — so the oracle compare
+    verifies the partitioned write, the directory-derived partition
+    values, AND the pruned read end-to-end. Writes orders partitioned
+    by order year,
     reads back a single partition — the filter on the partition column is
     resolved from directory names alone (partition pruning, SURVEY.md §4).
     This layout is the 100 TB story: date-partitioned facts let every
     time-bounded query skip irrelevant partitions at planning time.
     """
-    out = SCRATCH / f"part_{uuid.uuid4().hex}"
     orders = load(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate")
     )
-    try:
+    with scratch_dir("part_") as out:
         # Repartition by the partition column first: without it every task
         # writes a sliver of every year (tasks × years small files — the
         # classic partitioned-write amplification); with it each year's
@@ -235,12 +228,7 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("o_orderstatus")
         )
-        one_year = spark.createDataFrame(
-            one_year.collect(), schema=one_year.schema
-        )
-        return one_year
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+        return localize(one_year)
 
 
 # ---------------------------------------------------------------------------
@@ -1131,9 +1119,8 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC write→read roundtrip (SURVEY.md §2.A family). Same contract
     as the CSV/JSON roundtrips over the third columnar format Spark
-    ships natively; oracled since r6 (ORC doubles are stored natively,
-    so the read-back hash-matches DuckDB's aggregate bit-exactly)."""
-    out = SCRATCH / f"orc_{uuid.uuid4().hex}"
+    ships natively (ORC doubles are stored natively, so the read-back
+    hash-matches DuckDB's aggregate bit-exactly)."""
     agg = (
         load(spark, sf_dir, "supplier")
         .groupBy("s_nationkey")
@@ -1143,12 +1130,10 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             exact_sum(cents_col(F.col("s_acctbal")), 100).alias("sum_bal"),
         )
     )
-    try:
+    with scratch_dir("orc_") as out:
         agg.write.mode("overwrite").orc(str(out))
         back = spark.read.orc(str(out))
-        return _roundtrip_verified(agg, back).orderBy("s_nationkey")
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+        return roundtrip_verified(agg, back).orderBy("s_nationkey")
 
 
 @query(
@@ -1554,20 +1539,12 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB this is THE strategy for a recurring big⋈big join:
     pay the layout shuffle once at ingest (bucketBy + sortBy), then
-    every subsequent join/agg on the key is exchange-free. The scratch
-    database here stands in for the warehouse; the returned frame is
-    re-localized before the scratch is dropped (same lifecycle as
-    sink_partitioned_parquet, engine/relational.py:146).
+    every subsequent join/agg on the key is exchange-free. A scratch
+    database stands in for the warehouse; the result is localized
+    before the database and its directory are dropped.
     """
-    scratch = Path(tempfile.mkdtemp(prefix="engine_bkt_"))
-    db = f"bktdb_{uuid.uuid4().hex[:8]}"
-    spark.sql(f"CREATE DATABASE {db} LOCATION '{scratch}'")
-    try:
-        res = build_bucketed_join(spark, sf_dir, db)
-        return spark.createDataFrame(res.collect(), schema=res.schema)
-    finally:
-        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-        shutil.rmtree(scratch, ignore_errors=True)
+    with scratch_database(spark, "bkt_scratch_") as db:
+        return localize(build_bucketed_join(spark, sf_dir, db))
 
 
 # ---------------------------------------------------------------------------
@@ -1641,15 +1618,11 @@ def join_dpp_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     and scanning 2: static pruning can't see through a join, DPP can.
     The fact write repartitions by the partition column first (one
     file per year dir — the same write-amplification guard as
-    sink_partitioned_parquet). Result is re-localized before the
+    sink_partitioned_parquet). The result is localized before the
     scratch dir is deleted.
     """
-    out = Path(tempfile.mkdtemp(prefix="engine_dpp_"))
-    try:
-        res = build_dpp_join(spark, sf_dir, out)
-        return spark.createDataFrame(res.collect(), schema=res.schema)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    with scratch_dir("dpp_") as out:
+        return localize(build_dpp_join(spark, sf_dir, out))
 
 
 # ---------------------------------------------------------------------------
@@ -1777,13 +1750,11 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     selectivity. Result values are identical to the plain join (the
     bloom only discards rows the join would drop) — the oracle IS the
     plain join. Spark resolves the physical plan at action time, so the
-    thresholds stay set while the result materializes and are restored
-    after; the returned frame is the collected result re-localized
-    (rows: one per priority group).
+    result is localized (one row per priority group) while the
+    thresholds are still set; they are restored after.
     """
     with bloom_confs(spark):
-        res = bloom_prefilter_frame(spark, sf_dir)
-        return spark.createDataFrame(res.collect(), schema=res.schema)
+        return localize(bloom_prefilter_frame(spark, sf_dir))
 
 
 @query(

@@ -289,58 +289,22 @@ NEARDUP_BANDS = 8
 NEARDUP_BITS = 16
 
 
-def _embedding_neardup_banded(
-    emb: DataFrame, dim: int, hot_gate: bool = True
-) -> DataFrame:
-    """Banded-LSH pairing for cosine near-dup — the path taken when the
-    corpus exceeds BROADCAST_MAX_VECS and the exact broadcast matmul
-    would materialize the whole table on the driver.
+def embedding_band_rows(emb: DataFrame, dim: int) -> DataFrame:
+    """One row per (vec_id, band): the band's NEARDUP_BITS hyperplane
+    sign bits packed into the long bucket key ``bv``, plus ``abv``, all
+    NEARDUP_BANDS keys of the vector (the first-collision-band guard of
+    :func:`bucket_self_join` reads it).
 
-    NEARDUP_BANDS bands × NEARDUP_BITS hyperplane sign bits packed into
-    one long bucket key per band: candidates are pairs agreeing on some
-    band, verified by exact JVM-side cosine. All shuffles key on
-    (band, bucket) / vec_id — no driver materialization, no all-pairs
-    join, and the bucket keyspace (2^NEARDUP_BITS per band) keeps the
-    self-join quadratic only *within* buckets whose expected occupancy
-    is N/2^bits; buckets above the shared hot-bucket bound
-    (engine.lsh_core.HOT_BUCKET_ROWS) are 2-D-salted AUTOMATICALLY
-    (the gate shared with the MinHash path,
-    engine.lsh_core.hot_bucket_sides). Approximate recall is the documented
-    contract of the scale path (as with llm_lsh_neardup), MEASURED by
-    the oracled emb_banded_recall evaluator (engine/curation.py:
-    recall ≈ 1 in the designed high-similarity regime, ≈ 0 on
-    near-threshold organic pairs); the broadcast path below remains the
-    exact witness at fixture scale.
-
-    The 128 hyperplane dots per vector are ONE numpy
-    (batch × dim)·(dim × 128) matmul per Arrow batch in mapInPandas
-    (the broadcast path's pattern) — the same values the previous
-    128 declarative zip_with folds computed, ~20× faster (measured
-    17.8 s → sub-second on a 500-vector eval corpus) because the fold
-    expressions re-materialized a 64-struct zipped array per plane per
-    row. Summation order differs from a sequential fold only in the
-    last ulp; a sign flip would need |dot| ≈ 1e-13 on O(1)-magnitude
-    dots — the same tolerance every mirrored-oracle dot here already
-    rides on (llm_ann_lsh precedent).
-
-    r14 shape changes (candidate SET and output provably unchanged —
-    optimization guide §2):
-    - The signature stage emits DOC-grain rows (vec_id, abv[8]) and is
-      localCheckpoint'd: the Python matmul runs ONCE instead of once
-      per self-join side (the broadcast build side of a self-join is
-      not a ReusedExchange, so the un-checkpointed form re-ran
-      mapInPandas twice — visible as two MapInPandas nodes in
-      plans/r14/emb_banded_pipeline_before.txt). Band rows explode
-      in-plan from the checkpoint.
-    - FIRST-COLLISION-BAND dedup replaces the candidate `.distinct()`
-      (the lsh_core trick): each band row carries all its band hashes
-      (abv), so the join keeps a pair only in its lowest colliding band
-      — every colliding pair still emitted exactly once, and the
-      candidate-pair-sized shuffle Exchange disappears from the plan.
-    - The exact-cosine verify is pinned OUT of the join condition with
-      nondet_zero (the llm_ops popcount pattern): before, the fold
-      expression sat in the BroadcastHashJoin condition AND the output
-      projection, evaluating the O(dim) dot twice per surviving pair.
+    The NEARDUP_BANDS × NEARDUP_BITS hyperplane dots per vector are ONE
+    numpy (batch × dim)·(dim × planes) matmul per Arrow batch in
+    mapInPandas (the broadcast path's pattern). Summation order differs
+    from a sequential fold only in the last ulp; a sign flip would need
+    |dot| ≈ 1e-13 on O(1)-magnitude dots — the same tolerance every
+    mirrored-oracle dot here already rides on (llm_ann_lsh precedent).
+    The doc-grain signature rows are checkpointed lazily: the first
+    consumer materializes them as part of its own job and the Python
+    matmul runs once, not once per self-join side. Band rows explode
+    in-plan from the checkpoint.
     """
     planes = NEARDUP_BANDS * NEARDUP_BITS
     plane_mat = np.array(
@@ -365,17 +329,51 @@ def _embedding_neardup_banded(
                 {"vec_id": ids, "abv": list(bv)}
             )
 
-    # Doc-grain signature rows, checkpointed lazily: the census action
-    # below is the first consumer and materializes them as part of its
-    # own job (the lsh_core pattern) — the Python matmul runs once.
     sigs = (
         emb.select("vec_id", "embedding")
         .mapInPandas(sig, schema="vec_id long, abv array<long>")
         .localCheckpoint(eager=False)
     )
-    bands = sigs.select(
+    return sigs.select(
         "vec_id", "abv", F.posexplode("abv").alias("band", "bv")
     )
+
+
+def _embedding_neardup_banded(
+    emb: DataFrame, dim: int, hot_gate: bool = True
+) -> DataFrame:
+    """Banded-LSH pairing for cosine near-dup — the path taken when the
+    corpus exceeds BROADCAST_MAX_VECS and the exact broadcast matmul
+    would materialize the whole table on the driver.
+
+    NEARDUP_BANDS bands × NEARDUP_BITS hyperplane sign bits packed into
+    one long bucket key per band: candidates are pairs agreeing on some
+    band, verified by exact JVM-side cosine. All shuffles key on
+    (band, bucket) / vec_id — no driver materialization, no all-pairs
+    join, and the bucket keyspace (2^NEARDUP_BITS per band) keeps the
+    self-join quadratic only *within* buckets whose expected occupancy
+    is N/2^bits; buckets above the shared hot-bucket bound
+    (engine.lsh_core.HOT_BUCKET_ROWS) are 2-D-salted AUTOMATICALLY
+    (the gate shared with the MinHash path,
+    engine.lsh_core.hot_bucket_sides). Approximate recall is the documented
+    contract of the scale path (as with llm_lsh_neardup), MEASURED by
+    the oracled emb_banded_recall evaluator (engine/curation.py:
+    recall ≈ 1 in the designed high-similarity regime, ≈ 0 on
+    near-threshold organic pairs); the broadcast path below remains the
+    exact witness at fixture scale.
+
+    The band rows come from :func:`embedding_band_rows`. Then:
+    - FIRST-COLLISION-BAND dedup instead of a candidate `.distinct()`
+      (the lsh_core trick): each band row carries all its band hashes
+      (abv), so the join keeps a pair only in its lowest colliding band
+      — every colliding pair emitted exactly once, with no
+      candidate-pair-sized shuffle Exchange.
+    - The exact-cosine verify is pinned OUT of the join condition with
+      nondet_zero (the llm_ops popcount pattern): otherwise the fold
+      expression sits in the BroadcastHashJoin condition AND the output
+      projection, evaluating the O(dim) dot twice per surviving pair.
+    """
+    bands = embedding_band_rows(emb, dim)
     # ``hot_gate=False`` skips the hot-bucket census and its job
     # (measured +0.43 s locally). The gate never changes the candidate
     # set, only how its pair space is split into tasks, so a caller whose

@@ -35,27 +35,24 @@ def get_spark(
     app_name: str = "pyspark-analytics-engine",
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    # Disable numpy's MADV_HUGEPAGE on large allocations (overridable by
-    # pre-setting the var). Forensics of the r9-r12 "heap tax": with THP
-    # in madvise mode, numpy advises 2 MB huge pages for arrays ≥ 4 MB,
-    # and once a long session's churn has fragmented physical memory,
-    # each first-touch fault can enter multi-second DIRECT COMPACTION —
-    # measured in-worker: a 32 MB elementwise op at 4.8-7.8 s of pure
-    # kernel time (stime, ~16 faults per 32 MB = 2 MB pages) right after
+    # NUMPY_MADVISE_HUGEPAGE=0 (engine/__init__ sets the default before
+    # any operator module imports numpy; overridable by pre-setting the
+    # var) disables numpy's MADV_HUGEPAGE on large allocations.
+    # Forensics of the "heap tax": with THP in madvise mode, numpy
+    # advises 2 MB huge pages for arrays ≥ 4 MB, and once a long
+    # session's churn has fragmented physical memory, each first-touch
+    # fault can enter multi-second DIRECT COMPACTION — measured
+    # in-worker: a 32 MB elementwise op at 4.8-7.8 s of pure kernel
+    # time (stime, ~16 faults per 32 MB = 2 MB pages) right after
     # heavy queries, 0.02 s once the allocator reuses the arena. This —
     # not JVM heap, not the former driver-side broadcast — was the
     # llm_embedding_neardup in-bench swing (r9 1.29 s -> r11 6.8 s with
     # zero code change; 0.44-0.62 s under the same churn with this flag).
-    # The env must be set BEFORE the JVM launches: local-mode Python
-    # workers inherit it driver -> JVM -> daemon -> fork. The executorEnv
-    # conf below carries the same flag to real-cluster executors, where
+    # The env is set BEFORE the JVM launches: local-mode Python workers
+    # inherit it driver -> JVM -> daemon -> fork. The executorEnv conf
+    # below carries the same flag to real-cluster executors, where
     # THP-compaction stalls in Python workers are a known production
     # failure mode; hosts that reserve hugepages can override.
-    # (engine/__init__ sets the same default BEFORE the operator-module
-    # imports pull in numpy, so the DRIVER's numpy honors it too —
-    # ADVICE r12; this setdefault stays as the belt for callers that
-    # somehow reach get_spark without importing the package first.)
-    os.environ.setdefault("NUMPY_MADVISE_HUGEPAGE", "0")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
         # Sized to DATA, not cores: at the fixture scales every shuffle is
@@ -79,7 +76,7 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
         )
-        # Cluster-mode twin of the driver-env flag set above (local-mode
+        # Cluster-mode twin of the driver-env flag (local-mode
         # workers inherit the driver env; separate executors need it
         # injected). Same value on purpose: one knob, one override.
         .config(

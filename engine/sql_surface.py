@@ -6,16 +6,16 @@ SQL-surface queries run the same SQL text on both engines (``spark.sql``
 over temp views, DuckDB in the oracle), with only the portable-round
 rewrite applied to each side.
 
-Writes go to per-call temporary directories or uuid-named scratch
-tables, and are read back and verified inside the query.
+Writes go to per-call scratch directories and databases
+(``engine.roundtrip``), and are read back and verified inside the
+query; each returns a localized result, so nothing it wrote outlives
+the call.
 """
 
 from __future__ import annotations
 
-import shutil
-import tempfile
+import os
 import uuid
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -30,7 +30,13 @@ from engine.det import (
     pround,
 )
 from engine.registry import query
-from engine.roundtrip import SCRATCH, roundtrip_verified, roundtrip_verified_big
+from engine.roundtrip import (
+    localize,
+    roundtrip_verified,
+    roundtrip_verified_big,
+    scratch_database,
+    scratch_dir,
+)
 from engine.session import load
 
 
@@ -70,12 +76,10 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Footer merging is a one-time planning cost (driver reads N footers,
     not data); the scan itself stays a single pushdown-capable parquet
-    source. Result is re-localized before the scratch dir is deleted
-    (sink_partitioned_parquet lifecycle).
+    source. The result is localized before the scratch dir is deleted.
     """
     d = load(spark, sf_dir, "documents")
-    out = Path(tempfile.mkdtemp(prefix="engine_schemev_"))
-    try:
+    with scratch_dir("schemev_") as out:
         (
             d.filter(F.col("doc_id") < SCHEMA_V1_MAX_ID)
             .select("doc_id", "lang")
@@ -98,9 +102,7 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("n_v1_rows"),
             F.sum(F.coalesce("n_chars", F.lit(0))).alias("sum_chars"),
         )
-        return spark.createDataFrame(res.collect(), schema=res.schema)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+        return localize(res)
 
 
 COMPACT_SMALL_FILES = 64
@@ -193,8 +195,7 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit deterministic at every SF.
     """
     e = load(spark, sf_dir, "events")
-    tmp = Path(tempfile.mkdtemp(prefix="compact_"))
-    try:
+    with scratch_dir("compact_") as tmp:
         frag_dir, comp_dir = tmp / "frag", tmp / "compact"
         e.repartition(COMPACT_SMALL_FILES).write.mode("overwrite").parquet(
             str(frag_dir)
@@ -217,8 +218,6 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         n1, s1 = checksum(comp)
         ok = int(n0 == n1 and s0 == s1)
         out = [(files_before, files_after, n1, ok)]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(
         out, "files_before int, files_after int, n_rows bigint, checksum_ok int"
     )
@@ -487,9 +486,7 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     read back with an EXPLICIT schema (never infer on re-read), then
     aggregated; the oracle aggregates the original table, so any
     serialization loss (type mangling, escaping, dropped rows) breaks
-    the hash — a STRONGER check than the rows-only CSV/JSON roundtrips
-    (their pattern predates oracle-able roundtrips;
-    stream_foreach_batch_merge proved side-effecting ops can hash).
+    the hash.
 
     Cents are computed AFTER the roundtrip from the re-parsed doubles —
     shortest-repr double serialization roundtrips exactly, and the
@@ -498,8 +495,7 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    tmp = Path(tempfile.mkdtemp(prefix="xmlrt_"))
-    try:
+    with scratch_dir("xmlrt_") as tmp:
         (
             e.write.format("xml")
             .option("rowTag", "event")
@@ -524,12 +520,7 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("cents").cast("bigint"),
             )
         )
-        rows = out.collect()  # materialize before the tmp dir vanishes
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "event_type string, n bigint, cents bigint"
-    )
+        return localize(out)
 
 
 # ---------------------------------------------------------------------------
@@ -563,9 +554,8 @@ def sink_codec_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = e.agg(
         F.count("*").alias("n"), F.sum(cents_col(F.col("value"))).alias("s")
     ).collect()[0]
-    tmp = Path(tempfile.mkdtemp(prefix="codec_"))
     rows = []
-    try:
+    with scratch_dir("codec_") as tmp:
         for codec in CODECS:
             path = tmp / codec
             e.write.option("compression", codec).mode("overwrite").parquet(
@@ -577,8 +567,6 @@ def sink_codec_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).collect()[0]
             ok = int(chk["n"] == base["n"] and chk["s"] == base["s"])
             rows.append((codec, chk["n"], ok))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(
         rows, "codec string, n_rows bigint, roundtrip_ok int"
     )
@@ -651,14 +639,11 @@ def maint_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     job exactly like compaction.
 
     The audit row pins rowCount == exact COUNT(*) (the correctness of
-    the stats pipeline) and sizeInBytes > 0 (presence). Scratch
-    database dropped after collection — same catalog hygiene as
-    join_bucketed_colocated.
+    the stats pipeline) and sizeInBytes > 0 (presence). The scratch
+    database and its directory are dropped after collection.
     """
     e = load(spark, sf_dir, "events")
-    db = f"stats_scratch_{uuid.uuid4().hex[:8]}"
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
-    try:
+    with scratch_database(spark, "stats_scratch_") as db:
         e.write.mode("overwrite").format("parquet").saveAsTable(
             f"{db}.events_t"
         )
@@ -672,8 +657,6 @@ def maint_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         size_bytes = int(parts[0])
         row_count = int(parts[2])
         exact = e.count()
-    finally:
-        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
     rows = [
         ("rowCount", row_count, int(row_count == exact)),
         ("sizeInBytes_positive", 1, int(size_bytes > 0)),
@@ -809,9 +792,9 @@ def maint_cache_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     on.
 
     Cached or not, results must be identical — that is exactly what the
-    oracle checks. UNCACHE in a finally block keeps the shared session
-    clean for the other 246 queries (catalog hygiene, the
-    join_bucketed_colocated rule).
+    oracle checks. The result is localized, then the finally block
+    uncaches the table and drops both views, so the session's catalog
+    and cache are left as they were found.
     """
     e = load(spark, sf_dir, "events").select(
         "event_type", cents_col(F.col("value")).alias("c")
@@ -824,11 +807,11 @@ def maint_cache_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("bigint").alias("n"),
             F.sum("c").cast("bigint").alias("cents"),
         )
-        rows = out.collect()
+        return localize(out)
     finally:
         spark.sql(f"UNCACHE TABLE IF EXISTS {name}_c")
+        spark.catalog.dropTempView(f"{name}_c")
         spark.catalog.dropTempView(name)
-    return spark.createDataFrame(rows, "event_type string, n bigint, cents bigint")
 
 
 PRUNE_YEAR = 1996
@@ -912,8 +895,7 @@ def source_partitioned_read_prune(spark: SparkSession, sf_dir: str) -> DataFrame
     # (ADVICE r4). Short-circuit with the declared result schema.
     if o.isEmpty():
         return spark.createDataFrame([], "yr int, n bigint, cents bigint")
-    tmp = Path(tempfile.mkdtemp(prefix="prune_"))
-    try:
+    with scratch_dir("prune_") as tmp:
         (
             o.withColumn("yr", F.year("o_orderdate").cast("int"))
             .write.mode("overwrite")
@@ -935,10 +917,7 @@ def source_partitioned_read_prune(spark: SparkSession, sf_dir: str) -> DataFrame
                 .alias("cents"),
             )
         )
-        rows = out.collect()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(rows, "yr int, n bigint, cents bigint")
+        return localize(out)
 
 
 # ---------------------------------------------------------------------------
@@ -1166,14 +1145,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     full connector loop: schema → partitions → parallel read AND
     partitioned write → commit. The audit row asserts 1..4 files (one
     per non-coalesced partition) plus exact count/checksum equality.
-    Scratch dir removed afterwards.
     """
-    import glob
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceWriter,
@@ -1208,19 +1180,18 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = e.agg(
         F.count("*").alias("n"), F.sum("c").alias("s")
     ).collect()[0]
-    tmp = tempfile.mkdtemp(prefix="pysink_")
-    try:
+    with scratch_dir("pysink_") as tmp:
         n_parts = 4
         (
             e.repartition(n_parts)
             .write.format("engine_textsink")
-            .option("path", tmp)
+            .option("path", str(tmp))
             .mode("append")
             .save()
         )
-        files = glob.glob(os.path.join(tmp, "part-*.csv"))
+        files = list(tmp.glob("part-*.csv"))
         back = (
-            spark.read.schema("event_id long, c long").csv(tmp)
+            spark.read.schema("event_id long, c long").csv(str(tmp))
             if files
             else spark.createDataFrame([], "event_id long, c long")
         )
@@ -1243,8 +1214,6 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         ]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(
         rows, "n_rows bigint, files_match_partitions int, checksum_ok int"
     )
@@ -1561,12 +1530,12 @@ def source_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             pround(F.sum("c_acctbal"), 2).alias("sum_acctbal"),
         )
     )
-    out = SCRATCH / f"avro_{uuid.uuid4().hex}"
-    fmt = _write_roundtrip_format(agg, str(out))
-    back = spark.read.format(fmt).load(str(out)).select(
-        "c_nationkey", "n_customers", "sum_acctbal"
-    )
-    return roundtrip_verified(agg, back).withColumn("format", F.lit(fmt))
+    with scratch_dir("avro_") as out:
+        fmt = _write_roundtrip_format(agg, str(out))
+        back = spark.read.format(fmt).load(str(out)).select(
+            "c_nationkey", "n_customers", "sum_acctbal"
+        )
+        return roundtrip_verified(agg, back).withColumn("format", F.lit(fmt))
 
 
 @query(
@@ -1585,11 +1554,11 @@ def source_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def source_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Line-oriented text write→read roundtrip (SURVEY.md §2.A family).
 
-    Oracled since r6 (was rows-only): the per-first-char audit of the
-    read-back lines must hash-match DuckDB's same aggregate on the
-    source rows under the identical representability filter — both
-    engines count Unicode code points (Spark ``length`` ≡ DuckDB
-    ``LENGTH``), so the compare verifies the UTF-8 write→read chain.
+    The per-first-char audit of the read-back lines must hash-match
+    DuckDB's same aggregate on the source rows under the identical
+    representability filter — both engines count Unicode code points
+    (Spark ``length`` ≡ DuckDB ``LENGTH``), so the compare verifies the
+    UTF-8 write→read chain.
 
     ``spark.read.text`` is the raw-corpus ingestion path an LLM pipeline
     starts from (one line = one record, schema = a single ``value``
@@ -1599,7 +1568,6 @@ def source_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     line counts + total chars) keeps the driver-side result small and
     stable.
     """
-    out = SCRATCH / f"text_{uuid.uuid4().hex}"
     # The line-oriented text format CANNOT represent NULL (serializes
     # as an empty line, reads back as "") or EMBEDDED NEWLINES (one
     # line = one record by definition: a 2-line text reads back as two
@@ -1616,7 +1584,7 @@ def source_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("text").alias("value"))
     )
-    try:
+    with scratch_dir("text_") as out:
         lines.write.mode("overwrite").text(str(out))
         back = spark.read.text(str(out))
         audit = (
@@ -1628,9 +1596,4 @@ def source_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("first_char")
         )
-        # Force before the scratch dir is removed: the plan reads `out`.
-        return audit.sparkSession.createDataFrame(
-            audit.collect(), schema=audit.schema
-        )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+        return localize(audit)

@@ -13,9 +13,6 @@ without it, 100 TB of late-arriving events would pin unbounded state.
 
 from __future__ import annotations
 
-import shutil
-import uuid
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -30,7 +27,7 @@ from engine.det import (
     pround,
 )
 from engine.registry import query
-from engine.roundtrip import SCRATCH
+from engine.roundtrip import run_available_now, scratch_dir
 from engine.session import load
 from engine.stream_source import events_stream
 
@@ -167,14 +164,13 @@ def stream_watermark_design(spark: SparkSession, sf_dir: str) -> DataFrame:
     evicted; on an unbounded 100 TB stream this is what keeps state-store
     size O(active windows), not O(history).
 
-    Oracled since r7 (upgrading the r3 rows-only row): the execution is
-    deterministic because (a) the fixture is one parquet file, so the
-    whole replay is a single micro-batch in which the watermark is
-    still at epoch — no row can be late — and (b) COMPLETE output mode
-    emits every window regardless of eviction. The final sink therefore
-    hash-equals the batch 1-h × event_type aggregate, which IS
-    SQL-expressible. The late-drop/eviction behaviors that a
-    single-batch replay cannot show are pinned separately with
+    The execution is deterministic because (a) the fixture is one
+    parquet file, so the whole replay is a single micro-batch in which
+    the watermark is still at epoch — no row can be late — and (b)
+    COMPLETE output mode emits every window regardless of eviction. The
+    final sink therefore hash-equals the batch 1-h × event_type
+    aggregate, which IS SQL-expressible. The late-drop/eviction
+    behaviors that a single-batch replay cannot show are pinned separately with
     multi-batch controlled sources in tests/test_streaming.py.
     """
     ev = events_stream(spark, sf_dir)
@@ -193,24 +189,13 @@ def stream_watermark_design(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    sink_name = f"wm_{uuid.uuid4().hex[:8]}"
-    ckpt = SCRATCH / f"ckpt_{sink_name}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink_name)
-        .outputMode("complete")
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
+    return run_available_now(
+        spark,
+        agg.writeStream.format("memory").outputMode("complete"),
+        "wm_scratch_",
+        120,
+        spark.table,
     )
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    result = spark.table(sink_name)
-    # materialize before the memory sink is dropped by later queries
-    return spark.createDataFrame(result.collect(), schema=result.schema)
 
 
 def user_state_agg(ev: DataFrame) -> DataFrame:
@@ -564,9 +549,9 @@ def stream_foreach_batch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     file replay (availableNow) aggregates 6-hour tumbling windows and
     each micro-batch MERGES into a keyed store by (window, event_type)
     overwrite — the idempotent exactly-once pattern used when the sink
-    is not a transactional table format. The merged result is returned
-    as the query output, so the driver's oracle hash-checks the
-    *post-merge* state against the plain batch aggregate: replay +
+    is not a transactional table format. The merged store is returned,
+    localized, as the query output, so the driver's oracle hash-checks
+    the *post-merge* state against the plain batch aggregate: replay +
     merge must equal one batch pass.
 
     Scale shape: the streaming aggregate carries watermark-bounded
@@ -583,52 +568,6 @@ def stream_foreach_batch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost O(buckets), not O(keys) (a full-key dir layout paid ~20 ms ×
     600 key-dirs per batch here).
     """
-    run = uuid.uuid4().hex[:8]
-    ckpt = SCRATCH / f"fbm_{run}"
-    store = SCRATCH / f"fbm_store_{run}"
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        new = batch_df.select(
-            F.col("window").start.alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        ).withColumn(
-            "bkt",
-            F.pmod(F.hash("window_start", "event_type"), F.lit(FB_BUCKETS)),
-        )
-        touched = [r["bkt"] for r in new.select("bkt").distinct().collect()]
-        # An empty micro-batch must not touch the store: writing it
-        # would create a parquet dir with no partition files, and the
-        # NEXT batch's schema-inferring read of the store would abort
-        # the stream (ADVICE r4 — latent here because file replay
-        # batches are non-empty, real on sources that emit an empty
-        # batch 0).
-        if not touched:
-            return
-        if store.exists():
-            old = (
-                spark.read.parquet(str(store))
-                # Partition pruning: only the touched buckets are read.
-                .filter(F.col("bkt").isin(touched))
-                .join(new, ["window_start", "event_type"], "left_anti")
-            )
-            new = new.unionByName(old)
-        # Materialize before overwriting the dirs the plan reads from,
-        # then write with one task per touched bucket: repartition on
-        # the partition key keeps the writer parallel when the key
-        # space is data-sized (VERDICT r4 nit — coalesce(1) serialized
-        # the sink through a single task) while still emitting one file
-        # per bucket dir, so the committer cost stays O(buckets).
-        (
-            new.localCheckpoint(eager=True)
-            .repartition("bkt")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bkt")
-            .parquet(str(store))
-        )
-
     agg = (
         events_stream(spark, sf_dir)
         .withWatermark("ts", "1 hour")
@@ -641,38 +580,76 @@ def stream_foreach_batch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             exact_sum(cents_col(F.col("value")), 100).alias("sum_value"),
         )
     )
-    q = (
-        agg.writeStream.foreachBatch(merge_batch)
-        .outputMode("update")
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        # awaitTermination returns False on timeout — a partially merged
-        # store is a silently wrong answer, so fail loudly instead.
-        if not q.awaitTermination(180):
-            raise TimeoutError(
-                "stream_foreach_batch_merge: replay did not complete"
-                " within 180s"
-            )
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
+    # The checkpoint and the store are scratch dirs; the merged store is
+    # localized before its dir is removed.
+    with scratch_dir("fbm_store_") as tmp:
+        store = tmp / "store"
 
-    # The store dir stays (uuid-named scratch, same lifecycle as the
-    # csv/json/orc roundtrip sinks) so the returned plan reads it lazily.
-    if not store.exists():
-        # Every micro-batch was empty (empty source): the merged state
-        # is the empty keyed store, not a read error.
-        return spark.createDataFrame(
-            [],
-            "window_start timestamp, event_type string,"
-            " n_events bigint, sum_value double",
+        def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+            new = batch_df.select(
+                F.col("window").start.alias("window_start"),
+                "event_type",
+                "n_events",
+                "sum_value",
+            ).withColumn(
+                "bkt",
+                F.pmod(
+                    F.hash("window_start", "event_type"), F.lit(FB_BUCKETS)
+                ),
+            )
+            touched = [
+                r["bkt"] for r in new.select("bkt").distinct().collect()
+            ]
+            # An empty micro-batch must not touch the store: writing it
+            # would create a parquet dir with no partition files, and the
+            # NEXT batch's schema-inferring read of the store would abort
+            # the stream (file replay batches are non-empty; other
+            # sources can emit an empty batch 0).
+            if not touched:
+                return
+            if store.exists():
+                old = (
+                    spark.read.parquet(str(store))
+                    # Partition pruning: only the touched buckets are read.
+                    .filter(F.col("bkt").isin(touched))
+                    .join(new, ["window_start", "event_type"], "left_anti")
+                )
+                new = new.unionByName(old)
+            # Materialize before overwriting the dirs the plan reads from,
+            # then write with one task per touched bucket: repartition on
+            # the partition key keeps the writer parallel when the key
+            # space is data-sized (coalesce(1) would serialize the sink
+            # through a single task) while still emitting one file per
+            # bucket dir, so the committer cost stays O(buckets).
+            (
+                new.localCheckpoint(eager=True)
+                .repartition("bkt")
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("bkt")
+                .parquet(str(store))
+            )
+
+        def merged(_name: str) -> DataFrame:
+            if not store.exists():
+                # Every micro-batch was empty (empty source): the merged
+                # state is the empty keyed store, not a read error.
+                return spark.createDataFrame(
+                    [],
+                    "window_start timestamp, event_type string,"
+                    " n_events bigint, sum_value double",
+                )
+            return spark.read.parquet(str(store)).select(
+                "window_start",
+                "event_type",
+                "n_events",
+                pround(F.col("sum_value"), 2).alias("sum_value"),
+            )
+
+        return run_available_now(
+            spark,
+            agg.writeStream.foreachBatch(merge_batch).outputMode("update"),
+            "fbm_ckpt_",
+            180,
+            merged,
         )
-    return spark.read.parquet(str(store)).select(
-        "window_start",
-        "event_type",
-        "n_events",
-        pround(F.col("sum_value"), 2).alias("sum_value"),
-    )

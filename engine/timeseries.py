@@ -28,6 +28,53 @@ from engine.registry import query
 from engine.session import load
 
 
+# ---------------------------------------------------------------------------
+# Day-grain rollups shared by the ts_/events_ queries (and win_nth_value)
+# ---------------------------------------------------------------------------
+
+
+def type_day_cents(e: DataFrame) -> DataFrame:
+    """Per-(event_type, day) exact integer-cent value sum ``v`` — the
+    day-grain series the per-type ts_ queries score."""
+    return (
+        e.select(
+            "event_type",
+            day_col().alias("day"),
+            cents_col(F.col("value")).alias("c"),
+        )
+        .groupBy("event_type", "day")
+        .agg(F.sum("c").alias("v"))
+    )
+
+
+def user_day_close(e: DataFrame) -> DataFrame:
+    """Per-(user_id, day) deterministic daily close ``close_c`` (integer
+    cents): the lexicographic struct max over the UNIQUE (ts, event_id)
+    prefix. max_by(c, ts) alone is arbitrary among tied timestamps and
+    engine-divergent (caught by the tied-timestamps exact sweep,
+    tests/test_tied_timestamps.py)."""
+    return (
+        e.select(
+            "user_id",
+            day_col().alias("day"),
+            cents_col(F.col("value")).alias("c"),
+            "ts",
+            "event_id",
+        )
+        .groupBy("user_id", "day")
+        .agg(
+            F.max(F.struct("ts", "event_id", "c"))
+            .getField("c")
+            .alias("close_c")
+        )
+    )
+
+
+def user_days(e: DataFrame) -> DataFrame:
+    """Distinct (user_id, day) activity rows."""
+    return e.select("user_id", day_col().alias("day")).distinct()
+
+
 RFM_R_DAYS = (1, 3)  # recency <= d3 -> 3, <= d2 -> 2, else 1
 RFM_F_COUNTS = (16, 10)
 RFM_M_VALUES = (700.0, 400.0)
@@ -768,26 +815,7 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .repartition("user_id")
     )
-    d = (
-        e.select(
-            "user_id",
-            day_col().alias("day"),
-            cents_col(F.col("value")).alias("c"),
-            "ts",
-            "event_id",
-        )
-        .groupBy("user_id", "day")
-        # Deterministic daily close: lexicographic struct max over the
-        # UNIQUE (ts, event_id) prefix — max_by(c, ts) alone is
-        # arbitrary among tied timestamps and engine-divergent (caught
-        # by the tied-timestamps exact sweep, tests/test_tied_timestamps.py).
-        .agg(
-            F.max(F.struct("ts", "event_id", "c"))
-            .getField("c")
-            .alias("close_c")
-        )
-    )
-    return interpolate_core(d)
+    return interpolate_core(user_day_close(e))
 
 
 def interpolate_core(d: DataFrame) -> DataFrame:
@@ -1058,26 +1086,7 @@ def ts_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     the distributed form.
     """
     e = load(spark, sf_dir, "events").repartition("user_id")
-    d = (
-        e.select(
-            "user_id",
-            day_col().alias("day"),
-            cents_col(F.col("value")).alias("c"),
-            "ts",
-            "event_id",
-        )
-        .groupBy("user_id", "day")
-        # Deterministic daily close: lexicographic struct max over the
-        # UNIQUE (ts, event_id) prefix — max_by(c, ts) alone is
-        # arbitrary among tied timestamps and engine-divergent (caught
-        # by the tied-timestamps exact sweep, tests/test_tied_timestamps.py).
-        .agg(
-            F.max(F.struct("ts", "event_id", "c"))
-            .getField("c")
-            .alias("close_c")
-        )
-    )
-    return ewma_core(d)
+    return ewma_core(user_day_close(e))
 
 
 def ewma_core(d: DataFrame) -> DataFrame:
@@ -1438,13 +1447,7 @@ def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     the raw fact) on day+k; both sides come off one event_type×day
     aggregation.
     """
-    e = load(spark, sf_dir, "events")
-    d = (
-        e.select("event_type", day_col().alias("day"),
-                 cents_col(F.col("value")).alias("c"))
-        .groupBy("event_type", "day")
-        .agg(F.sum("c").alias("v"))
-    )
+    d = type_day_cents(load(spark, sf_dir, "events"))
     return autocorr_core(d, AUTOCORR_LAGS)
 
 
@@ -1543,14 +1546,7 @@ def ts_cusum_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     the max) are bit-stable. One day-grain rollup, a 1-row-per-type
     totals broadcast, one ordered window per type.
     """
-    e = load(spark, sf_dir, "events")
-    d = (
-        e.select("event_type", day_col().alias("day"),
-                 cents_col(F.col("value")).alias("c"))
-        .groupBy("event_type", "day")
-        .agg(F.sum("c").alias("v"))
-    )
-    return cusum_core(d)
+    return cusum_core(type_day_cents(load(spark, sf_dir, "events")))
 
 
 def cusum_core(d: DataFrame) -> DataFrame:
@@ -1696,16 +1692,7 @@ def ts_peak_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller — the same trick on both engines). One day-grain rollup,
     one window pass, one reduce.
     """
-    e = load(spark, sf_dir, "events")
-    d = (
-        e.select(
-            "event_type",
-            day_col().alias("day"),
-            cents_col(F.col("value")).alias("c"),
-        )
-        .groupBy("event_type", "day")
-        .agg(F.sum("c").alias("v"))
-    )
+    d = type_day_cents(load(spark, sf_dir, "events"))
     w = W.partitionBy("event_type").orderBy("day")
     l = d.select(
         "event_type",
@@ -1769,13 +1756,7 @@ def events_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     # while SQL equality joins match none of them (caught by the
     # NULL-join-key exact sweep, tests/test_null_inputs.py).
     e = load(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
-    ud = (
-        e.select(
-            "user_id",
-            day_col().alias("day"),
-        )
-        .distinct()
-    )
+    ud = user_days(e)
     d0 = F.min("day").over(W.partitionBy("user_id"))
     flagged = ud.select(
         "day", (F.col("day") == d0).cast("int").alias("is_new")
@@ -1838,14 +1819,7 @@ def events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     # while SQL equality joins match none of them (caught by the
     # NULL-join-key exact sweep, tests/test_null_inputs.py).
     e = load(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
-    ud = (
-        e.select(
-            "user_id",
-            day_col().alias("day"),
-        )
-        .distinct()
-    )
-    return dau_wau_core(ud)
+    return dau_wau_core(user_days(e))
 
 
 def dau_wau_core(ud: DataFrame) -> DataFrame:
@@ -2004,17 +1978,7 @@ def ts_naive_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     One day-grain rollup, one lag window, one reduce — all on the same
     event_type partitioning.
     """
-    e = load(spark, sf_dir, "events")
-    c = cents_col(F.col("value"))
-    d = (
-        e.select(
-            "event_type",
-            day_col().alias("day"),
-            c.alias("c"),
-        )
-        .groupBy("event_type", "day")
-        .agg(F.sum("c").alias("v"))
-    )
+    d = type_day_cents(load(spark, sf_dir, "events"))
     w = W.partitionBy("event_type").orderBy("day")
     l = d.select(
         "event_type", "day", "v", F.lag("v").over(w).alias("yhat")
@@ -2082,15 +2046,7 @@ def events_active_streak_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     (win_gap_islands applies the same key to value-gap islands; this
     is the calendar-streak application).
     """
-    e = load(spark, sf_dir, "events")
-    ud = (
-        e.select(
-            "user_id",
-            day_col().alias("day"),
-        )
-        .distinct()
-        .repartition("user_id")
-    )
+    ud = user_days(load(spark, sf_dir, "events")).repartition("user_id")
     return max_streak_core(ud)
 
 
@@ -2182,18 +2138,7 @@ def ts_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     variance) emit NULL z / no flag on both engines. One day-grain
     rollup, one window pass per type.
     """
-    e = load(spark, sf_dir, "events")
-    c = cents_col(F.col("value"))
-    d = (
-        e.select(
-            "event_type",
-            day_col().alias("day"),
-            c.alias("c"),
-        )
-        .groupBy("event_type", "day")
-        .agg(F.sum("c").alias("v"))
-    )
-    return rolling_z_core(d)
+    return rolling_z_core(type_day_cents(load(spark, sf_dir, "events")))
 
 
 def rolling_z_core(d: DataFrame) -> DataFrame:

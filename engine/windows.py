@@ -18,12 +18,12 @@ from engine.det import (
     _DAY_SQL,
     cents_col,
     cents_sql,
-    day_col,
     exact_sum,
     pround,
 )
 from engine.registry import query
 from engine.session import load
+from engine.timeseries import user_day_close
 
 
 @query(
@@ -655,26 +655,7 @@ def win_nth_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange shared with the day-grain rollup, single window pass for
     both ordinals.
     """
-    e = load(spark, sf_dir, "events").repartition("user_id")
-    d = (
-        e.select(
-            "user_id",
-            day_col().alias("day"),
-            cents_col(F.col("value")).alias("c"),
-            "ts",
-            "event_id",
-        )
-        .groupBy("user_id", "day")
-        # Deterministic daily close: lexicographic struct max over the
-        # UNIQUE (ts, event_id) prefix — max_by(c, ts) alone is
-        # arbitrary among tied timestamps and engine-divergent (caught
-        # by the tied-timestamps exact sweep, tests/test_tied_timestamps.py).
-        .agg(
-            F.max(F.struct("ts", "event_id", "c"))
-            .getField("c")
-            .alias("close_c")
-        )
-    )
+    d = user_day_close(load(spark, sf_dir, "events").repartition("user_id"))
     w = (
         W.partitionBy("user_id")
         .orderBy("day")

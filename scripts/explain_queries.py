@@ -17,10 +17,10 @@ timing work.
 --eager also records, in build order, the formatted plan of every
 ``localCheckpoint(eager=True)``, ``collect``, ``count``, ``first`` and
 ``isEmpty`` the build runs, and masks the per-session numbers
-(expression ``#id``, ``plan_id``, RDD ids, ``observe()`` UUIDs), the
-checkout root (``ROOT``) and per-call scratch names (temp dirs,
-uuid-suffixed tables), so two captures of the same code, also from two
-checkouts, compare with one ``diff -r``.
+(expression ``#id``, ``plan_id``, RDD ids, ``observe()`` UUIDs) and
+per-call scratch names (temp dirs, the catalog objects named after
+them, uuid-suffixed views), so two captures of the same code, also
+from two checkouts, compare with one ``diff -r``.
 """
 
 from __future__ import annotations
@@ -44,16 +44,23 @@ from engine.session import get_spark  # noqa: E402
 _EAGER_ACTIONS = ("localCheckpoint", "collect", "count", "first", "isEmpty")
 
 _MASKS = (
-    (re.compile(re.escape(_ROOT) + r"(?![\w.-])"), "ROOT"),
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
-    (re.compile(r"\[\d+\] at "), "[N] at "),
+    # JVM call site of a py4j-created RDD: it reads <unknown> instead of
+    # NativeMethodAccessorImpl.java once the JVM inflates that reflective
+    # call, which depends on how often it ran before, not on the plan
+    (
+        re.compile(r"(?<= at )(?:NativeMethodAccessorImpl\.java|<unknown>):0"),
+        "JVM:0",
+    ),
     (
         re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"),
         "UUID",
     ),
-    # per-call scratch names: uuid4().hex suffixes and mkdtemp dirs
+    # per-call scratch names: catalog objects named after their scratch
+    # dir (engine.roundtrip), uuid4().hex suffixes, scratch dirs
+    (re.compile(r"(?<=_scratch_)[a-z0-9_]{8}(?!\w)"), "X"),
     (re.compile(r"(?<=_)(?:[0-9a-f]{32}|[0-9a-f]{8})(?![0-9a-z])"), "HEX"),
     (re.compile(re.escape(tempfile.gettempdir()) + r"/[^/\s\],]+"), "TMPDIR/X"),
 )

@@ -176,6 +176,7 @@ def test_embedding_hot_bucket_gate_preserves_pairs_and_bounds_tasks(
         NEARDUP_BANDS,
         _emb_dim,
         _embedding_neardup_banded,
+        embedding_band_rows,
     )
     from pyspark.sql import functions as F
 
@@ -199,27 +200,9 @@ def test_embedding_hot_bucket_gate_preserves_pairs_and_bounds_tasks(
     assert gated == ungated  # bit-identical with the gate TRIPPED
 
     # The divert itself: the sides the gated branch joins, from the
-    # engine's own gate, and the per-sub-bucket pair counts.
-    import numpy as np
-    from engine.scale_ops import NEARDUP_BITS, _plane_weight
-
-    planes = NEARDUP_BANDS * NEARDUP_BITS
-    plane_mat = np.array(
-        [[_plane_weight(k, d) for d in range(dim)] for k in range(planes)]
-    )
-    rows = hot_emb.collect()
-    band_rows = []
-    for r in rows:
-        bits = np.asarray(r.embedding) @ plane_mat.T > 0
-        for b in range(NEARDUP_BANDS):
-            seg = bits[b * NEARDUP_BITS : (b + 1) * NEARDUP_BITS]
-            bv = int(
-                (seg.astype(np.int64) << np.arange(NEARDUP_BITS)).sum()
-            )
-            band_rows.append((r.vec_id, b, bv))
-    bands = spark.createDataFrame(
-        band_rows, "vec_id long, band int, bv long"
-    )
+    # engine's own band rows and gate, and the per-sub-bucket pair
+    # counts.
+    bands = embedding_band_rows(hot_emb, dim)
     n_hot = (
         bands.groupBy("band", "bv")
         .count()

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 
 import pytest
 
@@ -299,34 +300,30 @@ def test_no_scale_red_flags_any_query(spark):
     partition) windows. Whitelists are justified inline — every entry is
     either bounded metadata or a deliberately-broadcast tiny side."""
     side_effecting = {
+        # Building these runs their writes, read-backs and audit
+        # collects in scratch dirs or databases (engine.roundtrip), and
+        # the returned frame is the localized result.
         "source_csv_roundtrip",
         "source_json_roundtrip",
         "sink_partitioned_parquet",
-        "stream_watermark_design",
-        # runs a full streaming replay + keyed-overwrite merge before
-        # returning a read of the merged store
-        "stream_foreach_batch_merge",
-        # writes + compacts a scratch copy (and collects the audit
-        # checksums) before returning its 1-row report
         "sink_compaction",
-        # XML write→read roundtrip materialized before the scratch dir
-        # is removed (engine/sql_surface.py)
         "source_xml_roundtrip",
-        # two codec writes + checksum collects (engine/sql_surface.py)
         "sink_codec_audit",
         # scratch saveAsTable + ANALYZE + catalog read-back
-        # (engine/sql_surface.py)
         "maint_analyze_stats",
+        "source_partitioned_read_prune",
+        # custom Python-sink write + read-back audit
+        "sink_python_datasource",
+        # availableNow streaming replays (a memory sink; a keyed-overwrite
+        # merge store) run to completion, then localized
+        "stream_watermark_design",
+        "stream_foreach_batch_merge",
         # noop-sink write to materialize the observed metrics
         # (engine/sql_surface.py)
         "df_observe_metrics",
-        # CACHE TABLE ... UNCACHE lifecycle + collect (engine/sql_surface.py)
-        "maint_cache_table",
-        # scratch year-partitioned write before the pruned read
+        # CACHE TABLE ... UNCACHE lifecycle + localized result
         # (engine/sql_surface.py)
-        "source_partitioned_read_prune",
-        # custom Python-sink write + read-back audit (engine/sql_surface.py)
-        "sink_python_datasource",
+        "maint_cache_table",
     }
     # BroadcastNestedLoopJoin is correct when the broadcast side is
     # constant-bounded: a 1-row corpus-count, a ≤10-row probe set, a
@@ -627,17 +624,10 @@ def test_bucketed_join_is_exchange_free(spark):
     plan, and both scans report bucket pruning metadata. This is the
     pay-once layout that makes a recurring 100 TB fact⋈fact join
     shuffle-free."""
-    import shutil
-    import tempfile
-    import uuid
-    from pathlib import Path
-
     from engine.relational import build_bucketed_join
+    from engine.roundtrip import scratch_database
 
-    db = f"bktdb_{uuid.uuid4().hex[:8]}"
-    scratch = Path(tempfile.mkdtemp(prefix="engine_bkt_test_"))
-    spark.sql(f"CREATE DATABASE {db} LOCATION '{scratch}'")
-    try:
+    with scratch_database(spark, "bkt_scratch_") as db:
         res = build_bucketed_join(spark, SF_DIR, db)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
@@ -647,9 +637,6 @@ def test_bucketed_join_is_exchange_free(spark):
         assert p.count("SelectedBucketsCount: 8 out of 8") == 2
         assert "Exchange hashpartitioning(l_orderkey" not in p
         assert "Exchange hashpartitioning(o_orderkey" not in p
-    finally:
-        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def test_dpp_prunes_fact_partitions(spark):
@@ -658,14 +645,10 @@ def test_dpp_prunes_fact_partitions(spark):
     and a dynamicpruningexpression (runtime partition pruning from the
     dim build side) — only the 2 matching year directories of the
     7-year fact are ever read."""
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     from engine.relational import build_dpp_join
+    from engine.roundtrip import scratch_dir
 
-    out = Path(tempfile.mkdtemp(prefix="engine_dpp_test_"))
-    try:
+    with scratch_dir("dpp_") as out:
         res = build_dpp_join(spark, SF_DIR, out)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
@@ -677,8 +660,6 @@ def test_dpp_prunes_fact_partitions(spark):
         assert "IN (1996,1997)" in pf[0].replace(" ", "").replace(
             "IN(", "IN ("
         ) or "o_year" in pf[0]
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 def test_path_topk_takeordered_over_alphabet_agg(spark):
@@ -749,3 +730,62 @@ def test_token_explode_is_spread_before_generate(spark):
             f"hashpartitioning(doc_id#" in p
             and f", {width}), REPARTITION_BY_NUM" in p
         ), f"{producer.__name__}: spread width does not follow shuffle.partitions"
+
+
+# Every query whose build writes scratch directories, creates catalog
+# objects, runs a streaming sink or sets session confs around its
+# result (engine.roundtrip owns that lifecycle).
+SCRATCH_QUERIES = (
+    "source_csv_roundtrip",
+    "source_json_roundtrip",
+    "sink_partitioned_parquet",
+    "source_orc_roundtrip",
+    "join_bucketed_colocated",
+    "join_dpp_prune",
+    "join_bloom_prefilter",
+    "source_schema_evolution",
+    "sink_compaction",
+    "source_xml_roundtrip",
+    "sink_codec_audit",
+    "maint_analyze_stats",
+    "maint_cache_table",
+    "source_partitioned_read_prune",
+    "sink_python_datasource",
+    "source_avro_roundtrip",
+    "source_text_roundtrip",
+    "stream_watermark_design",
+    "stream_foreach_batch_merge",
+)
+
+
+def test_scratch_queries_leave_nothing_behind(spark, tmp_path, monkeypatch):
+    """Each scratch-using query, run once, leaves no directory under the
+    temp root or the checkout's ``.scratch``, and no table, view or
+    database in the catalog; its result still evaluates afterwards."""
+    import tempfile
+    from pathlib import Path
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    checkout_scratch = (
+        Path(engine.__file__).resolve().parent.parent / ".scratch"
+    )
+
+    def scratch_entries() -> set[str]:
+        return (
+            set(os.listdir(checkout_scratch))
+            if checkout_scratch.exists()
+            else set()
+        )
+
+    def catalog() -> tuple[list[str], list[str]]:
+        return (
+            sorted(t.name for t in spark.catalog.listTables()),
+            sorted(d.name for d in spark.catalog.listDatabases()),
+        )
+
+    scratch_before, catalog_before = scratch_entries(), catalog()
+    for qid in SCRATCH_QUERIES:
+        engine.QUERIES[qid](spark, SF_DIR).collect()
+    assert os.listdir(tmp_path) == []
+    assert scratch_entries() - scratch_before == set()
+    assert catalog() == catalog_before

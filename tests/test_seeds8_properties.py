@@ -7,17 +7,12 @@ interpolation, decorrelated LATERAL, exchange-free lambda surface).
 
 from __future__ import annotations
 
-import shutil
-import uuid
-from pathlib import Path
-
 import pytest
 
 import engine
+from engine.roundtrip import run_available_now
 from engine.streaming import tws_counter_stream
 from tests.conftest import SF_DIR, normalize
-
-_SCRATCH = Path(__file__).resolve().parent.parent / ".scratch"
 
 
 def _plan(spark, qid):
@@ -44,25 +39,17 @@ def test_tws_stream_matches_batch(spark):
         "not available in this container",
     )
     batch = engine.QUERIES["stream_tws_counter"](spark, SF_DIR).toPandas()
-    name = f"tws_{uuid.uuid4().hex[:8]}"
-    ckpt = _SCRATCH / f"ckpt_{name}"
-    q = (
-        tws_counter_stream(spark, SF_DIR)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(180)
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
     # update mode re-emits a key per micro-batch it appears in; the
     # final emission per user is the lifetime state.
-    sink = spark.table(name).toPandas()
+    sink = run_available_now(
+        spark,
+        tws_counter_stream(spark, SF_DIR)
+        .writeStream.format("memory")
+        .outputMode("update"),
+        "tws_",
+        180,
+        spark.table,
+    ).toPandas()
     final = (
         sink.groupby("user_id", as_index=False)
         .last()

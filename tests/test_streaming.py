@@ -8,42 +8,33 @@ one logical plan, two execution modes (SURVEY.md §3.4).
 
 from __future__ import annotations
 
-import shutil
 import uuid
-from pathlib import Path
 
 import pytest
 
+from engine.roundtrip import run_available_now, scratch_dir
 from engine.session import load
 from engine.streaming import events_stream, session_agg, tumbling_agg
 from tests.conftest import SF_DIR, normalize
 
-_SCRATCH = Path(__file__).resolve().parent.parent / ".scratch"
 
-
-def _run_stream(spark, stream_df):
-    name = f"smoke_{uuid.uuid4().hex[:8]}"
-    ckpt = _SCRATCH / f"ckpt_{name}"
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
+def _run_memory_sink(spark, stream_df, output_mode: str):
+    """The availableNow replay's memory-sink rows, localized."""
+    return run_available_now(
+        spark,
+        stream_df.writeStream.format("memory").outputMode(output_mode),
+        "smoke_",
+        120,
+        spark.table,
     )
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name).toPandas()
 
 
 @pytest.mark.parametrize("agg_fn", [tumbling_agg, session_agg])
 def test_stream_matches_batch(spark, agg_fn):
     batch = agg_fn(load(spark, SF_DIR, "events")).toPandas()
-    stream = _run_stream(spark, agg_fn(events_stream(spark, SF_DIR)))
+    stream = _run_memory_sink(
+        spark, agg_fn(events_stream(spark, SF_DIR)), "complete"
+    ).toPandas()
     assert normalize(batch) == normalize(stream)
 
 
@@ -56,23 +47,9 @@ def test_stateful_user_state_matches_batch(spark):
 
     batch = user_state_agg(load(spark, SF_DIR, "events")).toPandas()
 
-    name = f"state_{uuid.uuid4().hex[:8]}"
-    ckpt = _SCRATCH / f"ckpt_{name}"
-    q = (
-        user_state_stream(spark, SF_DIR)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    stream = spark.table(name).toPandas()
+    stream = _run_memory_sink(
+        spark, user_state_stream(spark, SF_DIR), "update"
+    ).toPandas()
     final = stream.groupby("user_id", as_index=False).last()
     assert normalize(batch) == normalize(final)
 
@@ -89,26 +66,10 @@ def test_stream_dedup_counts(spark):
     batch = engine.QUERIES["stream_dedup"](spark, SF_DIR).toPandas()
     n_batch = load(spark, SF_DIR, "events").dropDuplicates(["event_id"]).count()
 
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
-    ckpt = _SCRATCH / f"ckpt_{name}"
-    q = (
-        dedup_stream(spark, SF_DIR)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    assert spark.table(name).count() == n_batch
+    stream = _run_memory_sink(spark, dedup_stream(spark, SF_DIR), "append")
+    assert stream.count() == n_batch
     stream_agg = (
-        spark.table(name)
-        .groupBy("event_type")
+        stream.groupBy("event_type")
         .count()
         .withColumnRenamed("count", "n_unique")
         .toPandas()
@@ -138,23 +99,9 @@ def test_stream_stream_join_matches_batch(spark):
         .toPandas()
     )
 
-    name = f"ssj_{uuid.uuid4().hex[:8]}"
-    ckpt = _SCRATCH / f"ckpt_{name}"
-    q = (
-        stream_stream_join_stream(spark, SF_DIR)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    stream_pairs = spark.table(name).toPandas()
+    stream_pairs = _run_memory_sink(
+        spark, stream_stream_join_stream(spark, SF_DIR), "append"
+    ).toPandas()
     assert normalize(batch_pairs) == normalize(stream_pairs)
 
 
@@ -169,8 +116,6 @@ def test_foreach_batch_idempotent_merge(spark):
     """
     from pyspark.sql import functions as F
 
-    name = f"fb_{uuid.uuid4().hex[:8]}"
-    target = _SCRATCH / f"tgt_{name}"
     state: dict[str, dict] = {}
 
     def merge_batch(batch_df, batch_id: int) -> None:
@@ -181,7 +126,6 @@ def test_foreach_batch_idempotent_merge(spark):
             state[key] = {"n": r["n_events"], "sum": r["sum_value"]}
 
     def run_once() -> None:
-        ckpt = _SCRATCH / f"ckpt_{name}_{uuid.uuid4().hex[:6]}"
         agg = (
             events_stream(spark, SF_DIR)
             .withWatermark("ts", "1 hour")
@@ -191,48 +135,45 @@ def test_foreach_batch_idempotent_merge(spark):
                 F.sum("value").alias("sum_value"),
             )
         )
-        q = (
-            agg.writeStream.foreachBatch(merge_batch)
-            .outputMode("update")
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(120)
-        finally:
-            q.stop()
-            shutil.rmtree(ckpt, ignore_errors=True)
-
-    try:
-        run_once()
-        first = dict(state)
-        assert first, "foreachBatch sink received no batches"
-        # Fresh checkpoint → full replay → duplicate delivery of every
-        # batch. The keyed merge must converge to the same state.
-        run_once()
-        assert state == first, "replayed merge diverged (not idempotent)"
-        # And the merged state must equal the batch-mode aggregate.
-        batch = (
-            load(spark, SF_DIR, "events")
-            .groupBy(F.window("ts", "6 hours"), "event_type")
-            .agg(
-                F.count("*").alias("n_events"),
-                F.sum("value").alias("sum_value"),
+        with scratch_dir("fb_ckpt_") as ckpt:
+            q = (
+                agg.writeStream.foreachBatch(merge_batch)
+                .outputMode("update")
+                .option("checkpointLocation", str(ckpt))
+                .trigger(availableNow=True)
+                .start()
             )
+            try:
+                q.awaitTermination(120)
+            finally:
+                q.stop()
+
+    run_once()
+    first = dict(state)
+    assert first, "foreachBatch sink received no batches"
+    # Fresh checkpoint → full replay → duplicate delivery of every
+    # batch. The keyed merge must converge to the same state.
+    run_once()
+    assert state == first, "replayed merge diverged (not idempotent)"
+    # And the merged state must equal the batch-mode aggregate.
+    batch = (
+        load(spark, SF_DIR, "events")
+        .groupBy(F.window("ts", "6 hours"), "event_type")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.sum("value").alias("sum_value"),
         )
-        expect = {
-            f"{r['window'].start.isoformat()}|{r['event_type']}": {
-                "n": r["n_events"],
-                "sum": r["sum_value"],
-            }
-            for r in batch.collect()
+    )
+    expect = {
+        f"{r['window'].start.isoformat()}|{r['event_type']}": {
+            "n": r["n_events"],
+            "sum": r["sum_value"],
         }
-        assert {k: v["n"] for k, v in state.items()} == {
-            k: v["n"] for k, v in expect.items()
-        }
-    finally:
-        shutil.rmtree(target, ignore_errors=True)
+        for r in batch.collect()
+    }
+    assert {k: v["n"] for k, v in state.items()} == {
+        k: v["n"] for k, v in expect.items()
+    }
 
 
 # ---------------------------------------------------------------------------
@@ -250,7 +191,9 @@ def test_stream_session_matches_oracle(spark, ddb):
     import engine
 
     oracle = ddb.execute(engine.ORACLES["stream_session"]).fetchdf()
-    stream = _run_stream(spark, session_agg(events_stream(spark, SF_DIR)))
+    stream = _run_memory_sink(
+        spark, session_agg(events_stream(spark, SF_DIR)), "complete"
+    ).toPandas()
     assert normalize(oracle) == normalize(stream)
 
 
@@ -262,24 +205,8 @@ def test_stream_dedup_matches_oracle(spark, ddb):
 
     oracle = ddb.execute(engine.ORACLES["stream_dedup"]).fetchdf()
 
-    name = f"dedup_o_{uuid.uuid4().hex[:8]}"
-    ckpt = _SCRATCH / f"ckpt_{name}"
-    q = (
-        dedup_stream(spark, SF_DIR)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
     stream_agg = (
-        spark.table(name)
+        _run_memory_sink(spark, dedup_stream(spark, SF_DIR), "append")
         .groupBy("event_type")
         .count()
         .withColumnRenamed("count", "n_unique")
@@ -325,23 +252,6 @@ def _write_event_file(path, rows, mtime):
     )
     pq.write_table(tbl, path)
     os.utime(path, (mtime, mtime))
-
-
-def _two_batch_stream(spark, src_dir, build_sink):
-    """Run an n-file source as exactly n micro-batches (availableNow +
-    maxFilesPerTrigger=1, oldest mtime first) into a memory sink;
-    return the sink table."""
-    stream = (
-        spark.readStream.schema(_LD_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src_dir))
-    )
-    name, q = build_sink(stream)
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
-    return spark.table(name)
 
 
 def test_watermark_drops_late_data_across_batches(spark, tmp_path):
@@ -401,7 +311,6 @@ def test_watermark_drops_late_data_across_batches(spark, tmp_path):
     )
 
     name = f"late_{uuid.uuid4().hex[:8]}"
-    ckpt = _SCRATCH / f"ckpt_{name}"
     stream = (
         spark.readStream.schema(_LD_SCHEMA)
         .option("maxFilesPerTrigger", "1")
@@ -417,7 +326,7 @@ def test_watermark_drops_late_data_across_batches(spark, tmp_path):
         agg.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", str(ckpt))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -434,7 +343,7 @@ def test_watermark_drops_late_data_across_batches(spark, tmp_path):
         }
     finally:
         q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
+        spark.catalog.dropTempView(name)
 
     # Emitted: [01:00) with 2 (late event NOT re-counted, window NOT
     # re-emitted), [02:00)/[03:00)/[04:00) with 1 each; [05:00) still
@@ -508,7 +417,6 @@ def test_watermark_evicts_dedup_state_across_batches(spark, tmp_path):
     )
 
     name = f"evict_{uuid.uuid4().hex[:8]}"
-    ckpt = _SCRATCH / f"ckpt_{name}"
     stream = (
         spark.readStream.schema(_LD_SCHEMA)
         .option("maxFilesPerTrigger", "1")
@@ -521,7 +429,7 @@ def test_watermark_evicts_dedup_state_across_batches(spark, tmp_path):
         deduped.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", str(ckpt))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -535,7 +443,7 @@ def test_watermark_evicts_dedup_state_across_batches(spark, tmp_path):
         ids = sorted(r["event_id"] for r in spark.table(name).collect())
     finally:
         q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
+        spark.catalog.dropTempView(name)
 
     assert ids == [100, 100, 101, 102, 103], (
         f"expected id=100 re-admitted after eviction, got {ids}"
@@ -553,7 +461,6 @@ def test_watermark_evicts_dedup_state_across_batches(spark, tmp_path):
     # Contrast: EXACT streaming dedup (id-only keys) never evicts —
     # state grows with distinct ids; the re-arrival IS deduplicated.
     name2 = f"exact_{uuid.uuid4().hex[:8]}"
-    ckpt2 = _SCRATCH / f"ckpt_{name2}"
     exact = stream.withWatermark("ts", "10 minutes").dropDuplicates(
         ["event_id"]
     )
@@ -561,7 +468,7 @@ def test_watermark_evicts_dedup_state_across_batches(spark, tmp_path):
         exact.writeStream.format("memory")
         .queryName(name2)
         .outputMode("append")
-        .option("checkpointLocation", str(ckpt2))
+        .option("checkpointLocation", str(tmp_path / "ckpt2"))
         .trigger(availableNow=True)
         .start()
     )
@@ -575,7 +482,7 @@ def test_watermark_evicts_dedup_state_across_batches(spark, tmp_path):
         ids2 = sorted(r["event_id"] for r in spark.table(name2).collect())
     finally:
         q2.stop()
-        shutil.rmtree(ckpt2, ignore_errors=True)
+        spark.catalog.dropTempView(name2)
     assert ids2 == [100, 101, 102, 103], f"exact dedup broke: {ids2}"
     assert n_removed2 == 0, (
         "exact dedup unexpectedly evicted state — the honest-cost "
